@@ -360,14 +360,14 @@ def bench_streaming(
 def bench_pipeline(spark, n_runs: int = 10) -> dict:
     """Time the NBODY6 batch pipeline end-to-end (parse -> align ->
     assemble -> observe -> stats -> parquet+CSV layers) over n_runs
-    synthetic fixture runs via the batched orchestrator, and record the
-    driver-side Spark job count — the scale guard: the batched path's
+    synthetic fixture runs via pipeline.process_all, and record the
+    driver-side Spark job count — the scale guard: the pipeline's
     job count is fixed by plan shape, not run count, so a driver-loop
     regression (O(runs) actions) shows up here as a job-count jump."""
     import shutil
     import tempfile
 
-    from nbody6_data_pipeline_spark.pipeline import process_all_batched
+    from nbody6_data_pipeline_spark.pipeline import process_all
     from tests.nbody6_fixtures import write_run
 
     base = tempfile.mkdtemp(prefix="nbody6_bench_sim_")
@@ -379,7 +379,7 @@ def bench_pipeline(spark, n_runs: int = 10) -> dict:
         spark.catalog.clearCache()
         sc.setJobGroup("pipeline-bench", "end-to-end pipeline bench")
         t0 = time.perf_counter()
-        process_all_batched(
+        process_all(
             spark, base, out_dir, coordinates=[(50.0, 0.0, 0.0)]
         )
         wall = time.perf_counter() - t0

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.sources.block_text import BlockTables
-from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Run, NBody6Runs
+from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Runs
 
 TOLERANCE = 2e-2  # Myr (reference loader.py:100)
 
@@ -219,60 +219,3 @@ def align_runs(
         for fname, bt in runs.tables.items()
     }
     return NBody6Runs(aligned, runs.run_ids)
-
-
-def align_run(
-    run: NBody6Run,
-    tolerance: float = TOLERANCE,
-    allow_trim: bool = False,
-) -> NBody6Run:
-    """Return a run whose tables all carry unified OUT34 timestamps.
-
-    strict (default): per-file timestamp counts must match and every
-    row's max-min spread must be within tolerance, else ValueError
-    (loader.py:143-163). trim: keep only row indices where all files
-    have a timestamp within tolerance (loader.py:166-186).
-    """
-    # ONE job: per-file sorted timestamp lists (small).
-    parts = []
-    for fname, bt in run.tables.items():
-        parts.append(
-            bt.headers.select(
-                F.lit(fname).alias("file"), F.col("time")
-            ).distinct()
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    by_file: dict[str, list[float]] = {f: [] for f in run.tables}
-    for r in union.collect():
-        by_file[r["file"]].append(r["time"])
-    for f in by_file:
-        by_file[f].sort()
-
-    files = list(run.tables)
-    decided = _decide_alignment(by_file, files, tolerance, allow_trim)
-
-    spark = run.tables["OUT34"].headers.sparkSession
-    mapping_rows = [
-        (f, by_file[f][i], ref_t) for f in files for i, ref_t in decided
-    ]
-    mapping = spark.createDataFrame(
-        mapping_rows, "file string, old_time double, ref_time double"
-    )
-
-    def _remap(df: DataFrame, fname: str) -> DataFrame:
-        m = mapping.filter(F.col("file") == fname).select("old_time", "ref_time")
-        return (
-            df.join(F.broadcast(m), df["time"] == m["old_time"], "inner")
-            .drop("time", "old_time")
-            .withColumnRenamed("ref_time", "time")
-        )
-
-    aligned = {
-        fname: BlockTables(
-            headers=_remap(bt.headers, fname), data=_remap(bt.data, fname)
-        )
-        for fname, bt in run.tables.items()
-    }
-    return NBody6Run(aligned, run.run_root)

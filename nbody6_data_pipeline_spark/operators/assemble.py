@@ -2,8 +2,8 @@
 re-expressed as set-based DataFrame dataflow over ALL timestamps at
 once.
 
-The reference loops `for ts: _assemble(ts)` over per-timestamp pandas
-frames; here every per-timestamp dict/map becomes a join keyed by
+The reference calls its per-timestamp ``_assemble`` in a loop over
+pandas frames; here every per-timestamp dict/map becomes a join keyed by
 ``(run_id, time)`` and every loop becomes a groupBy — one lazy DAG
 Catalyst can optimize end-to-end, parallel across the full
 run x timestamp grid (SURVEY §1.1, §3.1).
@@ -24,7 +24,7 @@ from nbody6_data_pipeline_spark.functions.hierarchy import (
     hierarchy_pair_label,
     sort_hierarchy,
 )
-from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Run
+from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Runs
 
 KEY = ["run_id", "time"]
 
@@ -36,10 +36,6 @@ class AssembledTables:
     snapshot_headers: DataFrame
 
 
-def _tag(df: DataFrame, run_id: str) -> DataFrame:
-    return df.withColumn("run_id", F.lit(run_id))
-
-
 def _mean_over(vals: F.Column) -> F.Column:
     """np.mean of a (possibly empty) array -> NULL when empty
     (reference assembler.py:289-293: None when no components found)."""
@@ -49,8 +45,12 @@ def _mean_over(vals: F.Column) -> F.Column:
     )
 
 
-def assemble(run: NBody6Run, run_id: str, is_strict: bool = True) -> AssembledTables:
-    """Assemble stars / binary_systems / snapshot_headers for one run.
+def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
+    """Assemble stars / binary_systems / snapshot_headers for every run
+    in ``runs``. The multi-run tables already carry run_id, and every
+    aggregation/join keys on (run_id, time), so N runs assemble as ONE
+    lazy DAG with O(1) driver actions (the strict-validation firsts
+    and fan-out checkpoints run once for the whole batch).
 
     Validation side effects (strict mode) follow the reference: missing
     names across file families raise (assembler.py:168-188, 559-581);
@@ -59,36 +59,15 @@ def assemble(run: NBody6Run, run_id: str, is_strict: bool = True) -> AssembledTa
     timestamp (assembler.py:522-527, 698-704) — expressed as a
     min-over-group comparison, not an ordered scan.
     """
-    tagged = {
-        name: (_tag(bt.headers, run_id), _tag(bt.data, run_id))
-        for name, bt in run.tables.items()
-    }
-    return assemble_tagged(tagged, is_strict=is_strict)
-
-
-def assemble_runs(runs, is_strict: bool = True) -> AssembledTables:
-    """Batched assembly: the multi-run tables already carry run_id, and
-    every aggregation/join in the dataflow keys on (run_id, time) — so
-    N runs assemble as ONE lazy DAG with O(1) driver actions (the
-    strict-validation firsts and fan-out checkpoints run once for the
-    whole batch, not once per run)."""
-    tagged = {
-        name: (bt.headers, bt.data) for name, bt in runs.tables.items()
-    }
-    return assemble_tagged(tagged, is_strict=is_strict)
-
-
-def assemble_tagged(
-    tagged: dict, is_strict: bool = True
-) -> AssembledTables:
-    """Core dataflow over run_id-tagged (headers, data) pairs."""
-    dens = tagged["densCentre.txt"][0].select(*KEY, "r_tidal", "density_center")
-    out34_h = tagged["OUT34"][0]
-    out34_d = tagged["OUT34"][1]
-    out9_d = tagged["OUT9"][1]
-    f19_d = tagged["fort.19"][1]
-    f82_d = tagged["fort.82"][1]
-    f83_d = tagged["fort.83"][1]
+    dens = runs.headers("densCentre.txt").select(
+        *KEY, "r_tidal", "density_center"
+    )
+    out34_h = runs.headers("OUT34")
+    out34_d = runs.data("OUT34")
+    out9_d = runs.data("OUT9")
+    f19_d = runs.data("fort.19")
+    f82_d = runs.data("fort.82")
+    f83_d = runs.data("fort.83")
 
     # ---- dissolution cut (series truncated strictly BEFORE first dissolved ts)
     cut = dens.groupBy("run_id").agg(

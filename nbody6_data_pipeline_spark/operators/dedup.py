@@ -65,14 +65,6 @@ def _shingle_arr(norm: Column, n: int = SHINGLE_LEN, distinct: bool = True) -> C
     return F.array_distinct(arr) if distinct else arr
 
 
-def char_shingles(text: Column, n: int = SHINGLE_LEN, distinct: bool = True) -> Column:
-    """Character n-gram shingles of normalized text (distinct by
-    default). Short documents (< n chars) contribute the whole text as
-    one shingle so they still participate. For hot paths prefer
-    ``_normed_docs`` + ``_shingle_arr`` (see note there)."""
-    return _shingle_arr(normalize(text), n, distinct)
-
-
 def _spread(df: DataFrame, key) -> DataFrame:
     """Hash-repartition with an EXPLICIT partition count so AQE does
     not coalesce the (byte-small but compute-heavy) shingle explosion

@@ -118,12 +118,6 @@ def _merge_pair(s1: Column, s2: Column, hdr: dict[str, Column]) -> Column:
     )
 
 
-def _as_merge_struct(s: Column) -> Column:
-    """Lift a plain star attr struct into the merge-output shape
-    (single component: its own distances come from the star table)."""
-    return s
-
-
 def observe(
     spark: SparkSession,
     assembled: AssembledTables,

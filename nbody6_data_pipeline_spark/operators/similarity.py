@@ -1595,15 +1595,3 @@ def sq8_codes(
             f"((v - s.mn) * {SQ8_LEVELS}) div greatest(s.mx - s.mn, 1))"
         ),
     )
-
-
-def int_d2(a: str, b: str) -> Column:
-    """Exact integer squared-L2 fold between two BIGINT arrays —
-    order-independent (integer addition is associative), DuckDB twin:
-    list_reduce(list_transform(range(1, d+1), j -> (a[j]-b[j])*(a[j]-b[j])),
-    (acc, x) -> acc + x)."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )

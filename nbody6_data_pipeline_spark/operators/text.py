@@ -40,12 +40,6 @@ def ascii_lower(text: Column) -> Column:
     return F.translate(text, ASCII_UPPER, ASCII_LOWER)
 
 
-def ascii_lower_sql(expr: str = "text") -> str:
-    """The identical fold as SQL text — valid verbatim in BOTH Spark
-    SQL and DuckDB (oracle twins must render the same bytes)."""
-    return f"translate({expr}, '{ASCII_UPPER}', '{ASCII_LOWER}')"
-
-
 def token_array(text: Column) -> Column:
     """Whitespace tokens, empties removed (handles leading/trailing
     whitespace identically to pandas .str.split())."""

@@ -1,16 +1,21 @@
 """End-to-end pipeline orchestration (reference entry point 1:
 collect_simulation_stats.process_all, SURVEY §3.1).
 
-Per run: parse -> align -> assemble -> observe (18 coordinates) ->
-overall + annular statistics -> parquet layers + CSV export. Each
-layer is a run_id-partitioned parquet dataset; completed runs are
-skipped (the reference's joblib/CSV skip-if-exists resume,
-collect_simulation_stats.py:59-117).
+``process_all`` discovers the runs, skips those already complete, and
+sends every pending run through ONE lazy DAG per layer: parse -> align
+-> assemble -> observe (18 coordinates) -> overall + annular
+statistics -> parquet layers + CSV export. Every layer is keyed on
+``run_id`` throughout, so the driver issues O(1) actions per layer
+whatever the run count. Each parquet layer is a run_id-partitioned
+dataset written with dynamic partition overwrite; the CSV export is
+``csv/<layer>/run_id=<id>/``. Completed runs are found by listing the
+``overall_stats`` partitions (the reference's joblib/CSV
+skip-if-exists resume, collect_simulation_stats.py:59-117).
 
 The reference tiers process-level parallelism by cluster mass
-(n_jobs=30/12/2) to avoid OOM; here a run is ONE lazy DAG whose tasks
-Spark schedules — AQE handles the size skew, and the driver loop only
-sequences run DAGs (cheap), so no hand tiering is needed (SURVEY §4).
+(n_jobs=30/12/2) to avoid OOM; here Spark schedules the tasks of the
+batched DAG and AQE handles the size skew, so no hand tiering is
+needed (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -21,8 +26,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from nbody6_data_pipeline_spark.operators.align import align_run, align_runs
-from nbody6_data_pipeline_spark.operators.assemble import assemble, assemble_runs
+from nbody6_data_pipeline_spark.operators.align import align_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
 from nbody6_data_pipeline_spark.operators.observe import (
     default_observer_coordinates,
     observe,
@@ -33,7 +38,7 @@ from nbody6_data_pipeline_spark.operators.statistics import (
 )
 from nbody6_data_pipeline_spark.plans.checkpoints import completed_runs
 from nbody6_data_pipeline_spark.sources.discovery import RunInfo, fetch_sim_runs
-from nbody6_data_pipeline_spark.sources.nbody6 import load_run, load_runs
+from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from nbody6_data_pipeline_spark.sources.sinks import write_csv, write_parquet
 
 LAYERS = (
@@ -51,104 +56,23 @@ OKEY = ["run_id", "obs_x", "obs_y", "obs_z", "time"]
 
 @contextlib.contextmanager
 def _pipeline_confs(spark: SparkSession):
-    """Runtime confs scoped to a pipeline invocation.
-
-    - dynamic partition overwrite: re-processing a run must not wipe
-      other runs' partitions from a layer.
-    - constraint propagation OFF: the assemble/observe dataflow chains
-      ~20 multi-condition joins; InferFiltersFromConstraints is
-      exponential in that shape and dominated driver time (measured
-      ~28 s of a 31 s optimize on a 10-run batch) while inferring
-      nothing useful for these hand-keyed inner joins. Spark documents
-      this conf as the escape hatch (SPARK-33152 lineage).
-    """
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.sources.partitionOverwriteMode",
-            "spark.sql.constraintPropagation.enabled",
-        )
-    }
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    """Constraint propagation OFF for one pipeline invocation: the
+    assemble/observe dataflow chains ~20 multi-condition joins;
+    InferFiltersFromConstraints is exponential in that shape and
+    dominated driver time (measured ~28 s of a 31 s optimize on a
+    10-run batch) while inferring nothing useful for these hand-keyed
+    inner joins. Spark documents this conf as the escape hatch
+    (SPARK-33152 lineage)."""
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
     try:
         yield
     finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def process_run(
-    spark: SparkSession,
-    run_path: str,
-    run_id: str,
-    output_base: str,
-    coordinates: list[tuple] | None = None,
-    is_strict: bool = True,
-    is_slim: bool = True,
-    run_attrs: dict | None = None,
-) -> dict:
-    """Process one simulation run through all layers; returns the
-    paths written. ``is_slim`` skips persisting the raw (pre-
-    observation) star tables (reference observer.py:268-273)."""
-    coordinates = coordinates or default_observer_coordinates()
-    paths = {name: os.path.join(output_base, name) for name in LAYERS}
-
-    if run_id in completed_runs(spark, paths["overall_stats"]):
-        return paths  # resume: stats already materialized
-
-    with _pipeline_confs(spark):
-        return _process_run_body(
-            spark, run_path, run_id, output_base, paths, coordinates,
-            is_strict, is_slim, run_attrs,
-        )
-
-
-def _process_run_body(
-    spark, run_path, run_id, output_base, paths, coordinates,
-    is_strict, is_slim, run_attrs,
-):
-    asm = assemble(align_run(load_run(spark, run_path, is_strict=is_strict)),
-                   run_id=run_id, is_strict=is_strict)
-    if not is_slim:
-        write_parquet(asm.stars, paths["assembled_stars"], ["run_id"])
-        write_parquet(
-            asm.binary_systems, paths["assembled_binary_systems"], ["run_id"]
-        )
-    write_parquet(asm.snapshot_headers, paths["snapshot_headers"], ["run_id"])
-
-    obs = observe(spark, asm, coordinates)
-    obs_stars = obs.stars.localCheckpoint()
-    obs_bins = obs.binary_systems.localCheckpoint()
-    write_parquet(obs_stars, paths["observed_stars"], ["run_id"])
-    write_parquet(obs_bins, paths["observed_binary_systems"], ["run_id"])
-
-    # per-(coord, time) statistics over the OBSERVED snapshots — the
-    # reference's collection.statistics walk (collection.py:202-242)
-    hdr_obs = (
-        asm.snapshot_headers.crossJoin(
-            spark.createDataFrame(
-                [(float(a), float(b), float(c)) for a, b, c in coordinates],
-                "obs_x double, obs_y double, obs_z double",
-            )
-        )
-    )
-    attrs = run_attrs or {}
-    overall = overall_statistics(obs_stars, obs_bins, hdr_obs, OKEY)
-    annular = annular_statistics(obs_stars, obs_bins, OKEY)
-    for name, df in (("overall_stats", overall), ("annular_stats", annular)):
-        for k, v in attrs.items():
-            df = df.withColumn(k, F.lit(v))
-        write_parquet(df, paths[name], ["run_id"])
-        write_csv(
-            df,
-            os.path.join(output_base, "csv", run_id, name),
-            order_by=["obs_x", "obs_y", "obs_z", "time"],
-        )
-    return paths
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def process_all(
@@ -159,41 +83,15 @@ def process_all(
     is_strict: bool = True,
     is_slim: bool = True,
 ) -> list[RunInfo]:
-    """Discover runs (S9) and process each (resumable)."""
-    runs = fetch_sim_runs(sim_root_base)
-    for info in runs:
-        process_run(
-            spark,
-            info.path,
-            info.label,
-            output_base,
-            coordinates=coordinates,
-            is_strict=is_strict,
-            is_slim=is_slim,
-            run_attrs=info.attrs,
-        )
-    return runs
-
-
-def process_all_batched(
-    spark: SparkSession,
-    sim_root_base: str,
-    output_base: str,
-    coordinates: list[tuple] | None = None,
-    is_strict: bool = True,
-    is_slim: bool = True,
-) -> list[RunInfo]:
-    """Batched orchestration: ALL pending runs flow through one lazy
-    DAG per layer — O(1) driver actions per layer instead of O(runs).
+    """Discover runs (S9) and process every pending one as a batch;
+    returns all discovered runs. ``is_slim`` skips persisting the raw
+    (pre-observation) star tables (reference observer.py:268-273).
 
     load_runs parses every run's files as six grouped plans (one
     structural-validation job total), align_runs makes every run's
     alignment decision from ONE collect, assemble/observe/statistics
-    key on (run_id, time) throughout, and each parquet layer is ONE
-    dynamic-partition-overwrite write covering all new runs. Resume is
-    unchanged: completed run_ids are skipped via partition listing.
-    CSV export becomes one partitioned write (csv_batched/<layer>/
-    run_id=<id>/) instead of a per-run directory loop."""
+    key on (run_id, time) throughout, and each layer is ONE partitioned
+    write covering all new runs."""
     coordinates = coordinates or default_observer_coordinates()
     paths = {name: os.path.join(output_base, name) for name in LAYERS}
 
@@ -204,14 +102,18 @@ def process_all_batched(
         return runs
 
     with _pipeline_confs(spark):
-        _process_batched_body(
+        _process_pending(
             spark, output_base, paths, coordinates, is_strict, is_slim,
             pending,
         )
     return runs
 
 
-def _process_batched_body(
+# perfbench/run.py calls the orchestrator by this name.
+process_all_batched = process_all
+
+
+def _process_pending(
     spark, output_base, paths, coordinates, is_strict, is_slim, pending
 ):
     # Per-layer job descriptions: the driver loop is sequential, so the
@@ -242,6 +144,8 @@ def _process_batched_body(
     write_parquet(obs_stars, paths["observed_stars"], ["run_id"])
     write_parquet(obs_bins, paths["observed_binary_systems"], ["run_id"])
 
+    # per-(coord, time) statistics over the OBSERVED snapshots — the
+    # reference's collection.statistics walk (collection.py:202-242)
     hdr_obs = asm.snapshot_headers.crossJoin(
         spark.createDataFrame(
             [(float(a), float(b), float(c)) for a, b, c in coordinates],
@@ -268,17 +172,10 @@ def _process_batched_body(
         if attrs_df is not None:
             df = df.join(F.broadcast(attrs_df), "run_id", "left")
         write_parquet(df, paths[name], ["run_id"])
-        out = df.orderBy("obs_x", "obs_y", "obs_z", "time")
-        for f in out.schema.fields:
-            if f.dataType.typeName() not in (
-                "string", "double", "float", "long", "integer", "short",
-                "boolean",
-            ):
-                out = out.withColumn(f.name, F.to_json(f.name))
-        (
-            out.write.mode("overwrite")
-            .option("header", True)
-            .partitionBy("run_id")
-            .csv(os.path.join(output_base, "csv_batched", name))
+        write_csv(
+            df,
+            os.path.join(output_base, "csv", name),
+            order_by=["obs_x", "obs_y", "obs_z", "time"],
+            partition_by=["run_id"],
         )
     sc.setJobDescription(None)

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def completed_runs(spark: SparkSession, layer_path: str) -> set[str]:
@@ -24,18 +24,3 @@ def completed_runs(spark: SparkSession, layer_path: str) -> set[str]:
         if name.startswith("run_id="):
             out.add(name.split("=", 1)[1])
     return out
-
-
-def pending_runs(
-    spark: SparkSession, all_run_ids: list[str], layer_path: str
-) -> list[str]:
-    done = completed_runs(spark, layer_path)
-    return [r for r in all_run_ids if r not in done]
-
-
-def append_run(df: DataFrame, layer_path: str, run_id: str) -> None:
-    """Write one run's rows into the layer (dynamic partition
-    overwrite: re-running a run replaces only its own partition)."""
-    from nbody6_data_pipeline_spark.sources.sinks import write_parquet
-
-    write_parquet(df, layer_path, ["run_id"])

@@ -43,13 +43,17 @@ def write_partitioned(
     """Hive-partitioned parquet write; optionally clustered within each
     partition so secondary range predicates also skip row groups.
 
-    Dynamic partition overwrite (set in sources/sinks.py for the layer
-    writers) applies here too: rewriting one partition's data does not
-    drop its siblings.
+    Dynamic partition overwrite, as in the sources/sinks.py layer
+    writers: rewriting one partition's data does not drop its siblings.
     """
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_range_sorted(

@@ -2112,10 +2112,6 @@ def _boot_hv_sql(i: str) -> str:
     return f"CAST(('0x' || {_BOOT_MD5.format(i=i)}) AS BIGINT)"
 
 
-def _boot_hv_spark(i: str) -> str:
-    return f"CAST(conv({_BOOT_MD5.format(i=i)}, 16, 10) AS BIGINT)"
-
-
 def _bootstrap_oracle() -> str:
     u = _BOOT_U.format(hv=_boot_hv_sql("i.i"))
     w = _BOOT_W.format(u=u)

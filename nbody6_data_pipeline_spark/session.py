@@ -13,22 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -68,6 +52,25 @@ def _cpus() -> int:
     return os.cpu_count() or 4
 
 
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 60% of the host's MemTotal
+    capped at 48g: a fixed 48g heap on a smaller host lets the JVM grow
+    until the kernel OOM-kills it. 48g where /proc/meminfo is absent."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_kb = int(line.split()[1])
+                    return f"{min(cap_mb, int(total_kb * 0.6) // 1024)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "nbody6_data_pipeline_spark",
     extra_conf: dict | None = None,
@@ -104,7 +107,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Timestamps in the synthetic parquet are naive; read them as NTZ so
@@ -146,19 +149,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
-    """Load the driver's synthetic star-schema tables as DataFrames.
-
-    Returns ``{name: DataFrame}`` and registers each as a temp view so
-    SQL-form queries can run against the same inputs.
-    """
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -8,31 +8,23 @@ Empty lines are skipped everywhere; footer lines terminate a block and
 are never parsed. ``time`` (rounded to 2 decimals) keys the block;
 duplicate timestamps keep the LAST block (parser/base.py:217-223).
 
-Spark recipe (SURVEY §2.1 S1): read lines with global line numbers
-(zipWithIndex — order must be carried explicitly because Spark rows
-are unordered), flag header/footer lines, assign block ids with a
-running ``sum(is_header) over (order by line_no)`` window, then
-aggregate header tokens per block and project data tokens positionally.
-
-Three readers share one block-finishing dataflow:
-
-- ``read_block_file`` — windowed, single file (the ordered window runs
-  over one partition; fine because one NBODY6 file is single-machine-
-  sized).
-- ``read_lines_runs`` + grouped ``parse_blocks`` — the batched path:
-  thousands of runs parse as ONE shuffle-parallel job, windows
-  partitioned per run.
-- ``read_block_file_split`` — the splittable path for a pathological
-  multi-TB SINGLE file: two linear mapPartitions passes with
-  boundary stitching (per-partition header/line counts prefix-summed
-  on the driver), no single-partition sort anywhere.
+Spark recipe (SURVEY §2.1 S1): ``read_lines_runs`` reads every run's
+file of one format as (run_id, line_no, raw) — order must be carried
+explicitly because Spark rows are unordered — then ``parse_blocks``
+flags header/footer lines, assigns block ids with a running
+``sum(is_header) over (partition by run_id order by line_no)`` window,
+aggregates header tokens per block and projects data tokens
+positionally. Every window and aggregation is partitioned by
+``run_id``, so thousands of runs parse as ONE shuffle-parallel job;
+one NBODY6 file is single-machine-sized, and scale lives in the run
+dimension.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -60,10 +52,10 @@ class BlockTables:
     data line in ``data`` — both keyed by ``time`` (the reference's
     dict[timestamp -> FileBlock] flattened into long tables).
 
-    ``violations`` is non-None only under deferred validation (the
-    batched multi-run path): a lazy DataFrame of structural errors the
-    caller unions across files and checks in ONE job instead of one
-    eager action per file."""
+    ``violations`` is a lazy DataFrame of structural errors (one row
+    per bad run) that the caller unions across file formats and checks
+    in ONE job; ``raise_block_violation`` turns a row into the
+    reference's error. It is None once the tables are aligned."""
 
     headers: DataFrame
     data: DataFrame
@@ -78,28 +70,8 @@ def _lstrip_class(prefix: str) -> str:
     return "^[" + re.escape(chars) + "]+" if chars else ""
 
 
-def read_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Lines with explicit global order: (line_no starting at 1, line).
-
-    zipWithIndex is the one RDD touch in the engine — Spark DataFrames
-    are unordered sets, and block semantics are line-order-dependent
-    (SURVEY §7.4 item 1), so the order is materialized into a column
-    once at ingest and everything downstream is pure DataFrame.
-    """
-    rdd = spark.sparkContext.textFile(path).zipWithIndex()
-    return spark.createDataFrame(
-        rdd.map(lambda t: (t[1] + 1, t[0])),
-        schema=T.StructType(
-            [
-                T.StructField("line_no", T.LongType(), False),
-                T.StructField("raw", T.StringType(), True),
-            ]
-        ),
-    )
-
-
 def read_lines_runs(
-    spark: SparkSession, run_paths: list[tuple[str, str]], min_partitions: int | None = None
+    spark: SparkSession, run_paths: list[tuple[str, str]]
 ) -> DataFrame:
     """Batched multi-run line source: (run_id, line_no, raw) for the
     SAME file format across many runs, in ONE lazy source — no
@@ -109,12 +81,11 @@ def read_lines_runs(
     Built on wholeTextFiles: each file is one record whose task
     enumerates line numbers locally. Per-task memory is one whole
     file — fine for NBODY6 outputs (single-machine-sized by format;
-    scale lives in the run dimension), with the splittable reader as
-    the complement for pathological single huge files.
+    scale lives in the run dimension).
     """
     abs_map = {os.path.abspath(p): rid for rid, p in run_paths}
     paths = ",".join(abs_map)
-    minp = min_partitions or min(len(abs_map), 256)
+    minp = min(len(abs_map), 256)
 
     def split_file(rec):
         path, content = rec
@@ -160,30 +131,19 @@ def _token_col(tokens: F.Column, idx: Index, typ: str, is_strict: bool) -> F.Col
 
 
 def parse_blocks(
-    lines: DataFrame,
-    cfg: BlockSourceConfig,
-    is_strict: bool = True,
-    group_cols: list[str] | None = None,
-    defer_validation: bool = False,
+    lines: DataFrame, cfg: BlockSourceConfig, is_strict: bool = True
 ) -> BlockTables:
-    """Split ordered lines into blocks and apply the positional schema.
+    """Split ordered (run_id, line_no, raw) lines into blocks and apply
+    the positional schema.
 
-    Returns headers (block_id, time, line-span meta, header columns)
-    and data (block_id, time, data columns). Duplicate timestamps:
-    last block wins, matching parser/base.py:217-223.
-
-    ``group_cols`` (e.g. ``["run_id"]``) parses MANY files in one
-    DataFrame: every window/aggregation is partitioned per group, so
-    thousands of runs parse as one shuffle-parallel job instead of a
-    driver loop of single-partition sorts. ``defer_validation``
-    returns structural errors as a lazy ``violations`` DataFrame
-    instead of raising eagerly — the batched path unions these across
-    file formats and checks them in ONE job.
+    Returns headers (run_id, block_id, time, line-span meta, header
+    columns), data (run_id, block_id, time, data columns) and the lazy
+    structural ``violations``. Duplicate timestamps: last block wins,
+    matching parser/base.py:217-223. Every window and aggregation is
+    partitioned by run_id.
     """
-    group_cols = group_cols or []
-    g = [F.col(c) for c in group_cols]
     stripped = lines.select(
-        *group_cols, "line_no", F.trim(F.col("raw")).alias("txt")
+        "run_id", "line_no", F.trim(F.col("raw")).alias("txt")
     )
     nonempty = stripped.filter(F.col("txt") != "")
 
@@ -199,38 +159,21 @@ def parse_blocks(
     is_header = F.col("txt").startswith(cfg.header_prefix) & ~is_footer
 
     w = (
-        W.partitionBy(*group_cols)
+        W.partitionBy("run_id")
         .orderBy("line_no")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     flagged = nonempty.select(
-        *group_cols,
+        "run_id",
         "line_no",
         "txt",
         is_header.alias("is_header"),
         is_footer.alias("is_footer"),
         F.sum(is_header.cast("long")).over(w).alias("hdr_cum"),
     )
-    return _finish_blocks(
-        flagged, cfg, is_strict, group_cols, defer_validation
-    )
 
-
-def _finish_blocks(
-    flagged: DataFrame,
-    cfg: BlockSourceConfig,
-    is_strict: bool,
-    group_cols: list[str],
-    defer_validation: bool,
-) -> BlockTables:
-    """Shared back half of block parsing: from flagged lines
-    (line_no, txt, is_header, is_footer, hdr_cum) to validated
-    headers/data tables. The flagged table can come from the windowed
-    path (parse_blocks) or the splittable two-pass reader
-    (read_block_file_split) — everything from here on is keyed by
-    block_id and shuffle-parallel."""
     hl = cfg.header_length
-    # Structural validation (parser/base.py:272-283), ONE aggregation job:
+    # Structural validation (parser/base.py:272-283), ONE aggregation:
     # - a data line must appear only after a COMPLETE header group
     # - EOF inside a header group is an incomplete-header error
     bad_cond = (
@@ -238,7 +181,7 @@ def _finish_blocks(
         & ~F.col("is_footer")
         & ((F.col("hdr_cum") % hl != 0) | (F.col("hdr_cum") == 0))
     )
-    chk_df = flagged.groupBy(*group_cols).agg(
+    chk_df = flagged.groupBy("run_id").agg(
         F.max("hdr_cum").alias("tail"),
         F.min(F.when(bad_cond, F.col("line_no"))).alias("bad_line"),
         F.min_by(F.col("txt"), F.when(bad_cond, F.col("line_no"))).alias("bad_txt"),
@@ -247,21 +190,16 @@ def _finish_blocks(
         F.col("bad_line").isNotNull()
         | (F.coalesce(F.col("tail"), F.lit(0)) % hl != 0)
     ).select(
-        *group_cols,
+        "run_id",
         "bad_line",
         "bad_txt",
         (F.coalesce(F.col("tail"), F.lit(0)) % hl != 0).alias(
             "incomplete_header"
         ),
     )
-    if not defer_validation:
-        bad = violations.first()
-        if bad is not None:
-            raise_block_violation(bad)
-        violations = None
 
     blocked = flagged.filter(~F.col("is_footer")).select(
-        *group_cols,
+        "run_id",
         "line_no",
         "txt",
         "is_header",
@@ -277,7 +215,7 @@ def _finish_blocks(
         F.regexp_replace(F.col("txt"), strip_re, "") if strip_re else F.col("txt")
     )
     header_lines = blocked.filter("is_header").select(
-        *group_cols,
+        "run_id",
         "block_id",
         "line_no",
         F.split(F.trim(header_txt), r"\s+").alias("toks"),
@@ -285,7 +223,7 @@ def _finish_blocks(
     # multi-line headers: concatenate tokens in line order
     # (parser/base.py:258: flat token list across header rows)
     header_tok = (
-        header_lines.groupBy(*group_cols, "block_id")
+        header_lines.groupBy("run_id", "block_id")
         .agg(
             F.flatten(
                 F.transform(
@@ -305,7 +243,7 @@ def _finish_blocks(
         for name, (idx, typ) in cfg.header_schema.items()
     ]
     headers = header_tok.select(
-        *group_cols, "block_id", "header_line_start", "header_line_end", *hdr_cols
+        "run_id", "block_id", "header_line_start", "header_line_end", *hdr_cols
     )
     # time keys the block, rounded to 2 decimals (parser/base.py:215);
     # the unrounded value is preserved as time_raw (the reference keeps
@@ -315,7 +253,7 @@ def _finish_blocks(
     )
 
     # duplicate timestamps: LAST block wins (parser/base.py:217-223)
-    w_dup = W.partitionBy(*group_cols, "time").orderBy(F.col("block_id").desc())
+    w_dup = W.partitionBy("run_id", "time").orderBy(F.col("block_id").desc())
     headers = (
         headers.withColumn("_rn", F.row_number().over(w_dup))
         .filter(F.col("_rn") == 1)
@@ -323,7 +261,7 @@ def _finish_blocks(
     )
 
     data_lines = blocked.filter(~F.col("is_header")).select(
-        *group_cols,
+        "run_id",
         "block_id",
         "line_no",
         F.split(F.col("txt"), r"\s+").alias("toks"),
@@ -333,9 +271,9 @@ def _finish_blocks(
         for name, (idx, typ) in cfg.data_schema.items()
     ]
     data = data_lines.join(
-        headers.select(*group_cols, "block_id", "time"),
-        [*group_cols, "block_id"],
-    ).select(*group_cols, "block_id", "time", "line_no", *data_cols)
+        headers.select("run_id", "block_id", "time"),
+        ["run_id", "block_id"],
+    ).select("run_id", "block_id", "time", "line_no", *data_cols)
 
     return BlockTables(headers=headers, data=data, violations=violations)
 
@@ -354,96 +292,3 @@ def raise_block_violation(bad) -> None:
             f"but got: '{bad['bad_txt']}'"
         )
     raise ValueError("Incomplete header at end of file.")
-
-
-def read_block_file(
-    spark: SparkSession,
-    path: str,
-    cfg: BlockSourceConfig,
-    is_strict: bool = True,
-) -> BlockTables:
-    return parse_blocks(read_lines(spark, path), cfg, is_strict=is_strict)
-
-
-def read_block_file_split(
-    spark: SparkSession,
-    path: str,
-    cfg: BlockSourceConfig,
-    is_strict: bool = True,
-    min_partitions: int = 8,
-) -> BlockTables:
-    """Splittable reader for a HUGE single block file (reference spec
-    parser/base.py:241-307): same output as read_block_file, but no
-    single-partition sort — a multi-TB file parses across the cluster.
-
-    Two linear passes over the text splits (TextInputFormat keeps
-    lines whole and partitions in file order):
-
-    1. per-partition (line count, header count) — one tiny collect,
-       the same bookkeeping job zipWithIndex runs;
-    2. prefix-sum those counts on the driver, then a second pass
-       emits every nonempty line with its GLOBAL line number and
-       running header count (hdr_cum), stitching blocks that span
-       partition boundaries: a partition's leading data lines get the
-       header count carried in from earlier partitions.
-
-    The flagged lines then flow through the same block-finishing
-    dataflow as the windowed reader.
-    """
-    raw = spark.sparkContext.textFile(path, min_partitions)
-    header_prefix = cfg.header_prefix
-    footer_prefix = cfg.footer_prefix
-
-    def flags(txt: str) -> tuple[bool, bool]:
-        is_f = footer_prefix is not None and txt.startswith(footer_prefix)
-        return (txt.startswith(header_prefix) and not is_f, is_f)
-
-    def pass1(idx, it):
-        n = h = 0
-        for ln in it:
-            n += 1
-            t = ln.strip()
-            if t and flags(t)[0]:
-                h += 1
-        yield (idx, n, h)
-
-    counts = dict(
-        (i, (n, h))
-        for i, n, h in raw.mapPartitionsWithIndex(pass1).collect()
-    )
-    line_off: dict[int, int] = {}
-    hdr_off: dict[int, int] = {}
-    ln = hd = 0
-    for i in sorted(counts):
-        line_off[i], hdr_off[i] = ln, hd
-        ln += counts[i][0]
-        hd += counts[i][1]
-
-    def pass2(idx, it):
-        ln_no = line_off[idx]
-        hc = hdr_off[idx]
-        for ln_txt in it:
-            ln_no += 1
-            t = ln_txt.strip()
-            if not t:
-                continue
-            is_h, is_f = flags(t)
-            if is_h:
-                hc += 1
-            yield (ln_no, t, is_h, is_f, hc)
-
-    flagged = spark.createDataFrame(
-        raw.mapPartitionsWithIndex(pass2),
-        schema=T.StructType(
-            [
-                T.StructField("line_no", T.LongType(), False),
-                T.StructField("txt", T.StringType(), False),
-                T.StructField("is_header", T.BooleanType(), False),
-                T.StructField("is_footer", T.BooleanType(), False),
-                T.StructField("hdr_cum", T.LongType(), False),
-            ]
-        ),
-    )
-    return _finish_blocks(
-        flagged, cfg, is_strict, group_cols=[], defer_validation=False
-    )

@@ -17,8 +17,7 @@ directory of thousands of runs scans embarrassingly parallel with no
 driver loop; each partition parses locally and ships its rows to the
 JVM as ONE Arrow RecordBatch (columnar, no per-row pickling). This is
 the discovery/convenience path — per-file-sized memory, like
-read_lines_runs. The windowed and splittable readers in block_text.py
-remain the right tool for a single pathological multi-TB file.
+read_lines_runs, the batch parser's line source.
 
 Parity contract: the pure-Python tokenizer here must match the
 DataFrame-native parser bit-for-bit — including Java HALF_UP rounding

@@ -1,4 +1,4 @@
-"""S3-S8 — the six NBODY6 source configurations + per-run loading.
+"""S3-S8 — the six NBODY6 source configurations + batched loading.
 
 Positional schemas transcribed from the reference parser configs
 (token indices and converters cited per source). Vector headers become
@@ -18,7 +18,6 @@ from nbody6_data_pipeline_spark.sources.block_text import (
     BlockTables,
     parse_blocks,
     raise_block_violation,
-    read_block_file,
     read_lines_runs,
 )
 
@@ -155,35 +154,6 @@ FILE_CONFIGS: dict[str, BlockSourceConfig] = {
 }
 
 
-class NBody6Run:
-    """Parsed per-run tables (the reference's NBODY6Data, loader.py:20-51,
-    flattened): one headers+data DataFrame pair per source file."""
-
-    def __init__(self, tables: dict[str, BlockTables], run_root: str):
-        self.tables = tables
-        self.run_root = run_root
-
-    def headers(self, name: str) -> DataFrame:
-        return self.tables[name].headers
-
-    def data(self, name: str) -> DataFrame:
-        return self.tables[name].data
-
-
-def load_run(
-    spark: SparkSession, run_root: str, is_strict: bool = True
-) -> NBody6Run:
-    """Parse the six raw files of one simulation run
-    (reference NBODY6DataLoader.__init__/load, loader.py:56-136)."""
-    tables: dict[str, BlockTables] = {}
-    for fname, cfg in FILE_CONFIGS.items():
-        path = os.path.join(run_root, fname)
-        if not os.path.isfile(path):
-            raise FileNotFoundError(f"Required file '{fname}' not found in '{run_root}'.")
-        tables[fname] = read_block_file(spark, path, cfg, is_strict=is_strict)
-    return NBody6Run(tables, run_root)
-
-
 class NBody6Runs:
     """Batched multi-run tables: one headers+data pair per file format,
     each carrying a ``run_id`` column spanning every loaded run."""
@@ -203,15 +173,16 @@ def load_runs(
     spark: SparkSession,
     runs: list[tuple[str, str]],
     is_strict: bool = True,
-    validate: bool = True,
 ) -> NBody6Runs:
-    """Parse the six raw files of MANY runs as six batched lazy plans.
+    """Parse the six raw files of MANY runs (``[(run_id, run_root)]``)
+    as six batched lazy plans (reference NBODY6DataLoader.__init__/load,
+    loader.py:56-136).
 
     Per file format: ONE wholeTextFiles source over every run's file
     and ONE grouped parse (windows partitioned by run_id). Structural
-    validation across all runs x formats is checked in a single job —
-    the per-run driver loop (2 jobs per file x 6 files x N runs)
-    becomes O(1) driver actions for the whole batch.
+    validation across all runs x formats is checked in a single job,
+    so the whole batch costs O(1) driver actions, not 2 jobs per file
+    per run.
     """
     for rid, root in runs:
         for fname in FILE_CONFIGS:
@@ -225,18 +196,14 @@ def load_runs(
         lines = read_lines_runs(
             spark, [(rid, os.path.join(root, fname)) for rid, root in runs]
         )
-        bt = parse_blocks(
-            lines, cfg, is_strict=is_strict,
-            group_cols=["run_id"], defer_validation=True,
-        )
+        bt = parse_blocks(lines, cfg, is_strict=is_strict)
         tables[fname] = bt
         v = bt.violations.select(
             F.lit(fname).alias("file"), "run_id", "bad_line", "bad_txt",
             "incomplete_header",
         )
         all_viol = v if all_viol is None else all_viol.unionByName(v)
-    if validate:
-        bad = all_viol.first()  # ONE job validates every run and format
-        if bad is not None:
-            raise_block_violation(bad)
+    bad = all_viol.first()  # ONE job validates every run and format
+    if bad is not None:
+        raise_block_violation(bad)
     return NBody6Runs(tables, [rid for rid, _ in runs])

@@ -1,22 +1,39 @@
-"""S10-S14 — sinks (reference utils.py:86-99, notebook caches,
+"""S10, S12, S13 — sinks (reference utils.py:86-99, notebook caches,
 snapshot serialization).
 
 Spark's FileOutputCommitter already gives the tmp-write+rename
 atomicity the reference implements by hand (SURVEY §2.1 S10); the
 partitioned-parquet layout replaces joblib object pickles (S13) with
 run_id partition pruning.
+
+Partitioned writes use DYNAMIC partition overwrite, set as a per-write
+option rather than the session conf so no other writer in the session
+sees it: an ``overwrite`` then replaces only the partitions present in
+``df``, so appending run N to a layer leaves runs 1..N-1 intact
+(static mode would truncate the whole dataset on every call, breaking
+the pipeline's resume).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 
-def write_csv(df: DataFrame, path: str, order_by: list[str] | None = None) -> None:
+def _partitioned(w: DataFrameWriter, partition_by: list[str] | None):
+    if not partition_by:
+        return w
+    return w.option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_by
+    )
+
+
+def write_csv(
+    df: DataFrame,
+    path: str,
+    order_by: list[str] | None = None,
+    partition_by: list[str] | None = None,
+) -> None:
     """S10 — CSV sink. Arrays/JSON-able nested values are stringified
     with to_json (F23, collect_inclination_stats.py:98-115)."""
     out = df
@@ -26,52 +43,14 @@ def write_csv(df: DataFrame, path: str, order_by: list[str] | None = None) -> No
             out = out.withColumn(f.name, F.to_json(f.name))
     if order_by:
         out = out.orderBy(*order_by)
-    out.write.mode("overwrite").option("header", True).csv(path)
-
-
-def read_stats_csvs(
-    spark: SparkSession, paths: str | list, schema=None
-) -> DataFrame:
-    """S11 — CSV scan + concat (reference notebook cells: read all
-    per-run stats CSVs and union). Spark's multi-path CSV reader is
-    the union; pass an explicit schema to avoid inference in
-    production."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(paths)
+    w = out.write.mode("overwrite").option("header", True)
+    _partitioned(w, partition_by).csv(path)
 
 
 def write_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """S12/S13 — zstd parquet, optionally partitioned by run_id for
-    partition-pruned resume (replaces joblib caches).
-
-    Partitioned writes use DYNAMIC partition overwrite: an
-    ``overwrite`` then replaces only the partitions present in ``df``,
-    so appending run N to a layer leaves runs 1..N-1 intact (static
-    mode would truncate the whole dataset on every call, breaking the
-    pipeline's per-run resume)."""
+    partition-pruned resume (replaces joblib caches)."""
     w = df.write.mode("overwrite").option("compression", "zstd")
-    if partition_by:
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_split_manifest(split: dict, config: dict, path: str) -> None:
-    """S14 — JSON split manifest (dataset_split.ipynb cell 6)."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"config": config, "splits": split}, f, indent=2)
-    os.replace(tmp, path)  # atomic rename (utils.py:86-99 semantics)
+    _partitioned(w, partition_by).parquet(path)

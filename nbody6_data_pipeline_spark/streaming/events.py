@@ -118,7 +118,9 @@ def adaptive_stream_partitions(
     caller keeps the session default (more workers, not fewer).
 
     Returns None (keep the session default — the conservative cluster
-    choice) when the path cannot be stat'ed (e.g. object store).
+    choice) when the path cannot be stat'ed (e.g. object store) or the
+    session value is not a number. The session value is a hard cap,
+    even below ``floor``.
     """
     import glob as _glob
     import os
@@ -134,8 +136,11 @@ def adaptive_stream_partitions(
             sz = os.path.getsize(path)
     except OSError:
         return None
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(floor, min(sess, sz // _STATE_PARTITION_BYTES + 1))
+    try:
+        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return None
+    return min(sess, max(floor, sz // _STATE_PARTITION_BYTES + 1))
 
 
 def run_stream_to_memory(

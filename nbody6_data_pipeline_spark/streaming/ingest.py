@@ -92,31 +92,25 @@ def make_batch_processor(
         # partition instead of appending next to the crashed attempt's
         # rows — this is what makes foreachBatch recovery exactly-once
         # on a plain parquet sink (an append here would duplicate)
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                fresh.drop("fingerprint")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
+        (
+            fresh.drop("fingerprint")
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(corpus_dir)
+        )
+        (
+            fresh.select(
+                "fingerprint",
+                F.col(id_col).alias("first_doc_id"),
+                F.lit(batch_id).alias("batch_id"),
             )
-            (
-                fresh.select(
-                    "fingerprint",
-                    F.col(id_col).alias("first_doc_id"),
-                    F.lit(batch_id).alias("batch_id"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(seen_dir)
-            )
-        finally:
-            if prev is None:
-                s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(seen_dir)
+        )
 
     return process_batch
 

@@ -76,22 +76,14 @@ def make_mv_processor(out_base: str):
     log_dir = os.path.join(out_base, "partials")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                _partials(batch_df)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(log_dir)
-            )
-        finally:
-            if prev is None:
-                s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            _partials(batch_df)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(log_dir)
+        )
 
     return process_batch
 

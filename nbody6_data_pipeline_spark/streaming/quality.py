@@ -52,7 +52,6 @@ def make_quality_gate(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         report = expectation_report(batch_df, checks, table)
         rows = report.collect()  # |checks| rows — driver-bounded
         n_checked = rows[0]["n_checked"] if rows else 0
@@ -64,12 +63,16 @@ def make_quality_gate(
         rep = s.createDataFrame(rows, report.schema).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        rep.write.mode("overwrite").partitionBy("batch_id").parquet(
-            reports_dir
-        )
         dest = quarantine_dir if bad else accepted_dir
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(dest)
+        for df, path in (
+            (rep, reports_dir),
+            (batch_df.withColumn("batch_id", F.lit(batch_id)), dest),
+        ):
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(path)
+            )
 
     return process_batch

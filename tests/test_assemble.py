@@ -9,9 +9,9 @@ import math
 import numpy as np
 import pytest
 
-from nbody6_data_pipeline_spark.operators.align import align_run
-from nbody6_data_pipeline_spark.operators.assemble import assemble
-from nbody6_data_pipeline_spark.sources.nbody6 import load_run
+from nbody6_data_pipeline_spark.operators.align import align_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import (
     ATTRS,
     CM_NAME,
@@ -28,8 +28,7 @@ from tests.nbody6_fixtures import (
 @pytest.fixture(scope="module")
 def assembled(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("asm") / "sim"))
-    run = align_run(load_run(spark, root))
-    return assemble(run, run_id="runA")
+    return assemble_runs(align_runs(load_runs(spark, [("runA", root)])))
 
 
 def _expected_positions(t: float) -> dict:
@@ -157,8 +156,7 @@ def test_dissolution_cut(spark, tmp_path_factory):
     root = write_run(
         str(tmp_path_factory.mktemp("asm_d") / "sim"), dissolve_last=True
     )
-    run = align_run(load_run(spark, root))
-    out = assemble(run, run_id="runD")
+    out = assemble_runs(align_runs(load_runs(spark, [("runD", root)])))
     times = sorted(r["time"] for r in out.snapshot_headers.collect())
     # final timestamp (dissolved) and everything after it dropped
     assert times == TIMES[:-1]
@@ -169,16 +167,16 @@ def test_strict_missing_name_raises(spark, tmp_path_factory):
     root = write_run(
         str(tmp_path_factory.mktemp("asm_m") / "sim"), drop_name=7
     )
-    run = align_run(load_run(spark, root))
+    run = align_runs(load_runs(spark, [("runM", root)]))
     with pytest.raises(ValueError, match="missing"):
-        assemble(run, run_id="runM", is_strict=True).stars.count()
+        assemble_runs(run, is_strict=True).stars.count()
 
 
 def test_lax_missing_name_drops(spark, tmp_path_factory):
     root = write_run(
         str(tmp_path_factory.mktemp("asm_l") / "sim"), drop_name=7
     )
-    run = align_run(load_run(spark, root))
-    out = assemble(run, run_id="runL", is_strict=False)
+    run = align_runs(load_runs(spark, [("runL", root)]))
+    out = assemble_runs(run, is_strict=False)
     names = {r["name"] for r in out.stars.filter("time = 0.0").collect()}
     assert 7 not in names and 3 in names

@@ -6,20 +6,19 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.sources.block_text import (
     BlockSourceConfig,
     parse_blocks,
-    read_block_file,
-    read_block_file_split,
+    raise_block_violation,
+    read_lines_runs,
 )
 from nbody6_data_pipeline_spark.sources.nbody6 import (
     DENS_CENTRE_CONFIG,
     FORT82_CONFIG,
     OUT9_CONFIG,
     OUT34_CONFIG,
-    load_run,
+    load_runs,
 )
 from tests.nbody6_fixtures import CM_NAME, R_TIDAL, STARS, TIMES, write_run
 
@@ -29,8 +28,13 @@ def run_root(tmp_path_factory):
     return write_run(str(tmp_path_factory.mktemp("run") / "sim"))
 
 
+def _read(spark, path, cfg):
+    """One file through the batch parser (run_id "r")."""
+    return parse_blocks(read_lines_runs(spark, [("r", path)]), cfg)
+
+
 def test_out34_blocks(spark, run_root):
-    bt = read_block_file(spark, os.path.join(run_root, "OUT34"), OUT34_CONFIG)
+    bt = _read(spark, os.path.join(run_root, "OUT34"), OUT34_CONFIG)
     headers = {r["time"]: r for r in bt.headers.collect()}
     assert sorted(headers) == TIMES
     h0 = headers[0.0]
@@ -46,7 +50,7 @@ def test_out34_blocks(spark, run_root):
 
 
 def test_out9_multiline_header(spark, run_root):
-    bt = read_block_file(spark, os.path.join(run_root, "OUT9"), OUT9_CONFIG)
+    bt = _read(spark, os.path.join(run_root, "OUT9"), OUT9_CONFIG)
     headers = {r["time"]: r for r in bt.headers.collect()}
     # jitter 0.004 rounds away at 2 decimals
     assert sorted(headers) == TIMES
@@ -57,7 +61,7 @@ def test_out9_multiline_header(spark, run_root):
 
 
 def test_fort82_footer_and_lstrip(spark, run_root):
-    bt = read_block_file(spark, os.path.join(run_root, "fort.82"), FORT82_CONFIG)
+    bt = _read(spark, os.path.join(run_root, "fort.82"), FORT82_CONFIG)
     headers = sorted(r["time"] for r in bt.headers.collect())
     assert headers == TIMES
     row = bt.data.filter("time = 0.0").collect()[0]
@@ -66,7 +70,7 @@ def test_fort82_footer_and_lstrip(spark, run_root):
 
 
 def test_dens_centre_headers_only(spark, run_root):
-    bt = read_block_file(
+    bt = _read(
         spark, os.path.join(run_root, "densCentre.txt"), DENS_CENTRE_CONFIG
     )
     rows = {r["time"]: r for r in bt.headers.collect()}
@@ -77,7 +81,7 @@ def test_dens_centre_headers_only(spark, run_root):
 
 
 def test_load_run_all_six(spark, run_root):
-    run = load_run(spark, run_root)
+    run = load_runs(spark, [("r", run_root)])
     assert set(run.tables) == {
         "OUT34", "OUT9", "fort.19", "fort.82", "fort.83", "densCentre.txt",
     }
@@ -92,17 +96,23 @@ SIMPLE = BlockSourceConfig(
 )
 
 
-def _mk(spark, text):
+def _parse(spark, text, cfg=SIMPLE, is_strict=True):
+    """Parse ``text`` as one run's file and raise its structural
+    violation, as load_runs does for a batch."""
     lines = spark.createDataFrame(
-        [(i + 1, ln) for i, ln in enumerate(text.splitlines())],
-        ["line_no", "raw"],
+        [("t", i + 1, ln) for i, ln in enumerate(text.splitlines())],
+        "run_id string, line_no long, raw string",
     )
-    return lines
+    bt = parse_blocks(lines, cfg, is_strict=is_strict)
+    bad = bt.violations.first()
+    if bad is not None:
+        raise_block_violation(bad)
+    return bt
 
 
 def test_duplicate_timestamp_last_wins(spark):
     # reference parser/base.py:217-223: duplicate ts overwrites
-    bt = parse_blocks(_mk(spark, "# 1.0 1\n10.0 1\n# 1.0 1\n20.0 2\n"), SIMPLE)
+    bt = _parse(spark, "# 1.0 1\n10.0 1\n# 1.0 1\n20.0 2\n")
     assert bt.headers.count() == 1
     rows = bt.data.collect()
     assert len(rows) == 1 and rows[0]["a"] == 20.0
@@ -110,7 +120,7 @@ def test_duplicate_timestamp_last_wins(spark):
 
 def test_data_before_header_raises(spark):
     with pytest.raises(ValueError, match="Expected a header line"):
-        parse_blocks(_mk(spark, "10.0 1\n# 1.0 1\n"), SIMPLE)
+        _parse(spark, "10.0 1\n# 1.0 1\n")
 
 
 def test_incomplete_multiline_header_raises(spark):
@@ -121,81 +131,22 @@ def test_incomplete_multiline_header_raises(spark):
         data_schema={"a": (0, "double")},
     )
     with pytest.raises(ValueError, match="Incomplete header"):
-        parse_blocks(_mk(spark, "# 1.0\n# x\n1.0\n# 2.0\n"), cfg)
+        _parse(spark, "# 1.0\n# x\n1.0\n# 2.0\n", cfg)
 
 
 def test_lax_mode_bad_token_null(spark):
-    bt = parse_blocks(
-        _mk(spark, "# 1.0 1\nBAD 7\n"), SIMPLE, is_strict=False
-    )
+    bt = _parse(spark, "# 1.0 1\nBAD 7\n", is_strict=False)
     row = bt.data.collect()[0]
     assert row["a"] is None and row["b"] == 7
 
 
 def test_strict_mode_bad_token_raises(spark):
-    bt = parse_blocks(_mk(spark, "# 1.0 1\nBAD 7\n"), SIMPLE, is_strict=True)
+    bt = _parse(spark, "# 1.0 1\nBAD 7\n", is_strict=True)
     with pytest.raises(Exception):
         bt.data.collect()
 
 
-@pytest.mark.parametrize(
-    "fname,cfg",
-    [
-        ("OUT34", OUT34_CONFIG),
-        ("OUT9", OUT9_CONFIG),
-        ("fort.82", FORT82_CONFIG),
-        ("densCentre.txt", DENS_CENTRE_CONFIG),
-    ],
-)
-def test_split_reader_parity(spark, run_root, fname, cfg):
-    """read_block_file_split must equal the windowed reader on every
-    format — with enough partitions that blocks straddle split
-    boundaries (the fixture files are dozens of lines; 7 partitions
-    guarantee several blocks span partitions)."""
-    path = os.path.join(run_root, fname)
-    win = read_block_file(spark, path, cfg)
-    spl = read_block_file_split(spark, path, cfg, min_partitions=7)
-    for attr in ("headers", "data"):
-        a = getattr(win, attr)
-        b = getattr(spl, attr)
-        assert sorted(a.columns) == sorted(b.columns)
-        cols = sorted(a.columns)
-        ra = sorted(map(str, a.select(*cols).collect()))
-        rb = sorted(map(str, b.select(*cols).collect()))
-        assert ra == rb, f"{fname} {attr} mismatch"
-
-
-def test_split_reader_block_spans_partition_boundary(spark, tmp_path):
-    """One block whose data lines land in a later partition than its
-    header: the stitched hdr_cum must still attach them to it."""
-    p = tmp_path / "big.txt"
-    # one header + 40 data lines, then another block — with
-    # min_partitions=8 the first block inevitably crosses splits
-    body = "# 1.0 1\n" + "".join(f"{i}.0 {i}\n" for i in range(40))
-    body += "# 2.0 1\n" + "".join(f"{i}.5 {i}\n" for i in range(10))
-    p.write_text(body)
-    bt = read_block_file_split(spark, str(p), SIMPLE, min_partitions=8)
-    hdrs = {r["time"]: r["block_id"] for r in bt.headers.collect()}
-    assert set(hdrs) == {1.0, 2.0}
-    counts = {
-        r["time"]: r["n"]
-        for r in bt.data.groupBy("time").agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
-    assert counts == {1.0: 40, 2.0: 10}
-
-
-def test_split_reader_validation_errors(spark, tmp_path):
-    p = tmp_path / "bad.txt"
-    p.write_text("10.0 1\n# 1.0 1\n")
-    with pytest.raises(ValueError, match="Expected a header line"):
-        read_block_file_split(spark, str(p), SIMPLE, min_partitions=4)
-
-
 def test_empty_lines_skipped(spark):
-    bt = parse_blocks(
-        _mk(spark, "\n# 1.0 1\n\n10.0 1\n\n\n# 2.0 1\n20.0 2\n\n"), SIMPLE
-    )
+    bt = _parse(spark, "\n# 1.0 1\n\n10.0 1\n\n\n# 2.0 1\n20.0 2\n\n")
     assert bt.headers.count() == 2
     assert bt.data.count() == 2

@@ -1,7 +1,7 @@
 """Python DataSource façade (spark.read.format("nbody6")) parity vs
-the DataFrame-native block parser — same files, same rows, for every
-file format, plus duplicate-timestamp last-wins, lax nulls, and
-per-file partition planning."""
+the DataFrame-native batch parser (read_lines_runs + parse_blocks) —
+same files, same rows, for every file format, plus duplicate-timestamp
+last-wins, lax nulls, and per-file partition planning."""
 
 from __future__ import annotations
 
@@ -11,8 +11,7 @@ import pytest
 
 from nbody6_data_pipeline_spark.sources.block_text import (
     parse_blocks,
-    read_block_file,
-    read_lines,
+    read_lines_runs,
 )
 from nbody6_data_pipeline_spark.sources.datasource import (
     _round2_half_up,
@@ -30,8 +29,15 @@ def runs_root(tmp_path_factory):
     return str(root)
 
 
+def _native(spark, path, cfg, is_strict=True):
+    """One file through the batch parser (run_id "r")."""
+    return parse_blocks(
+        read_lines_runs(spark, [("r", path)]), cfg, is_strict=is_strict
+    )
+
+
 def _native_rows(spark, path, cfg, table):
-    bt = read_block_file(spark, path, cfg)
+    bt = _native(spark, path, cfg)
     if table == "headers":
         cols = ["block_id", "time"] + [
             c for c in cfg.header_schema if c != "time"
@@ -90,7 +96,7 @@ def test_duplicate_timestamp_last_wins_and_rounding(spark, tmp_path):
         .option("kind", "OUT34")
         .load(str(f))
     )
-    native = read_block_file(spark, str(f), FILE_CONFIGS["OUT34"])
+    native = _native(spark, str(f), FILE_CONFIGS["OUT34"])
     got = sorted((r["time"], r["name"]) for r in ds.collect())
     want = sorted(
         (r["time"], r["name"]) for r in native.data.collect()
@@ -121,9 +127,7 @@ def test_lax_mode_matches_try_cast(spark, tmp_path):
         .option("mode", "lax")
         .load(str(f))
     )
-    native = parse_blocks(
-        read_lines(spark, str(f)), FILE_CONFIGS["OUT34"], is_strict=False
-    ).data
+    native = _native(spark, str(f), FILE_CONFIGS["OUT34"], is_strict=False).data
     cols = ["time", "line_no", *FILE_CONFIGS["OUT34"].data_schema]
     got = sorted(tuple(r) for r in ds.select(*cols).collect())
     want = sorted(tuple(r) for r in native.select(*cols).collect())

@@ -14,10 +14,10 @@ from nbody6_data_pipeline_spark.functions.astro import (
     KMS_PER_PC_TO_MAS_YR,
     offset_frame_columns,
 )
-from nbody6_data_pipeline_spark.operators.align import align_run
-from nbody6_data_pipeline_spark.operators.assemble import assemble
+from nbody6_data_pipeline_spark.operators.align import align_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
 from nbody6_data_pipeline_spark.operators.observe import observe
-from nbody6_data_pipeline_spark.sources.nbody6 import load_run
+from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import write_run
 
 
@@ -189,7 +189,7 @@ def test_offset_frame_matches_numpy(spark):
 @pytest.fixture(scope="module")
 def observed(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("obs") / "sim"))
-    asm = assemble(align_run(load_run(spark, root)), run_id="runO")
+    asm = assemble_runs(align_runs(load_runs(spark, [("runO", root)])))
     out = observe(spark, asm, coordinates=[(50.0, 0.0, 0.0), (600.0, 0.0, 0.0)])
     out.stars = out.stars.localCheckpoint()
     out.binary_systems = out.binary_systems.localCheckpoint()

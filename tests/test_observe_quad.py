@@ -24,13 +24,13 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from nbody6_data_pipeline_spark.operators.align import align_run
+from nbody6_data_pipeline_spark.operators.align import align_runs
 from nbody6_data_pipeline_spark.operators.assemble import (
     AssembledTables,
-    assemble,
+    assemble_runs,
 )
 from nbody6_data_pipeline_spark.operators.observe import observe
-from nbody6_data_pipeline_spark.sources.nbody6 import load_run
+from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import ATTRS, DC, STARS, write_quad_run
 
 WIDE_COORDS = [(float(d), 0.0, 0.0) for d in range(50, 1001, 50)]  # 20
@@ -41,7 +41,7 @@ R_TIDAL = 10.0
 @pytest.fixture(scope="module")
 def quad_asm(spark, tmp_path_factory):
     root = write_quad_run(str(tmp_path_factory.mktemp("quad") / "sim"))
-    return assemble(align_run(load_run(spark, root)), run_id="runQ")
+    return assemble_runs(align_runs(load_runs(spark, [("runQ", root)])))
 
 
 @pytest.fixture(scope="module")

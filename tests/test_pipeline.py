@@ -8,8 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from nbody6_data_pipeline_spark.pipeline import process_all
+from nbody6_data_pipeline_spark.pipeline import LAYERS, process_all
 from nbody6_data_pipeline_spark.sources.discovery import fetch_sim_runs
+from nbody6_data_pipeline_spark.sources.sinks import write_parquet
 from tests.nbody6_fixtures import write_run
 
 
@@ -29,84 +30,82 @@ def test_discovery(sim_base):
     assert runs[0].attrs["init_mass_lv"] == 6
 
 
-def test_process_all_and_resume(spark, sim_base, tmp_path):
-    out = str(tmp_path / "out")
-    runs = process_all(
-        spark, sim_base, out, coordinates=[(50.0, 0.0, 0.0)]
-    )
-    assert len(runs) == 2
+RUN1 = "Rad04-zmet0014-M6-0001"
+RUN2 = "Rad04-zmet0014-M6-0002"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
-    # BOTH runs' partitions must survive in every layer — a static
-    # partition-overwrite would leave only the last run written.
-    for layer, per_run in (
-        ("overall_stats", 3),  # 3 timestamps x 1 coordinate
-        ("snapshot_headers", 3),
-        ("observed_stars", None),
-    ):
+
+def test_process_all_and_resume(spark, tmp_path):
+    """Two batches append: run 1 alone, then run 2 added. Dynamic
+    partition overwrite must keep run 1's partitions in every layer
+    (a static overwrite would leave only the second batch's run), the
+    session conf must not change, and a third call is a no-op."""
+    base = tmp_path / "simroot"
+    out = str(tmp_path / "out")
+    coords = [(50.0, 0.0, 0.0)]
+    mode0 = spark.conf.get(OVERWRITE_MODE)
+
+    write_run(str(base / "Rad04" / "zmet0014" / "M6" / "0001"))
+    runs = process_all(spark, str(base), out, coordinates=coords,
+                       is_slim=False)
+    assert [r.label for r in runs] == [RUN1]
+    write_run(str(base / "Rad04" / "zmet0014" / "M6" / "0002"))
+    runs = process_all(spark, str(base), out, coordinates=coords,
+                       is_slim=False)
+    assert [r.label for r in runs] == [RUN1, RUN2]
+    assert spark.conf.get(OVERWRITE_MODE) == mode0
+
+    for layer in LAYERS:
         df = spark.read.parquet(os.path.join(out, layer))
         run_ids = {r["run_id"] for r in df.select("run_id").distinct().collect()}
-        assert run_ids == {
-            "Rad04-zmet0014-M6-0001",
-            "Rad04-zmet0014-M6-0002",
-        }, f"{layer} lost a run partition"
-        if per_run is not None:
-            assert df.count() == 2 * per_run
+        assert run_ids == {RUN1, RUN2}, f"{layer} lost a run partition"
+    for layer in ("overall_stats", "snapshot_headers"):
+        # 3 timestamps x 1 coordinate per run
+        assert spark.read.parquet(os.path.join(out, layer)).count() == 6
 
     stats = spark.read.parquet(os.path.join(out, "overall_stats"))
-    r = stats.filter(stats.run_id == "Rad04-zmet0014-M6-0001").collect()[0]
+    r = stats.filter(stats.run_id == RUN1).collect()[0]
     assert r["obs_x"] == 50.0
     assert r["init_mass_lv"] == 6
     assert r["n_star"] > 0
 
-    annular = spark.read.parquet(os.path.join(out, "annular_stats"))
-    assert annular.select("run_id").distinct().count() == 2
-
-    csv_dir = os.path.join(
-        out, "csv", "Rad04-zmet0014-M6-0001", "overall_stats"
+    # CSV export: csv/<layer>/run_id=<id>/, and one multi-path read is
+    # the concat of every run's stats (S11)
+    for layer in ("overall_stats", "annular_stats"):
+        csv_dir = os.path.join(out, "csv", layer)
+        assert {n for n in os.listdir(csv_dir) if n.startswith("run_id=")} == {
+            f"run_id={RUN1}", f"run_id={RUN2}"
+        }
+    back = spark.read.option("header", True).csv(
+        os.path.join(out, "csv", "overall_stats")
     )
-    assert os.path.isdir(csv_dir)
+    assert back.count() == 6
+    assert {r["run_id"] for r in back.select("run_id").distinct().collect()} == {
+        RUN1, RUN2
+    }
 
-    # resume: second invocation skips (no error, same outputs)
-    process_all(spark, sim_base, out, coordinates=[(50.0, 0.0, 0.0)])
+    # resume: a third call finds both runs and runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-probe", "resume must do no work")
+    try:
+        runs = process_all(spark, str(base), out, coordinates=coords,
+                           is_slim=False)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("resume-probe"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(runs) == 2 and n_jobs == 0
     assert spark.read.parquet(os.path.join(out, "overall_stats")).count() == 6
 
 
-def test_batched_pipeline_matches_per_run(spark, sim_base, tmp_path):
-    """process_all_batched must produce the same overall_stats rows as
-    the per-run path, with O(1) driver actions for load+align."""
-    from nbody6_data_pipeline_spark.pipeline import process_all_batched
-
-    out_a = str(tmp_path / "per_run")
-    out_b = str(tmp_path / "batched")
-    process_all(spark, sim_base, out_a, coordinates=[(50.0, 0.0, 0.0)])
-    process_all_batched(spark, sim_base, out_b, coordinates=[(50.0, 0.0, 0.0)])
-
-    cols = None
-    frames = []
-    for out in (out_a, out_b):
-        df = spark.read.parquet(os.path.join(out, "overall_stats"))
-        if cols is None:
-            cols = sorted(df.columns)
-        rows = sorted(
-            df.select(*[F.col(c).cast("string") for c in cols]).collect()
-        )
-        frames.append(rows)
-    assert frames[0] == frames[1]
-
-    headers = spark.read.parquet(os.path.join(out_b, "snapshot_headers"))
-    assert headers.select("run_id").distinct().count() == 2
-
-    # batched CSV export exists, partitioned by run_id
-    csv_dir = os.path.join(out_b, "csv_batched", "overall_stats")
-    assert any(
-        name.startswith("run_id=") for name in os.listdir(csv_dir)
-    )
-
-    # resume: re-invocation is a no-op
-    process_all_batched(spark, sim_base, out_b, coordinates=[(50.0, 0.0, 0.0)])
-    assert (
-        spark.read.parquet(os.path.join(out_b, "overall_stats")).count() == 6
-    )
+def test_write_parquet_leaves_session_conf(spark, tmp_path):
+    mode0 = spark.conf.get(OVERWRITE_MODE)
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "run_id string, v int")
+    path = str(tmp_path / "layer")
+    write_parquet(df, path, ["run_id"])
+    assert spark.conf.get(OVERWRITE_MODE) == mode0
+    # still dynamic per write: rewriting run a keeps run b
+    write_parquet(df.filter("run_id = 'a'"), path, ["run_id"])
+    assert spark.read.parquet(path).count() == 2
 
 
 def test_align_runs_executor_side_parity(spark, sim_base):
@@ -148,7 +147,7 @@ def test_align_runs_executor_side_strict_error(spark, tmp_path, monkeypatch):
         nbody6_fixtures.JITTER, "OUT9", 0.5  # way past the 2e-2 tolerance
     )
     write_run(root)
-    multi = load_runs(spark, [("bad", root)], validate=False)
+    multi = load_runs(spark, [("bad", root)])
     with pytest.raises(Exception, match="inconsistent timestamps"):
         aligned = align_runs(multi, executor_side=True)
         aligned.tables["OUT34"].headers.collect()
@@ -158,7 +157,7 @@ def test_batched_load_align_constant_driver_actions(spark, sim_base):
     """load_runs + align_runs issue a constant number of driver
     actions: the Spark job count (AQE materializes a few jobs per
     action, fixed by plan shape) must NOT grow with the run count —
-    the per-run path issues ~2 actions per file per run instead."""
+    a per-run loop would issue ~2 actions per file per run instead."""
     from nbody6_data_pipeline_spark.operators.align import align_runs
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
@@ -186,23 +185,51 @@ def test_batched_pipeline_lax_mode(spark, tmp_path):
     """End-to-end lax mode: a run whose pairing info references a star
     missing from the attribute catalog processes to completion with
     the offending binaries dropped (strict mode raises instead)."""
-    import pytest
-
-    from nbody6_data_pipeline_spark.pipeline import process_all_batched
-
     base = tmp_path / "laxroot"
     write_run(str(base / "Rad04" / "zmet0014" / "M6" / "0001"), drop_name=7)
     out_strict = str(tmp_path / "out_strict")
     with pytest.raises(Exception):
-        process_all_batched(
+        process_all(
             spark, str(base), out_strict, coordinates=[(50.0, 0.0, 0.0)],
             is_strict=True,
         )
     out = str(tmp_path / "out_lax")
-    process_all_batched(
+    process_all(
         spark, str(base), out, coordinates=[(50.0, 0.0, 0.0)],
         is_strict=False,
     )
     stats = spark.read.parquet(os.path.join(out, "overall_stats"))
     rows = stats.collect()
     assert len(rows) == 3 and all(r["n_star"] > 0 for r in rows)
+
+
+def test_load_runs_windows_partitioned_by_run_id(spark, sim_base):
+    """Every Window in the parse plans is partitioned by run_id: an
+    unpartitioned window would pull a whole format's lines into one
+    task ("No Partition Defined for Window operation")."""
+    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
+
+    def nodes(plan):
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()
+        yield plan
+        children = plan.children()
+        for i in range(children.size()):
+            yield from nodes(children.apply(i))
+
+    runs = fetch_sim_runs(sim_base)
+    multi = load_runs(spark, [(r.label, r.path) for r in runs])
+    n_windows = 0
+    for fname, bt in multi.tables.items():
+        for part in ("headers", "data", "violations"):
+            plan = getattr(bt, part)._jdf.queryExecution().executedPlan()
+            for node in nodes(plan):
+                if node.getClass().getSimpleName() != "WindowExec":
+                    continue
+                n_windows += 1
+                spec = node.partitionSpec()
+                keys = [spec.apply(i).toString() for i in range(spec.size())]
+                assert any(k.startswith("run_id#") for k in keys), (
+                    f"{fname}.{part}: window partitioned by {keys}"
+                )
+    assert n_windows > 0

@@ -7,15 +7,15 @@ import math
 import numpy as np
 import pytest
 
-from nbody6_data_pipeline_spark.operators.align import align_run
-from nbody6_data_pipeline_spark.operators.assemble import assemble
+from nbody6_data_pipeline_spark.operators.align import align_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
 from nbody6_data_pipeline_spark.operators.inclination import inclination_summary
 from nbody6_data_pipeline_spark.operators.statistics import (
     annular_statistics,
     overall_statistics,
     timestamp_summary,
 )
-from nbody6_data_pipeline_spark.sources.nbody6 import load_run
+from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import DC, R_TIDAL, STARS, TIMES, write_run
 
 KEY = ["run_id", "time"]
@@ -24,7 +24,7 @@ KEY = ["run_id", "time"]
 @pytest.fixture(scope="module")
 def asm(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("stats") / "sim"))
-    return assemble(align_run(load_run(spark, root)), run_id="runS")
+    return assemble_runs(align_runs(load_runs(spark, [("runS", root)])))
 
 
 def test_overall_statistics(spark, asm):

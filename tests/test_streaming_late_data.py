@@ -176,3 +176,38 @@ def test_registry_query_actually_drops_rows(spark, sf_dir):
     total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert kept < total
     assert kept > 0.7 * total  # ...but the on-time 80% bulk survived
+
+
+class _ConfOnly:
+    """Just enough session for adaptive_stream_partitions: Spark's own
+    conf rejects a non-integer shuffle.partitions at set time."""
+
+    def __init__(self, shuffle_partitions: str):
+        self.conf = {"spark.sql.shuffle.partitions": shuffle_partitions}
+
+
+def test_adaptive_partitions_non_numeric_session_value(tmp_path):
+    from nbody6_data_pipeline_spark.streaming.events import (
+        adaptive_stream_partitions,
+    )
+
+    f = tmp_path / "src.parquet"
+    f.write_bytes(b"x" * 100)
+    assert adaptive_stream_partitions(_ConfOnly("auto"), str(f)) is None
+
+
+def test_adaptive_partitions_session_value_is_a_cap(tmp_path):
+    from nbody6_data_pipeline_spark.streaming.events import (
+        adaptive_stream_partitions,
+    )
+
+    small = tmp_path / "small.parquet"
+    small.write_bytes(b"x" * 100)
+    big = tmp_path / "big.parquet"
+    with open(big, "wb") as fh:
+        fh.truncate(100 << 20)  # sparse: ~4 partitions' worth of bytes
+    assert adaptive_stream_partitions(_ConfOnly("8"), str(small)) == 2
+    assert adaptive_stream_partitions(_ConfOnly("8"), str(big)) == 4
+    assert adaptive_stream_partitions(_ConfOnly("3"), str(big)) == 3
+    # the cap holds even below the floor
+    assert adaptive_stream_partitions(_ConfOnly("1"), str(small)) == 1

@@ -4,7 +4,7 @@ The reference workload is a Rad x zmet x M x init_pos run grid
 (utils.py:51-83) observed from 18 distances along the x-axis —
 np.arange(50, 600, 50) + np.arange(600, 1300, 100)
 (collect_simulation_stats.py:100-110). bench.py's pipeline leg times a
-fixed 10 runs at 1 coordinate; this tool drives process_all_batched at
+fixed 10 runs at 1 coordinate; this tool drives process_all at
 grid sizes of 10/50/200 runs spread across an 18-cell
 Rad{04,08,16} x zmet{0002,0014} x M{5,6,7} grid with ALL 18 reference
 observer coordinates, and reports per-layer wall / driver-job /
@@ -122,7 +122,7 @@ def _driver_peak_rss_mb() -> float:
 
 
 def bench_grid(spark, n_runs: int) -> dict:
-    from nbody6_data_pipeline_spark.pipeline import process_all_batched
+    from nbody6_data_pipeline_spark.pipeline import process_all
     from tests.nbody6_fixtures import write_run
 
     base = tempfile.mkdtemp(prefix=f"nbody6_grid_{n_runs}_sim_")
@@ -142,7 +142,7 @@ def bench_grid(spark, n_runs: int) -> dict:
         group = f"pipeline-grid-{n_runs}"
         sc.setJobGroup(group, f"pipeline grid bench {n_runs} runs")
         t0 = time.perf_counter()
-        process_all_batched(spark, base, out, coordinates=COORDS)
+        process_all(spark, base, out, coordinates=COORDS)
         wall = time.perf_counter() - t0
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         rec = {
