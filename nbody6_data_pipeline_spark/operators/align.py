@@ -74,14 +74,36 @@ def _decide_alignment(
     return list(zip(kept, ref))
 
 
+def _run_mapping(
+    rid: str,
+    by_file: dict[str, list[float]],
+    files: list[str],
+    tolerance: float,
+    allow_trim: bool,
+) -> list[tuple]:
+    """ONE run's (run_id, file, old_time, ref_time) mapping rows from
+    its sorted per-file timestamp lists; raises when a file parsed no
+    timestamps or the lists do not align."""
+    missing = [f for f in files if f not in by_file]
+    if missing:
+        raise ValueError(f"Run {rid}: no timestamps parsed for {missing}.")
+    return [
+        (rid, f, by_file[f][i], ref_t)
+        for i, ref_t in _decide_alignment(
+            by_file, files, tolerance, allow_trim, ctx=f" [run {rid}]"
+        )
+        for f in files
+    ]
+
+
 EXECUTOR_ALIGN_THRESHOLD = 100  # runs; above this the decision moves off-driver
 
 
 def _alignment_mapping_pdf(files, tolerance, allow_trim):
     """Build the per-run applyInPandas kernel: one run's (file, time)
     rows in, its (run_id, file, old_time, ref_time) mapping out. The
-    decision logic is the SAME pure ``_decide_alignment`` the driver
-    path uses — only the placement changes."""
+    mapping is the SAME pure ``_run_mapping`` the driver path uses —
+    only the placement changes."""
     import pandas as pd
 
     def _align_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -90,19 +112,9 @@ def _alignment_mapping_pdf(files, tolerance, allow_trim):
             f: sorted(g["time"].tolist())
             for f, g in pdf.groupby("file", sort=False)
         }
-        missing = [f for f in files if f not in by_file]
-        if missing:
-            raise ValueError(
-                f"Run {rid}: no timestamps parsed for {missing}."
-            )
-        rows = []
-        for i, ref_t in _decide_alignment(
-            by_file, files, tolerance, allow_trim, ctx=f" [run {rid}]"
-        ):
-            for f in files:
-                rows.append((rid, f, by_file[f][i], ref_t))
         return pd.DataFrame(
-            rows, columns=["run_id", "file", "old_time", "ref_time"]
+            _run_mapping(rid, by_file, files, tolerance, allow_trim),
+            columns=["run_id", "file", "old_time", "ref_time"],
         )
 
     return _align_group
@@ -112,7 +124,6 @@ def align_runs(
     runs: NBody6Runs,
     tolerance: float = TOLERANCE,
     allow_trim: bool = False,
-    executor_side: bool | None = None,
 ) -> NBody6Runs:
     """Batched J10: unify timestamps for EVERY run without a per-run
     driver action.
@@ -125,10 +136,10 @@ def align_runs(
       timestamp lists (~n_files x n_snapshots floats per run), the
       decision loops in plain Python, and the mapping is broadcast —
       zero extra shuffles, ideal at the reference's grid sizes.
-    - executor (> threshold, or ``executor_side=True``): the SAME
-      ``_decide_alignment`` runs per run inside ``applyInPandas``
-      grouped by run_id, so driver memory no longer grows with run
-      count (at 1e5 runs the collected lists would be ~160 MB); the
+    - executor (> threshold): the SAME ``_run_mapping`` runs per run
+      inside ``applyInPandas`` grouped by run_id, so driver memory no
+      longer grows with run count (at 1e5 runs the collected lists
+      would be ~160 MB); the
       remap join is left to AQE (the mapping has n_runs x n_files x
       n_snapshots rows — too big to force-broadcast). Strictness
       errors surface as the same ValueError text via the failed job.
@@ -148,10 +159,7 @@ def align_runs(
 
     files = list(runs.tables)
     spark = runs.tables["OUT34"].headers.sparkSession
-    if executor_side is None:
-        executor_side = len(runs.run_ids) > EXECUTOR_ALIGN_THRESHOLD
-
-    if executor_side:
+    if len(runs.run_ids) > EXECUTOR_ALIGN_THRESHOLD:
         # persist: the mapping feeds 2 x n_files remap joins
         # (headers+data per file), and without it EVERY downstream
         # action would re-run the full union + per-run applyInPandas
@@ -176,20 +184,13 @@ def align_runs(
         for r in ts_rows:
             by_run.setdefault(r["run_id"], {})[r["file"]] = list(r["times"])
 
-        mapping_rows = []
-        for rid in sorted(by_run):
-            by_file = by_run[rid]
-            missing = [f for f in files if f not in by_file]
-            if missing:
-                raise ValueError(
-                    f"Run {rid}: no timestamps parsed for {missing}."
-                )
-            for i, ref_t in _decide_alignment(
-                by_file, files, tolerance, allow_trim, ctx=f" [run {rid}]"
-            ):
-                for f in files:
-                    mapping_rows.append((rid, f, by_file[f][i], ref_t))
-
+        mapping_rows = [
+            row
+            for rid in sorted(by_run)
+            for row in _run_mapping(
+                rid, by_run[rid], files, tolerance, allow_trim
+            )
+        ]
         mapping = spark.createDataFrame(
             mapping_rows,
             "run_id string, file string, old_time double, ref_time double",

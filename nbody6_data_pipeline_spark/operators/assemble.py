@@ -36,6 +36,17 @@ class AssembledTables:
     snapshot_headers: DataFrame
 
 
+_VIOLATIONS = {
+    "dup": "Duplicate names found in attributes: {name} at {time}.",
+    "missing_attr": "[{time} Myr] Names in OUT34/OUT9 are missing from "
+    "fort.82/83 (e.g. {name}).",
+    "missing_pv": "[{time} Myr] Names in fort.82/83 are missing from "
+    "OUT34/OUT9 (e.g. {name}).",
+    "missing_comp": "[{time} Myr] Names from binary pairing info "
+    "(OUT9/fort.19) are missing from the star catalog (e.g. {name}).",
+}
+
+
 def _mean_over(vals: F.Column) -> F.Column:
     """np.mean of a (possibly empty) array -> NULL when empty
     (reference assembler.py:289-293: None when no components found)."""
@@ -49,15 +60,16 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     """Assemble stars / binary_systems / snapshot_headers for every run
     in ``runs``. The multi-run tables already carry run_id, and every
     aggregation/join keys on (run_id, time), so N runs assemble as ONE
-    lazy DAG with O(1) driver actions (the strict-validation firsts
-    and fan-out checkpoints run once for the whole batch).
+    lazy DAG with O(1) driver actions (one validation ``first()`` and
+    the fan-out checkpoints run once for the whole batch).
 
-    Validation side effects (strict mode) follow the reference: missing
-    names across file families raise (assembler.py:168-188, 559-581);
-    duplicate attr names always raise (assembler.py:130-134). The
-    dissolution cut truncates the series at the FIRST r_tidal<=0
-    timestamp (assembler.py:522-527, 698-704) — expressed as a
-    min-over-group comparison, not an ordered scan.
+    Validation side effects follow the reference: duplicate attr names
+    always raise (assembler.py:130-134); in strict mode, names missing
+    across file families raise (assembler.py:168-188, 559-581), while
+    lax mode drops binaries with a component missing from the star
+    catalog. The dissolution cut truncates the series at the FIRST
+    r_tidal<=0 timestamp (assembler.py:522-527, 698-704) — expressed as
+    a min-over-group comparison, not an ordered scan.
     """
     dens = runs.headers("densCentre.txt").select(
         *KEY, "r_tidal", "density_center"
@@ -88,19 +100,10 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     )
     pos_vel = (
         out34_d.join(live, KEY)
-        .join(
-            cm_map,
-            (out34_d["run_id"] == cm_map["run_id"])
-            & (out34_d["time"] == cm_map["time"])
-            & (out34_d["name"] == cm_map["cm_name"]),
-            "left",
-        )
+        .join(cm_map.withColumnRenamed("cm_name", "name"), [*KEY, "name"], "left")
         .select(
-            out34_d["run_id"],
-            out34_d["time"],
-            F.explode(
-                F.coalesce(F.col("components"), F.array(out34_d["name"]))
-            ).alias("name"),
+            *KEY,
+            F.explode(F.coalesce("components", F.array("name"))).alias("name"),
             "x", "y", "z", "vx", "vy", "vz",
         )
     )
@@ -119,60 +122,18 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     reg_attrs = (
         f82_parts[0].unionByName(f82_parts[1]).dropDuplicates([*KEY, "name"])
     )
-    # localCheckpoint (not persist): downstream ops self-join these
-    # tables repeatedly, and each reference would otherwise embed a
-    # full copy of the upstream logical plan — plan canonicalization
-    # measurably blows up (OOM at ~40 joins). Truncating lineage here
-    # is the Spark-native version of the reference's joblib cache
-    # layers (SURVEY §1.4).
+    # localCheckpoint (not persist): the star table, the per-time attr
+    # maps and the validation each join these tables, and each
+    # reference would otherwise embed a full copy of the upstream
+    # logical plan — plan canonicalization measurably blows up (OOM at
+    # ~40 joins). Truncating lineage here is the Spark-native version
+    # of the reference's joblib cache layers (SURVEY §1.4).
     attrs = (
         reg_attrs.unionByName(f83_d.select(*KEY, "name", *attr_cols))
         .join(live, KEY)
         .localCheckpoint()
     )
     pos_vel = pos_vel.localCheckpoint()
-
-    # ---- validation: duplicate attr names + (strict) bidirectional
-    # missing-name checks, unioned into ONE driver action — three
-    # separate .first() jobs would each pay plan-optimization and
-    # scheduling for what is one validation pass over the same two
-    # checkpointed tables
-    checks = [
-        attrs.groupBy(*KEY, "name")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter("n > 1")
-        .select(F.lit("dup").alias("_kind"), "time", "name")
-    ]
-    if is_strict:
-        checks.append(
-            pos_vel.join(attrs, [*KEY, "name"], "left_anti").select(
-                F.lit("missing_attr").alias("_kind"), "time", "name"
-            )
-        )
-        checks.append(
-            attrs.join(pos_vel, [*KEY, "name"], "left_anti").select(
-                F.lit("missing_pv").alias("_kind"), "time", "name"
-            )
-        )
-    viol = checks[0]
-    for c in checks[1:]:
-        viol = viol.unionByName(c)
-    bad_row = viol.first()
-    if bad_row is not None:
-        if bad_row["_kind"] == "dup":
-            raise ValueError(
-                f"Duplicate names found in attributes: {bad_row['name']} "
-                f"at {bad_row['time']}."
-            )
-        if bad_row["_kind"] == "missing_attr":
-            raise ValueError(
-                f"[{bad_row['time']} Myr] Names in OUT34/OUT9 are missing "
-                f"from fort.82/83 (e.g. {bad_row['name']})."
-            )
-        raise ValueError(
-            f"[{bad_row['time']} Myr] Names in fort.82/83 are missing "
-            f"from OUT34/OUT9 (e.g. {bad_row['name']})."
-        )
 
     stars = pos_vel.join(attrs, [*KEY, "name"], "inner").withColumnsRenamed(
         {
@@ -251,37 +212,24 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
         f19_d.select(*KEY, "ecc", "semi", "p", "mass1", "mass2", "name1", "name2")
     ).join(live, KEY)
 
-    cm1 = cm_map.select(
-        *KEY, F.col("cm_name").alias("cm1"), F.col("components").alias("comp1")
-    )
-    cm2 = cm_map.select(
-        *KEY, F.col("cm_name").alias("cm2"), F.col("components").alias("comp2")
-    )
-    bins = bin_raw.join(
-        cm1,
-        [
-            bin_raw["run_id"] == cm1["run_id"],
-            bin_raw["time"] == cm1["time"],
-            bin_raw["name1"] == cm1["cm1"],
-        ],
-        "left",
-    ).select(bin_raw["*"], "comp1")
-    bins = bins.join(
-        cm2,
-        [
-            bins["run_id"] == cm2["run_id"],
-            bins["time"] == cm2["time"],
-            bins["name2"] == cm2["cm2"],
-        ],
-        "left",
-    ).select(bins["*"], "comp2")
+    def side(i: int) -> DataFrame:
+        return cm_map.select(
+            *KEY,
+            F.col("cm_name").alias(f"name{i}"),
+            F.col("components").alias(f"comp{i}"),
+        )
 
-    bins = bins.withColumns(
-        {
-            "obj1_ids": F.coalesce(F.col("comp1"), F.array("name1")),
-            "obj2_ids": F.coalesce(F.col("comp2"), F.array("name2")),
-        }
-    ).drop("comp1", "comp2")
+    bins = (
+        bin_raw.join(side(1), [*KEY, "name1"], "left")
+        .join(side(2), [*KEY, "name2"], "left")
+        .withColumns(
+            {
+                "obj1_ids": F.coalesce(F.col("comp1"), F.array("name1")),
+                "obj2_ids": F.coalesce(F.col("comp2"), F.array("name2")),
+            }
+        )
+        .drop("comp1", "comp2")
+    )
 
     # F5 Kepler semi-major axis (AU); F15 canonical pair label
     bins = bins.withColumns(
@@ -295,23 +243,38 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
         {"p": "log_period_days", "name1": "obj1_name", "name2": "obj2_name"}
     )
 
-    # ---- binary-vs-catalog consistency (assembler.py:559-581)
-    star_names = stars.select(*KEY, "name")
-    comp_rows = bins.select(
-        *KEY,
-        "pair",
-        "obj1_ids",
-        "obj2_ids",
-        F.explode(F.concat("obj1_ids", "obj2_ids")).alias("name"),
-    )
-    missing = comp_rows.join(star_names, [*KEY, "name"], "left_anti")
-    bad = missing.first()
+    # ---- validation: duplicate attr names, then (strict) bidirectional
+    # missing names and binary components missing from the star catalog
+    # (assembler.py:559-581), unioned in the reference's check order
+    # into ONE driver action: separate actions would each pay plan
+    # optimization and scheduling for one pass over checkpointed tables
+    all_ids = F.concat("obj1_ids", "obj2_ids")
+    missing = bins.select(
+        *KEY, "obj1_ids", "obj2_ids", F.explode(all_ids).alias("name")
+    ).join(stars.select(*KEY, "name"), [*KEY, "name"], "left_anti")
+    checks = [
+        attrs.groupBy(*KEY, "name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter("n > 1")
+        .select(F.lit("dup").alias("_kind"), "time", "name")
+    ]
+    if is_strict:
+        checks += [
+            pos_vel.join(attrs, [*KEY, "name"], "left_anti").select(
+                F.lit("missing_attr").alias("_kind"), "time", "name"
+            ),
+            attrs.join(pos_vel, [*KEY, "name"], "left_anti").select(
+                F.lit("missing_pv").alias("_kind"), "time", "name"
+            ),
+            missing.select(F.lit("missing_comp").alias("_kind"), "time", "name"),
+        ]
+    viol = checks[0]
+    for c in checks[1:]:
+        viol = viol.unionByName(c)
+    bad = viol.first()
     if bad is not None:
-        if is_strict:
-            raise ValueError(
-                f"[{bad['time']} Myr] Names from binary pairing info (OUT9/fort.19) "
-                f"are missing from the star catalog (e.g. {bad['name']})."
-            )
+        raise ValueError(_VIOLATIONS[bad["_kind"]].format(**bad.asDict()))
+    if not is_strict:
         # lax: drop binaries with ANY missing component
         bad_bins = missing.select(*KEY, "obj1_ids", "obj2_ids").distinct()
         bins = bins.join(bad_bins, [*KEY, "obj1_ids", "obj2_ids"], "left_anti")
@@ -349,7 +312,6 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
         present = F.filter(ids, lambda i: F.map_contains_key(dmap, i))
         return F.transform(present, lambda i: dmap[i].getField(field))
 
-    all_ids = F.concat("obj1_ids", "obj2_ids")
     bins = bins.withColumns(
         {
             "obj1_masses": F.transform(known_ids(F.col("obj1_ids")), lambda i: mmap[i]),
@@ -402,25 +364,16 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     # J8: top-level = sorted(all components) matches no other system's
     # obj1_ids/obj2_ids (assembler.py:438-451)
     members = (
-        bins.select(*KEY, F.col("obj1_ids").alias("cand"))
-        .unionByName(bins.select(*KEY, F.col("obj2_ids").alias("cand")))
+        bins.select(*KEY, F.col("obj1_ids").alias("bin_id"))
+        .unionByName(bins.select(*KEY, F.col("obj2_ids").alias("bin_id")))
         .distinct()
         .withColumn("_is_member", F.lit(True))
     )
     bins = (
         bins.withColumn("bin_id", F.array_sort(all_ids))
-        .join(
-            F.broadcast(members),
-            [
-                bins["run_id"] == members["run_id"],
-                bins["time"] == members["time"],
-                F.array_sort(F.concat(bins["obj1_ids"], bins["obj2_ids"]))
-                == members["cand"],
-            ],
-            "left",
-        )
-        .select(bins["*"], (F.col("_is_member").isNull()).alias("is_top_level"))
-        .drop("bin_id")
+        .join(F.broadcast(members), [*KEY, "bin_id"], "left")
+        .withColumn("is_top_level", F.col("_is_member").isNull())
+        .drop("bin_id", "_is_member")
         .localCheckpoint()
     )
 

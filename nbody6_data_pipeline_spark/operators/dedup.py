@@ -49,22 +49,6 @@ def normalize(text: Column) -> Column:
     return ascii_lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
 
 
-def _shingle_arr(norm: Column, n: int = SHINGLE_LEN, distinct: bool = True) -> Column:
-    """Shingle array from an ALREADY-NORMALIZED text column.
-
-    The caller must pass a materialized column (not the normalize()
-    expression): Catalyst's project-collapsing would otherwise inline
-    the regexp_replace into the per-element substring lambda and
-    re-run it once per shingle (measured ~100x slowdown).
-
-    ``distinct=False`` skips the O(n^2) interpreted array_distinct —
-    correct wherever the consumer is multiset-invariant (MinHash's
-    per-function MIN)."""
-    starts = F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1)))
-    arr = F.transform(starts, lambda i: F.substring(norm, i, n))
-    return F.array_distinct(arr) if distinct else arr
-
-
 def _spread(df: DataFrame, key) -> DataFrame:
     """Hash-repartition with an EXPLICIT partition count so AQE does
     not coalesce the (byte-small but compute-heavy) shingle explosion

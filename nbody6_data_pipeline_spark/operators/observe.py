@@ -61,7 +61,8 @@ class ObservedTables:
     binary_systems: DataFrame
 
 
-def _coord_df(spark: SparkSession, coordinates: list[tuple]) -> DataFrame:
+def coord_df(spark: SparkSession, coordinates: list[tuple]) -> DataFrame:
+    """The observer grid as a (obs_x, obs_y, obs_z) table."""
     return spark.createDataFrame(
         [(float(a), float(b), float(c)) for a, b, c in coordinates],
         "obs_x double, obs_y double, obs_z double",
@@ -123,9 +124,7 @@ def observe(
     assembled: AssembledTables,
     coordinates: list[tuple] | None = None,
 ) -> ObservedTables:
-    coords = _coord_df(
-        spark, coordinates or default_observer_coordinates()
-    )
+    coords = coord_df(spark, coordinates or default_observer_coordinates())
 
     # ---- P4 pre-filter, fanned out over the observer grid
     stars0 = (
@@ -225,19 +224,14 @@ def observe(
 
     members = F.array_sort(F.array_distinct(all_ids))
     unres_m = unres.withColumn("members", members)
-    other = unres_m.select(*OKEY, F.col("members").alias("other_members"))
     # strict-subset check (observer.py:98-109): drop systems whose
     # member set is contained in a LARGER system's member set
-    top = unres_m.join(
-        other,
-        [
-            unres_m["run_id"] == other["run_id"],
-            unres_m["time"] == other["time"],
-            unres_m["obs_x"] == other["obs_x"],
-            unres_m["obs_y"] == other["obs_y"],
-            unres_m["obs_z"] == other["obs_z"],
-            F.size(F.array_except(unres_m["members"], other["other_members"])) == 0,
-            F.size(unres_m["members"]) < F.size(other["other_members"]),
+    top = unres_m.alias("a").join(
+        unres_m.alias("b"),
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in OKEY]
+        + [
+            F.size(F.array_except("a.members", "b.members")) == 0,
+            F.size("a.members") < F.size("b.members"),
         ],
         "left_anti",
     )

@@ -18,15 +18,15 @@ the candidate set are large.
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nbody6_data_pipeline_spark.session import scoped_conf
 
-@contextmanager
+
 def _no_aqe(spark):
     """Disable adaptive execution around the tiny Lloyd-iteration
     aggregations (guide §1.2 step 3 — after the algorithm is right).
@@ -39,12 +39,7 @@ def _no_aqe(spark):
     Scoped: the previous value is restored in a finally, so the
     data-sized queries around the loop keep AQE's coalescing/skew
     handling."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})
 
 
 def _as_double(vec: Column) -> Column:
@@ -1140,15 +1135,6 @@ def ivf_upsert(index: IVFIndex, new_df: DataFrame,
 PQ_M = 8        # subspaces
 PQ_KSUB = 16    # codes per subspace codebook
 PQ_ITERS = 2    # Lloyd iterations per subspace (matches KM_ITERS)
-
-
-_PCB_SCHEMA = T.StructType(
-    [
-        T.StructField("j", T.IntegerType()),
-        T.StructField("c_id", T.IntegerType()),
-        T.StructField("cv", T.ArrayType(T.DoubleType())),
-    ]
-)
 
 
 def _with_pcbs(df: DataFrame, spark, cb: list[tuple[int, int, list[float]]]) -> DataFrame:

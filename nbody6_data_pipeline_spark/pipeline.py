@@ -20,7 +20,6 @@ needed (SURVEY §4).
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 from nbody6_data_pipeline_spark.operators.align import align_runs
 from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
 from nbody6_data_pipeline_spark.operators.observe import (
+    coord_df,
     default_observer_coordinates,
     observe,
 )
@@ -37,6 +37,7 @@ from nbody6_data_pipeline_spark.operators.statistics import (
     overall_statistics,
 )
 from nbody6_data_pipeline_spark.plans.checkpoints import completed_runs
+from nbody6_data_pipeline_spark.session import scoped_conf
 from nbody6_data_pipeline_spark.sources.discovery import RunInfo, fetch_sim_runs
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from nbody6_data_pipeline_spark.sources.sinks import write_csv, write_parquet
@@ -54,25 +55,14 @@ LAYERS = (
 OKEY = ["run_id", "obs_x", "obs_y", "obs_z", "time"]
 
 
-@contextlib.contextmanager
-def _pipeline_confs(spark: SparkSession):
-    """Constraint propagation OFF for one pipeline invocation: the
-    assemble/observe dataflow chains ~20 multi-condition joins;
-    InferFiltersFromConstraints is exponential in that shape and
-    dominated driver time (measured ~28 s of a 31 s optimize on a
-    10-run batch) while inferring nothing useful for these hand-keyed
-    inner joins. Spark documents this conf as the escape hatch
-    (SPARK-33152 lineage)."""
-    key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+# Constraint propagation OFF for one pipeline invocation: the
+# assemble/observe dataflow chains ~20 multi-condition joins;
+# InferFiltersFromConstraints is exponential in that shape and
+# dominated driver time (measured ~28 s of a 31 s optimize on a 10-run
+# batch) while inferring nothing useful for these hand-keyed inner
+# joins. Spark documents this conf as the escape hatch (SPARK-33152
+# lineage).
+_PIPELINE_CONFS = {"spark.sql.constraintPropagation.enabled": "false"}
 
 
 def process_all(
@@ -101,7 +91,7 @@ def process_all(
     if not pending:
         return runs
 
-    with _pipeline_confs(spark):
+    with scoped_conf(spark, _PIPELINE_CONFS):
         _process_pending(
             spark, output_base, paths, coordinates, is_strict, is_slim,
             pending,
@@ -140,18 +130,13 @@ def _process_pending(
     sc.setJobDescription("layer:observe")
     obs = observe(spark, asm, coordinates)
     obs_stars = obs.stars.localCheckpoint()
-    obs_bins = obs.binary_systems.localCheckpoint()
+    obs_bins = obs.binary_systems  # observe already checkpointed it
     write_parquet(obs_stars, paths["observed_stars"], ["run_id"])
     write_parquet(obs_bins, paths["observed_binary_systems"], ["run_id"])
 
     # per-(coord, time) statistics over the OBSERVED snapshots — the
     # reference's collection.statistics walk (collection.py:202-242)
-    hdr_obs = asm.snapshot_headers.crossJoin(
-        spark.createDataFrame(
-            [(float(a), float(b), float(c)) for a, b, c in coordinates],
-            "obs_x double, obs_y double, obs_z double",
-        )
-    )
+    hdr_obs = asm.snapshot_headers.crossJoin(coord_df(spark, coordinates))
     # per-run attrs (init_mass_lv, ...) as a broadcast dimension join
     # instead of per-run literal columns
     attr_keys = sorted({k for r in pending for k in (r.attrs or {})})

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nbody6_data_pipeline_spark.session import scoped_conf
+
 _CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -44,30 +46,10 @@ _CONFS = {
 }
 
 
-class enable_runtime_bloom:
+def enable_runtime_bloom(spark: SparkSession):
     """Context manager lowering the bloom-filter injection thresholds
     (test/demonstration scale). Restores prior values on exit."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in _CONFS.items():
-            try:
-                self._saved[k] = self.spark.conf.get(k)
-            except Exception:
-                self._saved[k] = None
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, v in self._saved.items():
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-        return False
+    return scoped_conf(spark, _CONFS)
 
 
 def has_runtime_bloom(df: DataFrame) -> bool:

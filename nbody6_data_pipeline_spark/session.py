@@ -9,6 +9,7 @@ right for every stage.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -43,6 +44,28 @@ def configure_state_store(spark: SparkSession, provider: str = "rocksdb") -> Non
         spark.conf.unset(_STATE_PROVIDER_KEY)
     else:
         raise ValueError(f"unknown state-store provider: {provider!r}")
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the body of a ``with`` block.
+
+    Each key's previous value is restored on exit, also when the body
+    raises; a key that was unset before is unset again, so it falls
+    back to its default. The session conf is shared by every thread
+    that uses the session: a query another thread plans inside the
+    block sees the scoped values."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _cpus() -> int:

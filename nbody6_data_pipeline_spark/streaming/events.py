@@ -16,6 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nbody6_data_pipeline_spark.session import scoped_conf
+
+
 def read_event_stream(
     spark: SparkSession,
     path: str,
@@ -164,18 +167,18 @@ def run_stream_to_memory(
     value is right — state must spread across executors — which is
     why it is a per-query knob, not a global: batch queries keep the
     session default either way (the conf is restored after start)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+    confs = (
+        {}
+        if shuffle_partitions is None
+        else {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    )
+    with scoped_conf(spark, confs):
         q = (
             agg.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
     finally:

@@ -168,7 +168,7 @@ def test_strict_missing_name_raises(spark, tmp_path_factory):
         str(tmp_path_factory.mktemp("asm_m") / "sim"), drop_name=7
     )
     run = align_runs(load_runs(spark, [("runM", root)]))
-    with pytest.raises(ValueError, match="missing"):
+    with pytest.raises(ValueError, match="missing from fort.82/83"):
         assemble_runs(run, is_strict=True).stars.count()
 
 
@@ -180,3 +180,25 @@ def test_lax_missing_name_drops(spark, tmp_path_factory):
     out = assemble_runs(run, is_strict=False)
     names = {r["name"] for r in out.stars.filter("time = 0.0").collect()}
     assert 7 not in names and 3 in names
+
+
+def test_pairing_name_missing_from_catalog(spark, tmp_path_factory, monkeypatch):
+    """A fort.19 pair naming a star that no other file has: strict mode
+    raises the binary-vs-catalog error, lax mode drops that binary."""
+    from tests import nbody6_fixtures
+
+    monkeypatch.setattr(
+        nbody6_fixtures,
+        "F19_BINS",
+        F19_BINS + [dict(ecc=0.2, semi=3.0, p=2.0, m1=1.0, m2=0.5, n1=6, n2=99,
+                         hi=0)],
+    )
+    root = write_run(str(tmp_path_factory.mktemp("asm_c") / "sim"))
+    run = align_runs(load_runs(spark, [("runC", root)]))
+    with pytest.raises(ValueError, match="Names from binary pairing info"):
+        assemble_runs(run, is_strict=True)
+    out = assemble_runs(run, is_strict=False)
+    pairs = {r["pair"] for r in out.binary_systems.filter("time = 0.0").collect()}
+    assert pairs == {"1+2", "3+4", "5+(1+2)"}
+    star6 = out.stars.filter("time = 0.0 AND name = 6").collect()[0]
+    assert star6["hierarchy"] == ["6"] and star6["is_binary"] is False

@@ -108,17 +108,18 @@ def test_write_parquet_leaves_session_conf(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
-def test_align_runs_executor_side_parity(spark, sim_base):
+def test_align_runs_executor_side_parity(spark, sim_base, monkeypatch):
     """The applyInPandas (executor-side) alignment decision must
     produce byte-identical aligned tables to the driver-collect path —
-    same pure ``_decide_alignment``, different placement."""
-    from nbody6_data_pipeline_spark.operators.align import align_runs
+    same pure ``_run_mapping``, different placement."""
+    from nbody6_data_pipeline_spark.operators import align
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     runs = fetch_sim_runs(sim_base)
     pairs = [(r.label, r.path) for r in runs]
-    a = align_runs(load_runs(spark, pairs), executor_side=False)
-    b = align_runs(load_runs(spark, pairs), executor_side=True)
+    a = align.align_runs(load_runs(spark, pairs))
+    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
+    b = align.align_runs(load_runs(spark, pairs))
     assert set(a.tables) == set(b.tables)
     for fname in a.tables:
         for part in ("headers", "data"):
@@ -139,17 +140,18 @@ def test_align_runs_executor_side_strict_error(spark, tmp_path, monkeypatch):
     """Strict-mode timestamp violations must still raise with the
     reference's error text when the decision runs on executors."""
     from tests import nbody6_fixtures
-    from nbody6_data_pipeline_spark.operators.align import align_runs
+    from nbody6_data_pipeline_spark.operators import align
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     root = str(tmp_path / "badrun")
     monkeypatch.setitem(
         nbody6_fixtures.JITTER, "OUT9", 0.5  # way past the 2e-2 tolerance
     )
+    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
     write_run(root)
     multi = load_runs(spark, [("bad", root)])
     with pytest.raises(Exception, match="inconsistent timestamps"):
-        aligned = align_runs(multi, executor_side=True)
+        aligned = align.align_runs(multi)
         aligned.tables["OUT34"].headers.collect()
 
 
@@ -233,3 +235,39 @@ def test_load_runs_windows_partitioned_by_run_id(spark, sim_base):
                     f"{fname}.{part}: window partitioned by {keys}"
                 )
     assert n_windows > 0
+
+
+HAZARD_WARNINGS = (
+    "trivially true equals predicate",
+    "No Partition Defined for Window",
+)
+
+
+def test_pipeline_logs_no_hazard_warnings(spark, sim_base, tmp_path):
+    """A pipeline call logs neither hazard: a join condition comparing a
+    column with itself ("trivially true", correct only through
+    Dataset.join's self-join rewrite) or a window without a partition
+    (which pulls a whole table into one task). The JVM's root logger
+    gets a log4j2 WriterAppender over a StringWriter for the call."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    writer = jvm.java.io.StringWriter()
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    appender = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, writer,
+        "hazard-probe", False, True,
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        process_all(spark, sim_base, str(tmp_path / "out"),
+                    coordinates=[(50.0, 0.0, 0.0)])
+    finally:
+        root.removeAppender("hazard-probe")
+        ctx.updateLoggers()
+        appender.stop()
+    log = writer.toString()
+    for warning in HAZARD_WARNINGS:
+        assert warning not in log, f"pipeline logged {warning!r}"
