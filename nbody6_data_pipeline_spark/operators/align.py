@@ -9,20 +9,19 @@ The alignment decision itself runs DRIVER-SIDE on the collected
 per-file timestamp lists — they are bounded by (n_files x
 n_snapshots) ~ thousands of floats per run, and a driver decision
 avoids a chain of tiny shuffle jobs. The rename is then applied
-distributively as a broadcast equi-join on the (old_time -> ref_time)
-mapping — the same as-of/tolerance-alignment pattern as SURVEY §2.3
-J10.
+distributively as ONE broadcast equi-join of the (run_id, file,
+old_time -> ref_time) mapping into the generic block table, whose
+result is checkpointed once — the same as-of/tolerance-alignment
+pattern as SURVEY §2.3 J10.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nbody6_data_pipeline_spark.sources.block_text import BlockTables
-from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Runs
+from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, NBody6Runs
 
 TOLERANCE = 2e-2  # Myr (reference loader.py:100)
 
@@ -81,7 +80,7 @@ def _run_mapping(
     tolerance: float,
     allow_trim: bool,
 ) -> list[tuple]:
-    """ONE run's (run_id, file, old_time, ref_time) mapping rows from
+    """ONE run's (run_id, file, time, ref_time) mapping rows from
     its sorted per-file timestamp lists; raises when a file parsed no
     timestamps or the lists do not align."""
     missing = [f for f in files if f not in by_file]
@@ -97,11 +96,13 @@ def _run_mapping(
 
 
 EXECUTOR_ALIGN_THRESHOLD = 100  # runs; above this the decision moves off-driver
+# old (per-file) time -> the OUT34 reference time
+MAPPING_SCHEMA = "run_id string, file string, time double, ref_time double"
 
 
 def _alignment_mapping_pdf(files, tolerance, allow_trim):
     """Build the per-run applyInPandas kernel: one run's (file, time)
-    rows in, its (run_id, file, old_time, ref_time) mapping out. The
+    rows in, its (run_id, file, time, ref_time) mapping out. The
     mapping is the SAME pure ``_run_mapping`` the driver path uses —
     only the placement changes."""
     import pandas as pd
@@ -114,7 +115,7 @@ def _alignment_mapping_pdf(files, tolerance, allow_trim):
         }
         return pd.DataFrame(
             _run_mapping(rid, by_file, files, tolerance, allow_trim),
-            columns=["run_id", "file", "old_time", "ref_time"],
+            columns=["run_id", "file", "time", "ref_time"],
         )
 
     return _align_group
@@ -128,8 +129,9 @@ def align_runs(
     """Batched J10: unify timestamps for EVERY run without a per-run
     driver action.
 
-    Two placements of the (pure, per-run-independent) alignment
-    decision, dispatched on run count:
+    The per-(run, file) timestamp lists come from the generic table's
+    header rows. Two placements of the (pure, per-run-independent)
+    alignment decision, dispatched on run count:
 
     - driver (<= EXECUTOR_ALIGN_THRESHOLD runs, default): ONE
       groupBy/collect_list job gathers the per-(run, file) sorted
@@ -139,44 +141,29 @@ def align_runs(
     - executor (> threshold): the SAME ``_run_mapping`` runs per run
       inside ``applyInPandas`` grouped by run_id, so driver memory no
       longer grows with run count (at 1e5 runs the collected lists
-      would be ~160 MB); the
-      remap join is left to AQE (the mapping has n_runs x n_files x
-      n_snapshots rows — too big to force-broadcast). Strictness
-      errors surface as the same ValueError text via the failed job.
-      The first-timestamp-not-zero *warning* is driver-only; the
-      executor path drops it (warnings don't cross the JVM boundary).
-    """
-    parts = []
-    for fname, bt in runs.tables.items():
-        parts.append(
-            bt.headers.select(
-                F.lit(fname).alias("file"), "run_id", "time"
-            ).distinct()
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+      would be ~160 MB); the join is left to AQE (the mapping has
+      n_runs x n_files x n_snapshots rows — too big to force-broadcast).
+      Strictness errors surface as the same ValueError text via the
+      failed job. The first-timestamp-not-zero *warning* is
+      driver-only; the executor path drops it (warnings don't cross
+      the JVM boundary).
 
-    files = list(runs.tables)
-    spark = runs.tables["OUT34"].headers.sparkSession
+    Either mapping is joined into the block table ONCE, on (run_id,
+    file, time), for header and data rows alike, and the aligned table
+    is checkpointed; the one checkpoint is the only action that reads
+    the mapping.
+    """
+    times = runs.blocks.filter(
+        (F.col("kind") == "h") & F.col("time").isNotNull()
+    ).select("run_id", "file", "time")
+    files = list(FILE_CONFIGS)
     if len(runs.run_ids) > EXECUTOR_ALIGN_THRESHOLD:
-        # persist: the mapping feeds 2 x n_files remap joins
-        # (headers+data per file), and without it EVERY downstream
-        # action would re-run the full union + per-run applyInPandas
-        # alignment — exactly at the >100-run scale this branch
-        # targets. The mapping is small (n_runs x n_files x
-        # n_snapshots skinny rows), MEMORY_AND_DISK by default; it is
-        # released by the session's next clearCache/checkpoint cycle
-        # (pipeline.py localCheckpoints the observed layer right
-        # after).
-        mapping = union.groupBy("run_id").applyInPandas(
-            _alignment_mapping_pdf(files, tolerance, allow_trim),
-            "run_id string, file string, old_time double, ref_time double",
-        ).persist()
-        force_broadcast = False
+        mapping = times.groupBy("run_id").applyInPandas(
+            _alignment_mapping_pdf(files, tolerance, allow_trim), MAPPING_SCHEMA
+        )
     else:
         ts_rows = (
-            union.groupBy("run_id", "file")
+            times.groupBy("run_id", "file")
             .agg(F.sort_array(F.collect_list("time")).alias("times"))
             .collect()  # the ONE driver action for the whole batch
         )
@@ -191,32 +178,14 @@ def align_runs(
                 rid, by_run[rid], files, tolerance, allow_trim
             )
         ]
-        mapping = spark.createDataFrame(
-            mapping_rows,
-            "run_id string, file string, old_time double, ref_time double",
-        )
-        force_broadcast = True
-
-    def _remap(df: DataFrame, fname: str) -> DataFrame:
-        m = mapping.filter(F.col("file") == fname).select(
-            F.col("run_id").alias("_m_rid"), "old_time", "ref_time"
-        )
-        if force_broadcast:
-            m = F.broadcast(m)
-        return (
-            df.join(
-                m,
-                (df["run_id"] == m["_m_rid"]) & (df["time"] == m["old_time"]),
-                "inner",
-            )
-            .drop("time", "old_time", "_m_rid")
-            .withColumnRenamed("ref_time", "time")
+        mapping = F.broadcast(
+            runs.blocks.sparkSession.createDataFrame(mapping_rows, MAPPING_SCHEMA)
         )
 
-    aligned = {
-        fname: BlockTables(
-            headers=_remap(bt.headers, fname), data=_remap(bt.data, fname)
-        )
-        for fname, bt in runs.tables.items()
-    }
-    return NBody6Runs(aligned, runs.run_ids)
+    aligned = (
+        runs.blocks.join(mapping, ["run_id", "file", "time"])
+        .drop("time")
+        .withColumnRenamed("ref_time", "time")
+        .localCheckpoint()
+    )
+    return NBody6Runs(aligned, runs.run_ids, runs.is_strict)

@@ -515,6 +515,9 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
             "nzero",
             F.col("plummer_mass").alias("plummer_mass_OUT34"),
         )
+        # computed once: the parquet layer, observe and the
+        # statistics' header join each read it
+        .localCheckpoint()
     )
 
     return AssembledTables(

@@ -77,11 +77,13 @@ def process_all(
     returns all discovered runs. ``is_slim`` skips persisting the raw
     (pre-observation) star tables (reference observer.py:268-273).
 
-    load_runs parses every run's files as six grouped plans (one
-    structural-validation job total), align_runs makes every run's
-    alignment decision from ONE collect, assemble/observe/statistics
-    key on (run_id, time) throughout, and each layer is ONE partitioned
-    write covering all new runs."""
+    load_runs reads and splits every run's files once, in one scan, into
+    one checkpointed block table (one structural-validation job total),
+    align_runs makes every run's alignment decision from ONE collect
+    and checkpoints the aligned table, assemble/observe/statistics key
+    on (run_id, time) throughout, the snapshot headers and each
+    statistics table are computed once, and each layer is ONE
+    partitioned write covering all new runs."""
     coordinates = coordinates or default_observer_coordinates()
     paths = {name: os.path.join(output_base, name) for name in LAYERS}
 
@@ -156,6 +158,8 @@ def _process_pending(
         sc.setJobDescription(f"layer:{name}")
         if attrs_df is not None:
             df = df.join(F.broadcast(attrs_df), "run_id", "left")
+        # computed once: the parquet write and the CSV sort/write read it
+        df = df.localCheckpoint()
         write_parquet(df, paths[name], ["run_id"])
         write_csv(
             df,

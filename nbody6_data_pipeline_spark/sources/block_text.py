@@ -1,4 +1,5 @@
-"""S1/S2 — block-structured text scan, Spark-native.
+"""S1/S2 — block-structured text scan, split in the task that reads
+the file.
 
 Reference spec: parser/base.py:156-239 (parse), 241-307 (_iter_block),
 309-332 (_apply_schema). A file is a sequence of blocks: each block is
@@ -8,25 +9,26 @@ Empty lines are skipped everywhere; footer lines terminate a block and
 are never parsed. ``time`` (rounded to 2 decimals) keys the block;
 duplicate timestamps keep the LAST block (parser/base.py:217-223).
 
-Spark recipe (SURVEY §2.1 S1): ``read_lines_runs`` reads every run's
-file of one format as (run_id, line_no, raw) — order must be carried
-explicitly because Spark rows are unordered — then ``parse_blocks``
-flags header/footer lines, assigns block ids with a running
-``sum(is_header) over (partition by run_id order by line_no)`` window,
-aggregates header tokens per block and projects data tokens
-positionally. Every window and aggregation is partitioned by
-``run_id``, so thousands of runs parse as ONE shuffle-parallel job;
-one NBODY6 file is single-machine-sized, and scale lives in the run
-dimension.
+Spark recipe (SURVEY §2.1 S1): ``read_blocks`` makes ONE
+wholeTextFiles scan over every (run, format) file of a batch; its
+flatMap runs ``split_blocks`` on each whole file, so block numbering,
+the time key and the last-wins dedup happen in the task that read the
+file — no shuffle, window or join. The result is one generic row
+table, ``BLOCKS_SCHEMA``, materialized once with ``localCheckpoint``;
+``header_table``/``data_table`` are narrow typed projections of it
+(S2). One NBODY6 file is single-machine-sized, and scale lives in the
+run dimension.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,73 +48,101 @@ class BlockSourceConfig:
     footer_prefix: str | None = None
 
 
-@dataclass
-class BlockTables:
-    """Parsed output: one row per block in ``headers``, one row per
-    data line in ``data`` — both keyed by ``time`` (the reference's
-    dict[timestamp -> FileBlock] flattened into long tables).
+# One row per header block ("h"), data line ("d") or structural
+# violation ("v") of a (file, run_id) pair. Header rows span
+# line_no..line_end; a violation row carries the offending line in
+# line_no and its text as the one token (line_no is null for an
+# incomplete header at end of file).
+BLOCKS_SCHEMA = T.StructType(
+    [
+        T.StructField("file", T.StringType(), False),
+        T.StructField("run_id", T.StringType(), False),
+        T.StructField("kind", T.StringType(), False),
+        T.StructField("block_id", T.LongType(), True),
+        T.StructField("line_no", T.LongType(), True),
+        T.StructField("line_end", T.LongType(), True),
+        T.StructField("time", T.DoubleType(), True),
+        T.StructField("toks", T.ArrayType(T.StringType()), False),
+    ]
+)
 
-    ``violations`` is a lazy DataFrame of structural errors (one row
-    per bad run) that the caller unions across file formats and checks
-    in ONE job; ``raise_block_violation`` turns a row into the
-    reference's error. It is None once the tables are aligned."""
-
-    headers: DataFrame
-    data: DataFrame
-    violations: DataFrame | None = None
+# Java's \s — what Spark's split(col, "\\s+") splits on; Python's \s
+# also matches Unicode spaces.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def _lstrip_class(prefix: str) -> str:
-    """Regex matching the reference's str.lstrip(prefix) semantics:
-    lstrip strips any leading chars IN THE SET of prefix chars
-    (parser/base.py:288: ``ln_txt.lstrip(header_prefix)``)."""
-    chars = "".join(sorted(set(prefix)))
-    return "^[" + re.escape(chars) + "]+" if chars else ""
-
-
-def read_lines_runs(
-    spark: SparkSession, run_paths: list[tuple[str, str]]
-) -> DataFrame:
-    """Batched multi-run line source: (run_id, line_no, raw) for the
-    SAME file format across many runs, in ONE lazy source — no
-    per-file driver action (zipWithIndex runs a job per call; at
-    thousands of runs that serializes the driver).
-
-    Built on wholeTextFiles: each file is one record whose task
-    enumerates line numbers locally. Per-task memory is one whole
-    file — fine for NBODY6 outputs (single-machine-sized by format;
-    scale lives in the run dimension).
-    """
-    abs_map = {os.path.abspath(p): rid for rid, p in run_paths}
-    paths = ",".join(abs_map)
-    minp = min(len(abs_map), 256)
-
-    def split_file(rec):
-        path, content = rec
-        p = path
-        for pre in ("file:", "hdfs://"):
-            if p.startswith(pre):
-                p = p[len(pre):]
-                p = "/" + p.lstrip("/")
-                break
-        rid = abs_map.get(os.path.abspath(p))
-        lines = content.split("\n")
-        if lines and lines[-1] == "":
-            lines.pop()
-        for i, ln in enumerate(lines):
-            yield (rid, i + 1, ln.rstrip("\r"))
-
-    rdd = spark.sparkContext.wholeTextFiles(paths, minp).flatMap(split_file)
-    return spark.createDataFrame(
-        rdd,
-        schema=T.StructType(
-            [
-                T.StructField("run_id", T.StringType(), False),
-                T.StructField("line_no", T.LongType(), False),
-                T.StructField("raw", T.StringType(), True),
-            ]
-        ),
+def _round2_half_up(x: float) -> float:
+    """Java BigDecimal.valueOf(x).setScale(2, HALF_UP) — what Spark's
+    round(col, 2) does. Double.toString and Python repr both emit the
+    shortest decimal that round-trips, so going through repr() gives
+    the identical decimal digits to round. ``+ 0.0`` drops the sign of
+    a zero result, which a BigDecimal does not keep."""
+    return (
+        float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
+        + 0.0
     )
+
+
+def _time_key(toks: list[str], idx: int) -> float | None:
+    """The block's 2-decimal time key, or None for a missing or
+    unparsable token (strict mode raises on it through ``time_raw``)."""
+    try:
+        t = float(toks[idx])
+    except (IndexError, ValueError):
+        return None
+    return _round2_half_up(t) if math.isfinite(t) else t
+
+
+def split_blocks(content: str, cfg: BlockSourceConfig):
+    """Split one whole file into generic rows
+    ``(kind, block_id, line_no, line_end, time, toks)``.
+
+    Lines are split on "\\n" and lose a trailing "\\r"; spaces (only)
+    are trimmed and empty lines skipped; footer lines are never parsed;
+    header tokens (after stripping the prefix characters) concatenate
+    across the block's header lines; tokens split on Java ``\\s+``, as
+    Spark's ``split`` does. A data line before a complete header group,
+    or a trailing incomplete header group, yields one "v" row and
+    nothing else. Duplicate timestamps keep the LAST block
+    (parser/base.py:217-223); data rows carry their block's time.
+    """
+    hl = cfg.header_length
+    strip_chars = "".join(sorted(set(cfg.header_prefix)))
+    lines = content.split("\n")
+    if lines and lines[-1] == "":
+        lines.pop()
+    blocks: list[tuple[list, list]] = []  # ([start, end, toks], data rows)
+    hdr_cum = 0
+    for line_no, raw in enumerate(lines, 1):
+        txt = raw.rstrip("\r").strip(" ")
+        if not txt or (
+            cfg.footer_prefix is not None and txt.startswith(cfg.footer_prefix)
+        ):
+            continue
+        if txt.startswith(cfg.header_prefix):
+            if hdr_cum % hl == 0:
+                blocks.append(([line_no, line_no, []], []))
+            hdr = blocks[-1][0]
+            hdr[1] = line_no
+            hdr[2] += _JAVA_WS.split(txt.lstrip(strip_chars).strip(" "))
+            hdr_cum += 1
+        elif hdr_cum % hl or not hdr_cum:
+            yield ("v", None, line_no, None, None, [txt])
+            return
+        else:
+            blocks[-1][1].append((line_no, _JAVA_WS.split(txt)))
+    if hdr_cum % hl:
+        yield ("v", None, None, None, None, [])
+        return
+    time_idx = cfg.header_schema["time"][0]
+    times = [_time_key(hdr[2], time_idx) for hdr, _ in blocks]
+    last = {t: i for i, t in enumerate(times)}
+    for i, ((start, end, toks), data) in enumerate(blocks):
+        if last[times[i]] != i:
+            continue
+        yield ("h", i, start, end, times[i], toks)
+        for line_no, dtoks in data:
+            yield ("d", i, line_no, None, times[i], dtoks)
 
 
 def _token_col(tokens: F.Column, idx: Index, typ: str, is_strict: bool) -> F.Column:
@@ -130,152 +160,97 @@ def _token_col(tokens: F.Column, idx: Index, typ: str, is_strict: bool) -> F.Col
     return F.array(*[one(i) for i in idx])
 
 
-def parse_blocks(
-    lines: DataFrame, cfg: BlockSourceConfig, is_strict: bool = True
-) -> BlockTables:
-    """Split ordered (run_id, line_no, raw) lines into blocks and apply
-    the positional schema.
+def read_blocks(
+    spark: SparkSession,
+    files: list[tuple[str, str, str]],
+    configs: dict[str, BlockSourceConfig],
+    is_strict: bool = True,
+) -> DataFrame:
+    """Parse ``files`` (``[(run_id, file, path)]``, ``file`` a key of
+    ``configs``) into ONE checkpointed generic block table.
 
-    Returns headers (run_id, block_id, time, line-span meta, header
-    columns), data (run_id, block_id, time, data columns) and the lazy
-    structural ``violations``. Duplicate timestamps: last block wins,
-    matching parser/base.py:217-223. Every window and aggregation is
-    partitioned by run_id.
+    Each file is read and split once, by one task. ``time_raw``, the
+    header's unrounded time, is a Spark cast evaluated by the
+    checkpoint, so a bad time token raises there in strict mode (and
+    is null in lax mode). The structural check is one narrow
+    ``first()`` over the checkpointed violation rows; it raises the
+    reference's message.
     """
-    stripped = lines.select(
-        "run_id", "line_no", F.trim(F.col("raw")).alias("txt")
-    )
-    nonempty = stripped.filter(F.col("txt") != "")
+    by_path = {os.path.abspath(p): (rid, f) for rid, f, p in files}
 
-    is_footer = (
-        F.col("txt").startswith(cfg.footer_prefix)
-        if cfg.footer_prefix is not None
-        else F.lit(False)
-    )
-    # header match is tested BEFORE footer only when the prefixes don't
-    # shadow each other; reference checks footer first in the data loop
-    # and skips footer lines during header collection — net effect:
-    # a footer line is never a header line.
-    is_header = F.col("txt").startswith(cfg.header_prefix) & ~is_footer
+    def split_file(rec):
+        path, content = rec
+        for pre in ("file:", "hdfs://"):
+            if path.startswith(pre):
+                path = "/" + path[len(pre):].lstrip("/")
+                break
+        rid, fname = by_path[os.path.abspath(path)]
+        for row in split_blocks(content, configs[fname]):
+            yield (fname, rid, *row)
 
-    w = (
-        W.partitionBy("run_id")
-        .orderBy("line_no")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    rdd = spark.sparkContext.wholeTextFiles(
+        ",".join(by_path), min(len(by_path), 256)
+    ).flatMap(split_file)
+    time_raw = None
+    for fname, cfg in configs.items():
+        cond = (F.col("kind") == "h") & (F.col("file") == fname)
+        val = _token_col(F.col("toks"), *cfg.header_schema["time"], is_strict)
+        time_raw = F.when(cond, val) if time_raw is None else time_raw.when(cond, val)
+    blocks = (
+        spark.createDataFrame(rdd, BLOCKS_SCHEMA)
+        .withColumn("time_raw", time_raw)
+        .localCheckpoint()
     )
-    flagged = nonempty.select(
-        "run_id",
-        "line_no",
-        "txt",
-        is_header.alias("is_header"),
-        is_footer.alias("is_footer"),
-        F.sum(is_header.cast("long")).over(w).alias("hdr_cum"),
-    )
-
-    hl = cfg.header_length
-    # Structural validation (parser/base.py:272-283), ONE aggregation:
-    # - a data line must appear only after a COMPLETE header group
-    # - EOF inside a header group is an incomplete-header error
-    bad_cond = (
-        ~F.col("is_header")
-        & ~F.col("is_footer")
-        & ((F.col("hdr_cum") % hl != 0) | (F.col("hdr_cum") == 0))
-    )
-    chk_df = flagged.groupBy("run_id").agg(
-        F.max("hdr_cum").alias("tail"),
-        F.min(F.when(bad_cond, F.col("line_no"))).alias("bad_line"),
-        F.min_by(F.col("txt"), F.when(bad_cond, F.col("line_no"))).alias("bad_txt"),
-    )
-    violations = chk_df.filter(
-        F.col("bad_line").isNotNull()
-        | (F.coalesce(F.col("tail"), F.lit(0)) % hl != 0)
-    ).select(
-        "run_id",
-        "bad_line",
-        "bad_txt",
-        (F.coalesce(F.col("tail"), F.lit(0)) % hl != 0).alias(
-            "incomplete_header"
-        ),
-    )
-
-    blocked = flagged.filter(~F.col("is_footer")).select(
-        "run_id",
-        "line_no",
-        "txt",
-        "is_header",
-        F.when(
-            F.col("is_header"), (F.col("hdr_cum") - 1) / hl
-        ).otherwise(F.col("hdr_cum") / hl - 1)
-        .cast("long")
-        .alias("block_id"),
-    )
-
-    strip_re = _lstrip_class(cfg.header_prefix)
-    header_txt = (
-        F.regexp_replace(F.col("txt"), strip_re, "") if strip_re else F.col("txt")
-    )
-    header_lines = blocked.filter("is_header").select(
-        "run_id",
-        "block_id",
-        "line_no",
-        F.split(F.trim(header_txt), r"\s+").alias("toks"),
-    )
-    # multi-line headers: concatenate tokens in line order
-    # (parser/base.py:258: flat token list across header rows)
-    header_tok = (
-        header_lines.groupBy("run_id", "block_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("line_no", "toks"))
-                    ),
-                    lambda s: s.getField("toks"),
-                )
-            ).alias("toks"),
-            F.min("line_no").alias("header_line_start"),
-            F.max("line_no").alias("header_line_end"),
+    bad = (
+        blocks.filter(F.col("kind") == "v")
+        .select(
+            "file",
+            "run_id",
+            F.col("line_no").alias("bad_line"),
+            F.get("toks", 0).alias("bad_txt"),
+            F.col("line_no").isNull().alias("incomplete_header"),
         )
+        .first()
     )
+    if bad is not None:
+        raise_block_violation(bad)
+    return blocks
 
-    hdr_cols = [
-        _token_col(F.col("toks"), idx, typ, is_strict).alias(name)
-        for name, (idx, typ) in cfg.header_schema.items()
+
+def header_table(
+    blocks: DataFrame, name: str, cfg: BlockSourceConfig, is_strict: bool
+) -> DataFrame:
+    """One row per (deduplicated) block of ``name``: run_id, block_id,
+    the header's line span, ``time``, the typed header columns and
+    ``time_raw``."""
+    cols = [
+        _token_col(F.col("toks"), idx, typ, is_strict).alias(col)
+        for col, (idx, typ) in cfg.header_schema.items()
+        if col != "time"
     ]
-    headers = header_tok.select(
-        "run_id", "block_id", "header_line_start", "header_line_end", *hdr_cols
-    )
-    # time keys the block, rounded to 2 decimals (parser/base.py:215);
-    # the unrounded value is preserved as time_raw (the reference keeps
-    # it inside the block header dict).
-    headers = headers.withColumn("time_raw", F.col("time")).withColumn(
-        "time", F.round(F.col("time"), 2)
-    )
-
-    # duplicate timestamps: LAST block wins (parser/base.py:217-223)
-    w_dup = W.partitionBy("run_id", "time").orderBy(F.col("block_id").desc())
-    headers = (
-        headers.withColumn("_rn", F.row_number().over(w_dup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-    data_lines = blocked.filter(~F.col("is_header")).select(
+    return blocks.filter((F.col("file") == name) & (F.col("kind") == "h")).select(
         "run_id",
         "block_id",
-        "line_no",
-        F.split(F.col("txt"), r"\s+").alias("toks"),
+        F.col("line_no").alias("header_line_start"),
+        F.col("line_end").alias("header_line_end"),
+        "time",
+        *cols,
+        "time_raw",
     )
-    data_cols = [
-        _token_col(F.col("toks"), idx, typ, is_strict).alias(name)
-        for name, (idx, typ) in cfg.data_schema.items()
-    ]
-    data = data_lines.join(
-        headers.select("run_id", "block_id", "time"),
-        ["run_id", "block_id"],
-    ).select("run_id", "block_id", "time", "line_no", *data_cols)
 
-    return BlockTables(headers=headers, data=data, violations=violations)
+
+def data_table(
+    blocks: DataFrame, name: str, cfg: BlockSourceConfig, is_strict: bool
+) -> DataFrame:
+    """One row per data line of ``name``: run_id, block_id, its block's
+    ``time``, line_no and the typed data columns."""
+    cols = [
+        _token_col(F.col("toks"), idx, typ, is_strict).alias(col)
+        for col, (idx, typ) in cfg.data_schema.items()
+    ]
+    return blocks.filter((F.col("file") == name) & (F.col("kind") == "d")).select(
+        "run_id", "block_id", "time", "line_no", *cols
+    )
 
 
 def raise_block_violation(bad) -> None:

@@ -2,8 +2,7 @@
 
 ``spark.read.format("nbody6")`` — the one-line ingestion surface on
 top of the engine's block-text model (reference parser/base.py:156-307
-semantics; see sources/block_text.py for the DataFrame-native
-implementation the semantics are pinned against):
+semantics, implemented once in sources/block_text.py):
 
     register_nbody6_source(spark)
     df = (spark.read.format("nbody6")
@@ -17,21 +16,21 @@ directory of thousands of runs scans embarrassingly parallel with no
 driver loop; each partition parses locally and ships its rows to the
 JVM as ONE Arrow RecordBatch (columnar, no per-row pickling). This is
 the discovery/convenience path — per-file-sized memory, like
-read_lines_runs, the batch parser's line source.
+block_text.read_blocks, the batch parser.
 
-Parity contract: the pure-Python tokenizer here must match the
-DataFrame-native parser bit-for-bit — including Java HALF_UP rounding
-of the block timestamp — and tests/test_datasource.py asserts
-DataSource output == parse_blocks output row-for-row on every fixture
-format (multi-line headers, footers, duplicate-timestamp last-wins,
-lax nulls).
+Parity contract: each file is split by the SAME ``split_blocks`` the
+batch parser runs in its tasks (tokens, the HALF_UP-rounded time key
+and duplicate-timestamp last-wins included); only the typed
+conversion differs — Python casts here, Spark casts there — and
+tests/test_datasource.py asserts DataSource output == load_runs
+tables row-for-row on every fixture format (multi-line headers,
+footers, duplicate-timestamp last-wins, lax nulls).
 """
 
 from __future__ import annotations
 
 import glob
 import os
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -41,9 +40,14 @@ from pyspark.sql.datasource import (
     In,
     InputPartition,
 )
+from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from nbody6_data_pipeline_spark.sources.block_text import BlockSourceConfig
+from nbody6_data_pipeline_spark.sources.block_text import (
+    BlockSourceConfig,
+    raise_block_violation,
+    split_blocks,
+)
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS
 
 _SPARK_TYPES = {
@@ -82,16 +86,6 @@ def _source_schema(cfg: BlockSourceConfig, table: str) -> T.StructType:
     return T.StructType(fields)
 
 
-def _round2_half_up(x: float) -> float:
-    """Java BigDecimal.valueOf(x).setScale(2, HALF_UP) — what Spark's
-    round(col, 2) does. Double.toString and Python repr both emit the
-    shortest decimal that round-trips, so going through repr() gives
-    the identical decimal digits to round."""
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
-    )
-
-
 def _convert(toks: list[str], idx, typ: str, strict: bool):
     """Python twin of block_text._token_col (S2 positional projection):
     strict raises on out-of-range / bad cast, lax yields None."""
@@ -115,102 +109,43 @@ def _convert(toks: list[str], idx, typ: str, strict: bool):
     return [one(i) for i in idx]
 
 
-def parse_blocks_py(
-    lines, cfg: BlockSourceConfig, strict: bool = True
-) -> tuple[list[tuple[int, list[str]]], list[tuple[int, int, list[str]]]]:
-    """Single-pass pure-Python block splitter with the exact semantics
-    of parse_blocks: empty lines skipped, footer lines terminate and
-    are never parsed, multi-line header tokens concatenate, a data
-    line before a complete header group (or a trailing incomplete
-    header group) is a structural error.
-
-    Returns (headers, data): headers = [(block_id, toks)], data =
-    [(block_id, line_no, toks)] — token-level, untyped; the caller
-    applies the positional schema and duplicate-timestamp policy.
-    """
-    hl = cfg.header_length
-    headers: list[tuple[int, list[str]]] = []
-    data: list[tuple[int, int, list[str]]] = []
-    hdr_cum = 0
-    cur_toks: list[str] | None = None
-    strip_chars = "".join(sorted(set(cfg.header_prefix)))
-    for line_no, raw in enumerate(lines, 1):
-        txt = raw.strip()
-        if not txt:
-            continue
-        is_footer = cfg.footer_prefix is not None and txt.startswith(
-            cfg.footer_prefix
-        )
-        if is_footer:
-            continue
-        if txt.startswith(cfg.header_prefix):
-            if hdr_cum % hl == 0:
-                cur_toks = []
-                headers.append((hdr_cum // hl, cur_toks))
-            hdr_cum += 1
-            stripped = txt.lstrip(strip_chars) if strip_chars else txt
-            cur_toks.extend(stripped.split())
-        else:
-            if hdr_cum % hl != 0 or hdr_cum == 0:
-                raise ValueError(
-                    f"[LINE {line_no}] Expected a header line, "
-                    f"but got: '{txt}'"
-                )
-            data.append((hdr_cum // hl - 1, line_no, txt.split()))
-    if hdr_cum % hl != 0:
-        raise ValueError("Incomplete header at end of file.")
-    return headers, data
-
-
 def _parse_file(
     path: str, run_id: str, cfg: BlockSourceConfig, table: str, strict: bool
 ):
-    """Parse one file into typed row tuples for the requested table,
-    applying the time-2dp rounding and duplicate-timestamp last-wins
-    policy (parser/base.py:215-223)."""
-    with open(path, encoding="utf-8", errors="replace") as fh:
-        headers, data = parse_blocks_py(fh, cfg, strict)
-
+    """Parse one file into typed row tuples for the requested table.
+    ``split_blocks`` applies the time-2dp rounding and the
+    duplicate-timestamp last-wins policy (parser/base.py:215-223)."""
+    with open(path, encoding="utf-8", errors="replace", newline="") as fh:
+        content = fh.read()
     time_idx, time_typ = cfg.header_schema["time"]
-    by_time: dict[float, int] = {}
-    times: dict[int, float] = {}
-    for block_id, toks in headers:
-        t = _convert(toks, time_idx, time_typ, strict)
-        t = _round2_half_up(t) if t is not None else None
-        times[block_id] = t
-        by_time[t] = block_id  # later block overwrites: LAST wins
-    live = set(by_time.values())
-
-    if table == "headers":
-        hdr_items = [
-            (n, s) for n, s in cfg.header_schema.items() if n != "time"
-        ]
-        for block_id, toks in headers:
-            if block_id not in live:
-                continue
+    hdr_items = [
+        (idx, typ) for n, (idx, typ) in cfg.header_schema.items() if n != "time"
+    ]
+    for kind, block_id, line_no, _, t, toks in split_blocks(content, cfg):
+        if kind == "v":
+            raise_block_violation(
+                Row(
+                    bad_line=line_no,
+                    bad_txt=toks[0] if toks else None,
+                    incomplete_header=line_no is None,
+                )
+            )
+        if kind == "h":
+            if strict and t is None:
+                _convert(toks, time_idx, time_typ, strict)  # raises
+            if table == "headers":
+                yield (
+                    run_id, block_id, t,
+                    *(_convert(toks, idx, typ, strict) for idx, typ in hdr_items),
+                )
+        elif table == "data":
             yield (
-                run_id,
-                block_id,
-                times[block_id],
+                run_id, block_id, t, line_no,
                 *(
                     _convert(toks, idx, typ, strict)
-                    for _, (idx, typ) in hdr_items
+                    for idx, typ in cfg.data_schema.values()
                 ),
             )
-        return
-    for block_id, line_no, toks in data:
-        if block_id not in live:
-            continue
-        yield (
-            run_id,
-            block_id,
-            times[block_id],
-            line_no,
-            *(
-                _convert(toks, idx, typ, strict)
-                for idx, typ in cfg.data_schema.values()
-            ),
-        )
 
 
 def _discover(path: str, kind: str) -> list[tuple[str, str]]:

@@ -9,16 +9,15 @@ ArrayType columns; all ids are LONG, codes INT, physics DOUBLE
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.sources.block_text import (
     BlockSourceConfig,
-    BlockTables,
-    parse_blocks,
-    raise_block_violation,
-    read_lines_runs,
+    data_table,
+    header_table,
+    read_blocks,
 )
 
 # reference parser/out34.py:7-33
@@ -154,19 +153,23 @@ FILE_CONFIGS: dict[str, BlockSourceConfig] = {
 }
 
 
+@dataclass
 class NBody6Runs:
-    """Batched multi-run tables: one headers+data pair per file format,
-    each carrying a ``run_id`` column spanning every loaded run."""
+    """Batched multi-run tables: ``blocks`` is the checkpointed generic
+    block table of every loaded run's six files (block_text.
+    BLOCKS_SCHEMA plus ``time_raw``); ``headers(name)``/``data(name)``
+    are its narrow typed projections for one file format, each carrying
+    a ``run_id`` column spanning every loaded run."""
 
-    def __init__(self, tables: dict[str, BlockTables], run_ids: list[str]):
-        self.tables = tables
-        self.run_ids = run_ids
+    blocks: DataFrame
+    run_ids: list[str]
+    is_strict: bool
 
     def headers(self, name: str) -> DataFrame:
-        return self.tables[name].headers
+        return header_table(self.blocks, name, FILE_CONFIGS[name], self.is_strict)
 
     def data(self, name: str) -> DataFrame:
-        return self.tables[name].data
+        return data_table(self.blocks, name, FILE_CONFIGS[name], self.is_strict)
 
 
 def load_runs(
@@ -175,14 +178,14 @@ def load_runs(
     is_strict: bool = True,
 ) -> NBody6Runs:
     """Parse the six raw files of MANY runs (``[(run_id, run_root)]``)
-    as six batched lazy plans (reference NBODY6DataLoader.__init__/load,
-    loader.py:56-136).
+    into one checkpointed block table (reference
+    NBODY6DataLoader.__init__/load, loader.py:56-136).
 
-    Per file format: ONE wholeTextFiles source over every run's file
-    and ONE grouped parse (windows partitioned by run_id). Structural
-    validation across all runs x formats is checked in a single job,
-    so the whole batch costs O(1) driver actions, not 2 jobs per file
-    per run.
+    ONE wholeTextFiles scan reads every (run, format) file of the batch
+    once, and the task that reads a file splits it into blocks
+    (block_text.read_blocks). Structural validation across all runs x
+    formats is one narrow ``first()`` over the checkpoint, so the whole
+    batch costs O(1) driver actions, not 2 jobs per file per run.
     """
     for rid, root in runs:
         for fname in FILE_CONFIGS:
@@ -190,20 +193,10 @@ def load_runs(
                 raise FileNotFoundError(
                     f"Required file '{fname}' not found in '{root}'."
                 )
-    tables: dict[str, BlockTables] = {}
-    all_viol = None
-    for fname, cfg in FILE_CONFIGS.items():
-        lines = read_lines_runs(
-            spark, [(rid, os.path.join(root, fname)) for rid, root in runs]
-        )
-        bt = parse_blocks(lines, cfg, is_strict=is_strict)
-        tables[fname] = bt
-        v = bt.violations.select(
-            F.lit(fname).alias("file"), "run_id", "bad_line", "bad_txt",
-            "incomplete_header",
-        )
-        all_viol = v if all_viol is None else all_viol.unionByName(v)
-    bad = all_viol.first()  # ONE job validates every run and format
-    if bad is not None:
-        raise_block_violation(bad)
-    return NBody6Runs(tables, [rid for rid, _ in runs])
+    files = [
+        (rid, fname, os.path.join(root, fname))
+        for rid, root in runs
+        for fname in FILE_CONFIGS
+    ]
+    blocks = read_blocks(spark, files, FILE_CONFIGS, is_strict=is_strict)
+    return NBody6Runs(blocks, [rid for rid, _ in runs], is_strict)

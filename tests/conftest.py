@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, wherever it is cloned
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from nbody6_data_pipeline_spark.session import get_spark
 

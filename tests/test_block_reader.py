@@ -3,18 +3,21 @@ files (reference semantics: parser/base.py:156-332)."""
 
 from __future__ import annotations
 
+import itertools
 import os
+from types import SimpleNamespace
 
 import pytest
 
 from nbody6_data_pipeline_spark.sources.block_text import (
     BlockSourceConfig,
-    parse_blocks,
-    raise_block_violation,
-    read_lines_runs,
+    data_table,
+    header_table,
+    read_blocks,
 )
 from nbody6_data_pipeline_spark.sources.nbody6 import (
     DENS_CENTRE_CONFIG,
+    FILE_CONFIGS,
     FORT82_CONFIG,
     OUT9_CONFIG,
     OUT34_CONFIG,
@@ -28,9 +31,14 @@ def run_root(tmp_path_factory):
     return write_run(str(tmp_path_factory.mktemp("run") / "sim"))
 
 
-def _read(spark, path, cfg):
-    """One file through the batch parser (run_id "r")."""
-    return parse_blocks(read_lines_runs(spark, [("r", path)]), cfg)
+def _read(spark, path, cfg, is_strict=True):
+    """One file through the batch parser (run_id "r"); raises its
+    structural violation, as load_runs does for a batch."""
+    blocks = read_blocks(spark, [("r", "f", path)], {"f": cfg}, is_strict)
+    return SimpleNamespace(
+        headers=header_table(blocks, "f", cfg, is_strict),
+        data=data_table(blocks, "f", cfg, is_strict),
+    )
 
 
 def test_out34_blocks(spark, run_root):
@@ -82,9 +90,11 @@ def test_dens_centre_headers_only(spark, run_root):
 
 def test_load_run_all_six(spark, run_root):
     run = load_runs(spark, [("r", run_root)])
-    assert set(run.tables) == {
+    assert {r["file"] for r in run.blocks.select("file").distinct().collect()} == {
         "OUT34", "OUT9", "fort.19", "fort.82", "fort.83", "densCentre.txt",
     }
+    for name in FILE_CONFIGS:
+        assert sorted(r["time"] for r in run.headers(name).collect()) == TIMES
     assert run.data("fort.19").filter("time = 0.0").count() == 2
 
 
@@ -96,34 +106,33 @@ SIMPLE = BlockSourceConfig(
 )
 
 
-def _parse(spark, text, cfg=SIMPLE, is_strict=True):
-    """Parse ``text`` as one run's file and raise its structural
-    violation, as load_runs does for a batch."""
-    lines = spark.createDataFrame(
-        [("t", i + 1, ln) for i, ln in enumerate(text.splitlines())],
-        "run_id string, line_no long, raw string",
-    )
-    bt = parse_blocks(lines, cfg, is_strict=is_strict)
-    bad = bt.violations.first()
-    if bad is not None:
-        raise_block_violation(bad)
-    return bt
+@pytest.fixture
+def parse(spark, tmp_path):
+    """Parse ``text`` as one run's file through the batch parser."""
+    n = itertools.count()
+
+    def _parse(text, cfg=SIMPLE, is_strict=True):
+        f = tmp_path / f"file{next(n)}"
+        f.write_text(text)
+        return _read(spark, str(f), cfg, is_strict)
+
+    return _parse
 
 
-def test_duplicate_timestamp_last_wins(spark):
+def test_duplicate_timestamp_last_wins(parse):
     # reference parser/base.py:217-223: duplicate ts overwrites
-    bt = _parse(spark, "# 1.0 1\n10.0 1\n# 1.0 1\n20.0 2\n")
+    bt = parse("# 1.0 1\n10.0 1\n# 1.0 1\n20.0 2\n")
     assert bt.headers.count() == 1
     rows = bt.data.collect()
     assert len(rows) == 1 and rows[0]["a"] == 20.0
 
 
-def test_data_before_header_raises(spark):
+def test_data_before_header_raises(parse):
     with pytest.raises(ValueError, match="Expected a header line"):
-        _parse(spark, "10.0 1\n# 1.0 1\n")
+        parse("10.0 1\n# 1.0 1\n")
 
 
-def test_incomplete_multiline_header_raises(spark):
+def test_incomplete_multiline_header_raises(parse):
     cfg = BlockSourceConfig(
         header_prefix="#",
         header_length=2,
@@ -131,22 +140,37 @@ def test_incomplete_multiline_header_raises(spark):
         data_schema={"a": (0, "double")},
     )
     with pytest.raises(ValueError, match="Incomplete header"):
-        _parse(spark, "# 1.0\n# x\n1.0\n# 2.0\n", cfg)
+        parse("# 1.0\n# x\n1.0\n# 2.0\n", cfg)
 
 
-def test_lax_mode_bad_token_null(spark):
-    bt = _parse(spark, "# 1.0 1\nBAD 7\n", is_strict=False)
+def test_lax_mode_bad_token_null(parse):
+    bt = parse("# 1.0 1\nBAD 7\n", is_strict=False)
     row = bt.data.collect()[0]
     assert row["a"] is None and row["b"] == 7
 
 
-def test_strict_mode_bad_token_raises(spark):
-    bt = _parse(spark, "# 1.0 1\nBAD 7\n", is_strict=True)
+def test_strict_mode_bad_token_raises(parse):
+    bt = parse("# 1.0 1\nBAD 7\n", is_strict=True)
     with pytest.raises(Exception):
         bt.data.collect()
 
 
-def test_empty_lines_skipped(spark):
-    bt = _parse(spark, "\n# 1.0 1\n\n10.0 1\n\n\n# 2.0 1\n20.0 2\n\n")
+def test_empty_lines_skipped(parse):
+    bt = parse("\n# 1.0 1\n\n10.0 1\n\n\n# 2.0 1\n20.0 2\n\n")
     assert bt.headers.count() == 2
     assert bt.data.count() == 2
+
+
+def test_strict_mode_bad_time_token_raises(parse):
+    # the time key is split in the task; the header's time_raw is a
+    # Spark cast that the parse checkpoint evaluates
+    with pytest.raises(Exception, match="'BAD'"):
+        parse("# BAD 1\n10.0 1\n", is_strict=True)
+
+
+def test_lax_mode_bad_time_token_null_time(parse):
+    bt = parse("# BAD 1\n10.0 1\n", is_strict=False)
+    (h,) = bt.headers.collect()
+    assert h["time"] is None and h["time_raw"] is None and h["n"] == 1
+    (d,) = bt.data.collect()
+    assert d["time"] is None and d["a"] == 10.0

@@ -1,7 +1,7 @@
 """Python DataSource façade (spark.read.format("nbody6")) parity vs
-the DataFrame-native batch parser (read_lines_runs + parse_blocks) —
-same files, same rows, for every file format, plus duplicate-timestamp
-last-wins, lax nulls, and per-file partition planning."""
+the batch parser (load_runs / read_blocks) — same files, same rows,
+for every file format, plus duplicate-timestamp last-wins, lax nulls,
+and per-file partition planning."""
 
 from __future__ import annotations
 
@@ -10,14 +10,12 @@ import os
 import pytest
 
 from nbody6_data_pipeline_spark.sources.block_text import (
-    parse_blocks,
-    read_lines_runs,
-)
-from nbody6_data_pipeline_spark.sources.datasource import (
     _round2_half_up,
-    register_nbody6_source,
+    data_table,
+    read_blocks,
 )
-from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS
+from nbody6_data_pipeline_spark.sources.datasource import register_nbody6_source
+from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, load_runs
 from tests.nbody6_fixtures import write_run
 
 
@@ -29,31 +27,38 @@ def runs_root(tmp_path_factory):
     return str(root)
 
 
-def _native(spark, path, cfg, is_strict=True):
-    """One file through the batch parser (run_id "r")."""
-    return parse_blocks(
-        read_lines_runs(spark, [("r", path)]), cfg, is_strict=is_strict
-    )
+@pytest.fixture(scope="module")
+def loaded(spark, runs_root):
+    """Both fixture runs through the batch parser, run_id = the path
+    below the root, as the DataSource names them."""
+    rids = ["a/run1", "b/run2"]
+    return load_runs(spark, [(rid, os.path.join(runs_root, rid)) for rid in rids])
 
 
-def _native_rows(spark, path, cfg, table):
-    bt = _native(spark, path, cfg)
+def _native_rows(loaded, rid, kind, table):
+    cfg = FILE_CONFIGS[kind]
     if table == "headers":
         cols = ["block_id", "time"] + [
             c for c in cfg.header_schema if c != "time"
         ]
-        df = bt.headers.select(*cols)
+        df = loaded.headers(kind).select("run_id", *cols)
     else:
         cols = ["block_id", "time", "line_no", *cfg.data_schema]
-        df = bt.data.select(*cols)
-    return sorted(tuple(r) for r in df.collect())
+        df = loaded.data(kind).select("run_id", *cols)
+    return sorted(tuple(r)[1:] for r in df.filter(df["run_id"] == rid).collect())
+
+
+def _native_data(spark, path, is_strict=True):
+    """One OUT34 file through the batch parser."""
+    cfg = FILE_CONFIGS["OUT34"]
+    blocks = read_blocks(spark, [("r", "OUT34", path)], {"OUT34": cfg}, is_strict)
+    return data_table(blocks, "OUT34", cfg, is_strict)
 
 
 @pytest.mark.parametrize("kind", sorted(FILE_CONFIGS))
 @pytest.mark.parametrize("table", ["data", "headers"])
-def test_datasource_matches_native_parser(spark, runs_root, kind, table):
+def test_datasource_matches_native_parser(spark, runs_root, loaded, kind, table):
     register_nbody6_source(spark)
-    cfg = FILE_CONFIGS[kind]
     ds = (
         spark.read.format("nbody6")
         .option("kind", kind)
@@ -70,15 +75,13 @@ def test_datasource_matches_native_parser(spark, runs_root, kind, table):
             tuple(r)[1:]  # drop run_id
             for r in ds.filter(ds["run_id"] == rid).collect()
         )
-        native = _native_rows(
-            spark, os.path.join(runs_root, rid, kind), cfg, table
-        )
+        native = _native_rows(loaded, rid, kind, table)
         assert got == native, f"{kind}/{table}/{rid}"
 
 
 def test_duplicate_timestamp_last_wins_and_rounding(spark, tmp_path):
     """Two blocks whose times round to the SAME 2-decimal key: the
-    later block's rows survive, exactly like the window path. Also
+    later block's rows survive, exactly like the batch parser. Also
     pins the Java HALF_UP rounding twin."""
     register_nbody6_source(spark)
     f = tmp_path / "OUT34"
@@ -96,11 +99,9 @@ def test_duplicate_timestamp_last_wins_and_rounding(spark, tmp_path):
         .option("kind", "OUT34")
         .load(str(f))
     )
-    native = _native(spark, str(f), FILE_CONFIGS["OUT34"])
+    native = _native_data(spark, str(f))
     got = sorted((r["time"], r["name"]) for r in ds.collect())
-    want = sorted(
-        (r["time"], r["name"]) for r in native.data.collect()
-    )
+    want = sorted((r["time"], r["name"]) for r in native.collect())
     assert got == want
     # 1.0049 -> 1.0 ; 1.0051 and 1.005 -> 1.01 (HALF_UP), later wins
     assert got == [(1.0, 11), (1.01, 33)]
@@ -111,7 +112,7 @@ def test_duplicate_timestamp_last_wins_and_rounding(spark, tmp_path):
 
 def test_lax_mode_matches_try_cast(spark, tmp_path):
     """A short data line: strict raises on both paths; lax yields the
-    same nulls as the DataFrame try_cast path."""
+    same nulls as the batch parser's try_cast."""
     register_nbody6_source(spark)
     f = tmp_path / "OUT34"
     h = ["0"] * 28
@@ -127,7 +128,7 @@ def test_lax_mode_matches_try_cast(spark, tmp_path):
         .option("mode", "lax")
         .load(str(f))
     )
-    native = _native(spark, str(f), FILE_CONFIGS["OUT34"], is_strict=False).data
+    native = _native_data(spark, str(f), is_strict=False)
     cols = ["time", "line_no", *FILE_CONFIGS["OUT34"].data_schema]
     got = sorted(tuple(r) for r in ds.select(*cols).collect())
     want = sorted(tuple(r) for r in native.select(*cols).collect())

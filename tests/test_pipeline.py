@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.pipeline import LAYERS, process_all
 from nbody6_data_pipeline_spark.sources.discovery import fetch_sim_runs
+from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS
 from nbody6_data_pipeline_spark.sources.sinks import write_parquet
 from tests.nbody6_fixtures import write_run
 
@@ -120,11 +121,10 @@ def test_align_runs_executor_side_parity(spark, sim_base, monkeypatch):
     a = align.align_runs(load_runs(spark, pairs))
     monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
     b = align.align_runs(load_runs(spark, pairs))
-    assert set(a.tables) == set(b.tables)
-    for fname in a.tables:
+    for fname in FILE_CONFIGS:
         for part in ("headers", "data"):
-            da = getattr(a.tables[fname], part)
-            db = getattr(b.tables[fname], part)
+            da = getattr(a, part)(fname)
+            db = getattr(b, part)(fname)
             cols = sorted(da.columns)
             assert cols == sorted(db.columns), fname
             ra = sorted(
@@ -152,7 +152,7 @@ def test_align_runs_executor_side_strict_error(spark, tmp_path, monkeypatch):
     multi = load_runs(spark, [("bad", root)])
     with pytest.raises(Exception, match="inconsistent timestamps"):
         aligned = align.align_runs(multi)
-        aligned.tables["OUT34"].headers.collect()
+        aligned.headers("OUT34").collect()
 
 
 def test_batched_load_align_constant_driver_actions(spark, sim_base):
@@ -205,10 +205,11 @@ def test_batched_pipeline_lax_mode(spark, tmp_path):
     assert len(rows) == 3 and all(r["n_star"] > 0 for r in rows)
 
 
-def test_load_runs_windows_partitioned_by_run_id(spark, sim_base):
-    """Every Window in the parse plans is partitioned by run_id: an
-    unpartitioned window would pull a whole format's lines into one
-    task ("No Partition Defined for Window operation")."""
+def test_aligned_tables_read_checkpoint_without_exchange(spark, sim_base):
+    """Every typed table align_runs returns is a filter and projection
+    of the aligned checkpoint: no window, shuffle or broadcast re-runs
+    parse or alignment work for any of its consumers."""
+    from nbody6_data_pipeline_spark.operators.align import align_runs
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     def nodes(plan):
@@ -220,21 +221,29 @@ def test_load_runs_windows_partitioned_by_run_id(spark, sim_base):
             yield from nodes(children.apply(i))
 
     runs = fetch_sim_runs(sim_base)
-    multi = load_runs(spark, [(r.label, r.path) for r in runs])
-    n_windows = 0
-    for fname, bt in multi.tables.items():
-        for part in ("headers", "data", "violations"):
-            plan = getattr(bt, part)._jdf.queryExecution().executedPlan()
-            for node in nodes(plan):
-                if node.getClass().getSimpleName() != "WindowExec":
-                    continue
-                n_windows += 1
-                spec = node.partitionSpec()
-                keys = [spec.apply(i).toString() for i in range(spec.size())]
-                assert any(k.startswith("run_id#") for k in keys), (
-                    f"{fname}.{part}: window partitioned by {keys}"
-                )
-    assert n_windows > 0
+    aligned = align_runs(load_runs(spark, [(r.label, r.path) for r in runs]))
+    for fname in FILE_CONFIGS:
+        for part in ("headers", "data"):
+            plan = getattr(aligned, part)(fname)._jdf.queryExecution().executedPlan()
+            names = [n.getClass().getSimpleName() for n in nodes(plan)]
+            assert "RDDScanExec" in names, f"{fname}.{part}: {names}"
+            assert not {
+                "WindowExec", "ShuffleExchangeExec", "BroadcastExchangeExec",
+            } & set(names), f"{fname}.{part}: {names}"
+
+
+def test_align_runs_executor_side_caches_nothing(spark, sim_base, monkeypatch):
+    """The executor-side alignment leaves nothing in the session's
+    cache: its mapping is read by the one checkpoint of the aligned
+    table, so a persist() would only leak."""
+    from nbody6_data_pipeline_spark.operators import align
+    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
+
+    runs = fetch_sim_runs(sim_base)
+    spark.catalog.clearCache()
+    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
+    align.align_runs(load_runs(spark, [(r.label, r.path) for r in runs]))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 HAZARD_WARNINGS = (
