@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.plans.skew import salted_join
+from nbody6_data_pipeline_spark.session import scoped_conf
 
 
 def _skewed(spark):
@@ -56,6 +58,58 @@ def test_salted_join_spreads_hot_key(spark):
         .count()
     )
     assert parts > 1
+
+
+def test_salted_join_widened_key_parity(spark):
+    # an int big-side key joined to a long small-side key: the join
+    # compares cast(k as bigint), so both sides must derive their salt
+    # values from the widened key or the salts stop matching
+    big = _skewed(spark).withColumn("k", F.col("k").cast("int"))
+    dim = _dim(spark)
+    dim_missing = dim.filter(F.col("k") % 7 != 0)
+    for small, how in ((dim, "inner"), (dim_missing, "left")):
+        plain = big.join(small, "k", how).select("k", "payload", "attr")
+        salted = salted_join(big, small, "k", how=how).select(
+            "k", "payload", "attr"
+        )
+        assert sorted(map(str, salted.collect())) == sorted(
+            map(str, plain.collect())
+        ), how
+
+
+def test_salted_join_refuses_mixed_string_key(spark):
+    # a string key against a number compares under rules that change
+    # with spark.sql.ansi.enabled, so the salts cannot be derived from
+    # the compared key; the caller casts first
+    big = _skewed(spark).withColumn("k", F.col("k").cast("string"))
+    with pytest.raises(ValueError, match="cast both to one type"):
+        salted_join(big, _dim(spark), "k")
+
+
+@pytest.mark.parametrize("n_partitions", [4, 8, 32])
+@pytest.mark.parametrize("n_salts", [8, 16])
+def test_salted_join_hot_key_reaches_min_salts_partitions(
+    spark, n_partitions, n_salts
+):
+    """The spread promise at partition counts other than the host's:
+    the hot key lands in exactly min(n_salts, P) shuffle partitions of
+    the join, and the result still equals the plain join."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(n_partitions),
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    with scoped_conf(spark, confs):
+        big, dim = _skewed(spark), _dim(spark)
+        salted = salted_join(big, dim, "k", n_salts=n_salts)
+        parts = (
+            salted.filter(F.col("k") == 0)
+            .select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
+        assert parts == min(n_salts, n_partitions)
+        assert salted.count() == big.join(dim, "k").count()
 
 
 def test_salted_join_duplicate_dim_rows_multiplicity(spark):

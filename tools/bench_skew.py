@@ -25,10 +25,11 @@ these numbers.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_KEYS = 100_000
 HOT_FRACTION = 0.3

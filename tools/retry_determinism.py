@@ -5,9 +5,10 @@ kills); an engine whose outputs depend on which ATTEMPT of a task ran
 is silently wrong at 100 TB even if every single-attempt run is
 oracle-green. This repo's correctness story leans on content-hash
 determinism (e.g. queries_training.q_doc_priority_sample samples on a
-md5 of the row content, plans/skew.salted_join derives salts from the
-key hash, shard assignment is md5_bucket) — this harness MEASURES that
-claim instead of arguing it:
+md5 of the row content, plans/skew.salted_join derives each key's salt
+values from the key's hash and picks a row's salt by a hash of its
+monotonically_increasing_id, shard assignment is md5_bucket) — this
+harness MEASURES that claim instead of arguing it:
 
   for each target query
     run A: plain plan, collect, canonical hash
