@@ -3,7 +3,9 @@
 Every function here is a pure ``Column -> Column`` expression built
 from ``pyspark.sql.functions`` — JVM-side, whole-stage-codegen'd, no
 Python UDFs. They are the engine's equivalent of a SQL scalar
-function registry.
+function registry. The physics formulas the per-snapshot kernels need
+take ``xp`` (``functions/xp.py``), so the same definition also
+evaluates on numpy arrays.
 """
 
 from nbody6_data_pipeline_spark.functions.binary import (

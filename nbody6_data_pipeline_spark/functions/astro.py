@@ -15,15 +15,17 @@ lon_deg, lat_deg, pm_lon_coslat_mas_yr, pm_lat_mas_yr, dist_pc,
 rv_kms. Proper motions use the Julian year and the IAU parsec, folded
 into one constant (astropy does the same unit algebra).
 
-Implemented natively (no astropy dependency, whole-stage codegen);
-validated against an independent numpy implementation and analytic
-invariants in tests/test_observe.py.
+Implemented natively (no astropy dependency, whole-stage codegen, or
+numpy inside the observe kernel through ``xp``); validated against an
+independent numpy implementation and analytic invariants in
+tests/test_observe.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from nbody6_data_pipeline_spark.functions.xp import SPARK
 
 # IAU parsec [km] and Julian year [s]
 PC_KM = 3.0856775814913673e13
@@ -37,15 +39,16 @@ def offset_frame_columns(
     x: Column, y: Column, z: Column,
     vx: Column, vy: Column, vz: Column,
     cx: Column, cy: Column, cz: Column,
+    xp=SPARK,
 ) -> dict[str, Column]:
     """Observed quantities for a star at galactic position (x,y,z) [pc]
     with velocity (vx,vy,vz) [km/s], for an offset frame centered on
     (cx,cy,cz). Positions are ABSOLUTE galactic cartesian (callers add
     the cluster center to cluster-centric offsets first)."""
-    lon0 = F.atan2(cy, cx)
-    lat0 = F.atan2(cz, F.sqrt(cx * cx + cy * cy))
-    cl, sl = F.cos(lon0), F.sin(lon0)
-    cb, sb = F.cos(lat0), F.sin(lat0)
+    lon0 = xp.atan2(cy, cx)
+    lat0 = xp.atan2(cz, xp.sqrt(cx * cx + cy * cy))
+    cl, sl = xp.cos(lon0), xp.sin(lon0)
+    cb, sb = xp.cos(lat0), xp.sin(lat0)
 
     def rot(px: Column, py: Column, pz: Column) -> tuple[Column, Column, Column]:
         # R_y(+lat0) @ R_z(-lon0)
@@ -57,10 +60,10 @@ def offset_frame_columns(
     X, Y, Z = rot(x, y, z)
     VX, VY, VZ = rot(vx, vy, vz)
 
-    dist = F.sqrt(X * X + Y * Y + Z * Z)
-    rho = F.sqrt(X * X + Y * Y)  # in-plane distance
-    lon = F.atan2(Y, X)
-    lat = F.asin(Z / dist)
+    dist = xp.sqrt(X * X + Y * Y + Z * Z)
+    rho = xp.sqrt(X * X + Y * Y)  # in-plane distance
+    lon = xp.atan2(Y, X)
+    lat = xp.asin(Z / dist)
 
     # spherical unit vectors: r_hat, lon_hat = (-sin lon, cos lon, 0),
     # lat_hat = (-sin lat cos lon, -sin lat sin lon, cos lat)
@@ -71,10 +74,10 @@ def offset_frame_columns(
     v_lon = -sin_lon * VX + cos_lon * VY
     v_lat = -sin_lat * cos_lon * VX - sin_lat * sin_lon * VY + cos_lat * VZ
 
-    to_mas_yr = F.lit(KMS_PER_PC_TO_MAS_YR)
+    to_mas_yr = xp.lit(KMS_PER_PC_TO_MAS_YR)
     return {
-        "lon_deg": F.degrees(lon),
-        "lat_deg": F.degrees(lat),
+        "lon_deg": xp.degrees(lon),
+        "lat_deg": xp.degrees(lat),
         "pm_lon_coslat_mas_yr": v_lon / dist * to_mas_yr,
         "pm_lat_mas_yr": v_lat / dist * to_mas_yr,
         "dist_pc": dist,

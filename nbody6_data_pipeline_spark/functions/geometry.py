@@ -7,19 +7,21 @@ collect_inclination_stats.py:25-34.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from nbody6_data_pipeline_spark.functions.xp import SPARK
 
 
-def euclidean_norm(x: Column, y: Column, z: Column) -> Column:
+def euclidean_norm(x: Column, y: Column, z: Column, xp=SPARK) -> Column:
     """|(x, y, z)|."""
-    return F.sqrt(x * x + y * y + z * z)
+    return xp.sqrt(x * x + y * y + z * z)
 
 
 def dist_to_center(
-    x: Column, y: Column, z: Column, cx: Column, cy: Column, cz: Column
+    x: Column, y: Column, z: Column, cx: Column, cy: Column, cz: Column,
+    xp=SPARK,
 ) -> Column:
     """F13 — Euclidean distance to a center point (assembler.py:191-194)."""
-    return euclidean_norm(x - cx, y - cy, z - cz)
+    return euclidean_norm(x - cx, y - cy, z - cz, xp)
 
 
 def cross_product(

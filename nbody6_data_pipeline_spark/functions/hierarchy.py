@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from nbody6_data_pipeline_spark.functions.xp import SPARK
+
 
 def _group_label(ids: Column) -> Column:
     """ids ARRAY<BIGINT> -> '(1+2)' or '3' (assembler.py:260-274)."""
@@ -56,13 +58,13 @@ def sort_hierarchy(labels: Column) -> Column:
     )
 
 
-def is_multi_system_star(hierarchy: Column) -> Column:
+def is_multi_system_star(hierarchy: Column, xp=SPARK) -> Column:
     """F17 (stars) — len(hierarchy) > 2 (assembler.py:605-617)."""
-    return F.size(hierarchy) > 2
+    return xp.size(hierarchy) > 2
 
 
-def is_multi_system_binary(ids1: Column, ids2: Column) -> Column:
+def is_multi_system_binary(ids1: Column, ids2: Column, xp=SPARK) -> Column:
     """F17 (binaries) — either side is itself a group
     (assembler.py:420-425).
     """
-    return (F.size(ids1) > 1) | (F.size(ids2) > 1)
+    return (xp.size(ids1) > 1) | (xp.size(ids2) > 1)

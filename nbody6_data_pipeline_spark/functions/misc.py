@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,3 +41,12 @@ def log_ops(col: Column, op: str) -> Column:
     if op not in ops:
         raise ValueError(f"unknown op {op!r}; expected one of {sorted(ops)}")
     return ops[op](col)
+
+
+def round_half_up(x: float, digits: int) -> float:
+    """Spark's ``round(x, digits)`` of one double, in Python: HALF_UP
+    on the shortest decimal that round-trips (Java's Double.toString
+    and Python's repr emit the same digits). ``+ 0.0`` drops the sign
+    of a zero result, which a BigDecimal does not keep."""
+    q = Decimal(1).scaleb(-digits)
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)) + 0.0

@@ -10,6 +10,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.functions.constants import M_BOL_SUN, T_SUN_K
+from nbody6_data_pipeline_spark.functions.xp import SPARK
 
 
 def calc_log_surface_flux_ratio(log_t_eff: Column) -> Column:
@@ -26,12 +27,12 @@ def calc_effective_temperature_K(lum_l_sol: Column, rad_r_sol: Column) -> Column
 
 
 def calc_log_effective_temperature_K(
-    log_lum: Column, log_rad: Column
+    log_lum: Column, log_rad: Column, xp=SPARK
 ) -> Column:
     """F10 (log form) — logT = (logL - 2 logR)/4 + log(5772)
     (calc/star.py:22-27).
     """
-    return (log_lum - log_rad * 2.0) / 4.0 + F.log10(F.lit(T_SUN_K))
+    return (log_lum - log_rad * 2.0) / 4.0 + xp.log10(xp.lit(T_SUN_K))
 
 
 def calc_bolometric_magnitude(log_lum: Column) -> Column:

@@ -1,29 +1,54 @@
-"""Snapshot assembly — the reference SnapshotAssembler (assembler.py)
-re-expressed as set-based DataFrame dataflow over ALL timestamps at
-once.
+"""Snapshot assembly — the reference SnapshotAssembler (assembler.py),
+which builds one snapshot at a time, and so does this module.
 
-The reference calls its per-timestamp ``_assemble`` in a loop over
-pandas frames; here every per-timestamp dict/map becomes a join keyed by
-``(run_id, time)`` and every loop becomes a groupBy — one lazy DAG
-Catalyst can optimize end-to-end, parallel across the full
-run x timestamp grid (SURVEY §1.1, §3.1).
+Every run's six parsed files become ONE tagged ``unionByName`` of
+narrow typed projections (strict ANSI casts still raise in Spark).
+After the per-run dissolution cut, a small pre-filter,
+``groupBy("run_id", "time").applyInArrow`` hands each snapshot to
+``_assemble_snapshot``: the reference's per-timestamp dicts and loops
+over numpy arrays, with the physics helpers of ``functions/`` called on
+``xp=NUMPY``. A snapshot is local to one task, so the whole layer is one
+shuffle and one ``localCheckpoint`` (SURVEY §1.1, §3.1).
 
-Outputs three long tables (FIXTURES.md §2): ``stars``,
-``binary_systems``, ``snapshot_headers``.
+The kernel returns tagged rows. ``stars``, ``binary_systems`` and
+``snapshot_headers`` (FIXTURES.md §2) are narrow projections of the
+checkpoint; the pair labels, the star hierarchies and the 4-decimal
+rounding are Spark expressions in those projections. Validation
+failures come back as rows too; an ``Observation`` on the checkpoint's
+own scan reads the first one, and ``assemble_runs`` raises it before
+anything is written.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window as W
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from nbody6_data_pipeline_spark.functions.binary import calc_semi_major_axis_au
+from nbody6_data_pipeline_spark.functions.binary import (
+    calc_semi_major_axis_au,
+    is_hard_binary,
+    is_wide_binary,
+)
+from nbody6_data_pipeline_spark.functions.geometry import (
+    dist_to_center,
+    within_radius_flags,
+)
 from nbody6_data_pipeline_spark.functions.hierarchy import (
     hierarchy_pair_label,
+    is_multi_system_binary,
+    is_multi_system_star,
     sort_hierarchy,
 )
+from nbody6_data_pipeline_spark.functions.misc import round_half_up
+from nbody6_data_pipeline_spark.functions.xp import NUMPY
 from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Runs
 
 KEY = ["run_id", "time"]
@@ -36,408 +61,388 @@ class AssembledTables:
     snapshot_headers: DataFrame
 
 
-_VIOLATIONS = {
-    "dup": "Duplicate names found in attributes: {name} at {time}.",
-    "missing_attr": "[{time} Myr] Names in OUT34/OUT9 are missing from "
-    "fort.82/83 (e.g. {name}).",
-    "missing_pv": "[{time} Myr] Names in fort.82/83 are missing from "
-    "OUT34/OUT9 (e.g. {name}).",
-    "missing_comp": "[{time} Myr] Names from binary pairing info "
-    "(OUT9/fort.19) are missing from the star catalog (e.g. {name}).",
-}
+# validation kinds, in the reference's check order: assemble_runs raises
+# the first kind found, at its earliest (time, name)
+_VIOLATIONS = [
+    "Duplicate names found in attributes: {name} at {time}.",
+    "[{time} Myr] Names in OUT34/OUT9 are missing from fort.82/83 (e.g. {name}).",
+    "[{time} Myr] Names in fort.82/83 are missing from OUT34/OUT9 (e.g. {name}).",
+    "[{time} Myr] Names from binary pairing info (OUT9/fort.19) are missing "
+    "from the star catalog (e.g. {name}).",
+]
+_DUP, _MISSING_ATTR, _MISSING_PV, _MISSING_COMP = range(4)
+
+# input tags: one per (file, header/data) projection
+_DENS, _HDR34, _PV, _BIN9, _BIN19, _ATTR82, _ATTR83 = range(7)
+# output tags
+_STAR, _BIN, _HDR, _VIOL = range(4)
+
+_OUT_DDL = """
+    _tag tinyint, run_id string, time double,
+    name bigint, x double, y double, z double, vx double, vy double,
+    vz double, mass double, log_T_eff_K double, log_L_L_sol double,
+    log_R_R_sol double, _h1 array<array<bigint>>, _h2 array<array<bigint>>,
+    obj1_name bigint, obj2_name bigint, obj1_ids array<bigint>,
+    obj2_ids array<bigint>, ecc double, semi double,
+    log_period_days double, obj1_masses array<double>,
+    obj2_masses array<double>, obj1_total_mass double,
+    obj2_total_mass double, obj1_dist_dc_pc double,
+    obj2_dist_dc_pc double, is_multi_system boolean,
+    is_top_level boolean, is_wide_binary_system boolean,
+    is_hard_binary_system boolean,
+    dist_dc_pc double, dist_dc_r_tidal double, dist_dc_r_half_mass double,
+    is_within_r_tidal boolean, is_within_2x_r_tidal boolean,
+    density_center array<double>, r_tidal double, r_half_mass double,
+    n_stars_within_r_tidal int, n_stars_within_2x_r_tidal int,
+    total_mass double, total_mass_within_r_tidal double,
+    total_mass_within_2x_r_tidal double, n_binary_system int,
+    n_multi_system int, n_hard_binary_system int, n_wide_binary_system int,
+    n_binary_system_within_r_tidal int,
+    n_binary_system_within_2x_r_tidal int,
+    nzero int, rbar double, vstar double, rtide double,
+    plummer_mass double, rd array<double>, rcm array<double>,
+    rg array<double>, vg array<double>, _kind tinyint
+"""
 
 
-def _mean_over(vals: F.Column) -> F.Column:
-    """np.mean of a (possibly empty) array -> NULL when empty
-    (reference assembler.py:289-293: None when no components found)."""
-    return F.when(
-        F.size(vals) > 0,
-        F.aggregate(vals, F.lit(0.0), lambda a, x: a + x) / F.size(vals),
+def arrow_rows(schema: pa.Schema, n: int, cols: dict, const: dict) -> pa.Table:
+    """An ``n``-row table of ``schema``: ``cols`` are per-row values
+    (arrays or lists; numpy NaN becomes null), ``const`` one value
+    repeated; every other column is null."""
+    arrays = []
+    for f in schema:
+        if f.name in const:
+            arrays.append(pa.repeat(pa.scalar(const[f.name], f.type), n))
+        elif f.name in cols:
+            v = cols[f.name]
+            if isinstance(v, (pa.Array, pa.ChunkedArray)):
+                arrays.append(v.cast(f.type))
+            else:
+                arrays.append(pa.array(v, type=f.type, from_pandas=True))
+        else:
+            arrays.append(pa.nulls(n, f.type))
+    return pa.Table.from_arrays(arrays, schema=schema)
+
+
+def _seq_sum(vals) -> float | None:
+    """Spark's ``aggregate(vals, 0.0, (a, x) -> a + x)``: left to right,
+    NULL if any value is NULL."""
+    acc = 0.0
+    for v in vals:
+        if v is None or v != v:
+            return None
+        acc += v
+    return acc
+
+
+def _mean(vals: list) -> float | None:
+    """``_seq_sum / size``, NULL for no values (the reference's None
+    when no components are found, assembler.py:289-293)."""
+    s = _seq_sum(vals)
+    return None if s is None or not vals else s / len(vals)
+
+
+def tagged_union(*parts: tuple) -> DataFrame:
+    """One table of ``(df, tag, *cols)`` parts: each part's ``cols``
+    keyed by snapshot and tagged ``_src``, other columns null."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
+        df.select(*KEY, F.lit(tag).cast("tinyint").alias("_src"), *cols)
+        for df, tag, *cols in parts
+    ])
+
+
+def snapshot_checkpoint(rows: DataFrame, kernel, ddl: str, violation) -> tuple:
+    """``kernel(table, schema)`` on every ``(run_id, time)`` snapshot of
+    ``rows``, materialized by one ``localCheckpoint``. Returns the
+    checkpoint and the least ``violation`` struct over its rows tagged
+    ``_VIOL`` (None when there are none), read by an ``Observation``
+    on the checkpoint's own scan."""
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    first = Observation("violations")
+    out = (
+        rows.groupBy(*KEY)
+        .applyInArrow(lambda t: kernel(t, schema), ddl)
+        .observe(first, F.min(F.when(F.col("_tag") == _VIOL, violation)).alias("bad"))
+        .localCheckpoint()
     )
+    return out, first.get["bad"]
+
+
+def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Table:
+    """One snapshot (reference assembler.py ``_assemble``): stars,
+    binaries, the header and the validation violations, as tagged rows
+    of ``schema``."""
+    # file order: duplicates resolve the same way at any partitioning
+    t = t.sort_by("line_no")
+    src = t.column("_src").to_numpy()
+    part = [t.filter(pa.array(src == tag)) for tag in range(7)]
+    dens = part[_DENS]
+    if dens.num_rows == 0:
+        return schema.empty_table()
+    const = {"run_id": t.column("run_id")[0].as_py(), "time": t.column("time")[0].as_py()}
+    r_tidal = dens.column("r_tidal")[0].as_py()
+    dc = dens.column("density_center")[0].as_py()
+    viol: list[tuple] = []
+
+    def violations() -> pa.Table:
+        kinds, names = zip(*viol)
+        return arrow_rows(schema, len(viol), {"_kind": kinds, "name": names},
+                          {**const, "_tag": _VIOL})
+
+    # J3: cm -> component expansion (assembler.py:81-108)
+    b9 = part[_BIN9]
+    cm_map = {
+        cm: (n1, n2)
+        for cm, n1, n2 in zip(*(b9.column(c).to_pylist()
+                                for c in ("cmName", "name1", "name2")))
+        if cm is not None
+    }
+    pv = part[_PV]
+    pv_row, pv_name = [], []
+    for i, n in enumerate(pv.column("name").to_pylist()):
+        for c in cm_map.get(n, (n,)):
+            pv_row.append(i)
+            pv_name.append(c)
+
+    # U1/U2/P10: attribute union (assembler.py:110-136); fort.82 names
+    # are deduplicated, a name in fort.82 and fort.83 is a duplicate
+    attr_cols = ("mass", "zlum", "rad", "tempe")
+    a82, seen, attrs = part[_ATTR82], set(), []
+    for i in (1, 2):
+        cols = [a82.column(f"{c}{i}").to_pylist() for c in ("name", *attr_cols)]
+        for row in zip(*cols):
+            if row[0] not in seen:
+                seen.add(row[0])
+                attrs.append(row)
+    a83 = part[_ATTR83]
+    attrs += zip(*(a83.column(c).to_pylist() for c in ("name", *attr_cols)))
+    viol += [(_DUP, n) for n, k in Counter(a[0] for a in attrs).items() if k > 1]
+    attr_of = {a[0]: j for j, a in enumerate(attrs) if a[0] is not None}
+    if is_strict:
+        pv_names = set(pv_name) - {None}
+        viol += [(_MISSING_ATTR, n) for n in pv_name if n not in attr_of]
+        viol += [(_MISSING_PV, a[0]) for a in attrs if a[0] not in pv_names]
+    if viol:
+        return violations()
+
+    # stars, in name order: every float reduction below runs in it
+    st = sorted((n, k) for k, n in enumerate(pv_name) if n in attr_of)
+    names = np.array([n for n, _ in st], dtype=np.int64)
+    rows = np.array([pv_row[k] for _, k in st], dtype=np.int64)
+    pos = {c: pv.column(c).to_numpy(zero_copy_only=False).astype(float)[rows]
+           for c in ("x", "y", "z", "vx", "vy", "vz")}
+    attr_vals = np.array([attrs[attr_of[n]][1:] for n, _ in st], dtype=float)
+    mass, zlum, rad, tempe = attr_vals.reshape(-1, 4).T
+
+    # F13/F14: distances & flags (assembler.py:191-219)
+    center = np.array(dc or [None] * 3, dtype=float)
+    dist = dist_to_center(pos["x"], pos["y"], pos["z"], *center, xp=NUMPY)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        flags = within_radius_flags(dist, r_tidal)
+    ratio = flags["dist_dc_r_tidal"]
+
+    # A10/W2: half-mass radius on the ratio<=2 subset (calc/cluster.py:
+    # 14-31: first distance, in (distance, name) order, where the
+    # cumulative mass reaches half the total)
+    sub = np.flatnonzero(ratio <= 2)
+    order = sub[np.lexsort((names[sub], dist[sub]))]
+    cum = np.cumsum(mass[order])
+    reached = cum >= cum[-1] / 2 if len(cum) else cum > 0
+    if not reached.any():
+        # no half-mass radius: the snapshot has no stars, so no binary
+        # (lax) or only missing components (strict) and no header
+        names = names[:0]
+    r_hm = float(dist[order][np.argmax(reached)]) if reached.any() else None
+
+    # binaries (assembler.py:249-479)
+    bcols = ("name1", "name2", "ecc", "p", "mass1", "mass2")
+    b19 = part[_BIN19]
+    braw = {c: b9.column(c).to_pylist() + b19.column(c).to_pylist() for c in bcols}
+    obj1 = [cm_map.get(n, (n,)) for n in braw["name1"]]
+    obj2 = [cm_map.get(n, (n,)) for n in braw["name2"]]
+    star_of = {int(n): j for j, n in enumerate(names)}
+    keep = []
+    for b, (o1, o2) in enumerate(zip(obj1, obj2)):
+        missing = [i for i in o1 + o2 if i not in star_of]
+        if is_strict:
+            viol += [(_MISSING_COMP, i) for i in missing]
+        if not missing:
+            keep.append(b)
+    if viol:
+        return violations()
+    if not len(names):
+        return schema.empty_table()
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ratio_hm = dist / r_hm
+    n_within2 = int((ratio <= 2).sum())
+    obj1 = [obj1[b] for b in keep]
+    obj2 = [obj2[b] for b in keep]
+    bval = {c: np.array([braw[c][b] for b in keep], dtype=float)
+            for c in ("ecc", "p", "mass1", "mass2")}
+    semi = calc_semi_major_axis_au(bval["mass1"], bval["mass2"], bval["p"], xp=NUMPY)
+    mass_of = {a[0]: a[1] for a in attrs if a[0] is not None}
+
+    def dist_vals(ids, vals):
+        return [float(vals[star_of[i]]) for i in ids if i in star_of]
+
+    bins = {c: [] for c in ("obj1_masses", "obj2_masses", "obj1_total_mass",
+                            "obj2_total_mass", "obj1_dist_dc_pc", "obj2_dist_dc_pc",
+                            "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
+                            "is_within_r_tidal", "is_within_2x_r_tidal")}
+    for o1, o2 in zip(obj1, obj2):
+        for side, ids in (("obj1", o1), ("obj2", o2)):
+            masses = [mass_of[i] for i in ids if i in mass_of]
+            bins[f"{side}_masses"].append(masses)
+            bins[f"{side}_total_mass"].append(_seq_sum(masses))
+            bins[f"{side}_dist_dc_pc"].append(_mean(dist_vals(ids, dist)))
+        both = o1 + o2
+        rt = dist_vals(both, ratio)
+        bins["dist_dc_pc"].append(_mean(dist_vals(both, dist)))
+        bins["dist_dc_r_tidal"].append(_mean(rt))
+        bins["dist_dc_r_half_mass"].append(_mean(dist_vals(both, ratio_hm)))
+        # J6: true iff ALL known components satisfy it (assembler.py:401-419)
+        bins["is_within_r_tidal"].append(all(v <= 1 for v in rt))
+        bins["is_within_2x_r_tidal"].append(all(v <= 2 for v in rt))
+    is_multi = is_multi_system_binary(obj1, obj2, xp=NUMPY)
+    is_wide = is_wide_binary(semi, xp=NUMPY)
+    # the reference rounds r_half_mass to 4 decimals BEFORE the Heggie
+    # threshold (assembler.py star stats dict)
+    is_hard = is_hard_binary(semi, round_half_up(r_hm, 4), n_within2, xp=NUMPY)
+    # J8: top-level = sorted(all components) is no system's obj1/obj2
+    # ids (assembler.py:438-451)
+    members = set(obj1) | set(obj2)
+    top = [tuple(sorted(a + b)) not in members for a, b in zip(obj1, obj2)]
+    nb = len(keep)
+    bin_rows = arrow_rows(schema, nb, {
+        **bins,
+        "obj1_name": [braw["name1"][b] for b in keep],
+        "obj2_name": [braw["name2"][b] for b in keep],
+        "obj1_ids": obj1, "obj2_ids": obj2,
+        "ecc": bval["ecc"], "semi": semi, "log_period_days": bval["p"],
+        "is_multi_system": is_multi, "is_top_level": top,
+        "is_wide_binary_system": is_wide, "is_hard_binary_system": is_hard,
+    }, {**const, "_tag": _BIN})
+
+    # A1/J7: each star's systems, in binary order with repeats; the pair
+    # labels and their (length, label) sort are Spark expressions
+    # (assembler.py:583-617)
+    systems: dict[int, list[int]] = {}
+    for b, (o1, o2) in enumerate(zip(obj1, obj2)):
+        for i in o1 + o2:
+            systems.setdefault(i, []).append(b)
+    in_sys = [systems.get(int(n)) for n in names]
+    star_rows = arrow_rows(schema, len(names), {
+        "name": names, **pos, "mass": mass,
+        "log_T_eff_K": tempe, "log_L_L_sol": zlum, "log_R_R_sol": rad,
+        "dist_dc_pc": dist, "dist_dc_r_half_mass": ratio_hm, **flags,
+        "_h1": [None if s is None else [obj1[b] for b in s] for s in in_sys],
+        "_h2": [None if s is None else [obj2[b] for b in s] for s in in_sys],
+    }, {**const, "_tag": _STAR})
+
+    # A2 + binary counts + OUT34 header (assembler.py:226-246, 461-514)
+    def total(sel) -> float | None:
+        m = mass[sel]
+        m = m[~np.isnan(m)]
+        return float(m.sum()) if len(m) else None
+
+    counts = [sum(map(bool, v)) for v in (
+        is_multi, is_hard, is_wide,
+        bins["is_within_r_tidal"], bins["is_within_2x_r_tidal"])]
+    stats = {
+        "density_center": dc, "r_tidal": r_tidal, "r_half_mass": r_hm,
+        "n_stars_within_r_tidal": int((ratio <= 1).sum()),
+        "n_stars_within_2x_r_tidal": n_within2,
+        "total_mass": total(slice(None)),
+        "total_mass_within_r_tidal": total(ratio <= 1),
+        "total_mass_within_2x_r_tidal": total(ratio <= 2),
+    }
+    if nb:
+        stats.update(zip(
+            ("n_binary_system", "n_multi_system", "n_hard_binary_system",
+             "n_wide_binary_system", "n_binary_system_within_r_tidal",
+             "n_binary_system_within_2x_r_tidal"), [nb, *counts]))
+    h34 = part[_HDR34]
+    hdr_cols = ("nzero", "rbar", "vstar", "rtide", "plummer_mass",
+                "rd", "rcm", "rg", "vg")
+    hdr_rows = arrow_rows(schema, max(h34.num_rows, 1), {
+        c: h34.column(c) for c in hdr_cols if h34.num_rows
+    }, {**const, **stats, "_tag": _HDR})
+    return pa.concat_tables([star_rows, bin_rows, hdr_rows])
+
+
+def _snapshot_rows(runs: NBody6Runs) -> DataFrame:
+    """The tagged union of the six files' typed projections, cut at
+    each run's first dissolved snapshot (r_tidal <= 0; assembler.py:
+    522-527, 698-704)."""
+
+    dens = runs.headers("densCentre.txt")
+    rows = tagged_union(
+        (dens, _DENS, "r_tidal", "density_center"),
+        (runs.headers("OUT34"), _HDR34, "nzero", "rbar", "vstar",
+         "rtide", "plummer_mass", "rd", "rcm", "rg", "vg"),
+        (runs.data("OUT34"), _PV, "line_no", "name",
+         "x", "y", "z", "vx", "vy", "vz"),
+        (runs.data("OUT9"), _BIN9, "line_no", "cmName", "name1", "name2",
+         "ecc", "p", "mass1", "mass2"),
+        (runs.data("fort.19"), _BIN19, "line_no", "name1", "name2",
+         "ecc", "p", "mass1", "mass2"),
+        (runs.data("fort.82"), _ATTR82, "line_no", "name1", "name2",
+         *[f"{a}{i}" for a in ("mass", "zlum", "rad", "tempe") for i in (1, 2)]),
+        (runs.data("fort.83"), _ATTR83, "line_no", "name",
+         "mass", "zlum", "rad", "tempe"),
+    ).filter(F.col("time").isNotNull())
+    cuts: dict[str, float] = {}
+    for r in dens.filter(F.col("r_tidal") <= 0).select(*KEY).collect():
+        if r["time"] is not None:
+            cuts[r["run_id"]] = min(cuts.get(r["run_id"], r["time"]), r["time"])
+    if cuts:
+        cut = rows.sparkSession.createDataFrame(
+            list(cuts.items()), "run_id string, _cut double"
+        )
+        rows = (
+            rows.join(F.broadcast(cut), "run_id", "left")
+            .filter(F.col("_cut").isNull() | (F.col("time") < F.col("_cut")))
+            .drop("_cut")
+        )
+    return rows
 
 
 def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     """Assemble stars / binary_systems / snapshot_headers for every run
-    in ``runs``. The multi-run tables already carry run_id, and every
-    aggregation/join keys on (run_id, time), so N runs assemble as ONE
-    lazy DAG with O(1) driver actions (one validation ``first()`` and
-    the fan-out checkpoints run once for the whole batch).
+    in ``runs``: one grouped-map kernel per snapshot, one checkpoint for
+    the whole batch.
 
-    Validation side effects follow the reference: duplicate attr names
-    always raise (assembler.py:130-134); in strict mode, names missing
-    across file families raise (assembler.py:168-188, 559-581), while
-    lax mode drops binaries with a component missing from the star
-    catalog. The dissolution cut truncates the series at the FIRST
-    r_tidal<=0 timestamp (assembler.py:522-527, 698-704) — expressed as
-    a min-over-group comparison, not an ordered scan.
+    Validation follows the reference: duplicate attr names always raise
+    (assembler.py:130-134); in strict mode, names missing across file
+    families raise (assembler.py:168-188, 559-581), while lax mode
+    drops binaries with a component missing from the star catalog. The
+    dissolution cut truncates the series at the FIRST r_tidal<=0
+    timestamp (assembler.py:522-527, 698-704).
     """
-    dens = runs.headers("densCentre.txt").select(
-        *KEY, "r_tidal", "density_center"
+    out, bad = snapshot_checkpoint(
+        _snapshot_rows(runs),
+        lambda t, schema: _assemble_snapshot(t, schema, is_strict),
+        _OUT_DDL,
+        F.struct("_kind", *KEY, "name"),
     )
-    out34_h = runs.headers("OUT34")
-    out34_d = runs.data("OUT34")
-    out9_d = runs.data("OUT9")
-    f19_d = runs.data("fort.19")
-    f82_d = runs.data("fort.82")
-    f83_d = runs.data("fort.83")
-
-    # ---- dissolution cut (series truncated strictly BEFORE first dissolved ts)
-    cut = dens.groupBy("run_id").agg(
-        F.min(F.when(F.col("r_tidal") <= 0, F.col("time"))).alias("cut_time")
-    )
-    dens = (
-        dens.join(cut, "run_id", "left")
-        .filter(F.col("cut_time").isNull() | (F.col("time") < F.col("cut_time")))
-        .drop("cut_time")
-    )
-    live = dens.select(*KEY)
-
-    # ---- J3: cm -> component expansion (assembler.py:81-108)
-    cm_map = out9_d.select(
-        *KEY,
-        F.col("cmName").alias("cm_name"),
-        F.array("name1", "name2").alias("components"),
-    )
-    pos_vel = (
-        out34_d.join(live, KEY)
-        .join(cm_map.withColumnRenamed("cm_name", "name"), [*KEY, "name"], "left")
-        .select(
-            *KEY,
-            F.explode(F.coalesce("components", F.array("name"))).alias("name"),
-            "x", "y", "z", "vx", "vy", "vz",
-        )
-    )
-
-    # ---- U1/U2/P10: attribute union (assembler.py:110-136)
-    attr_cols = ["mass", "zlum", "rad", "tempe"]
-    f82_parts = []
-    for i in (1, 2):
-        f82_parts.append(
-            f82_d.select(
-                *KEY,
-                F.col(f"name{i}").alias("name"),
-                *[F.col(f"{a}{i}").alias(a) for a in attr_cols],
-            )
-        )
-    reg_attrs = (
-        f82_parts[0].unionByName(f82_parts[1]).dropDuplicates([*KEY, "name"])
-    )
-    # localCheckpoint (not persist): the star table, the per-time attr
-    # maps and the validation each join these tables, and each
-    # reference would otherwise embed a full copy of the upstream
-    # logical plan — plan canonicalization measurably blows up (OOM at
-    # ~40 joins). Truncating lineage here is the Spark-native version
-    # of the reference's joblib cache layers (SURVEY §1.4).
-    attrs = (
-        reg_attrs.unionByName(f83_d.select(*KEY, "name", *attr_cols))
-        .join(live, KEY)
-        .localCheckpoint()
-    )
-    pos_vel = pos_vel.localCheckpoint()
-
-    stars = pos_vel.join(attrs, [*KEY, "name"], "inner").withColumnsRenamed(
-        {
-            "tempe": "log_T_eff_K",
-            "zlum": "log_L_L_sol",
-            "rad": "log_R_R_sol",
-        }
-    )
-
-    # ---- F13/F14: distances & flags (assembler.py:191-219)
-    stars = stars.join(dens, KEY).withColumn(
-        "dist_dc_pc",
-        F.sqrt(
-            F.pow(F.col("x") - F.col("density_center")[0], 2)
-            + F.pow(F.col("y") - F.col("density_center")[1], 2)
-            + F.pow(F.col("z") - F.col("density_center")[2], 2)
-        ),
-    )
-    stars = stars.withColumns(
-        {
-            "dist_dc_r_tidal": F.col("dist_dc_pc") / F.col("r_tidal"),
-            "is_within_r_tidal": F.col("dist_dc_pc") <= F.col("r_tidal"),
-            "is_within_2x_r_tidal": F.col("dist_dc_pc") <= F.col("r_tidal") * 2,
-        }
-    )
-
-    # ---- A10/W2: half-mass radius on the ratio<=2 subset
-    # (calc/cluster.py:14-31 via assembler.py:206-219: searchsorted ==
-    # first distance where cumulative mass >= total/2)
-    sub = stars.filter(F.col("dist_dc_r_tidal") <= 2)
-    w_cum = (
-        W.partitionBy(*KEY)
-        .orderBy("dist_dc_pc", "name")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    w_all = W.partitionBy(*KEY)
-    cum = sub.select(
-        *KEY,
-        "dist_dc_pc",
-        F.sum("mass").over(w_cum).alias("cum_mass"),
-        F.sum("mass").over(w_all).alias("total_mass_sub"),
-    )
-    r_hm = (
-        cum.filter(F.col("cum_mass") >= F.col("total_mass_sub") / 2)
-        .groupBy(*KEY)
-        .agg(F.min("dist_dc_pc").alias("r_half_mass"))
-    )
-    stars = (
-        stars.join(r_hm, KEY)
-        .withColumn(
-            "dist_dc_r_half_mass", F.col("dist_dc_pc") / F.col("r_half_mass")
-        )
-        .localCheckpoint()
-    )
-
-    # ---- A2: per-snapshot star statistics (assembler.py:226-246)
-    ratio = F.col("dist_dc_r_tidal")
-    star_stats = stars.groupBy(*KEY).agg(
-        F.first("r_tidal").alias("_r_tidal"),
-        F.first("r_half_mass").alias("_r_half_mass"),
-        F.count(F.when(ratio <= 1, 1)).cast("int").alias("n_stars_within_r_tidal"),
-        F.count(F.when(ratio <= 2, 1)).cast("int").alias("n_stars_within_2x_r_tidal"),
-        F.round(F.sum("mass"), 4).alias("total_mass"),
-        F.round(F.sum(F.when(ratio <= 1, F.col("mass"))), 4).alias(
-            "total_mass_within_r_tidal"
-        ),
-        F.round(F.sum(F.when(ratio <= 2, F.col("mass"))), 4).alias(
-            "total_mass_within_2x_r_tidal"
-        ),
-    )
-
-    # ---- binaries (assembler.py:249-479)
-    bin_raw = out9_d.select(
-        *KEY, "ecc", "semi", "p", "mass1", "mass2", "name1", "name2"
-    ).unionByName(
-        f19_d.select(*KEY, "ecc", "semi", "p", "mass1", "mass2", "name1", "name2")
-    ).join(live, KEY)
-
-    def side(i: int) -> DataFrame:
-        return cm_map.select(
-            *KEY,
-            F.col("cm_name").alias(f"name{i}"),
-            F.col("components").alias(f"comp{i}"),
-        )
-
-    bins = (
-        bin_raw.join(side(1), [*KEY, "name1"], "left")
-        .join(side(2), [*KEY, "name2"], "left")
-        .withColumns(
-            {
-                "obj1_ids": F.coalesce(F.col("comp1"), F.array("name1")),
-                "obj2_ids": F.coalesce(F.col("comp2"), F.array("name2")),
-            }
-        )
-        .drop("comp1", "comp2")
-    )
-
-    # F5 Kepler semi-major axis (AU); F15 canonical pair label
-    bins = bins.withColumns(
-        {
-            "semi": calc_semi_major_axis_au(
-                F.col("mass1"), F.col("mass2"), F.col("p")
-            ),
-            "pair": hierarchy_pair_label(F.col("obj1_ids"), F.col("obj2_ids")),
-        }
-    ).withColumnsRenamed(
-        {"p": "log_period_days", "name1": "obj1_name", "name2": "obj2_name"}
-    )
-
-    # ---- validation: duplicate attr names, then (strict) bidirectional
-    # missing names and binary components missing from the star catalog
-    # (assembler.py:559-581), unioned in the reference's check order
-    # into ONE driver action: separate actions would each pay plan
-    # optimization and scheduling for one pass over checkpointed tables
-    all_ids = F.concat("obj1_ids", "obj2_ids")
-    missing = bins.select(
-        *KEY, "obj1_ids", "obj2_ids", F.explode(all_ids).alias("name")
-    ).join(stars.select(*KEY, "name"), [*KEY, "name"], "left_anti")
-    checks = [
-        attrs.groupBy(*KEY, "name")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter("n > 1")
-        .select(F.lit("dup").alias("_kind"), "time", "name")
-    ]
-    if is_strict:
-        checks += [
-            pos_vel.join(attrs, [*KEY, "name"], "left_anti").select(
-                F.lit("missing_attr").alias("_kind"), "time", "name"
-            ),
-            attrs.join(pos_vel, [*KEY, "name"], "left_anti").select(
-                F.lit("missing_pv").alias("_kind"), "time", "name"
-            ),
-            missing.select(F.lit("missing_comp").alias("_kind"), "time", "name"),
-        ]
-    viol = checks[0]
-    for c in checks[1:]:
-        viol = viol.unionByName(c)
-    bad = viol.first()
     if bad is not None:
         raise ValueError(_VIOLATIONS[bad["_kind"]].format(**bad.asDict()))
-    if not is_strict:
-        # lax: drop binaries with ANY missing component
-        bad_bins = missing.select(*KEY, "obj1_ids", "obj2_ids").distinct()
-        bins = bins.join(bad_bins, [*KEY, "obj1_ids", "obj2_ids"], "left_anti")
 
-    # ---- J4/J5/J6: per-time attr maps joined to binaries
-    mass_map = attrs.groupBy(*KEY).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("name", "mass"))
-        ).alias("mmap")
-    )
-    dist_map = stars.groupBy(*KEY).agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    "name",
-                    F.struct(
-                        "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass"
-                    ).alias("d"),
-                )
-            )
-        ).alias("dmap")
-    )
-    # No broadcast hint: the per-time maps scale with the star table
-    # itself (cluster size x timestamps); a shuffle join on KEY keeps
-    # memory bounded on a real cluster. Catalyst still broadcasts when
-    # the run is small enough.
-    bins = bins.join(mass_map, KEY).join(dist_map, KEY)
-
-    mmap, dmap = F.col("mmap"), F.col("dmap")
-
-    def known_ids(ids):
-        return F.filter(ids, lambda i: F.map_contains_key(mmap, i))
-
-    def dist_vals(ids, field):
-        present = F.filter(ids, lambda i: F.map_contains_key(dmap, i))
-        return F.transform(present, lambda i: dmap[i].getField(field))
-
-    bins = bins.withColumns(
-        {
-            "obj1_masses": F.transform(known_ids(F.col("obj1_ids")), lambda i: mmap[i]),
-            "obj2_masses": F.transform(known_ids(F.col("obj2_ids")), lambda i: mmap[i]),
-        }
-    ).withColumns(
-        {
-            "obj1_total_mass": F.aggregate(
-                F.col("obj1_masses"), F.lit(0.0), lambda a, x: a + x
-            ),
-            "obj2_total_mass": F.aggregate(
-                F.col("obj2_masses"), F.lit(0.0), lambda a, x: a + x
-            ),
-            "obj1_dist_dc_pc": _mean_over(dist_vals(F.col("obj1_ids"), "dist_dc_pc")),
-            "obj2_dist_dc_pc": _mean_over(dist_vals(F.col("obj2_ids"), "dist_dc_pc")),
-            "dist_dc_pc": _mean_over(dist_vals(all_ids, "dist_dc_pc")),
-            "dist_dc_r_tidal": _mean_over(dist_vals(all_ids, "dist_dc_r_tidal")),
-            "dist_dc_r_half_mass": _mean_over(
-                dist_vals(all_ids, "dist_dc_r_half_mass")
-            ),
-            # J6: flag true iff ALL (known) components satisfy it —
-            # vacuously true when none known (assembler.py:401-419)
-            "is_within_r_tidal": F.forall(
-                dist_vals(all_ids, "dist_dc_r_tidal"), lambda v: v <= 1
-            ),
-            "is_within_2x_r_tidal": F.forall(
-                dist_vals(all_ids, "dist_dc_r_tidal"), lambda v: v <= 2
-            ),
-            "is_multi_system": (F.size("obj1_ids") > 1) | (F.size("obj2_ids") > 1),
-        }
-    ).drop("mmap", "dmap")
-
-    # F7/F8 wide & hard classification using per-snapshot stats
-    bins = bins.join(
-        F.broadcast(star_stats.select(*KEY, "_r_half_mass", "n_stars_within_2x_r_tidal")),
-        KEY,
-    ).withColumns(
-        {
-            "is_wide_binary_system": F.col("semi") > 1000.0,
-            # reference rounds r_half_mass to 4 decimals BEFORE the
-            # Heggie threshold (assembler.py star stats dict), so
-            # borderline systems must see the rounded value
-            "is_hard_binary_system": F.col("semi")
-            < (F.round(F.col("_r_half_mass"), 4) * F.lit(206264.80624709636))
-            / F.col("n_stars_within_2x_r_tidal"),
-        }
-    ).drop("_r_half_mass", "n_stars_within_2x_r_tidal")
-    bins = bins.localCheckpoint()
-
-    # J8: top-level = sorted(all components) matches no other system's
-    # obj1_ids/obj2_ids (assembler.py:438-451)
-    members = (
-        bins.select(*KEY, F.col("obj1_ids").alias("bin_id"))
-        .unionByName(bins.select(*KEY, F.col("obj2_ids").alias("bin_id")))
-        .distinct()
-        .withColumn("_is_member", F.lit(True))
-    )
-    bins = (
-        bins.withColumn("bin_id", F.array_sort(all_ids))
-        .join(F.broadcast(members), [*KEY, "bin_id"], "left")
-        .withColumn("is_top_level", F.col("_is_member").isNull())
-        .drop("bin_id", "_is_member")
-        .localCheckpoint()
-    )
-
-    # binary stats for headers (assembler.py:461-476)
-    bin_stats = bins.groupBy(*KEY).agg(
-        F.count(F.lit(1)).cast("int").alias("n_binary_system"),
-        F.sum(F.col("is_multi_system").cast("int")).cast("int").alias("n_multi_system"),
-        F.sum(F.col("is_hard_binary_system").cast("int"))
-        .cast("int")
-        .alias("n_hard_binary_system"),
-        F.sum(F.col("is_wide_binary_system").cast("int"))
-        .cast("int")
-        .alias("n_wide_binary_system"),
-        F.sum(F.col("is_within_r_tidal").cast("int"))
-        .cast("int")
-        .alias("n_binary_system_within_r_tidal"),
-        F.sum(F.col("is_within_2x_r_tidal").cast("int"))
-        .cast("int")
-        .alias("n_binary_system_within_2x_r_tidal"),
-    )
-
-    # ---- A1/J7/F16/F17: hierarchy (assembler.py:583-617), built from
-    # the SURVIVING binary rows (post lax-mode drop)
-    hmap = (
-        bins.select(
-            *KEY,
-            "pair",
-            F.explode(F.concat("obj1_ids", "obj2_ids")).alias("name"),
-        )
-        .groupBy(*KEY, "name")
-        .agg(F.collect_list("pair").alias("pairs"))
-        .select(
-            *KEY,
-            "name",
-            # concat, NOT array_union: the reference builds
-            # list(pairs) + [name] keeping duplicate pair labels (a
-            # star in two identically-labeled systems has
-            # len(hierarchy) > 2 and is_multi_system=True)
-            sort_hierarchy(
-                F.concat(
-                    F.col("pairs"), F.array(F.col("name").cast("string"))
-                )
-            ).alias("hierarchy"),
-        )
-    )
-    stars = (
-        stars.join(hmap, [*KEY, "name"], "left")
-        .withColumns(
-            {
-                "is_binary": F.col("hierarchy").isNotNull(),
-                "hierarchy": F.coalesce(
-                    F.col("hierarchy"), F.array(F.col("name").cast("string"))
-                ),
-            }
-        )
-        .withColumn("is_multi_system", F.size("hierarchy") > 2)
-    )
-
-    # ---- final projections (assembler.py:26-69 key tuples)
-    stars_out = stars.select(
+    tag = F.col("_tag")
+    name = F.col("name").cast("string")
+    stars = out.filter(tag == _STAR).withColumn(
+        "hierarchy",
+        F.when(F.col("_h1").isNull(), F.array(name)).otherwise(
+            sort_hierarchy(F.concat(
+                F.zip_with("_h1", "_h2", hierarchy_pair_label), F.array(name)
+            ))
+        ),
+    ).select(
         *KEY,
         "name",
-        "is_binary",
-        "is_multi_system",
+        F.col("_h1").isNotNull().alias("is_binary"),
+        is_multi_system_star(F.col("hierarchy")).alias("is_multi_system"),
         "hierarchy",
         "x", "y", "z", "vx", "vy", "vz",
         "mass",
@@ -450,9 +455,9 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
         "is_within_r_tidal",
         "is_within_2x_r_tidal",
     )
-    bins_out = bins.select(
+    bins = out.filter(tag == _BIN).select(
         *KEY,
-        "pair",
+        hierarchy_pair_label(F.col("obj1_ids"), F.col("obj2_ids")).alias("pair"),
         "obj1_name", "obj2_name",
         "obj1_ids", "obj2_ids",
         "ecc", "semi", "log_period_days",
@@ -469,57 +474,36 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
         "is_within_r_tidal",
         "is_within_2x_r_tidal",
     )
-
-    # ---- snapshot headers (assembler.py:481-514)
-    headers = (
-        dens.join(star_stats, KEY)
-        .join(bin_stats, KEY, "left")
-        .join(
-            out34_h.select(
-                *KEY,
-                F.col("time_raw").alias("time_OUT34"),
-                "nzero", "rbar", "vstar", "rtide", "plummer_mass",
-                "rd", "rcm", "rg", "vg",
-            ),
-            KEY,
-            "left",
-        )
-        .select(
-            *KEY,
-            "density_center",
-            F.round("_r_tidal", 4).alias("r_tidal"),
-            F.round("_r_half_mass", 4).alias("r_half_mass"),
-            "n_stars_within_r_tidal",
-            "n_stars_within_2x_r_tidal",
-            "total_mass",
-            "total_mass_within_r_tidal",
-            "total_mass_within_2x_r_tidal",
-            # NULL (not 0) when a snapshot has no binary rows — the
-            # reference's header dict simply lacks these keys then
-            # (assembler.py:346-348), surfacing as NaN in stacked stats.
-            "n_binary_system",
-            "n_multi_system",
-            "n_hard_binary_system",
-            "n_wide_binary_system",
-            "n_binary_system_within_r_tidal",
-            "n_binary_system_within_2x_r_tidal",
-            F.round("rtide", 4).alias("r_tidal_OUT34"),
-            F.transform("rd", lambda v: F.round(v, 4)).alias("density_center_OUT34"),
-            F.transform("rcm", lambda v: F.round(v, 4)).alias("mass_center_OUT34"),
-            F.transform("rg", lambda v: F.round(v * F.col("rbar"), 4)).alias(
-                "galactic_pos_OUT34"
-            ),
-            F.transform("vg", lambda v: F.round(v * F.col("vstar"), 4)).alias(
-                "galactic_vel_OUT34"
-            ),
-            "nzero",
-            F.col("plummer_mass").alias("plummer_mass_OUT34"),
-        )
-        # computed once: the parquet layer, observe and the
-        # statistics' header join each read it
-        .localCheckpoint()
+    round4 = lambda v: F.round(v, 4)  # noqa: E731
+    headers = out.filter(tag == _HDR).select(
+        *KEY,
+        "density_center",
+        round4("r_tidal").alias("r_tidal"),
+        round4("r_half_mass").alias("r_half_mass"),
+        "n_stars_within_r_tidal",
+        "n_stars_within_2x_r_tidal",
+        round4("total_mass").alias("total_mass"),
+        round4("total_mass_within_r_tidal").alias("total_mass_within_r_tidal"),
+        round4("total_mass_within_2x_r_tidal").alias("total_mass_within_2x_r_tidal"),
+        # NULL (not 0) when a snapshot has no binary rows — the
+        # reference's header dict simply lacks these keys then
+        # (assembler.py:346-348), surfacing as NaN in stacked stats.
+        "n_binary_system",
+        "n_multi_system",
+        "n_hard_binary_system",
+        "n_wide_binary_system",
+        "n_binary_system_within_r_tidal",
+        "n_binary_system_within_2x_r_tidal",
+        round4("rtide").alias("r_tidal_OUT34"),
+        F.transform("rd", round4).alias("density_center_OUT34"),
+        F.transform("rcm", round4).alias("mass_center_OUT34"),
+        F.transform("rg", lambda v: round4(v * F.col("rbar"))).alias(
+            "galactic_pos_OUT34"
+        ),
+        F.transform("vg", lambda v: round4(v * F.col("vstar"))).alias(
+            "galactic_vel_OUT34"
+        ),
+        "nzero",
+        F.col("plummer_mass").alias("plummer_mass_OUT34"),
     )
-
-    return AssembledTables(
-        stars=stars_out, binary_systems=bins_out, snapshot_headers=headers
-    )
+    return AssembledTables(stars=stars, binary_systems=bins, snapshot_headers=headers)

@@ -1,40 +1,60 @@
-"""M5 — pseudo-observation (reference observer.py).
+"""M5 — pseudo-observation (reference observer.py), one snapshot at a
+time for all observers at once.
 
 For each observer coordinate: pre-filter to 2x tidal radius, trim
 hierarchies, transform to the sky offset frame, classify binary
 systems as resolved/unresolved by angular separation, and replace each
 top-level unresolved system by one photocentric merged source.
 
-The reference's ``for coord: for ts:`` double loop (observer.py:
-276-327) becomes a CROSS JOIN with the coordinates table — the
-observation grid is just one more key column ``(obs_x, obs_y, obs_z)``
-on the same long tables, and Spark parallelizes across the full
-(run, coord, time) grid.
+The reference loops ``for coord: for ts:`` (observer.py:276-327), and
+only the offset frame, the observed distance and the resolvability
+test depend on the observer. Here the assembled stars, binaries and
+headers of a snapshot go to one ``groupBy("run_id", "time")
+.applyInArrow`` call, ``_observe_snapshot``, which computes all
+observers of the snapshot in one vectorised pass (observers x stars
+arrays) with the physics helpers of ``functions/`` on ``xp=NUMPY``.
+Its tagged output rows are materialized by one ``localCheckpoint``;
+observed stars and observed binaries are narrow projections of it.
 
 The recursive merge (observer.py:88-171) flattens to TWO merge levels
 because ``_fetch_attrs`` only accepts component groups of size 1 or 2
 (observer.py:117-127): merge each side's pair (if size 2), then merge
-the two sides — all native column expressions over joined star
-attributes; no UDF.
+the two sides. A larger unresolved group comes back as a violation
+row, which an ``Observation`` on the checkpoint reads, and ``observe``
+raises it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.functions.astro import offset_frame_columns
 from nbody6_data_pipeline_spark.functions.binary import (
     calc_log_equivalent_radius,
+    calc_photocentric_scalar,
     calc_total_log_luminosity,
+    calc_total_mass,
+    is_unresolved_binary,
 )
-from nbody6_data_pipeline_spark.functions.constants import UNRESOLVED_SEP_FACTOR
+from nbody6_data_pipeline_spark.functions.geometry import (
+    dist_to_center,
+    within_radius_flags,
+)
+from nbody6_data_pipeline_spark.functions.hierarchy import is_multi_system_star
 from nbody6_data_pipeline_spark.functions.star import (
     calc_log_effective_temperature_K,
 )
-from nbody6_data_pipeline_spark.operators.assemble import AssembledTables
+from nbody6_data_pipeline_spark.functions.xp import NUMPY
+from nbody6_data_pipeline_spark.operators.assemble import (
+    AssembledTables,
+    arrow_rows,
+    snapshot_checkpoint,
+    tagged_union,
+)
 
 KEY = ["run_id", "time"]
 OKEY = [*KEY, "obs_x", "obs_y", "obs_z"]
@@ -52,7 +72,59 @@ _DIST_FIELDS = [
     "is_within_r_tidal",
     "is_within_2x_r_tidal",
 ]
-_STRUCT_FIELDS = _ATTR_FIELDS + _DIST_FIELDS
+_BIN_FIELDS = [
+    "pair",
+    "obj1_name", "obj2_name",
+    "obj1_ids", "obj2_ids",
+    "ecc", "semi", "log_period_days",
+    "obj1_masses", "obj2_masses",
+    "obj1_total_mass", "obj2_total_mass",
+    "obj1_dist_dc_pc", "obj2_dist_dc_pc",
+    "is_multi_system",
+    "is_top_level",
+    "is_wide_binary_system",
+    "is_hard_binary_system",
+    *_DIST_FIELDS,
+]
+_FRAME_FIELDS = [
+    "lon_deg", "lat_deg", "pm_lon_coslat_mas_yr", "pm_lat_mas_yr",
+    "dist_pc", "rv_kms",
+]
+_STAR_OUT = [
+    "name", *OKEY,
+    "is_binary", "is_multi_system", "is_unresolved_binary",
+    "is_within_r_tidal", "is_within_2x_r_tidal",
+    "hierarchy",
+    "x", "y", "z", "vx", "vy", "vz",
+    "mass", "log_T_eff_K", "log_L_L_sol", "log_R_R_sol",
+    "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
+    *_FRAME_FIELDS,
+]
+
+# input and output tags
+_STAR, _BIN, _HDR, _VIOL = range(4)
+
+_OUT_DDL = """
+    _tag tinyint, run_id string, time double,
+    obs_x double, obs_y double, obs_z double,
+    name string, is_binary boolean, is_multi_system boolean,
+    is_unresolved_binary boolean, is_within_r_tidal boolean,
+    is_within_2x_r_tidal boolean, hierarchy array<string>,
+    x double, y double, z double, vx double, vy double, vz double,
+    mass double, log_T_eff_K double, log_L_L_sol double, log_R_R_sol double,
+    dist_dc_pc double, dist_dc_r_tidal double, dist_dc_r_half_mass double,
+    lon_deg double, lat_deg double, pm_lon_coslat_mas_yr double,
+    pm_lat_mas_yr double, dist_pc double, rv_kms double,
+    pair string, obj1_name bigint, obj2_name bigint,
+    obj1_ids array<bigint>, obj2_ids array<bigint>,
+    ecc double, semi double, log_period_days double,
+    obj1_masses array<double>, obj2_masses array<double>,
+    obj1_total_mass double, obj2_total_mass double,
+    obj1_dist_dc_pc double, obj2_dist_dc_pc double,
+    is_top_level boolean, is_wide_binary_system boolean,
+    is_hard_binary_system boolean,
+    dist_obs_pc double, is_unresolved_binary_system boolean
+"""
 
 
 @dataclass
@@ -76,47 +148,197 @@ def default_observer_coordinates() -> list[tuple]:
     return [(float(x), 0.0, 0.0) for x in xs]
 
 
-def _attr_struct(prefix: str = "") -> Column:
-    return F.struct(*[F.col(f"{prefix}{f}").alias(f) for f in _STRUCT_FIELDS])
+def _merge_pair(s1: dict, s2: dict, hdr: dict) -> dict:
+    """Photocentric merge of two component attribute sets
+    (observer.py:41-86 _merge_unresolved_binaries), over arrays."""
+    l1 = NUMPY.pow(10.0, s1["log_L_L_sol"])
+    l2 = NUMPY.pow(10.0, s2["log_L_L_sol"])
+    m = {
+        f: calc_photocentric_scalar(l1, l2, s1[f], s2[f], eps=1e-8, xp=NUMPY)
+        for f in ("x", "y", "z", "vx", "vy", "vz")
+    }
+    m["mass"] = calc_total_mass(s1["mass"], s2["mass"])
+    m["log_L_L_sol"] = calc_total_log_luminosity(
+        s1["log_L_L_sol"], s2["log_L_L_sol"], xp=NUMPY
+    )
+    m["log_R_R_sol"] = calc_log_equivalent_radius(
+        s1["log_R_R_sol"], s2["log_R_R_sol"], xp=NUMPY
+    )
+    m["log_T_eff_K"] = calc_log_effective_temperature_K(
+        m["log_L_L_sol"], m["log_R_R_sol"], xp=NUMPY
+    )
+    dist = dist_to_center(m["x"], m["y"], m["z"], *hdr["density_center"], xp=NUMPY)
+    m.update(within_radius_flags(dist, hdr["r_tidal"]))
+    m["dist_dc_pc"] = dist
+    m["dist_dc_r_half_mass"] = dist / hdr["r_half_mass"]
+    return m
 
 
-def _merge_pair(s1: Column, s2: Column, hdr: dict[str, Column]) -> Column:
-    """Photocentric merge of two component structs
-    (observer.py:41-86 _merge_unresolved_binaries), as one struct."""
-    l1 = F.pow(F.lit(10.0), s1.getField("log_L_L_sol"))
-    l2 = F.pow(F.lit(10.0), s2.getField("log_L_L_sol"))
-    total = l1 + l2
+def _frame(coords: np.ndarray, s: dict) -> dict:
+    """Offset-frame columns of positions ``s`` seen from ``coords``
+    (rows aligned, or coords (O, 1) against stars (N,))."""
+    ox, oy, oz = coords
+    return offset_frame_columns(
+        ox + s["x"], oy + s["y"], oz + s["z"],
+        s["vx"], s["vy"], s["vz"],
+        ox, oy, oz,
+        xp=NUMPY,
+    )
 
-    def photo(f: str) -> Column:
-        a, b = s1.getField(f), s2.getField(f)
-        return F.when(F.abs(total) < 1e-8, (a + b) / 2.0).otherwise(
-            (l1 * a + l2 * b) / total
-        )
 
-    px, py, pz = photo("x"), photo("y"), photo("z")
-    dc = hdr["density_center"]
-    dist_dc = F.sqrt(
-        F.pow(px - dc[0], 2) + F.pow(py - dc[1], 2) + F.pow(pz - dc[2], 2)
-    )
-    log_l = calc_total_log_luminosity(
-        s1.getField("log_L_L_sol"), s2.getField("log_L_L_sol")
-    )
-    log_r = calc_log_equivalent_radius(
-        s1.getField("log_R_R_sol"), s2.getField("log_R_R_sol")
-    )
-    return F.struct(
-        px.alias("x"), py.alias("y"), pz.alias("z"),
-        photo("vx").alias("vx"), photo("vy").alias("vy"), photo("vz").alias("vz"),
-        (s1.getField("mass") + s2.getField("mass")).alias("mass"),
-        log_l.alias("log_L_L_sol"),
-        log_r.alias("log_R_R_sol"),
-        calc_log_effective_temperature_K(log_l, log_r).alias("log_T_eff_K"),
-        dist_dc.alias("dist_dc_pc"),
-        (dist_dc / hdr["r_tidal"]).alias("dist_dc_r_tidal"),
-        (dist_dc / hdr["r_half_mass"]).alias("dist_dc_r_half_mass"),
-        (dist_dc <= hdr["r_tidal"]).alias("is_within_r_tidal"),
-        (dist_dc <= hdr["r_tidal"] * 2).alias("is_within_2x_r_tidal"),
-    )
+def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Table:
+    """All observers of one snapshot: observed stars (singles, resolved
+    members, merged unresolved systems), observed binaries and
+    violations, as tagged rows of ``schema``."""
+    src = t.column("_src").to_numpy()
+    stars, bins, hdr = (t.filter(pa.array(src == tag)) for tag in (_STAR, _BIN, _HDR))
+    # one order at any partitioning: every sum below runs in it
+    stars = stars.sort_by("name")
+    bins = bins.sort_by([(c, "ascending") for c in ("pair", "obj1_name", "obj2_name")])
+    if stars.num_rows == 0:
+        return schema.empty_table()
+    const = {"run_id": t.column("run_id")[0].as_py(), "time": t.column("time")[0].as_py()}
+    n_obs, n_star, n_bin = len(coords), stars.num_rows, bins.num_rows
+
+    # F16 trim: keep hierarchy entries that are surviving pairs or
+    # atomic ids (observer.py:185-191)
+    pair = bins.column("pair").to_pylist()
+    pairs = set(pair)
+    hierarchy = [
+        h if len(h) < 2 else [p for p in h if "+" not in p or p in pairs]
+        for h in stars.column("hierarchy").to_pylist()
+    ]
+    is_binary = NUMPY.size(hierarchy) > 1
+    is_multi = is_multi_system_star(hierarchy, xp=NUMPY)
+    s = {f: stars.column(f).to_numpy(zero_copy_only=False).astype(float)
+         for f in _ATTR_FIELDS}
+    # U1: offset frame of every (observer, star) pair, (O, N) arrays
+    frame = _frame(coords.T[:, :, None], s)
+
+    # F21: resolvability from the mean observed distance of all
+    # components, summed left to right as the reference does
+    star_of = {n: j for j, n in enumerate(stars.column("name").to_pylist())}
+    obj1 = bins.column("obj1_ids").to_pylist()
+    obj2 = bins.column("obj2_ids").to_pylist()
+    ids = [a + b for a, b in zip(obj1, obj2)]
+    sizes = np.array([(len(a), len(b)) for a, b in zip(obj1, obj2)], np.int64)
+    sizes = sizes.reshape(n_bin, 2)
+    n_ids = sizes.sum(1)
+    slot = np.full((n_bin, max(n_ids, default=0)), -1)
+    for b, i in enumerate(ids):
+        slot[b, :len(i)] = [star_of.get(n, -1) for n in i]
+    found = slot >= 0
+    dist_sum = np.zeros((n_obs, n_bin))
+    for k in range(slot.shape[1]):
+        d = frame["dist_pc"][:, np.maximum(slot[:, k], 0)]
+        dist_sum = dist_sum + np.where(found[:, k], d, 0.0)
+    semi = bins.column("semi").to_numpy(zero_copy_only=False).astype(float)
+    # a component missing from the stars has no distance: NULL
+    has_all = ~((np.arange(slot.shape[1]) < n_ids[:, None]) & ~found).any(1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        dist_obs = np.where(has_all & (n_ids > 0), dist_sum / n_ids, np.nan)
+        known = ~np.isnan(dist_obs) & ~np.isnan(semi)
+        unres = is_unresolved_binary(semi, dist_obs, xp=NUMPY) & known
+
+    too_big = unres.any(0) & (sizes.max(1, initial=0) > 2)
+    if too_big.any():
+        bad = np.flatnonzero(too_big)
+        return arrow_rows(schema, len(bad), {
+            "obj1_ids": [obj1[b] for b in bad], "obj2_ids": [obj2[b] for b in bad],
+        }, {**const, "_tag": _VIOL})
+
+    def obs_cols(o: np.ndarray) -> dict:
+        return {"obs_x": coords[o, 0], "obs_y": coords[o, 1], "obs_z": coords[o, 2]}
+
+    bo, bb = np.divmod(np.arange(n_obs * n_bin), max(n_bin, 1))
+    tables = [arrow_rows(schema, len(bb), {
+        **{f: bins.column(f).take(bb) for f in _BIN_FIELDS},
+        **obs_cols(bo),
+        "dist_obs_pc": dist_obs[bo, bb],
+        "is_unresolved_binary_system": pa.array(unres[bo, bb], mask=~known[bo, bb]),
+    }, {**const, "_tag": _BIN})]
+
+    # singles and resolved members (observer.py:203-237)
+    member = np.zeros((n_bin, n_star), dtype=np.int64)
+    for b, row in enumerate(slot):
+        member[b, row[row >= 0]] = 1
+    resolved = ((known & ~unres).astype(np.int64) @ member) > 0
+    so, sj = np.nonzero(np.broadcast_to(~is_binary, (n_obs, n_star)))
+    ro, rj = np.nonzero(resolved)
+    o, j = np.concatenate([so, ro]), np.concatenate([sj, rj])
+    tables.append(arrow_rows(schema, len(j), {
+        "name": stars.column("name").cast(pa.string()).take(j),
+        "hierarchy": pa.array(hierarchy, pa.list_(pa.string())).take(j),
+        "is_binary": np.arange(len(j)) >= len(so),
+        "is_multi_system": is_multi[j],
+        "is_unresolved_binary": np.zeros(len(j), bool),
+        **{f: stars.column(f).take(j) for f in _ATTR_FIELDS + _DIST_FIELDS},
+        **{f: v[o, j] for f, v in frame.items()},
+        **obs_cols(o),
+    }, {**const, "_tag": _STAR}))
+
+    # U2: merge the top-level unresolved systems, those whose member
+    # set is no strict subset of another unresolved one's
+    # (observer.py:88-171)
+    flat = np.array([n for i in ids for n in i], dtype=np.int64)
+    uniq, inv = np.unique(flat, return_inverse=True)
+    inc = np.zeros((n_bin, len(uniq)), dtype=np.int64)
+    inc[np.repeat(np.arange(n_bin), n_ids), inv] = 1
+    subset = (inc @ (1 - inc).T) == 0  # [a, b]: members(a) <= members(b)
+    n_members = inc.sum(1)
+    strict = subset & (n_members[:, None] < n_members[None, :])
+    top = unres & ((unres.astype(np.int64) @ strict.T.astype(np.int64)) == 0)
+    if hdr.num_rows == 0 or not top.any():
+        return pa.concat_tables(tables)
+
+    h = {c: hdr.column(c)[0].as_py() for c in ("density_center", "r_tidal", "r_half_mass")}
+    h["density_center"] = np.array(h["density_center"] or [None] * 3, dtype=float)
+    h = {k: np.nan if v is None else v for k, v in h.items()}
+    cand = np.flatnonzero(top.any(0))
+    n1, n2 = sizes[cand, 0], sizes[cand, 1]
+
+    def component(pos) -> tuple[dict, np.ndarray]:
+        """Attributes of the star at position ``pos`` of each candidate's
+        ids (obj1 ids first, then obj2's), and whether it was found."""
+        j = slot[cand, np.minimum(pos, slot.shape[1] - 1)]
+        return {f: v[np.maximum(j, 0)] for f, v in s.items()}, j >= 0
+
+    (c1a, ok1a), (c1b, ok1b) = component(0), component(1)
+    (c2a, ok2a), (c2b, ok2b) = component(n1), component(n1 + 1)
+    with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+        m1, m2 = _merge_pair(c1a, c1b, h), _merge_pair(c2a, c2b, h)
+        side1 = {f: np.where(n1 == 2, m1[f], c1a[f]) for f in _ATTR_FIELDS}
+        side2 = {f: np.where(n2 == 2, m2[f], c2a[f]) for f in _ATTR_FIELDS}
+        merged = _merge_pair(side1, side2, h)
+    # a component missing from the stars leaves the merged source NULL
+    ok = ok1a & (ok1b | (n1 < 2)) & ok2a & (ok2b | (n2 < 2))
+
+    to, tb = np.nonzero(top)
+    tc = np.searchsorted(cand, tb)
+    # hierarchy: member ids plus the pairs of the unresolved systems
+    # contained in this one, by (length, label) (observer.py:133-151)
+    labels: dict[tuple, list] = {}
+    hier = []
+    for oi, b in zip(to, tb):
+        subs = np.flatnonzero(unres[oi] & subset[:, b])
+        key = (b, *subs)
+        if key not in labels:
+            lab = {str(n) for n in ids[b]} | {pair[c] for c in subs if pair[c] is not None}
+            labels[key] = sorted(lab, key=lambda p: (len(p), p))
+        hier.append(labels[key])
+    mask = ~ok[tc]
+    pos = {f: merged[f][tc] for f in ("x", "y", "z", "vx", "vy", "vz")}
+    tables.append(arrow_rows(schema, len(tb), {
+        "name": [pair[b] for b in tb],
+        "hierarchy": hier,
+        "is_binary": np.ones(len(tb), bool),
+        "is_multi_system": n_members[tb] > 2,
+        "is_unresolved_binary": np.ones(len(tb), bool),
+        **{f: pa.array(merged[f][tc], mask=mask) for f in _ATTR_FIELDS + _DIST_FIELDS},
+        **{f: pa.array(v, mask=mask) for f, v in _frame(coords[to].T, pos).items()},
+        **obs_cols(to),
+    }, {**const, "_tag": _STAR}))
+    return pa.concat_tables(tables)
 
 
 def observe(
@@ -124,254 +346,31 @@ def observe(
     assembled: AssembledTables,
     coordinates: list[tuple] | None = None,
 ) -> ObservedTables:
-    coords = coord_df(spark, coordinates or default_observer_coordinates())
-
-    # ---- P4 pre-filter, fanned out over the observer grid
-    stars0 = (
-        assembled.stars.filter("is_within_2x_r_tidal")
-        .crossJoin(F.broadcast(coords))
+    """Observe every assembled snapshot from every coordinate: one
+    grouped-map kernel per snapshot, one checkpoint for the batch."""
+    coords = np.array(coordinates or default_observer_coordinates(), dtype=float)
+    # P4 pre-filter: stars and systems within 2x r_tidal
+    rows = tagged_union(
+        (assembled.stars.filter("is_within_2x_r_tidal"), _STAR,
+         "name", "hierarchy", *_ATTR_FIELDS, *_DIST_FIELDS),
+        (assembled.binary_systems.filter("is_within_2x_r_tidal"), _BIN, *_BIN_FIELDS),
+        (assembled.snapshot_headers, _HDR, "density_center", "r_tidal", "r_half_mass"),
     )
-    bins0 = (
-        assembled.binary_systems.filter("is_within_2x_r_tidal")
-        .crossJoin(F.broadcast(coords))
+    out, bad = snapshot_checkpoint(
+        rows,
+        lambda t, schema: _observe_snapshot(t, schema, coords.reshape(-1, 3)),
+        _OUT_DDL,
+        F.struct("obj1_ids", "obj2_ids"),
     )
-
-    # ---- F16 trim: keep hierarchy entries that are surviving pairs or
-    # atomic ids (observer.py:185-191)
-    pair_sets = (
-        assembled.binary_systems.filter("is_within_2x_r_tidal")
-        .groupBy(*KEY)
-        .agg(F.collect_set("pair").alias("_pairs"))
-    )
-    stars0 = (
-        stars0.join(pair_sets, KEY, "left")
-        .withColumn(
-            "hierarchy",
-            F.filter(
-                F.col("hierarchy"),
-                lambda p: (~p.contains("+"))
-                | F.array_contains(F.coalesce("_pairs", F.array()), p),
-            ),
-        )
-        .drop("_pairs")
-        .withColumns(
-            {
-                "is_binary": F.size("hierarchy") > 1,
-                "is_multi_system": F.size("hierarchy") > 2,
-            }
-        )
-    )
-
-    # ---- U1: offset-frame transform of all (filtered) stars
-    obs_cols = offset_frame_columns(
-        F.col("obs_x") + F.col("x"),
-        F.col("obs_y") + F.col("y"),
-        F.col("obs_z") + F.col("z"),
-        F.col("vx"), F.col("vy"), F.col("vz"),
-        F.col("obs_x"), F.col("obs_y"), F.col("obs_z"),
-    )
-    stars_obs = stars0.withColumns(obs_cols).localCheckpoint()
-
-    # ---- F21: resolvability from mean component observed distance
-    dist_map = stars_obs.groupBy(*OKEY).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("name", "dist_pc"))
-        ).alias("_dm")
-    )
-    all_ids = F.concat("obj1_ids", "obj2_ids")
-    bins_obs = (
-        bins0.join(dist_map, OKEY)
-        .withColumn(
-            "dist_obs_pc",
-            F.aggregate(
-                F.transform(all_ids, lambda i: F.col("_dm")[i]),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-            / F.size(all_ids),
-        )
-        .withColumn(
-            "is_unresolved_binary_system",
-            F.col("semi") <= F.col("dist_obs_pc") * F.lit(UNRESOLVED_SEP_FACTOR),
-        )
-        .drop("_dm")
-        .localCheckpoint()
-    )
-
-    # ---- singles and resolved members (observer.py:203-237)
-    resolved_names = (
-        bins_obs.filter(~F.col("is_unresolved_binary_system"))
-        .select(*OKEY, F.explode(all_ids).alias("name"))
-        .distinct()
-    )
-    singles = stars_obs.filter(~F.col("is_binary")).withColumn(
-        "is_unresolved_binary", F.lit(False)
-    )
-    resolved = (
-        stars_obs.join(resolved_names, [*OKEY, "name"], "left_semi")
-        .withColumns({"is_unresolved_binary": F.lit(False), "is_binary": F.lit(True)})
-    )
-
-    # ---- U2: merge top-level unresolved systems
-    unres = bins_obs.filter("is_unresolved_binary_system")
-    bad = unres.filter(
-        (F.size("obj1_ids") > 2) | (F.size("obj2_ids") > 2)
-    ).first()
     if bad is not None:
         raise ValueError(
             f"Unsupported unresolved component size: {bad['obj1_ids']}/{bad['obj2_ids']}"
         )
-
-    members = F.array_sort(F.array_distinct(all_ids))
-    unres_m = unres.withColumn("members", members)
-    # strict-subset check (observer.py:98-109): drop systems whose
-    # member set is contained in a LARGER system's member set
-    top = unres_m.alias("a").join(
-        unres_m.alias("b"),
-        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in OKEY]
-        + [
-            F.size(F.array_except("a.members", "b.members")) == 0,
-            F.size("a.members") < F.size("b.members"),
-        ],
-        "left_anti",
+    tag = F.col("_tag")
+    return ObservedTables(
+        stars=out.filter(tag == _STAR).select(*_STAR_OUT),
+        binary_systems=out.filter(tag == _BIN).select(
+            *KEY, *_BIN_FIELDS, "obs_x", "obs_y", "obs_z",
+            "dist_obs_pc", "is_unresolved_binary_system",
+        ),
     )
-
-    # attach component star attr structs (4 slots: each side 1-2 ids)
-    attrs = stars_obs.select(
-        *OKEY, F.col("name").alias("_n"), _attr_struct().alias("_s")
-    )
-
-    def join_slot(df: DataFrame, ids_col: str, pos: int, alias: str) -> DataFrame:
-        a = attrs.select(
-            *[F.col(k).alias(f"__{alias}_{k}") for k in OKEY],
-            F.col("_n").alias(f"__{alias}_n"),
-            F.col("_s").alias(alias),
-        )
-        # F.get is 0-based and null-safe for out-of-range (a side may
-        # have 1 or 2 components; ANSI element_at would throw)
-        cond = [df[k] == a[f"__{alias}_{k}"] for k in OKEY] + [
-            F.get(df[ids_col], pos - 1) == a[f"__{alias}_n"]
-        ]
-        return df.join(a, cond, "left").drop(
-            *[f"__{alias}_{k}" for k in OKEY], f"__{alias}_n"
-        )
-
-    top = join_slot(top, "obj1_ids", 1, "_s1a")
-    top = join_slot(top, "obj1_ids", 2, "_s1b")
-    top = join_slot(top, "obj2_ids", 1, "_s2a")
-    top = join_slot(top, "obj2_ids", 2, "_s2b")
-
-    hdr_df = assembled.snapshot_headers.select(
-        *KEY,
-        F.col("density_center").alias("_dc"),
-        F.col("r_tidal").alias("_rt"),
-        F.col("r_half_mass").alias("_rhm"),
-    )
-    top = top.join(hdr_df, KEY)
-    hdr = {
-        "density_center": F.col("_dc"),
-        "r_tidal": F.col("_rt"),
-        "r_half_mass": F.col("_rhm"),
-    }
-
-    # Each merge level is materialized as its OWN column before the
-    # next level references it: inlining `side1`/`side2` directly into
-    # _merge_pair would embed their whole expression trees at every one
-    # of the ~20 field references, giving an exponentially duplicated
-    # analyzed plan (measured: 40+ s of driver-side Catalyst time for a
-    # 10-run batch). As separate non-cheap multi-referenced aliases,
-    # CollapseProject keeps the projects layered and every level only
-    # references attributes.
-    top = top.withColumns(
-        {
-            "_side1": F.when(
-                F.size("obj1_ids") == 2,
-                _merge_pair(F.col("_s1a"), F.col("_s1b"), hdr),
-            ).otherwise(F.col("_s1a")),
-            "_side2": F.when(
-                F.size("obj2_ids") == 2,
-                _merge_pair(F.col("_s2a"), F.col("_s2b"), hdr),
-            ).otherwise(F.col("_s2a")),
-        }
-    )
-    top = top.withColumn(
-        "_m", _merge_pair(F.col("_side1"), F.col("_side2"), hdr)
-    ).drop("_s1a", "_s1b", "_s2a", "_s2b", "_side1", "_side2")
-
-    # hierarchy: member id strings + pair labels of unresolved systems
-    # whose members are a subset of this one (observer.py:133-151)
-    sub_pairs = (
-        top.select(*OKEY, "pair", "members")
-        .join(
-            unres_m.select(
-                *OKEY,
-                F.col("pair").alias("_sub_pair"),
-                F.col("members").alias("_sub_members"),
-            ),
-            OKEY,
-        )
-        .filter(F.size(F.array_except("_sub_members", "members")) == 0)
-        .groupBy(*OKEY, "pair")
-        .agg(F.collect_set("_sub_pair").alias("_sub_pairs"))
-    )
-    top = top.join(sub_pairs, [*OKEY, "pair"], "left")
-    hierarchy = F.array_sort(
-        F.transform(
-            F.array_union(
-                F.transform("members", lambda i: i.cast("string")),
-                F.coalesce("_sub_pairs", F.array()),
-            ),
-            lambda p: F.struct(F.length(p).alias("l"), p.alias("p")),
-        )
-    )
-    merged = top.select(
-        *OKEY,
-        F.col("pair").alias("name_str"),
-        F.transform(hierarchy, lambda s: s.getField("p")).alias("hierarchy"),
-        (F.size("members") > 2).alias("is_multi_system"),
-        F.col("_m").alias("_m"),
-    )
-    # unpack the merged struct and observe it
-    merged = merged.select(
-        *OKEY,
-        "name_str",
-        "hierarchy",
-        "is_multi_system",
-        *[F.col("_m").getField(f).alias(f) for f in _STRUCT_FIELDS],
-    )
-    merged = merged.withColumns(
-        offset_frame_columns(
-            F.col("obs_x") + F.col("x"),
-            F.col("obs_y") + F.col("y"),
-            F.col("obs_z") + F.col("z"),
-            F.col("vx"), F.col("vy"), F.col("vz"),
-            F.col("obs_x"), F.col("obs_y"), F.col("obs_z"),
-        )
-    ).withColumns(
-        {"is_binary": F.lit(True), "is_unresolved_binary": F.lit(True)}
-    )
-
-    # ---- U1 union: singles + resolved + merged (observer.py:255-257)
-    out_common = [
-        *OKEY,
-        "is_binary", "is_multi_system", "is_unresolved_binary",
-        "is_within_r_tidal", "is_within_2x_r_tidal",
-        "hierarchy",
-        "x", "y", "z", "vx", "vy", "vz",
-        "mass", "log_T_eff_K", "log_L_L_sol", "log_R_R_sol",
-        "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
-        "lon_deg", "lat_deg", "pm_lon_coslat_mas_yr", "pm_lat_mas_yr",
-        "dist_pc", "rv_kms",
-    ]
-    stars_out = (
-        singles.select(F.col("name").cast("string").alias("name"), *out_common)
-        .unionByName(
-            resolved.select(
-                F.col("name").cast("string").alias("name"), *out_common
-            )
-        )
-        .unionByName(
-            merged.select(F.col("name_str").alias("name"), *out_common)
-        )
-    )
-    return ObservedTables(stars=stars_out, binary_systems=bins_obs)

@@ -2,12 +2,15 @@
 collect_simulation_stats.process_all, SURVEY §3.1).
 
 ``process_all`` discovers the runs, skips those already complete, and
-sends every pending run through ONE lazy DAG per layer: parse -> align
--> assemble -> observe (18 coordinates) -> overall + annular
-statistics -> parquet layers + CSV export. Every layer is keyed on
-``run_id`` throughout, so the driver issues O(1) actions per layer
-whatever the run count. Each parquet layer is a run_id-partitioned
-dataset written with dynamic partition overwrite; the CSV export is
+sends every pending run through each layer as one batch: parse ->
+align -> assemble -> observe (18 coordinates) -> overall + annular
+statistics -> parquet layers + CSV export. Parse and align are
+set-based Spark plans; assemble and observe are per-snapshot
+grouped-map kernels keyed on ``(run_id, time)``, each materialized by
+one checkpoint; the statistics are aggregations over the observed
+tables. Each layer runs O(1) Spark actions whatever the run count.
+Each parquet layer is a run_id-partitioned dataset written with
+dynamic partition overwrite; the CSV export is
 ``csv/<layer>/run_id=<id>/``. Completed runs are found by listing the
 ``overall_stats`` partitions (the reference's joblib/CSV
 skip-if-exists resume, collect_simulation_stats.py:59-117).
@@ -37,7 +40,6 @@ from nbody6_data_pipeline_spark.operators.statistics import (
     overall_statistics,
 )
 from nbody6_data_pipeline_spark.plans.checkpoints import completed_runs
-from nbody6_data_pipeline_spark.session import scoped_conf
 from nbody6_data_pipeline_spark.sources.discovery import RunInfo, fetch_sim_runs
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from nbody6_data_pipeline_spark.sources.sinks import write_csv, write_parquet
@@ -55,16 +57,6 @@ LAYERS = (
 OKEY = ["run_id", "obs_x", "obs_y", "obs_z", "time"]
 
 
-# Constraint propagation OFF for one pipeline invocation: the
-# assemble/observe dataflow chains ~20 multi-condition joins;
-# InferFiltersFromConstraints is exponential in that shape and
-# dominated driver time (measured ~28 s of a 31 s optimize on a 10-run
-# batch) while inferring nothing useful for these hand-keyed inner
-# joins. Spark documents this conf as the escape hatch (SPARK-33152
-# lineage).
-_PIPELINE_CONFS = {"spark.sql.constraintPropagation.enabled": "false"}
-
-
 def process_all(
     spark: SparkSession,
     sim_root_base: str,
@@ -78,12 +70,13 @@ def process_all(
     (pre-observation) star tables (reference observer.py:268-273).
 
     load_runs reads and splits every run's files once, in one scan, into
-    one checkpointed block table (one structural-validation job total),
-    align_runs makes every run's alignment decision from ONE collect
-    and checkpoints the aligned table, assemble/observe/statistics key
-    on (run_id, time) throughout, the snapshot headers and each
-    statistics table are computed once, and each layer is ONE
-    partitioned write covering all new runs."""
+    one checkpointed block table (its structural check rides on that
+    scan), align_runs makes every run's alignment decision from ONE
+    collect and checkpoints the aligned table, assemble and observe
+    each run one grouped-map kernel per snapshot into one checkpoint
+    (every table they return is a projection of it), each statistics
+    table is computed once, and each layer is ONE partitioned write
+    covering all new runs."""
     coordinates = coordinates or default_observer_coordinates()
     paths = {name: os.path.join(output_base, name) for name in LAYERS}
 
@@ -93,11 +86,9 @@ def process_all(
     if not pending:
         return runs
 
-    with scoped_conf(spark, _PIPELINE_CONFS):
-        _process_pending(
-            spark, output_base, paths, coordinates, is_strict, is_slim,
-            pending,
-        )
+    _process_pending(
+        spark, output_base, paths, coordinates, is_strict, is_slim, pending
+    )
     return runs
 
 
@@ -131,8 +122,7 @@ def _process_pending(
 
     sc.setJobDescription("layer:observe")
     obs = observe(spark, asm, coordinates)
-    obs_stars = obs.stars.localCheckpoint()
-    obs_bins = obs.binary_systems  # observe already checkpointed it
+    obs_stars, obs_bins = obs.stars, obs.binary_systems
     write_parquet(obs_stars, paths["observed_stars"], ["run_id"])
     write_parquet(obs_bins, paths["observed_binary_systems"], ["run_id"])
 

@@ -865,18 +865,20 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The two heartbeat slices are byte-identical schema-only
         # files: write the empty parquet ONCE and copy it twice (the
         # old shape paid a separate 0-row write job per heartbeat).
+        frames = {"data": ev, "empty": ev.limit(0)}
         written: dict[str, str] = {}
         tmps: list[str] = []
         slices = [
-            ("000.parquet", "data", ev, 1_000_000_000),
-            ("001.parquet", "empty", ev.limit(0), 1_000_000_060),
-            ("002.parquet", "empty", None, 1_000_000_120),
+            ("000.parquet", "data", 1_000_000_000),
+            ("001.parquet", "empty", 1_000_000_060),
+            ("002.parquet", "empty", 1_000_000_120),
         ]
-        for name, kind, df, mtime in slices:
+        for name, kind, mtime in slices:
+            assert kind in frames, f"slice {name}: no frame of kind {kind!r}"
             if kind not in written:
                 tmp = tempfile.mkdtemp(prefix="oj_slice_")
                 tmps.append(tmp)
-                df.coalesce(1).write.mode("overwrite").parquet(tmp)
+                frames[kind].coalesce(1).write.mode("overwrite").parquet(tmp)
                 part = next(
                     f for f in os.listdir(tmp) if f.endswith(".parquet")
                 )

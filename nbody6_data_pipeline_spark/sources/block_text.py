@@ -26,11 +26,12 @@ import math
 import os
 import re
 from dataclasses import dataclass
-from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nbody6_data_pipeline_spark.functions.misc import round_half_up
 
 Index = int | list[int]
 
@@ -71,26 +72,46 @@ BLOCKS_SCHEMA = T.StructType(
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def _round2_half_up(x: float) -> float:
-    """Java BigDecimal.valueOf(x).setScale(2, HALF_UP) — what Spark's
-    round(col, 2) does. Double.toString and Python repr both emit the
-    shortest decimal that round-trips, so going through repr() gives
-    the identical decimal digits to round. ``+ 0.0`` drops the sign of
-    a zero result, which a BigDecimal does not keep."""
-    return (
-        float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-        + 0.0
-    )
+# What Spark's string -> double cast accepts: Java's Double.valueOf
+# grammar (ASCII digits, optional exponent, a trailing f/F/d/D type
+# suffix, hex floats, NaN/Infinity) after trimming characters <= ' ',
+# plus Spark's case-insensitive inf/infinity/nan literals.
+_JAVA_DEC = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[fFdD]?)",
+    re.ASCII,
+)
+_JAVA_HEX = re.compile(
+    r"([+-]?)0[xX]((?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?\d+)"
+    r"[fFdD]?",
+    re.ASCII,
+)
+_SPARK_SPECIAL = {
+    "inf": math.inf, "+inf": math.inf, "infinity": math.inf,
+    "+infinity": math.inf, "-inf": -math.inf, "-infinity": -math.inf,
+    "nan": math.nan,
+}
+
+
+def spark_double(tok: str) -> float | None:
+    """``tok`` cast to double as Spark casts a string, or None where
+    the cast fails (``try_cast`` null, ANSI ``cast`` error)."""
+    s = tok.strip("".join(map(chr, range(33))))
+    if _JAVA_DEC.fullmatch(s):
+        return float(s.rstrip("fFdD").replace("Infinity", "inf"))
+    m = _JAVA_HEX.fullmatch(s)
+    if m:
+        return float.fromhex(m[1] + "0x" + m[2])
+    return _SPARK_SPECIAL.get(s.lower())
 
 
 def _time_key(toks: list[str], idx: int) -> float | None:
-    """The block's 2-decimal time key, or None for a missing or
-    unparsable token (strict mode raises on it through ``time_raw``)."""
-    try:
-        t = float(toks[idx])
-    except (IndexError, ValueError):
+    """The block's 2-decimal time key, or None for a missing token or
+    one Spark's cast rejects (strict mode raises on it through
+    ``time_raw``)."""
+    t = spark_double(toks[idx]) if idx < len(toks) else None
+    if t is None:
         return None
-    return _round2_half_up(t) if math.isfinite(t) else t
+    return round_half_up(t, 2) if math.isfinite(t) else t
 
 
 def split_blocks(content: str, cfg: BlockSourceConfig):
@@ -172,9 +193,10 @@ def read_blocks(
     Each file is read and split once, by one task. ``time_raw``, the
     header's unrounded time, is a Spark cast evaluated by the
     checkpoint, so a bad time token raises there in strict mode (and
-    is null in lax mode). The structural check is one narrow
-    ``first()`` over the checkpointed violation rows; it raises the
-    reference's message.
+    is null in lax mode). The structural check is an ``Observation``
+    on the checkpoint's own scan, so it costs no job of its own; it
+    raises the reference's message for the first violation (by file,
+    run and line).
     """
     by_path = {os.path.abspath(p): (rid, f) for rid, f, p in files}
 
@@ -196,22 +218,24 @@ def read_blocks(
         cond = (F.col("kind") == "h") & (F.col("file") == fname)
         val = _token_col(F.col("toks"), *cfg.header_schema["time"], is_strict)
         time_raw = F.when(cond, val) if time_raw is None else time_raw.when(cond, val)
-    blocks = (
-        spark.createDataFrame(rdd, BLOCKS_SCHEMA)
-        .withColumn("time_raw", time_raw)
-        .localCheckpoint()
-    )
-    bad = (
-        blocks.filter(F.col("kind") == "v")
-        .select(
+    violations = Observation("block_violations")
+    first_violation = F.when(
+        F.col("kind") == "v",
+        F.struct(
             "file",
             "run_id",
             F.col("line_no").alias("bad_line"),
             F.get("toks", 0).alias("bad_txt"),
             F.col("line_no").isNull().alias("incomplete_header"),
-        )
-        .first()
+        ),
     )
+    blocks = (
+        spark.createDataFrame(rdd, BLOCKS_SCHEMA)
+        .withColumn("time_raw", time_raw)
+        .observe(violations, F.min(first_violation).alias("bad"))
+        .localCheckpoint()
+    )
+    bad = violations.get["bad"]
     if bad is not None:
         raise_block_violation(bad)
     return blocks

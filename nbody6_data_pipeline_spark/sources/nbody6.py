@@ -184,8 +184,8 @@ def load_runs(
     ONE wholeTextFiles scan reads every (run, format) file of the batch
     once, and the task that reads a file splits it into blocks
     (block_text.read_blocks). Structural validation across all runs x
-    formats is one narrow ``first()`` over the checkpoint, so the whole
-    batch costs O(1) driver actions, not 2 jobs per file per run.
+    formats is an ``Observation`` on the checkpoint's scan, so the whole
+    batch costs one job, not 2 jobs per file per run.
     """
     for rid, root in runs:
         for fname in FILE_CONFIGS:

@@ -8,10 +8,6 @@ at 100 TB (where the exact form needs a shuffle the sketch avoids).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 

@@ -174,3 +174,29 @@ def test_lax_mode_bad_time_token_null_time(parse):
     assert h["time"] is None and h["time_raw"] is None and h["n"] == 1
     (d,) = bt.data.collect()
     assert d["time"] is None and d["a"] == 10.0
+
+
+# Time tokens where Python's float() and Spark's cast disagree: the
+# block's time key must follow the cast that strict mode validates.
+# Spark rejects "1_0" (float() reads 10.0) and accepts "1.0d" as 1.0
+# (float() raises).
+@pytest.mark.parametrize("tok", ["1_0", "1.0d"])
+def test_strict_mode_time_token_follows_spark_cast(parse, tok):
+    if tok == "1_0":
+        with pytest.raises(Exception, match=f"'{tok}'"):
+            parse(f"# {tok} 1\n10.0 1\n", is_strict=True)
+        return
+    bt = parse(f"# {tok} 1\n10.0 1\n", is_strict=True)
+    (h,) = bt.headers.collect()
+    assert h["time"] == h["time_raw"] == 1.0
+    assert [d["time"] for d in bt.data.collect()] == [1.0]
+
+
+@pytest.mark.parametrize("tok, want", [("1_0", None), ("1.0d", 1.0)])
+def test_lax_mode_time_token_follows_spark_cast(parse, tok, want):
+    bt = parse(f"# {tok} 1\n10.0 1\n", is_strict=False)
+    (h,) = bt.headers.collect()
+    assert h["time"] == h["time_raw"] == want
+    (d,) = bt.data.collect()
+    assert d["time"] == want and d["a"] == 10.0
+

@@ -3,10 +3,6 @@ cross-engine parity already enforced by test_queries.py."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 

@@ -9,11 +9,8 @@ import os
 
 import pytest
 
-from nbody6_data_pipeline_spark.sources.block_text import (
-    _round2_half_up,
-    data_table,
-    read_blocks,
-)
+from nbody6_data_pipeline_spark.functions.misc import round_half_up
+from nbody6_data_pipeline_spark.sources.block_text import data_table, read_blocks
 from nbody6_data_pipeline_spark.sources.datasource import register_nbody6_source
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, load_runs
 from tests.nbody6_fixtures import write_run
@@ -105,9 +102,9 @@ def test_duplicate_timestamp_last_wins_and_rounding(spark, tmp_path):
     assert got == want
     # 1.0049 -> 1.0 ; 1.0051 and 1.005 -> 1.01 (HALF_UP), later wins
     assert got == [(1.0, 11), (1.01, 33)]
-    assert _round2_half_up(1.005) == 1.01
-    assert _round2_half_up(-1.005) == -1.01
-    assert _round2_half_up(1.0049) == 1.0
+    assert round_half_up(1.005, 2) == 1.01
+    assert round_half_up(-1.005, 2) == -1.01
+    assert round_half_up(1.0049, 2) == 1.0
 
 
 def test_lax_mode_matches_try_cast(spark, tmp_path):

@@ -3,10 +3,6 @@ clustered layouts than on an unclustered copy of the same data."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.plans.layout import (

@@ -3,12 +3,18 @@ resume skip -> output layers readable."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from nbody6_data_pipeline_spark.operators.align import align_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.operators.observe import observe
 from nbody6_data_pipeline_spark.pipeline import LAYERS, process_all
+from nbody6_data_pipeline_spark.session import scoped_conf
 from nbody6_data_pipeline_spark.sources.discovery import fetch_sim_runs
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS
 from nbody6_data_pipeline_spark.sources.sinks import write_parquet
@@ -179,7 +185,7 @@ def test_batched_load_align_constant_driver_actions(spark, sim_base):
     one = count_jobs("bla-1", runs[:1])
     two = count_jobs("bla-2", runs)
     # same plan shape -> same job count regardless of run count
-    # (tolerance 2 for AQE's incremental take-jobs in the first())
+    # (tolerance 2 for jobs AQE adds per action)
     assert two <= one + 2
 
 
@@ -280,3 +286,59 @@ def test_pipeline_logs_no_hazard_warnings(spark, sim_base, tmp_path):
     log = writer.toString()
     for warning in HAZARD_WARNINGS:
         assert warning not in log, f"pipeline logged {warning!r}"
+
+
+def _jobs(spark, tag, fn):
+    """``fn()`` and the number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, "job-count probe")
+    try:
+        result = fn()
+        return result, len(sc.statusTracker().getJobIdsForGroup(tag))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_assemble_and_observe_job_budget(spark, sim_base):
+    """Parse is one job, and assemble and observe each run one
+    grouped-map kernel per snapshot into one checkpoint: at most 8 jobs
+    each on the fixture grid, whatever the number of runs or joins."""
+    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
+
+    pairs = [(r.label, r.path) for r in fetch_sim_runs(sim_base)]
+    multi, n_parse = _jobs(spark, "budget-parse", lambda: load_runs(spark, pairs))
+    aligned = align_runs(multi)
+    asm, n_asm = _jobs(spark, "budget-assemble", lambda: assemble_runs(aligned))
+    _, n_obs = _jobs(spark, "budget-observe", lambda: observe(spark, asm))
+    assert n_parse <= 2, n_parse
+    assert n_asm <= 8, n_asm
+    assert n_obs <= 8, n_obs
+
+
+def _exact_hashes(out: str) -> dict:
+    """Order-insensitive hash of every value, floats unrounded, of the
+    five assemble/observe layers."""
+    digests = {}
+    for layer in LAYERS[:5]:
+        rows = pq.read_table(os.path.join(out, layer)).to_pylist()
+        lines = sorted(repr(sorted(r.items())) for r in rows)
+        digests[layer] = hashlib.md5("\n".join(lines).encode()).hexdigest()
+    return digests
+
+
+def test_assemble_observe_layers_exact_across_partitioning(spark, sim_base, tmp_path):
+    """The kernels sort each snapshot before every float reduction, so
+    the five assemble/observe layers hold the same exact values with 1
+    or 200 shuffle partitions, AQE on or off."""
+    digests = []
+    for parts in ("1", "200"):
+        for aqe in ("true", "false"):
+            out = str(tmp_path / f"out_{parts}_{aqe}")
+            confs = {"spark.sql.shuffle.partitions": parts,
+                     "spark.sql.adaptive.enabled": aqe}
+            with scoped_conf(spark, confs):
+                process_all(spark, sim_base, out,
+                            coordinates=[(50.0, 0.0, 0.0), (600.0, 0.0, 0.0)],
+                            is_slim=False)
+            digests.append(_exact_hashes(out))
+    assert all(d == digests[0] for d in digests), digests

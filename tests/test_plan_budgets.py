@@ -19,11 +19,8 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.query_metrics import measure_query
 

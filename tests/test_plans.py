@@ -8,11 +8,7 @@ it is introduced instead of waiting for a manual audit run."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.explain_audit import audit_plan
 

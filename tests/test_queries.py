@@ -6,11 +6,7 @@ oracle) match DuckDB exactly under the driver's comparison semantics
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.check_oracle import compare, duck_run
 

@@ -175,9 +175,6 @@ def test_no_single_partition_window_in_plan(spark):
     """The canonical plan gate: any single-partition shape in the
     exact-ntile plan must sit above an aggregation (≤ n_buckets rows),
     never over the raw table; the per-row window must be partitioned."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.explain_audit import audit_plan
 
     df = spark.range(1000).select(

@@ -22,10 +22,11 @@ crossover, and a scaling summary.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def clique_edges(spark, n_edges: int):

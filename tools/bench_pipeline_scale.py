@@ -37,7 +37,7 @@ import tempfile
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # the reference's 18 observation distances along the x-axis
 REF_DISTANCES = list(range(50, 600, 50)) + list(range(600, 1300, 100))

@@ -17,9 +17,10 @@ query trips a hard flag. Usage: python tools/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HARD_FLAGS = {
     "CartesianProduct": "all-pairs cartesian product",

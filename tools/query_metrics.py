@@ -26,10 +26,11 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _SIZE = re.compile(r"([\d.,]+)\s*(B|KiB|MiB|GiB|TiB)")
 _MULT = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}

@@ -19,11 +19,12 @@ regression would breach.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def ground_truth(X: np.ndarray, q_ids: np.ndarray, k: int, metric: str):
