@@ -12,9 +12,15 @@ test depend on the observer. Here the assembled stars, binaries and
 headers of a snapshot go to one ``groupBy("run_id", "time")
 .applyInArrow`` call, ``_observe_snapshot``, which computes all
 observers of the snapshot in one vectorised pass (observers x stars
-arrays) with the physics helpers of ``functions/`` on ``xp=NUMPY``.
-Its tagged output rows are materialized by one ``localCheckpoint``;
-observed stars and observed binaries are narrow projections of it.
+arrays) with the physics helpers of ``functions/`` on ``xp=NUMPY``,
+then each observer's overall and annular statistics of those rows
+(``operators/statistics.py``), as the reference computes them right
+after observing a snapshot. Its tagged output rows are materialized by
+one ``localCheckpoint``. Output tags: ``_STAR`` and ``_BIN`` (observed
+stars and binaries), ``_OVERALL`` (one row per observer that sees a
+star) and ``_ANNULAR`` (one row per annular bin), whose values are
+packed in ``_stats``, and ``_VIOL``. Every table ``observe`` returns is
+a narrow projection of the checkpoint.
 
 The recursive merge (observer.py:88-171) flattens to TWO merge levels
 because ``_fetch_attrs`` only accepts component groups of size 1 or 2
@@ -34,30 +40,21 @@ from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.functions.astro import offset_frame_columns
 from nbody6_data_pipeline_spark.functions.binary import (
-    calc_log_equivalent_radius,
-    calc_photocentric_scalar,
-    calc_total_log_luminosity,
-    calc_total_mass,
-    is_unresolved_binary,
+    calc_log_equivalent_radius, calc_photocentric_scalar, calc_total_log_luminosity,
+    calc_total_mass, is_unresolved_binary,
 )
-from nbody6_data_pipeline_spark.functions.geometry import (
-    dist_to_center,
-    within_radius_flags,
-)
+from nbody6_data_pipeline_spark.functions.geometry import dist_to_center, within_radius_flags
 from nbody6_data_pipeline_spark.functions.hierarchy import is_multi_system_star
-from nbody6_data_pipeline_spark.functions.star import (
-    calc_log_effective_temperature_K,
-)
+from nbody6_data_pipeline_spark.functions.star import calc_log_effective_temperature_K
 from nbody6_data_pipeline_spark.functions.xp import NUMPY
 from nbody6_data_pipeline_spark.operators.assemble import (
-    AssembledTables,
-    arrow_rows,
-    snapshot_checkpoint,
-    tagged_union,
+    AssembledTables, arrow_rows, snapshot_checkpoint, tagged_union,
 )
+from nbody6_data_pipeline_spark.operators.statistics import snapshot_statistics
 
 KEY = ["run_id", "time"]
-OKEY = [*KEY, "obs_x", "obs_y", "obs_z"]
+OBS = ["obs_x", "obs_y", "obs_z"]
+OKEY = [*KEY, *OBS]
 
 _ATTR_FIELDS = [
     "x", "y", "z", "vx", "vy", "vz",
@@ -66,24 +63,14 @@ _ATTR_FIELDS = [
 # merge output shape == full attr shape (reference _fetch_attrs of a
 # single id returns the whole star row, observer.py:117-119)
 _DIST_FIELDS = [
-    "dist_dc_pc",
-    "dist_dc_r_tidal",
-    "dist_dc_r_half_mass",
-    "is_within_r_tidal",
-    "is_within_2x_r_tidal",
+    "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
+    "is_within_r_tidal", "is_within_2x_r_tidal",
 ]
 _BIN_FIELDS = [
-    "pair",
-    "obj1_name", "obj2_name",
-    "obj1_ids", "obj2_ids",
-    "ecc", "semi", "log_period_days",
-    "obj1_masses", "obj2_masses",
-    "obj1_total_mass", "obj2_total_mass",
-    "obj1_dist_dc_pc", "obj2_dist_dc_pc",
-    "is_multi_system",
-    "is_top_level",
-    "is_wide_binary_system",
-    "is_hard_binary_system",
+    "pair", "obj1_name", "obj2_name", "obj1_ids", "obj2_ids",
+    "ecc", "semi", "log_period_days", "obj1_masses", "obj2_masses",
+    "obj1_total_mass", "obj2_total_mass", "obj1_dist_dc_pc", "obj2_dist_dc_pc",
+    "is_multi_system", "is_top_level", "is_wide_binary_system", "is_hard_binary_system",
     *_DIST_FIELDS,
 ]
 _FRAME_FIELDS = [
@@ -91,18 +78,14 @@ _FRAME_FIELDS = [
     "dist_pc", "rv_kms",
 ]
 _STAR_OUT = [
-    "name", *OKEY,
-    "is_binary", "is_multi_system", "is_unresolved_binary",
-    "is_within_r_tidal", "is_within_2x_r_tidal",
-    "hierarchy",
-    "x", "y", "z", "vx", "vy", "vz",
-    "mass", "log_T_eff_K", "log_L_L_sol", "log_R_R_sol",
-    "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
-    *_FRAME_FIELDS,
+    "name", *OKEY, "is_binary", "is_multi_system", "is_unresolved_binary",
+    "is_within_r_tidal", "is_within_2x_r_tidal", "hierarchy",
+    "x", "y", "z", "vx", "vy", "vz", "mass", "log_T_eff_K", "log_L_L_sol", "log_R_R_sol",
+    "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass", *_FRAME_FIELDS,
 ]
 
 # input and output tags
-_STAR, _BIN, _HDR, _VIOL = range(4)
+_STAR, _BIN, _HDR, _VIOL, _OVERALL, _ANNULAR = range(6)
 
 _OUT_DDL = """
     _tag tinyint, run_id string, time double,
@@ -123,7 +106,8 @@ _OUT_DDL = """
     obj1_dist_dc_pc double, obj2_dist_dc_pc double,
     is_top_level boolean, is_wide_binary_system boolean,
     is_hard_binary_system boolean,
-    dist_obs_pc double, is_unresolved_binary_system boolean
+    dist_obs_pc double, is_unresolved_binary_system boolean,
+    dist_key string, _stats array<double>
 """
 
 
@@ -131,14 +115,9 @@ _OUT_DDL = """
 class ObservedTables:
     stars: DataFrame
     binary_systems: DataFrame
-
-
-def coord_df(spark: SparkSession, coordinates: list[tuple]) -> DataFrame:
-    """The observer grid as a (obs_x, obs_y, obs_z) table."""
-    return spark.createDataFrame(
-        [(float(a), float(b), float(c)) for a, b, c in coordinates],
-        "obs_x double, obs_y double, obs_z double",
-    )
+    # packed statistics rows, unpacked by operators/statistics.py
+    overall_stats: DataFrame
+    annular_stats: DataFrame
 
 
 def default_observer_coordinates() -> list[tuple]:
@@ -187,6 +166,30 @@ def _frame(coords: np.ndarray, s: dict) -> dict:
 
 
 def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Table:
+    """All observers of one snapshot: the rows of ``_observed_rows``,
+    then each observer's overall and annular statistics of them."""
+    out = _observed_rows(t, schema, coords)
+    tags = out.column("_tag").to_numpy()
+    stars, bins = (out.filter(pa.array(tags == tag)) for tag in (_STAR, _BIN))
+    if stars.num_rows == 0:
+        return out
+    # an observer is its coordinates, as in a groupBy over the rows
+    xyz = [np.column_stack([x.column(c).to_numpy() for c in OBS]) for x in (stars, bins)]
+    obs, group = np.unique(np.concatenate(xyz), axis=0, return_inverse=True)
+    group = group.ravel()
+    hdr = t.filter(pa.array(t.column("_src").to_numpy() == _HDR))
+    header = {c: hdr.column(c)[0].as_py() for c in ("r_tidal", "r_half_mass")}
+    const = {c: stars.column(c)[0].as_py() for c in KEY}
+    stats = snapshot_statistics(stars, group[:stars.num_rows], bins,
+                                group[stars.num_rows:], len(obs), header)
+    return pa.concat_tables([out] + [
+        arrow_rows(schema, len(o), {**cols, **dict(zip(OBS, obs[o].T))},
+                   {**const, "_tag": tag})
+        for tag, (o, cols) in zip((_OVERALL, _ANNULAR), stats)
+    ])
+
+
+def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Table:
     """All observers of one snapshot: observed stars (singles, resolved
     members, merged unresolved systems), observed binaries and
     violations, as tagged rows of ``schema``."""
@@ -248,7 +251,7 @@ def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.
         }, {**const, "_tag": _VIOL})
 
     def obs_cols(o: np.ndarray) -> dict:
-        return {"obs_x": coords[o, 0], "obs_y": coords[o, 1], "obs_z": coords[o, 2]}
+        return dict(zip(OBS, coords[o].T))
 
     bo, bb = np.divmod(np.arange(n_obs * n_bin), max(n_bin, 1))
     tables = [arrow_rows(schema, len(bb), {
@@ -341,11 +344,8 @@ def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.
     return pa.concat_tables(tables)
 
 
-def observe(
-    spark: SparkSession,
-    assembled: AssembledTables,
-    coordinates: list[tuple] | None = None,
-) -> ObservedTables:
+def observe(spark: SparkSession, assembled: AssembledTables,
+            coordinates: list[tuple] | None = None) -> ObservedTables:
     """Observe every assembled snapshot from every coordinate: one
     grouped-map kernel per snapshot, one checkpoint for the batch."""
     coords = np.array(coordinates or default_observer_coordinates(), dtype=float)
@@ -357,20 +357,18 @@ def observe(
         (assembled.snapshot_headers, _HDR, "density_center", "r_tidal", "r_half_mass"),
     )
     out, bad = snapshot_checkpoint(
-        rows,
-        lambda t, schema: _observe_snapshot(t, schema, coords.reshape(-1, 3)),
-        _OUT_DDL,
-        F.struct("obj1_ids", "obj2_ids"),
+        rows, lambda t, schema: _observe_snapshot(t, schema, coords.reshape(-1, 3)),
+        _OUT_DDL, F.struct("obj1_ids", "obj2_ids"),
     )
     if bad is not None:
         raise ValueError(
-            f"Unsupported unresolved component size: {bad['obj1_ids']}/{bad['obj2_ids']}"
-        )
+            f"Unsupported unresolved component size: {bad['obj1_ids']}/{bad['obj2_ids']}")
     tag = F.col("_tag")
     return ObservedTables(
         stars=out.filter(tag == _STAR).select(*_STAR_OUT),
         binary_systems=out.filter(tag == _BIN).select(
-            *KEY, *_BIN_FIELDS, "obs_x", "obs_y", "obs_z",
-            "dist_obs_pc", "is_unresolved_binary_system",
+            *KEY, *_BIN_FIELDS, *OBS, "dist_obs_pc", "is_unresolved_binary_system",
         ),
+        overall_stats=out.filter(tag == _OVERALL).select(*OKEY, "_stats"),
+        annular_stats=out.filter(tag == _ANNULAR).select(*OKEY, "dist_key", "_stats"),
     )

@@ -1,196 +1,229 @@
 """Per-snapshot statistics (SURVEY §2.4 A2-A5).
 
 Reference: snapshot.py:164-305 (overall, 3-scope descriptive stats)
-and snapshot.py:314-440 (annular histograms); stacking across
-snapshots/series/collections (series.py:158-194, collection.py:202-242)
-is free here — the tables already carry the full composite key, so one
-``groupBy(*group_cols)`` replaces the reference's container-tree walk.
+and snapshot.py:314-440 (annular histograms), computed one snapshot at
+a time right after observing it. So here: observe's kernel calls
+``snapshot_statistics`` on the rows it has just built, for every
+observer, and emits tagged rows with the values packed in ``_stats``;
+``overall_statistics`` and ``annular_statistics`` unpack them, narrow
+projections with no aggregation. Stacking across snapshots/series/
+collections (series.py:158-194, collection.py:202-242) is free — the
+rows carry the full composite key.
 
-Exact percentiles (``percentile``, linear interpolation — pandas
-``quantile`` parity) rather than percentile_approx (SURVEY §7.4.4).
+Each statistic is defined once, in numpy, with the semantics of the
+Spark aggregate it stands for (exact ``percentile``: linear
+interpolation, pandas ``quantile`` parity, SURVEY §7.4.4). Each group's
+values are sorted before every float reduction, so the results do not
+depend on row order or partitioning.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SCOPES = [
-    ("", None),
-    ("within_r_tidal_", "is_within_r_tidal"),
-    ("within_2x_r_tidal_", "is_within_2x_r_tidal"),
-]
+SCOPES = [("", None), ("within_r_tidal_", "is_within_r_tidal"),
+          ("within_2x_r_tidal_", "is_within_2x_r_tidal")]
 
 BIN_STAT_COLS = ["ecc", "semi", "log_period_days"]
 BIN_TYPES = ["wide", "hard", "unresolved"]
+DIST_KEYS = ("dist_dc_r_tidal", "dist_dc_r_half_mass")
+DESCRIPTIVE = ("mean", "std", "min", "q1", "median", "q3", "max")
+_QUANTILES = {"q1": 0.25, "median": 0.5, "q3": 0.75}
+
+# the key of both statistics tables, in table order
+STATS_KEY = ["run_id", "obs_x", "obs_y", "obs_z", "time"]
 
 
-def _descriptive(col: F.Column, key: str, prefix: str) -> list[F.Column]:
-    """mean/std/min/q1/median/q3/max (reference calc/summary.py:20-36;
-    std is the pandas default sample std, ddof=1)."""
-    return [
-        F.avg(col).alias(f"{prefix}{key}_mean"),
-        F.stddev_samp(col).alias(f"{prefix}{key}_std"),
-        F.min(col).alias(f"{prefix}{key}_min"),
-        F.percentile(col, F.lit(0.25)).alias(f"{prefix}{key}_q1"),
-        F.percentile(col, F.lit(0.5)).alias(f"{prefix}{key}_median"),
-        F.percentile(col, F.lit(0.75)).alias(f"{prefix}{key}_q3"),
-        F.max(col).alias(f"{prefix}{key}_max"),
-    ]
+def overall_fields() -> list[tuple[str, str]]:
+    """Name and type of each overall_stats column after the key."""
+    fields = []
+    for p, _ in SCOPES:
+        fields += [(f"{p}n_star", "bigint"), (f"{p}n_binary_star", "bigint"),
+                   (f"{p}total_mass", "double")]
+        fields += [(f"{p}mass_{s}", "double") for s in DESCRIPTIVE]
+    for p, _ in SCOPES:
+        fields.append((f"{p}n_binary_system", "bigint"))
+        fields += [(f"{p}{c}_{s}", "double") for c in BIN_STAT_COLS for s in DESCRIPTIVE]
+        fields += [(f"{p}n_{t}_binary_system", "bigint") for t in BIN_TYPES]
+    return fields + [("r_tidal", "double"), ("r_half_mass", "double")]
 
 
-def overall_statistics(
-    stars: DataFrame,
-    binary_systems: DataFrame,
-    snapshot_headers: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
-    """A3 — scoped descriptive statistics per snapshot group.
+# annular_stats columns after the key and dist_key, all bigint
+ANNULAR_FIELDS = ["radius", "n_star", "n_single", "n_binary_star", "n_binary_system",
+                  *sorted(f"n_{t}_binary_system" for t in BIN_TYPES)]
 
-    One aggregation pass per table: the reference's three mask_specs
-    loops (snapshot.py:181-211) become ``when(scope_flag, col)``
-    conditional aggregates — the hand-rolled grouping-sets pattern,
-    kept exact rather than CUBE for parity.
-    """
-    star_aggs: list[F.Column] = []
-    for prefix, flag in SCOPES:
-        mass = (
-            F.col("mass") if flag is None else F.when(F.col(flag), F.col("mass"))
-        )
-        is_bin = (
-            F.col("is_binary")
-            if flag is None
-            else F.when(F.col(flag), F.col("is_binary"))
-        )
-        star_aggs += [
-            F.count(mass).alias(f"{prefix}n_star"),
-            F.sum(is_bin.cast("int")).alias(f"{prefix}n_binary_star"),
-            F.coalesce(F.sum(mass), F.lit(0.0)).alias(f"{prefix}total_mass"),
-            *_descriptive(mass, "mass", prefix),
-        ]
-    star_stats = stars.groupBy(*group_cols).agg(*star_aggs)
 
-    has_unresolved = "is_unresolved_binary_system" in binary_systems.columns
-    bin_types = [t for t in BIN_TYPES if t != "unresolved" or has_unresolved]
+def _values(t: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """Column ``name`` as floats (NULL read as 0) and its validity."""
+    c = t.column(name)
+    return c.fill_null(0).to_numpy().astype(float), pc.is_valid(c).to_numpy()
 
-    bin_aggs: list[F.Column] = []
-    for prefix, flag in SCOPES:
-        def scoped(c: F.Column) -> F.Column:
-            return c if flag is None else F.when(F.col(flag), c)
 
-        bin_aggs.append(
-            F.count(scoped(F.lit(1))).alias(f"{prefix}n_binary_system")
-        )
-        for col in BIN_STAT_COLS:
-            bin_aggs += _descriptive(scoped(F.col(col)), col, prefix)
-        for t in bin_types:
-            bin_aggs.append(
-                F.sum(scoped(F.col(f"is_{t}_binary_system")).cast("int")).alias(
-                    f"{prefix}n_{t}_binary_system"
-                )
-            )
-    bin_stats = binary_systems.groupBy(*group_cols).agg(*bin_aggs)
+def _flag(t: pa.Table, name: str) -> np.ndarray:
+    """Boolean column ``name``, NULL as false: like ``when(flag, ...)``,
+    a NULL scope flag leaves the row out of the scope."""
+    return t.column(name).fill_null(False).to_numpy()
 
-    hdr = snapshot_headers.select(*group_cols, "r_tidal", "r_half_mass")
-    out = star_stats.join(bin_stats, group_cols, "left").join(
-        hdr, group_cols, "left"
+
+def describe(values: np.ndarray, keep: np.ndarray, group: np.ndarray, n: int):
+    """Sum and ``DESCRIPTIVE`` of ``values[keep]`` per group 0..n-1, as
+    Spark's sum, avg, stddev_samp, min, percentile and max (reference
+    calc/summary.py:20-36; std is the pandas sample std, ddof=1). The
+    statistics are masked arrays, masked where Spark gives NULL."""
+    g, v = group[keep], values[keep]
+    order = np.lexsort((v, g))  # NaN sorts last, as in Spark
+    # a NaN pad keeps every index below in range for an empty group
+    g, v = g[order], np.append(v[order], np.nan)
+    cnt = np.bincount(g, minlength=n)
+    start = np.cumsum(cnt) - cnt
+    total = np.bincount(g, v[:-1], n)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        # deviations from the group's least value first: equal values
+        # give a std of exactly 0
+        d = v[:-1] - v[start][g]
+        dev = d - (np.bincount(g, d, n) / cnt)[g]
+        out = {"mean": total / cnt, "min": v[start], "max": v[start + cnt - 1],
+               "std": np.sqrt(np.bincount(g, dev * dev, n) / (cnt - 1))}
+        for name, p in _QUANTILES.items():
+            # Spark's Percentile.getPercentile, term for term
+            pos = (cnt - 1) * p
+            lo, hi = np.floor(pos).astype(np.int64), np.ceil(pos).astype(np.int64)
+            a, b = v[start + lo], v[start + hi]
+            out[name] = np.where((lo == hi) | (a == b), a, (hi - pos) * a + (pos - lo) * b)
+    return total, {s: np.ma.masked_array(out[s], cnt < (2 if s == "std" else 1))
+                   for s in DESCRIPTIVE}
+
+
+def overall_columns(stars: pa.Table, bins: pa.Table, star_group: np.ndarray,
+                    bin_group: np.ndarray, n: int) -> dict:
+    """A3 — scoped descriptive statistics of each group (the three
+    mask_specs loops of snapshot.py:181-211), keyed by the names of
+    ``overall_fields`` but r_tidal and r_half_mass."""
+    out = {}
+    (mass, has_mass), is_bin = _values(stars, "mass"), _flag(stars, "is_binary")
+    for p, flag in SCOPES:
+        scope = np.ones(stars.num_rows, bool) if flag is None else _flag(stars, flag)
+        keep = scope & has_mass
+        out[f"{p}total_mass"], desc = describe(mass, keep, star_group, n)
+        out[f"{p}n_star"] = np.bincount(star_group[keep], minlength=n)
+        out[f"{p}n_binary_star"] = np.bincount(star_group[scope & is_bin], minlength=n)
+        out.update({f"{p}mass_{s}": v for s, v in desc.items()})
+    for p, flag in SCOPES:
+        scope = np.ones(bins.num_rows, bool) if flag is None else _flag(bins, flag)
+        out[f"{p}n_binary_system"] = np.bincount(bin_group[scope], minlength=n)
+        for c in BIN_STAT_COLS:
+            vals, ok = _values(bins, c)
+            desc = describe(vals, scope & ok, bin_group, n)[1]
+            out.update({f"{p}{c}_{s}": v for s, v in desc.items()})
+        for t in BIN_TYPES:
+            is_t = scope & _flag(bins, f"is_{t}_binary_system")
+            out[f"{p}n_{t}_binary_system"] = np.bincount(bin_group[is_t], minlength=n)
+    return out
+
+
+def is_binary_star(stars: pa.Table, bins: pa.Table) -> np.ndarray:
+    """A star counts as a binary star in the annular histogram iff its
+    hierarchy holds a pair label of the CURRENT snapshot
+    (snapshot.py:325-345), not by the static is_binary flag. Every
+    observer sees all of a snapshot's binaries, so one label set serves
+    all groups."""
+    h = stars.column("hierarchy").combine_chunks()
+    hit = pc.is_in(pc.list_flatten(h), value_set=bins.column("pair").combine_chunks())
+    parent = pc.list_parent_indices(h).to_numpy()
+    return np.bincount(parent[hit.to_numpy(zero_copy_only=False)], minlength=len(h)) > 0
+
+
+def annular_columns(stars: pa.Table, bins: pa.Table, star_group: np.ndarray,
+                    bin_group: np.ndarray) -> tuple:
+    """A4 — annular histogram per (group, dist_key, radius): the group,
+    the index into ``DIST_KEYS`` and the ``ANNULAR_FIELDS`` of each bin,
+    sorted. radius = ceil(max(dist, 0)), so a NULL distance bins at 0
+    as ``greatest`` skips NULL; np.bincount == groupBy-count. Only bins
+    with stars are kept (snapshot.py:417)."""
+    k = len(DIST_KEYS)
+
+    def cells(t: pa.Table, group: np.ndarray):
+        r = np.stack([np.ceil(np.fmax(_values(t, key)[0], 0.0)) for key in DIST_KEYS])
+        return (group * k + np.arange(k)[:, None]).ravel(), r.astype(np.int64).ravel()
+
+    (s_cell, s_r), (b_cell, b_r) = cells(stars, star_group), cells(bins, bin_group)
+    width = max(s_r.max(initial=0), b_r.max(initial=0)) + 1
+    keys, star_bin = np.unique(s_cell * width + s_r, return_inverse=True)
+    b_code = b_cell * width + b_r
+    bin_bin = np.searchsorted(keys, b_code)
+    found = np.append(keys, -1)[bin_bin] == b_code  # codes are >= 0
+
+    def count(idx: np.ndarray, sel: np.ndarray) -> np.ndarray:
+        return np.bincount(idx[sel], minlength=len(keys))
+
+    n_star = np.bincount(star_bin, minlength=len(keys))
+    binary_star = is_binary_star(stars, bins)
+    n_binary_star = count(star_bin, np.tile(binary_star, k))
+    cols = {"radius": keys % width, "n_star": n_star, "n_single": n_star - n_binary_star,
+            "n_binary_star": n_binary_star, "n_binary_system": count(bin_bin, found)}
+    for t in BIN_TYPES:
+        is_t = found & np.tile(_flag(bins, f"is_{t}_binary_system"), k)
+        cols[f"n_{t}_binary_system"] = count(bin_bin, is_t)
+    return keys // width // k, keys // width % k, cols
+
+
+def _packed(columns: list, rows: np.ndarray) -> pa.ListArray:
+    """The values of ``columns`` at ``rows``, one list<double> per row;
+    masked values become NULL."""
+    m = np.ma.column_stack(columns)[rows]
+    flat = pa.array(m.data.ravel().astype(float), mask=np.ma.getmaskarray(m).ravel())
+    offsets = np.arange(len(m) + 1, dtype=np.int32) * m.shape[1]
+    return pa.ListArray.from_arrays(pa.array(offsets), flat)
+
+
+def snapshot_statistics(stars: pa.Table, star_obs: np.ndarray, bins: pa.Table,
+                        bin_obs: np.ndarray, n_obs: int, header: dict) -> tuple:
+    """Both statistics of one snapshot's observed stars and binaries,
+    grouped by observer index: ``(observers, columns)`` for the overall
+    rows (one per observer that sees a star) and for the annular rows,
+    with the values packed in ``_stats`` for ``overall_statistics`` and
+    ``annular_statistics`` to unpack."""
+    cols = overall_columns(stars, bins, star_obs, bin_obs, n_obs)
+    for f in ("r_tidal", "r_half_mass"):
+        v = header.get(f)
+        cols[f] = np.ma.masked_array(np.full(n_obs, np.nan if v is None else v), v is None)
+    seen = np.flatnonzero(np.bincount(star_obs, minlength=n_obs))
+    overall = _packed([cols[f] for f, _ in overall_fields()], seen)
+    obs, key, ann = annular_columns(stars, bins, star_obs, bin_obs)
+    return (
+        (seen, {"_stats": overall}),
+        (obs, {"dist_key": np.array(DIST_KEYS)[key],
+               "_stats": _packed([ann[f] for f in ANNULAR_FIELDS], slice(None))}),
     )
-    # count columns are 0 (not NULL) when a scope or the whole binary
-    # table is empty (snapshot.py:249-296 sets explicit zeros)
-    zero_cols = {}
-    for prefix, _ in SCOPES:
-        zero_cols[f"{prefix}n_binary_star"] = F.coalesce(
-            F.col(f"{prefix}n_binary_star"), F.lit(0)
-        )
-        zero_cols[f"{prefix}n_binary_system"] = F.coalesce(
-            F.col(f"{prefix}n_binary_system"), F.lit(0)
-        )
-        for t in bin_types:
-            c = f"{prefix}n_{t}_binary_system"
-            zero_cols[c] = F.coalesce(F.col(c), F.lit(0))
-    return out.withColumns(zero_cols)
 
 
-def annular_statistics(
-    stars: DataFrame,
-    binary_systems: DataFrame,
-    group_cols: list[str],
-    dist_keys: tuple[str, ...] = ("dist_dc_r_tidal", "dist_dc_r_half_mass"),
-) -> DataFrame:
-    """A4 — annular histogram per (group, dist_key, radius).
+def _unpacked(rows: DataFrame, fields: list, attrs: dict[str, dict], *key) -> DataFrame:
+    """``rows``' key, ``_stats`` as the typed ``fields``, and the per-run
+    ``attrs`` (init_mass_lv, ...) as literal columns keyed on run_id."""
+    stats, run = F.col("_stats"), F.col("run_id")
+    names = sorted({k for a in attrs.values() for k in a})
+    return rows.select(*STATS_KEY, *key, *[
+        stats[i].cast(t).alias(name) for i, (name, t) in enumerate(fields)
+    ], *[
+        F.create_map(*[F.lit(x) for r, a in attrs.items() for x in (r, a.get(k))])[run]
+        .cast("long").alias(k) for k in names
+    ])
 
-    radius = ceil(max(dist, 0)); np.bincount == groupBy-count. A star
-    counts as a binary star here iff its hierarchy intersects the
-    CURRENT snapshot's pair labels (snapshot.py:325-345) — not the
-    static is_binary flag. Bins with n_star == 0 are dropped
-    (snapshot.py:417).
-    """
-    has_unresolved = "is_unresolved_binary_system" in binary_systems.columns
-    bin_types = [t for t in BIN_TYPES if t != "unresolved" or has_unresolved]
 
-    pairs = binary_systems.select(*group_cols, "pair").distinct()
-    star_flag = (
-        stars.select(*group_cols, "name", F.explode("hierarchy").alias("pair"))
-        .join(pairs, [*group_cols, "pair"], "left_semi")
-        .select(*group_cols, "name")
-        .distinct()
-        .withColumn("_is_binary_star", F.lit(1))
-    )
-    flagged = stars.join(star_flag, [*group_cols, "name"], "left").withColumn(
-        "_is_binary_star", F.coalesce("_is_binary_star", F.lit(0))
-    )
+def overall_statistics(rows: DataFrame, attrs: dict[str, dict]) -> DataFrame:
+    """A3 — overall_stats: one row per (run, observer, time) with an
+    observed star, from observe's overall rows."""
+    return _unpacked(rows, overall_fields(), attrs)
 
-    stacked_star = flagged.selectExpr(
-        *group_cols,
-        "_is_binary_star",
-        "stack({n}, {args}) AS (dist_key, dist)".format(
-            n=len(dist_keys),
-            args=", ".join(f"'{k}', {k}" for k in dist_keys),
-        ),
-    ).withColumn("radius", F.ceil(F.greatest(F.col("dist"), F.lit(0.0))))
-    star_counts = stacked_star.groupBy(*group_cols, "dist_key", "radius").agg(
-        F.count(F.lit(1)).alias("n_star"),
-        F.sum("_is_binary_star").alias("n_binary_star"),
-    )
 
-    stacked_bin = binary_systems.selectExpr(
-        *group_cols,
-        *[f"is_{t}_binary_system" for t in bin_types],
-        "stack({n}, {args}) AS (dist_key, dist)".format(
-            n=len(dist_keys),
-            args=", ".join(f"'{k}', {k}" for k in dist_keys),
-        ),
-    ).withColumn("radius", F.ceil(F.greatest(F.col("dist"), F.lit(0.0))))
-    bin_counts = stacked_bin.groupBy(*group_cols, "dist_key", "radius").agg(
-        F.count(F.lit(1)).alias("n_binary_system"),
-        *[
-            F.sum(F.col(f"is_{t}_binary_system").cast("int")).alias(
-                f"n_{t}_binary_system"
-            )
-            for t in bin_types
-        ],
-    )
-
-    joined = star_counts.join(
-        bin_counts, [*group_cols, "dist_key", "radius"], "full_outer"
-    )
-    zero_cols = ["n_star", "n_binary_star", "n_binary_system"] + [
-        f"n_{t}_binary_system" for t in bin_types
-    ]
-    joined = joined.withColumns(
-        {c: F.coalesce(F.col(c), F.lit(0)) for c in zero_cols}
-    ).withColumn("n_single", F.col("n_star") - F.col("n_binary_star"))
-
-    return joined.filter(F.col("n_star") > 0).select(
-        *group_cols,
-        "dist_key",
-        "radius",
-        "n_star",
-        "n_single",
-        "n_binary_star",
-        "n_binary_system",
-        *sorted(f"n_{t}_binary_system" for t in bin_types),
-    )
+def annular_statistics(rows: DataFrame, attrs: dict[str, dict]) -> DataFrame:
+    """A4 — annular_stats: one row per (run, observer, time, dist_key,
+    radius) bin with stars, from observe's annular rows."""
+    return _unpacked(rows, [(f, "bigint") for f in ANNULAR_FIELDS], attrs, "dist_key")
 
 
 def timestamp_summary(headers: DataFrame, group_cols: list[str]) -> DataFrame:

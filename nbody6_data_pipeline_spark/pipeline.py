@@ -7,8 +7,10 @@ align -> assemble -> observe (18 coordinates) -> overall + annular
 statistics -> parquet layers + CSV export. Parse and align are
 set-based Spark plans; assemble and observe are per-snapshot
 grouped-map kernels keyed on ``(run_id, time)``, each materialized by
-one checkpoint; the statistics are aggregations over the observed
-tables. Each layer runs O(1) Spark actions whatever the run count.
+one checkpoint. Observe's kernel also computes both statistics of each
+observed snapshot, so the statistics tables are projections of its
+checkpoint and their layer is only its writes. Each layer runs O(1)
+Spark actions whatever the run count.
 Each parquet layer is a run_id-partitioned dataset written with
 dynamic partition overwrite; the CSV export is
 ``csv/<layer>/run_id=<id>/``. Completed runs are found by listing the
@@ -26,35 +28,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
 from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
-from nbody6_data_pipeline_spark.operators.observe import (
-    coord_df,
-    default_observer_coordinates,
-    observe,
-)
-from nbody6_data_pipeline_spark.operators.statistics import (
-    annular_statistics,
-    overall_statistics,
-)
+from nbody6_data_pipeline_spark.operators.observe import default_observer_coordinates, observe
+from nbody6_data_pipeline_spark.operators.statistics import annular_statistics, overall_statistics
 from nbody6_data_pipeline_spark.plans.checkpoints import completed_runs
 from nbody6_data_pipeline_spark.sources.discovery import RunInfo, fetch_sim_runs
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from nbody6_data_pipeline_spark.sources.sinks import write_csv, write_parquet
 
 LAYERS = (
-    "assembled_stars",
-    "assembled_binary_systems",
-    "snapshot_headers",
-    "observed_stars",
-    "observed_binary_systems",
-    "overall_stats",
-    "annular_stats",
+    "assembled_stars", "assembled_binary_systems", "snapshot_headers",
+    "observed_stars", "observed_binary_systems", "overall_stats", "annular_stats",
 )
-
-OKEY = ["run_id", "obs_x", "obs_y", "obs_z", "time"]
 
 
 def process_all(
@@ -74,9 +61,9 @@ def process_all(
     scan), align_runs makes every run's alignment decision from ONE
     collect and checkpoints the aligned table, assemble and observe
     each run one grouped-map kernel per snapshot into one checkpoint
-    (every table they return is a projection of it), each statistics
-    table is computed once, and each layer is ONE partitioned write
-    covering all new runs."""
+    (every table they return, the statistics included, is a projection
+    of it), and each layer is ONE partitioned write covering all new
+    runs."""
     coordinates = coordinates or default_observer_coordinates()
     paths = {name: os.path.join(output_base, name) for name in LAYERS}
 
@@ -86,9 +73,7 @@ def process_all(
     if not pending:
         return runs
 
-    _process_pending(
-        spark, output_base, paths, coordinates, is_strict, is_slim, pending
-    )
+    _process_pending(spark, output_base, paths, coordinates, is_strict, is_slim, pending)
     return runs
 
 
@@ -106,55 +91,33 @@ def _process_pending(
     # per layer; also what you want in the Spark UI on a real cluster.
     sc = spark.sparkContext
     sc.setJobDescription("layer:parse")
-    multi = load_runs(
-        spark, [(r.label, r.path) for r in pending], is_strict=is_strict
-    )
+    multi = load_runs(spark, [(r.label, r.path) for r in pending], is_strict=is_strict)
     sc.setJobDescription("layer:align")
     aligned = align_runs(multi)
     sc.setJobDescription("layer:assemble")
     asm = assemble_runs(aligned, is_strict=is_strict)
     if not is_slim:
         write_parquet(asm.stars, paths["assembled_stars"], ["run_id"])
-        write_parquet(
-            asm.binary_systems, paths["assembled_binary_systems"], ["run_id"]
-        )
+        write_parquet(asm.binary_systems, paths["assembled_binary_systems"], ["run_id"])
     write_parquet(asm.snapshot_headers, paths["snapshot_headers"], ["run_id"])
 
     sc.setJobDescription("layer:observe")
     obs = observe(spark, asm, coordinates)
-    obs_stars, obs_bins = obs.stars, obs.binary_systems
-    write_parquet(obs_stars, paths["observed_stars"], ["run_id"])
-    write_parquet(obs_bins, paths["observed_binary_systems"], ["run_id"])
+    write_parquet(obs.stars, paths["observed_stars"], ["run_id"])
+    write_parquet(obs.binary_systems, paths["observed_binary_systems"], ["run_id"])
 
-    # per-(coord, time) statistics over the OBSERVED snapshots — the
-    # reference's collection.statistics walk (collection.py:202-242)
-    hdr_obs = asm.snapshot_headers.crossJoin(coord_df(spark, coordinates))
-    # per-run attrs (init_mass_lv, ...) as a broadcast dimension join
-    # instead of per-run literal columns
-    attr_keys = sorted({k for r in pending for k in (r.attrs or {})})
-    attrs_df = None
-    if attr_keys:
-        attrs_df = spark.createDataFrame(
-            [
-                tuple([r.label] + [r.attrs.get(k) for k in attr_keys])
-                for r in pending
-            ],
-            ", ".join(["run_id string"] + [f"{k} long" for k in attr_keys]),
-        )
-
-    overall = overall_statistics(obs_stars, obs_bins, hdr_obs, OKEY)
-    annular = annular_statistics(obs_stars, obs_bins, OKEY)
-    for name, df in (("overall_stats", overall), ("annular_stats", annular)):
+    # per-(coord, time) statistics of the OBSERVED snapshots — the
+    # reference's collection.statistics walk (collection.py:202-242) —
+    # with the per-run attrs (init_mass_lv, ...) as literal columns
+    attrs = {r.label: r.attrs or {} for r in pending}
+    for name, df, order_by in (
+        ("overall_stats", overall_statistics(obs.overall_stats, attrs), []),
+        ("annular_stats", annular_statistics(obs.annular_stats, attrs),
+         ["dist_key", "radius"]),
+    ):
         sc.setJobDescription(f"layer:{name}")
-        if attrs_df is not None:
-            df = df.join(F.broadcast(attrs_df), "run_id", "left")
-        # computed once: the parquet write and the CSV sort/write read it
-        df = df.localCheckpoint()
         write_parquet(df, paths[name], ["run_id"])
-        write_csv(
-            df,
-            os.path.join(output_base, "csv", name),
-            order_by=["obs_x", "obs_y", "obs_z", "time"],
-            partition_by=["run_id"],
-        )
+        write_csv(df, os.path.join(output_base, "csv", name),
+                  order_by=["obs_x", "obs_y", "obs_z", "time", *order_by],
+                  partition_by=["run_id"])
     sc.setJobDescription(None)

@@ -18,6 +18,8 @@ ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+# the directory that holds this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def configure_state_store(spark: SparkSession, provider: str = "rocksdb") -> None:
@@ -151,6 +153,10 @@ def get_spark(
         # queries (guide §1.2 step 3: config AFTER algorithm+per-task
         # work — this is the last 10-30%, justified by measurement).
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # Python workers unpickle the grouped-map kernels, so they import
+        # this package: put its parent directory on their path, wherever
+        # the driver runs from (the workers add the driver's PYTHONPATH)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
         builder = builder.config(_STATE_PROVIDER_KEY, ROCKSDB_STATE_PROVIDER).config(

@@ -35,14 +35,17 @@ def write_csv(
     partition_by: list[str] | None = None,
 ) -> None:
     """S10 — CSV sink. Arrays/JSON-able nested values are stringified
-    with to_json (F23, collect_inclination_stats.py:98-115)."""
-    out = df
-    for f in df.schema.fields:
-        if not f.dataType.typeName() in ("string", "double", "float", "long",
-                                         "integer", "short", "boolean"):
-            out = out.withColumn(f.name, F.to_json(f.name))
+    with to_json (F23, collect_inclination_stats.py:98-115). With
+    ``order_by``, all rows of one ``partition_by`` value go to one task
+    and are sorted there: each partition's CSV is one sorted file,
+    without the sampling job and range exchange of a global sort."""
+    out = df.withColumns({
+        f.name: F.to_json(f.name) for f in df.schema.fields if f.dataType.typeName()
+        not in ("string", "double", "float", "long", "integer", "short", "boolean")})
     if order_by:
-        out = out.orderBy(*order_by)
+        keys = partition_by or []
+        out = (out.repartition(*keys) if keys else out.repartition(1)
+               ).sortWithinPartitions(*keys, *order_by)
     w = out.write.mode("overwrite").option("header", True)
     _partitioned(w, partition_by).csv(path)
 

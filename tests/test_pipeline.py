@@ -3,6 +3,7 @@ resume skip -> output layers readable."""
 
 from __future__ import annotations
 
+import csv
 import hashlib
 import os
 
@@ -315,11 +316,53 @@ def test_assemble_and_observe_job_budget(spark, sim_base):
     assert n_obs <= 8, n_obs
 
 
+def test_statistics_job_budget(spark, sim_base, tmp_path):
+    """The statistics tables are projections of observe's checkpoint:
+    their layers run only their parquet and CSV writes, at most 6 jobs
+    together on the fixture grid, and observe stays at 8 or fewer.
+    Jobs are counted by job group and told apart by the layer
+    description the pipeline sets."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    sc = spark.sparkContext
+    sc.setJobGroup("budget-stats", "job-count probe")
+    try:
+        process_all(spark, sim_base, str(tmp_path / "out"))
+        ids = sc.statusTracker().getJobIdsForGroup("budget-stats")
+    finally:
+        sc.setJobGroup(None, None)
+    described = [store.job(i).description() for i in ids]
+    layers = [d.get() for d in described if d.isDefined()]
+    n_stats = sum(d in ("layer:overall_stats", "layer:annular_stats") for d in layers)
+    assert 0 < n_stats <= 6, layers
+    assert layers.count("layer:observe") <= 8, layers
+
+
+def test_stats_csv_one_sorted_file_per_run(spark, sim_base, tmp_path):
+    """Each run's overall and annular CSV is one file, sorted by the
+    table's full key."""
+    out = str(tmp_path / "out")
+    process_all(spark, sim_base, out,
+                coordinates=[(600.0, 0.0, 0.0), (50.0, 0.0, 0.0), (300.0, 0.0, 0.0)])
+    obs = ["obs_x", "obs_y", "obs_z", "time"]
+    for layer, key in (("overall_stats", obs),
+                       ("annular_stats", [*obs, "dist_key", "radius"])):
+        for run in (RUN1, RUN2):
+            run_dir = os.path.join(out, "csv", layer, f"run_id={run}")
+            files = [f for f in os.listdir(run_dir) if f.endswith(".csv")]
+            assert len(files) == 1, (layer, run, files)
+            with open(os.path.join(run_dir, files[0])) as f:
+                rows = list(csv.DictReader(f))
+            keys = [tuple(r[c] if c == "dist_key" else float(r[c]) for c in key)
+                    for r in rows]
+            assert len(keys) > 1 and keys == sorted(keys), (layer, run)
+            assert len(set(keys)) == len(keys), (layer, run)
+
+
 def _exact_hashes(out: str) -> dict:
     """Order-insensitive hash of every value, floats unrounded, of the
-    five assemble/observe layers."""
+    seven layers."""
     digests = {}
-    for layer in LAYERS[:5]:
+    for layer in LAYERS:
         rows = pq.read_table(os.path.join(out, layer)).to_pylist()
         lines = sorted(repr(sorted(r.items())) for r in rows)
         digests[layer] = hashlib.md5("\n".join(lines).encode()).hexdigest()
@@ -327,9 +370,9 @@ def _exact_hashes(out: str) -> dict:
 
 
 def test_assemble_observe_layers_exact_across_partitioning(spark, sim_base, tmp_path):
-    """The kernels sort each snapshot before every float reduction, so
-    the five assemble/observe layers hold the same exact values with 1
-    or 200 shuffle partitions, AQE on or off."""
+    """The kernels sort each snapshot before every float reduction, the
+    statistics included, so all seven layers hold the same exact values
+    with 1 or 200 shuffle partitions, AQE on or off."""
     digests = []
     for parts in ("1", "200"):
         for aqe in ("true", "false"):

@@ -55,16 +55,23 @@ def build(spark, n_rows: int):
     return big, dim
 
 
-def spread(joined):
+def spread(spark, joined):
     """Max/mean rows per task after the join shuffle — the row-count
-    proxy for task-time spread (join cost is uniform per row here)."""
+    proxy for task-time spread (join cost is uniform per row here).
+    Read with AQE coalescing off, so each task is one of the join's
+    shuffle partitions (or a skew-join split of one), not a merge of
+    several small ones; skew-join splitting stays as the config set it."""
     from pyspark.sql import functions as F
 
-    parts = (
-        joined.groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
-    )
+    from nbody6_data_pipeline_spark.session import scoped_conf
+
+    coalesce = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    with scoped_conf(spark, coalesce):
+        parts = (
+            joined.groupBy(F.spark_partition_id().alias("p"))
+            .count()
+            .collect()
+        )
     counts = [r["count"] for r in parts]
     return max(counts), int(sum(counts) / max(len(counts), 1))
 
@@ -84,7 +91,7 @@ def run(spark, label: str, big, dim, salted: bool, aqe_skew: bool):
     t0 = time.time()
     n = agg.count()
     wall = round(time.time() - t0, 2)
-    mx, mean = spread(joined)
+    mx, mean = spread(spark, joined)
     print(
         json.dumps(
             {
