@@ -1,42 +1,59 @@
-"""J10 — cross-file timestamp alignment (reference loader.py:138-200).
+"""J10 — cross-file timestamp alignment and the dissolution cut
+(reference loader.py:138-200, assembler.py:522-527, 698-704).
 
 The six raw files of a run carry slightly-jittered timestamps. The
 reference aligns them by ROW INDEX: the i-th timestamp of every file
 must agree within ``tolerance`` (2e-2 Myr); all are renamed to the
-OUT34 reference timestamp (rounded to 2 decimals).
+OUT34 reference timestamp (rounded to 2 decimals). The series then
+stops at the run's first dissolved snapshot (densCentre r_tidal <= 0).
 
-The alignment decision itself runs DRIVER-SIDE on the collected
-per-file timestamp lists — they are bounded by (n_files x
-n_snapshots) ~ thousands of floats per run, and a driver decision
-avoids a chain of tiny shuffle jobs. The rename is then applied
-distributively as ONE broadcast equi-join of the (run_id, file,
-old_time -> ref_time) mapping into the generic block table, whose
-result is checkpointed once — the same as-of/tolerance-alignment
-pattern as SURVEY §2.3 J10.
+Both decisions are local to one run, so one per-run ``applyInPandas``
+kernel makes them: it gets the run's header timestamps per file (and
+densCentre's r_tidal) and returns the run's (file, old time -> ref
+time) mapping, without the dissolved snapshots. Alignment errors and
+the first-timestamp warning come back as rows of the same output, read
+on the driver by an ``Observation`` on the join. The mapping is
+joined into the generic block table ONCE and the result checkpointed —
+the same as-of/tolerance-alignment pattern as SURVEY §2.3 J10.
 """
 
 from __future__ import annotations
 
 import warnings
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, NBody6Runs
 
 TOLERANCE = 2e-2  # Myr (reference loader.py:100)
+DENS = "densCentre.txt"
+
+# old (per-file) time -> the OUT34 reference time; a row with ``error``
+# or ``warning`` set carries only run_id and that message
+MAPPING_SCHEMA = (
+    "run_id string, file string, time double, ref_time double, "
+    "error string, warning string"
+)
+_COLS = [c.split()[0] for c in MAPPING_SCHEMA.split(", ")]
 
 
 def _decide_alignment(
+    rid: str,
     by_file: dict[str, list[float]],
     files: list[str],
     tolerance: float,
     allow_trim: bool,
-    ctx: str = "",
 ) -> list[tuple[int, float]]:
-    """Driver-side alignment decision for ONE run's timestamp lists:
-    returns [(kept_row_index, ref_time)] or raises (loader.py:143-186).
-    The lists are bounded by n_files x n_snapshots — thousands of
-    floats — so this is deliberately plain Python."""
+    """The alignment decision for ONE run's sorted timestamp lists:
+    returns [(kept_row_index, ref_time)] or raises when a file parsed no
+    timestamps or the lists do not align (loader.py:143-186). The lists
+    are bounded by n_files x n_snapshots — thousands of floats — so
+    this is deliberately plain Python."""
+    missing = [f for f in files if f not in by_file]
+    if missing:
+        raise ValueError(f"Run {rid}: no timestamps parsed for {missing}.")
+    ctx = f" [run {rid}]"
     n_rows = max((len(v) for v in by_file.values()), default=0)
     if not allow_trim:
         counts = {f: len(v) for f, v in by_file.items()}
@@ -67,58 +84,31 @@ def _decide_alignment(
                 f"No aligned timestamps found across all files{ctx} "
                 f"with tolerance {tolerance}."
             )
-    ref = [round(by_file["OUT34"][i], 2) for i in kept]
-    if ref and ref[0] != 0.0:
-        warnings.warn(f"First aligned timestamp is {ref[0]}, not 0.0.{ctx}")
-    return list(zip(kept, ref))
+    return [(i, round(by_file["OUT34"][i], 2)) for i in kept]
 
 
-def _run_mapping(
-    rid: str,
-    by_file: dict[str, list[float]],
-    files: list[str],
-    tolerance: float,
-    allow_trim: bool,
-) -> list[tuple]:
-    """ONE run's (run_id, file, time, ref_time) mapping rows from
-    its sorted per-file timestamp lists; raises when a file parsed no
-    timestamps or the lists do not align."""
-    missing = [f for f in files if f not in by_file]
-    if missing:
-        raise ValueError(f"Run {rid}: no timestamps parsed for {missing}.")
-    return [
-        (rid, f, by_file[f][i], ref_t)
-        for i, ref_t in _decide_alignment(
-            by_file, files, tolerance, allow_trim, ctx=f" [run {rid}]"
-        )
-        for f in files
-    ]
-
-
-EXECUTOR_ALIGN_THRESHOLD = 100  # runs; above this the decision moves off-driver
-# old (per-file) time -> the OUT34 reference time
-MAPPING_SCHEMA = "run_id string, file string, time double, ref_time double"
-
-
-def _alignment_mapping_pdf(files, tolerance, allow_trim):
-    """Build the per-run applyInPandas kernel: one run's (file, time)
-    rows in, its (run_id, file, time, ref_time) mapping out. The
-    mapping is the SAME pure ``_run_mapping`` the driver path uses —
-    only the placement changes."""
+def _align_run(pdf, files: list[str], tolerance: float, allow_trim: bool):
+    """ONE run's mapping rows from its header rows (run_id, file, time,
+    r_tidal), as MAPPING_SCHEMA: an error row when the alignment
+    decision raises; otherwise the mapping without the snapshots at or
+    after the first kept one whose densCentre r_tidal <= 0, plus a
+    warning row when the first aligned timestamp is not 0.0."""
     import pandas as pd
 
-    def _align_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        rid = pdf["run_id"].iloc[0]
-        by_file = {
-            f: sorted(g["time"].tolist())
-            for f, g in pdf.groupby("file", sort=False)
-        }
-        return pd.DataFrame(
-            _run_mapping(rid, by_file, files, tolerance, allow_trim),
-            columns=["run_id", "file", "time", "ref_time"],
-        )
-
-    return _align_group
+    rid = pdf["run_id"].iloc[0]
+    by_file = {f: sorted(g["time"]) for f, g in pdf.groupby("file", sort=False)}
+    try:
+        kept = _decide_alignment(rid, by_file, files, tolerance, allow_trim)
+    except ValueError as e:
+        return pd.DataFrame([(rid, None, None, None, str(e), None)], columns=_COLS)
+    rows = [(f, by_file[f][i], ref_t) for i, ref_t in kept for f in files]
+    dissolved = set(pdf["time"][(pdf["file"] == DENS) & (pdf["r_tidal"] <= 0)])
+    cut = min((r for f, t, r in rows if f == DENS and t in dissolved), default=None)
+    out = [(rid, *r, None, None) for r in rows if cut is None or r[2] < cut]
+    if kept[0][1] != 0.0:
+        msg = f"First aligned timestamp is {kept[0][1]}, not 0.0. [run {rid}]"
+        out.append((rid, None, None, None, None, msg))
+    return pd.DataFrame(out, columns=_COLS)
 
 
 def align_runs(
@@ -126,66 +116,56 @@ def align_runs(
     tolerance: float = TOLERANCE,
     allow_trim: bool = False,
 ) -> NBody6Runs:
-    """Batched J10: unify timestamps for EVERY run without a per-run
-    driver action.
+    """Batched J10 and dissolution cut: unify timestamps for EVERY run
+    and drop each run's snapshots from its first dissolved one on, in
+    one per-run kernel (``_align_run``, applyInPandas grouped by
+    run_id), so neither driver memory nor driver actions grow with the
+    run count.
 
-    The per-(run, file) timestamp lists come from the generic table's
-    header rows. Two placements of the (pure, per-run-independent)
-    alignment decision, dispatched on run count:
-
-    - driver (<= EXECUTOR_ALIGN_THRESHOLD runs, default): ONE
-      groupBy/collect_list job gathers the per-(run, file) sorted
-      timestamp lists (~n_files x n_snapshots floats per run), the
-      decision loops in plain Python, and the mapping is broadcast —
-      zero extra shuffles, ideal at the reference's grid sizes.
-    - executor (> threshold): the SAME ``_run_mapping`` runs per run
-      inside ``applyInPandas`` grouped by run_id, so driver memory no
-      longer grows with run count (at 1e5 runs the collected lists
-      would be ~160 MB); the join is left to AQE (the mapping has
-      n_runs x n_files x n_snapshots rows — too big to force-broadcast).
-      Strictness errors surface as the same ValueError text via the
-      failed job. The first-timestamp-not-zero *warning* is
-      driver-only; the executor path drops it (warnings don't cross
-      the JVM boundary).
-
-    Either mapping is joined into the block table ONCE, on (run_id,
-    file, time), for header and data rows alike, and the aligned table
-    is checkpointed; the one checkpoint is the only action that reads
-    the mapping.
+    The mapping is joined into the block table ONCE, on (run_id, file,
+    time), for header and data rows alike, and the aligned table is
+    checkpointed; the one checkpoint is the only action that reads the
+    mapping. An ``Observation`` on the join then gives the first
+    run's error, raised here as a ``ValueError``, and each earlier
+    run's first-timestamp-not-zero warning, in run order. densCentre's
+    r_tidal is a cast of the raw token, so a bad one raises there in
+    strict mode.
     """
-    times = runs.blocks.filter(
-        (F.col("kind") == "h") & F.col("time").isNotNull()
-    ).select("run_id", "file", "time")
+    dens = runs.headers(DENS).select(
+        "run_id", F.lit(DENS).alias("file"), "time", "r_tidal"
+    )
+    times = (
+        runs.blocks.filter((F.col("kind") == "h") & (F.col("file") != DENS))
+        .select("run_id", "file", "time")
+        .unionByName(dens, allowMissingColumns=True)
+        .filter(F.col("time").isNotNull())
+    )
     files = list(FILE_CONFIGS)
-    if len(runs.run_ids) > EXECUTOR_ALIGN_THRESHOLD:
-        mapping = times.groupBy("run_id").applyInPandas(
-            _alignment_mapping_pdf(files, tolerance, allow_trim), MAPPING_SCHEMA
-        )
-    else:
-        ts_rows = (
-            times.groupBy("run_id", "file")
-            .agg(F.sort_array(F.collect_list("time")).alias("times"))
-            .collect()  # the ONE driver action for the whole batch
-        )
-        by_run: dict[str, dict[str, list[float]]] = {}
-        for r in ts_rows:
-            by_run.setdefault(r["run_id"], {})[r["file"]] = list(r["times"])
-
-        mapping_rows = [
-            row
-            for rid in sorted(by_run)
-            for row in _run_mapping(
-                rid, by_run[rid], files, tolerance, allow_trim
-            )
-        ]
-        mapping = F.broadcast(
-            runs.blocks.sparkSession.createDataFrame(mapping_rows, MAPPING_SCHEMA)
-        )
-
+    found = Observation("alignment")
+    mapping = times.groupBy("run_id").applyInPandas(
+        lambda pdf: _align_run(pdf, files, tolerance, allow_trim), MAPPING_SCHEMA
+    )
+    # a right join keeps the message rows (no block matches them) up to
+    # the Observation, which no empty-join rewrite can prune there
     aligned = (
-        runs.blocks.join(mapping, ["run_id", "file", "time"])
-        .drop("time")
+        runs.blocks.join(mapping, ["run_id", "file", "time"], "right")
+        .observe(
+            found,
+            F.min(F.when(F.col("error").isNotNull(), F.struct("run_id", "error")))
+            .alias("error"),
+            F.sort_array(F.collect_list(
+                F.when(F.col("warning").isNotNull(), F.struct("run_id", "warning"))
+            )).alias("warnings"),
+        )
+        .filter(F.col("kind").isNotNull())
+        .drop("time", "error", "warning")
         .withColumnRenamed("ref_time", "time")
         .localCheckpoint()
     )
-    return NBody6Runs(aligned, runs.run_ids, runs.is_strict)
+    error, warns = found.get["error"], found.get["warnings"]
+    for w in warns:
+        if error is None or w["run_id"] < error["run_id"]:
+            warnings.warn(w["warning"])
+    if error is not None:
+        raise ValueError(error["error"])
+    return NBody6Runs(aligned, runs.is_strict)

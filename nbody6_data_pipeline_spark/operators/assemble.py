@@ -2,8 +2,8 @@
 which builds one snapshot at a time, and so does this module.
 
 Every run's six parsed files become ONE tagged ``unionByName`` of
-narrow typed projections (strict ANSI casts still raise in Spark).
-After the per-run dissolution cut, a small pre-filter,
+narrow typed projections (strict ANSI casts still raise in Spark);
+align_runs has already cut each run at its first dissolved snapshot.
 ``groupBy("run_id", "time").applyInArrow`` hands each snapshot to
 ``_assemble_snapshot``: the reference's per-timestamp dicts and loops
 over numpy arrays, with the physics helpers of ``functions/`` called on
@@ -372,13 +372,10 @@ def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Ta
 
 
 def _snapshot_rows(runs: NBody6Runs) -> DataFrame:
-    """The tagged union of the six files' typed projections, cut at
-    each run's first dissolved snapshot (r_tidal <= 0; assembler.py:
-    522-527, 698-704)."""
-
-    dens = runs.headers("densCentre.txt")
-    rows = tagged_union(
-        (dens, _DENS, "r_tidal", "density_center"),
+    """The tagged union of the six files' typed projections; the aligned
+    runs already end before their first dissolved snapshot."""
+    return tagged_union(
+        (runs.headers("densCentre.txt"), _DENS, "r_tidal", "density_center"),
         (runs.headers("OUT34"), _HDR34, "nzero", "rbar", "vstar",
          "rtide", "plummer_mass", "rd", "rcm", "rg", "vg"),
         (runs.data("OUT34"), _PV, "line_no", "name",
@@ -392,20 +389,6 @@ def _snapshot_rows(runs: NBody6Runs) -> DataFrame:
         (runs.data("fort.83"), _ATTR83, "line_no", "name",
          "mass", "zlum", "rad", "tempe"),
     ).filter(F.col("time").isNotNull())
-    cuts: dict[str, float] = {}
-    for r in dens.filter(F.col("r_tidal") <= 0).select(*KEY).collect():
-        if r["time"] is not None:
-            cuts[r["run_id"]] = min(cuts.get(r["run_id"], r["time"]), r["time"])
-    if cuts:
-        cut = rows.sparkSession.createDataFrame(
-            list(cuts.items()), "run_id string, _cut double"
-        )
-        rows = (
-            rows.join(F.broadcast(cut), "run_id", "left")
-            .filter(F.col("_cut").isNull() | (F.col("time") < F.col("_cut")))
-            .drop("_cut")
-        )
-    return rows
 
 
 def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
@@ -417,8 +400,9 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     (assembler.py:130-134); in strict mode, names missing across file
     families raise (assembler.py:168-188, 559-581), while lax mode
     drops binaries with a component missing from the star catalog. The
-    dissolution cut truncates the series at the FIRST r_tidal<=0
-    timestamp (assembler.py:522-527, 698-704).
+    dissolution cut (the series ends before the FIRST r_tidal<=0
+    timestamp, assembler.py:522-527, 698-704) is made by
+    ``align_runs``, so ``runs`` holds only the snapshots to assemble.
     """
     out, bad = snapshot_checkpoint(
         _snapshot_rows(runs),

@@ -4,10 +4,11 @@ collect_simulation_stats.process_all, SURVEY §3.1).
 ``process_all`` discovers the runs, skips those already complete, and
 sends every pending run through each layer as one batch: parse ->
 align -> assemble -> observe (18 coordinates) -> overall + annular
-statistics -> parquet layers + CSV export. Parse and align are
-set-based Spark plans; assemble and observe are per-snapshot
-grouped-map kernels keyed on ``(run_id, time)``, each materialized by
-one checkpoint. Observe's kernel also computes both statistics of each
+statistics -> parquet layers + CSV export. Parse is a set-based
+Spark plan; align is a per-run grouped-map kernel keyed on ``run_id``,
+and assemble and observe are per-snapshot grouped-map kernels keyed on
+``(run_id, time)``; each layer is materialized by one checkpoint.
+Observe's kernel also computes both statistics of each
 observed snapshot, so the statistics tables are projections of its
 checkpoint and their layer is only its writes. Each layer runs O(1)
 Spark actions whatever the run count.
@@ -58,8 +59,9 @@ def process_all(
 
     load_runs reads and splits every run's files once, in one scan, into
     one checkpointed block table (its structural check rides on that
-    scan), align_runs makes every run's alignment decision from ONE
-    collect and checkpoints the aligned table, assemble and observe
+    scan), align_runs makes every run's alignment decision and
+    dissolution cut in one per-run kernel and checkpoints the aligned
+    table, assemble and observe
     each run one grouped-map kernel per snapshot into one checkpoint
     (every table they return, the statistics included, is a projection
     of it), and each layer is ONE partitioned write covering all new

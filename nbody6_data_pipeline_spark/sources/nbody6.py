@@ -159,10 +159,12 @@ class NBody6Runs:
     block table of every loaded run's six files (block_text.
     BLOCKS_SCHEMA plus ``time_raw``); ``headers(name)``/``data(name)``
     are its narrow typed projections for one file format, each carrying
-    a ``run_id`` column spanning every loaded run."""
+    a ``run_id`` column spanning every loaded run. ``load_runs`` returns
+    the parsed blocks; ``operators.align.align_runs`` returns them with
+    every run's timestamps aligned and its series cut at the first
+    dissolved snapshot."""
 
     blocks: DataFrame
-    run_ids: list[str]
     is_strict: bool
 
     def headers(self, name: str) -> DataFrame:
@@ -199,4 +201,4 @@ def load_runs(
         for fname in FILE_CONFIGS
     ]
     blocks = read_blocks(spark, files, FILE_CONFIGS, is_strict=is_strict)
-    return NBody6Runs(blocks, [rid for rid, _ in runs], is_strict)
+    return NBody6Runs(blocks, is_strict)

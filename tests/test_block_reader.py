@@ -9,6 +9,7 @@ from types import SimpleNamespace
 
 import pytest
 
+from nbody6_data_pipeline_spark.functions.misc import round_half_up
 from nbody6_data_pipeline_spark.sources.block_text import (
     BlockSourceConfig,
     data_table,
@@ -200,3 +201,24 @@ def test_lax_mode_time_token_follows_spark_cast(parse, tok, want):
     (d,) = bt.data.collect()
     assert d["time"] == want and d["a"] == 10.0
 
+
+def test_duplicate_time_key_last_wins_and_rounding(spark, tmp_path):
+    """Three OUT34 blocks whose times round to two keys: the later block
+    of a key keeps its rows, and the key rounds half up (the Java
+    HALF_UP twin, also for negative values)."""
+    f = tmp_path / "OUT34"
+    lines = []
+    for t, name in [("1.0049", 11), ("1.0051", 22), ("1.005", 33)]:
+        h = ["0"] * 28
+        h[7] = t
+        lines.append("# " + " ".join(h))
+        lines.append(" ".join(["0"] * 7 + [str(name), "1"]))
+    f.write_text("\n".join(lines) + "\n")
+    data = _read(spark, str(f), OUT34_CONFIG).data
+    # 1.0049 -> 1.0 ; 1.0051 and 1.005 -> 1.01 (HALF_UP), later wins
+    assert sorted((r["time"], r["name"]) for r in data.collect()) == [
+        (1.0, 11), (1.01, 33)
+    ]
+    assert round_half_up(1.005, 2) == 1.01
+    assert round_half_up(-1.005, 2) == -1.01
+    assert round_half_up(1.0049, 2) == 1.0

@@ -9,7 +9,6 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
 from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
@@ -116,50 +115,59 @@ def test_write_parquet_leaves_session_conf(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
-def test_align_runs_executor_side_parity(spark, sim_base, monkeypatch):
-    """The applyInPandas (executor-side) alignment decision must
-    produce byte-identical aligned tables to the driver-collect path —
-    same pure ``_run_mapping``, different placement."""
-    from nbody6_data_pipeline_spark.operators import align
-    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
-
-    runs = fetch_sim_runs(sim_base)
-    pairs = [(r.label, r.path) for r in runs]
-    a = align.align_runs(load_runs(spark, pairs))
-    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
-    b = align.align_runs(load_runs(spark, pairs))
-    for fname in FILE_CONFIGS:
-        for part in ("headers", "data"):
-            da = getattr(a, part)(fname)
-            db = getattr(b, part)(fname)
-            cols = sorted(da.columns)
-            assert cols == sorted(db.columns), fname
-            ra = sorted(
-                da.select(*[F.col(c).cast("string") for c in cols]).collect()
-            )
-            rb = sorted(
-                db.select(*[F.col(c).cast("string") for c in cols]).collect()
-            )
-            assert ra == rb, f"{fname}.{part} diverged"
-
-
 def test_align_runs_executor_side_strict_error(spark, tmp_path, monkeypatch):
-    """Strict-mode timestamp violations must still raise with the
-    reference's error text when the decision runs on executors."""
+    """Strict-mode timestamp violations raise the reference's error
+    text as a plain ValueError from align_runs itself, although the
+    decision runs in an executor-side kernel."""
     from tests import nbody6_fixtures
-    from nbody6_data_pipeline_spark.operators import align
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     root = str(tmp_path / "badrun")
     monkeypatch.setitem(
         nbody6_fixtures.JITTER, "OUT9", 0.5  # way past the 2e-2 tolerance
     )
-    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
     write_run(root)
     multi = load_runs(spark, [("bad", root)])
-    with pytest.raises(Exception, match="inconsistent timestamps"):
-        aligned = align.align_runs(multi)
-        aligned.headers("OUT34").collect()
+    with pytest.raises(ValueError, match="inconsistent timestamps"):
+        align_runs(multi)
+
+
+def test_align_runs_warns_on_nonzero_first_timestamp(spark, tmp_path, monkeypatch):
+    """A run whose first aligned timestamp is not 0.0 is aligned with
+    the reference's warning (loader.py), raised on the driver."""
+    from tests import nbody6_fixtures
+    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
+
+    root = str(tmp_path / "late")
+    monkeypatch.setattr(nbody6_fixtures, "TIMES", [1.0, 2.0, 3.0])
+    write_run(root)
+    multi = load_runs(spark, [("late", root)])
+    with pytest.warns(UserWarning, match=r"First aligned timestamp is 1.0, not 0.0"):
+        aligned = align_runs(multi)
+    assert sorted(r["time"] for r in aligned.headers("OUT34").collect()) == [
+        1.0, 2.0, 3.0
+    ]
+
+
+def test_align_runs_cuts_at_first_dissolved_snapshot(spark, tmp_path):
+    """The aligned tables of a run end before its first dissolved
+    snapshot (densCentre r_tidal <= 0, assembler.py:522-527): no header
+    or data row of any file is at or after it, and a run without one
+    keeps every snapshot."""
+    from tests.nbody6_fixtures import TIMES
+    from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
+
+    gone = write_run(str(tmp_path / "gone"), dissolve_last=True)
+    kept = write_run(str(tmp_path / "kept"))
+    aligned = align_runs(load_runs(spark, [("gone", gone), ("kept", kept)]))
+    for fname in FILE_CONFIGS:
+        for part in ("headers", "data"):
+            rows = getattr(aligned, part)(fname).collect()
+            late = [r for r in rows if r["run_id"] == "gone" and r["time"] >= TIMES[-1]]
+            assert not late, (fname, part, late)
+        assert {(r["run_id"], r["time"]) for r in aligned.headers(fname).collect()} == {
+            ("kept", t) for t in TIMES
+        } | {("gone", t) for t in TIMES[:-1]}, fname
 
 
 def test_batched_load_align_constant_driver_actions(spark, sim_base):
@@ -178,7 +186,7 @@ def test_batched_load_align_constant_driver_actions(spark, sim_base):
         sc.setJobGroup(tag, "job-count probe")
         try:
             multi = load_runs(spark, [(r.label, r.path) for r in subset])
-            align_runs(multi)  # plan construction + ONE collect
+            align_runs(multi)  # plan construction + ONE checkpoint
             return len(sc.statusTracker().getJobIdsForGroup(tag))
         finally:
             sc.setJobGroup(None, None)
@@ -239,17 +247,15 @@ def test_aligned_tables_read_checkpoint_without_exchange(spark, sim_base):
             } & set(names), f"{fname}.{part}: {names}"
 
 
-def test_align_runs_executor_side_caches_nothing(spark, sim_base, monkeypatch):
+def test_align_runs_executor_side_caches_nothing(spark, sim_base):
     """The executor-side alignment leaves nothing in the session's
     cache: its mapping is read by the one checkpoint of the aligned
     table, so a persist() would only leak."""
-    from nbody6_data_pipeline_spark.operators import align
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     runs = fetch_sim_runs(sim_base)
     spark.catalog.clearCache()
-    monkeypatch.setattr(align, "EXECUTOR_ALIGN_THRESHOLD", 0)
-    align.align_runs(load_runs(spark, [(r.label, r.path) for r in runs]))
+    align_runs(load_runs(spark, [(r.label, r.path) for r in runs]))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -303,7 +309,9 @@ def _jobs(spark, tag, fn):
 def test_assemble_and_observe_job_budget(spark, sim_base):
     """Parse is one job, and assemble and observe each run one
     grouped-map kernel per snapshot into one checkpoint: at most 8 jobs
-    each on the fixture grid, whatever the number of runs or joins."""
+    each on the fixture grid, whatever the number of runs or joins.
+    Assemble is exactly its shuffle and its checkpoint: the dissolution
+    cut is made by align_runs, with no action of its own."""
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     pairs = [(r.label, r.path) for r in fetch_sim_runs(sim_base)]
@@ -312,7 +320,7 @@ def test_assemble_and_observe_job_budget(spark, sim_base):
     asm, n_asm = _jobs(spark, "budget-assemble", lambda: assemble_runs(aligned))
     _, n_obs = _jobs(spark, "budget-observe", lambda: observe(spark, asm))
     assert n_parse <= 2, n_parse
-    assert n_asm <= 8, n_asm
+    assert n_asm <= 2, n_asm
     assert n_obs <= 8, n_obs
 
 

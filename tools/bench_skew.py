@@ -13,7 +13,7 @@ disabled — at 100 TB the dim side of this pattern exceeds broadcast
 reach, which is exactly when skew bites):
 
   plain         — AQE skew-join OFF: the textbook straggler
-  plain+AQE     — Spark's own runtime skew splitting
+  plain+AQE     — Spark's own runtime skew splitting (AQE_SKEW below)
   salted        — plans/skew.salted_join (n_salts=16)
 
     python tools/bench_skew.py [n_rows]      # default 10_000_000
@@ -33,6 +33,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_KEYS = 100_000
 HOT_FRACTION = 0.3
+# AQE splits a join partition only above 256 MB and 5x the median
+# partition, by compressed shuffle bytes, into pieces of at least the
+# 64 MB advisory size. At 3M rows the hot partition is about 5 MB and
+# 1.8x the median (its repeated key compresses well), so "plain+AQE"
+# scopes all three down for its own queries.
+AQE_SKEW = {
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1MB",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.5",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1MB",
+}
 
 
 def build(spark, n_rows: int):
@@ -60,7 +70,9 @@ def spread(spark, joined):
     proxy for task-time spread (join cost is uniform per row here).
     Read with AQE coalescing off, so each task is one of the join's
     shuffle partitions (or a skew-join split of one), not a merge of
-    several small ones; skew-join splitting stays as the config set it."""
+    several small ones; skew-join splitting stays as the config set it.
+    The join reads the columns the timed query reads: AQE detects skew
+    by shuffle bytes, and a lone key column compresses to almost none."""
     from pyspark.sql import functions as F
 
     from nbody6_data_pipeline_spark.session import scoped_conf
@@ -69,29 +81,34 @@ def spread(spark, joined):
     with scoped_conf(spark, coalesce):
         parts = (
             joined.groupBy(F.spark_partition_id().alias("p"))
-            .count()
+            .agg(F.count("*").alias("count"), F.sum("payload"), F.sum("w"))
             .collect()
         )
     counts = [r["count"] for r in parts]
     return max(counts), int(sum(counts) / max(len(counts), 1))
 
 
-def run(spark, label: str, big, dim, salted: bool, aqe_skew: bool):
+def run(spark, label: str, big, dim, salted: bool, aqe_skew: dict | None):
+    """One configuration; ``aqe_skew`` None turns AQE's skew-join
+    splitting off, a dict turns it on with those confs scoped to this
+    configuration's two queries."""
     from pyspark.sql import functions as F
 
     from nbody6_data_pipeline_spark.plans.skew import salted_join
+    from nbody6_data_pipeline_spark.session import scoped_conf
 
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(aqe_skew).lower())
-    joined = (
-        salted_join(big, dim, "k")
-        if salted
-        else big.join(dim, "k")
-    )
-    agg = joined.groupBy("w").agg(F.sum("payload").alias("s"))
-    t0 = time.time()
-    n = agg.count()
-    wall = round(time.time() - t0, 2)
-    mx, mean = spread(spark, joined)
+    skew = {"spark.sql.adaptive.skewJoin.enabled": str(aqe_skew is not None).lower()}
+    with scoped_conf(spark, {**skew, **(aqe_skew or {})}):
+        joined = (
+            salted_join(big, dim, "k")
+            if salted
+            else big.join(dim, "k")
+        )
+        agg = joined.groupBy("w").agg(F.sum("payload").alias("s"))
+        t0 = time.time()
+        n = agg.count()
+        wall = round(time.time() - t0, 2)
+        mx, mean = spread(spark, joined)
     print(
         json.dumps(
             {
@@ -117,10 +134,10 @@ def main(n_rows: int):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     big, dim = build(spark, n_rows)
     # warmup compiles both join shapes
-    run(spark, "warmup", big.limit(10_000), dim, True, False)
-    run(spark, "plain", big, dim, salted=False, aqe_skew=False)
-    run(spark, "plain+AQE", big, dim, salted=False, aqe_skew=True)
-    run(spark, "salted", big, dim, salted=True, aqe_skew=False)
+    run(spark, "warmup", big.limit(10_000), dim, True, None)
+    run(spark, "plain", big, dim, salted=False, aqe_skew=None)
+    run(spark, "plain+AQE", big, dim, salted=False, aqe_skew=AQE_SKEW)
+    run(spark, "salted", big, dim, salted=True, aqe_skew=None)
     spark.stop()
 
 
