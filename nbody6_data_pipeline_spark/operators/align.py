@@ -3,152 +3,142 @@
 
 The six raw files of a run carry slightly-jittered timestamps. The
 reference aligns them by ROW INDEX: the i-th timestamp of every file
-must agree within ``tolerance`` (2e-2 Myr); all are renamed to the
+must agree within ``TOLERANCE`` (2e-2 Myr); all are renamed to the
 OUT34 reference timestamp (rounded to 2 decimals). The series then
 stops at the run's first dissolved snapshot (densCentre r_tidal <= 0).
 
-Both decisions are local to one run, so one per-run ``applyInPandas``
-kernel makes them: it gets the run's header timestamps per file (and
-densCentre's r_tidal) and returns the run's (file, old time -> ref
-time) mapping, without the dissolved snapshots. Alignment errors and
-the first-timestamp warning come back as rows of the same output, read
-on the driver by an ``Observation`` on the join. The mapping is
-joined into the generic block table ONCE and the result checkpointed —
-the same as-of/tolerance-alignment pattern as SURVEY §2.3 J10.
+Both decisions are local to one run, so ``groupBy("run_id")
+.applyInArrow`` hands each run's own block rows to ``_align_run``,
+which decides the alignment on the run's header times, rewrites every
+row's ``time`` to the reference time and drops the rows from the first
+dissolved snapshot on. Alignment errors and the first-timestamp
+warning come back as rows of the same output, read on the driver by an
+``Observation`` on the kernel's output; one ``localCheckpoint``
+materializes the aligned table (SURVEY §2.3 J10).
 """
 
 from __future__ import annotations
 
 import warnings
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
+from nbody6_data_pipeline_spark.operators.assemble import arrow_rows
+from nbody6_data_pipeline_spark.sources.block_text import token_col
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, NBody6Runs
 
 TOLERANCE = 2e-2  # Myr (reference loader.py:100)
 DENS = "densCentre.txt"
+FILES = list(FILE_CONFIGS)
 
-# old (per-file) time -> the OUT34 reference time; a row with ``error``
-# or ``warning`` set carries only run_id and that message
-MAPPING_SCHEMA = (
-    "run_id string, file string, time double, ref_time double, "
-    "error string, warning string"
+# the aligned block rows (block_text.BLOCKS_SCHEMA plus time_raw); a
+# row with ``error`` or ``warning`` set carries only run_id and that
+# message
+_OUT_DDL = (
+    "file string, run_id string, kind string, block_id bigint, "
+    "line_no bigint, line_end bigint, time double, toks array<string>, "
+    "time_raw double, error string, warning string"
 )
-_COLS = [c.split()[0] for c in MAPPING_SCHEMA.split(", ")]
 
 
-def _decide_alignment(
-    rid: str,
-    by_file: dict[str, list[float]],
-    files: list[str],
-    tolerance: float,
-    allow_trim: bool,
-) -> list[tuple[int, float]]:
+def _decide_alignment(rid: str, by_file: dict[str, list[float]]) -> list[float]:
     """The alignment decision for ONE run's sorted timestamp lists:
-    returns [(kept_row_index, ref_time)] or raises when a file parsed no
-    timestamps or the lists do not align (loader.py:143-186). The lists
-    are bounded by n_files x n_snapshots — thousands of floats — so
-    this is deliberately plain Python."""
-    missing = [f for f in files if f not in by_file]
+    returns the reference time of every row index, or raises when a
+    file parsed no timestamps or the lists do not align
+    (loader.py:143-186). The lists are bounded by n_files x
+    n_snapshots — thousands of floats — so this is deliberately plain
+    Python."""
+    missing = [f for f in FILES if f not in by_file]
     if missing:
         raise ValueError(f"Run {rid}: no timestamps parsed for {missing}.")
     ctx = f" [run {rid}]"
-    n_rows = max((len(v) for v in by_file.values()), default=0)
-    if not allow_trim:
-        counts = {f: len(v) for f, v in by_file.items()}
-        if len(set(counts.values())) > 1:
-            raise ValueError(
-                f"Timestamps count mismatch across files.{ctx} Counts: {counts}"
-            )
-        n_bad = sum(
-            1
-            for i in range(n_rows)
-            if max(by_file[f][i] for f in files) - min(by_file[f][i] for f in files)
-            > tolerance
+    counts = {f: len(by_file[f]) for f in FILES}
+    if len(set(counts.values())) > 1:
+        raise ValueError(
+            f"Timestamps count mismatch across files.{ctx} Counts: {counts}"
         )
-        if n_bad:
-            raise ValueError(
-                f"{n_bad} inconsistent timestamps found{ctx} (tolerance: {tolerance})."
-            )
-        kept = list(range(n_rows))
-    else:
-        kept = [
-            i
-            for i in range(min((len(v) for v in by_file.values()), default=0))
-            if max(by_file[f][i] for f in files) - min(by_file[f][i] for f in files)
-            <= tolerance
-        ]
-        if not kept:
-            raise ValueError(
-                f"No aligned timestamps found across all files{ctx} "
-                f"with tolerance {tolerance}."
-            )
-    return [(i, round(by_file["OUT34"][i], 2)) for i in kept]
+    n_bad = sum(
+        1
+        for row in zip(*(by_file[f] for f in FILES))
+        if max(row) - min(row) > TOLERANCE
+    )
+    if n_bad:
+        raise ValueError(
+            f"{n_bad} inconsistent timestamps found{ctx} (tolerance: {TOLERANCE})."
+        )
+    return [round(t, 2) for t in by_file["OUT34"]]
 
 
-def _align_run(pdf, files: list[str], tolerance: float, allow_trim: bool):
-    """ONE run's mapping rows from its header rows (run_id, file, time,
-    r_tidal), as MAPPING_SCHEMA: an error row when the alignment
-    decision raises; otherwise the mapping without the snapshots at or
-    after the first kept one whose densCentre r_tidal <= 0, plus a
-    warning row when the first aligned timestamp is not 0.0."""
-    import pandas as pd
-
-    rid = pdf["run_id"].iloc[0]
-    by_file = {f: sorted(g["time"]) for f, g in pdf.groupby("file", sort=False)}
+def _align_run(t: pa.Table, schema: pa.Schema) -> pa.Table:
+    """ONE run's block rows (with densCentre's ``r_tidal``) aligned, as
+    rows of ``schema``: an error row when the alignment decision raises;
+    otherwise every row with its time rewritten to the reference time,
+    without the rows at or after the first snapshot whose densCentre
+    r_tidal <= 0, plus a warning row when the first aligned timestamp is
+    not 0.0."""
+    rid = t["run_id"][0].as_py()
+    file, kind = (t[c].to_numpy(zero_copy_only=False) for c in ("file", "kind"))
+    header, time = kind == "h", t["time"].to_numpy()
+    by_file = {
+        f: sorted(time[header & (file == f)].tolist())
+        for f in np.unique(file[header])
+    }
     try:
-        kept = _decide_alignment(rid, by_file, files, tolerance, allow_trim)
+        ref = np.array(_decide_alignment(rid, by_file))
     except ValueError as e:
-        return pd.DataFrame([(rid, None, None, None, str(e), None)], columns=_COLS)
-    rows = [(f, by_file[f][i], ref_t) for i, ref_t in kept for f in files]
-    dissolved = set(pdf["time"][(pdf["file"] == DENS) & (pdf["r_tidal"] <= 0)])
-    cut = min((r for f, t, r in rows if f == DENS and t in dissolved), default=None)
-    out = [(rid, *r, None, None) for r in rows if cut is None or r[2] < cut]
-    if kept[0][1] != 0.0:
-        msg = f"First aligned timestamp is {kept[0][1]}, not 0.0. [run {rid}]"
-        out.append((rid, None, None, None, None, msg))
-    return pd.DataFrame(out, columns=_COLS)
+        return arrow_rows(schema, 1, {}, {"run_id": rid, "error": str(e)})
+    # each row takes the reference time of its block's row index; a NaN
+    # time matches no index, so its rows drop
+    ref_time = np.full(t.num_rows, np.nan)
+    for f in FILES:
+        rows = np.flatnonzero(file == f)
+        old = np.array(by_file[f])
+        i = np.minimum(np.searchsorted(old, time[rows]), len(old) - 1)
+        hit = old[i] == time[rows]
+        ref_time[rows[hit]] = ref[i[hit]]
+    dissolved = header & (file == DENS) & (t["r_tidal"].to_numpy() <= 0)
+    cut = ref_time[dissolved].min(initial=np.inf)
+    keep = ref_time < cut
+    kept = t.filter(keep)
+    out = [arrow_rows(schema, kept.num_rows, {
+        **{c: kept[c] for c in kept.column_names}, "time": ref_time[keep],
+    }, {})]
+    if ref[0] != 0.0:
+        msg = f"First aligned timestamp is {ref[0]}, not 0.0. [run {rid}]"
+        out.append(arrow_rows(schema, 1, {}, {"run_id": rid, "warning": msg}))
+    return pa.concat_tables(out)
 
 
-def align_runs(
-    runs: NBody6Runs,
-    tolerance: float = TOLERANCE,
-    allow_trim: bool = False,
-) -> NBody6Runs:
+def align_runs(runs: NBody6Runs) -> NBody6Runs:
     """Batched J10 and dissolution cut: unify timestamps for EVERY run
     and drop each run's snapshots from its first dissolved one on, in
-    one per-run kernel (``_align_run``, applyInPandas grouped by
-    run_id), so neither driver memory nor driver actions grow with the
-    run count.
+    one per-run kernel (``_align_run``, applyInArrow grouped by run_id)
+    over the run's own block rows, so neither driver memory nor driver
+    actions grow with the run count.
 
-    The mapping is joined into the block table ONCE, on (run_id, file,
-    time), for header and data rows alike, and the aligned table is
-    checkpointed; the one checkpoint is the only action that reads the
-    mapping. An ``Observation`` on the join then gives the first
-    run's error, raised here as a ``ValueError``, and each earlier
-    run's first-timestamp-not-zero warning, in run order. densCentre's
-    r_tidal is a cast of the raw token, so a bad one raises there in
-    strict mode.
+    Rows with no time are dropped first. densCentre's r_tidal is a
+    Spark cast of the raw token, added before the kernel, so a bad one
+    raises in strict mode. An ``Observation`` on the kernel's output
+    gives the first run's error, raised here as a ``ValueError``, and
+    each earlier run's first-timestamp-not-zero warning, in run order;
+    the one checkpoint of the aligned table is the only action.
     """
-    dens = runs.headers(DENS).select(
-        "run_id", F.lit(DENS).alias("file"), "time", "r_tidal"
-    )
-    times = (
-        runs.blocks.filter((F.col("kind") == "h") & (F.col("file") != DENS))
-        .select("run_id", "file", "time")
-        .unionByName(dens, allowMissingColumns=True)
-        .filter(F.col("time").isNotNull())
-    )
-    files = list(FILE_CONFIGS)
+    idx, typ = FILE_CONFIGS[DENS].header_schema["r_tidal"]
+    is_dens_header = (F.col("file") == DENS) & (F.col("kind") == "h")
+    schema = to_arrow_schema(_parse_datatype_string(_OUT_DDL))
     found = Observation("alignment")
-    mapping = times.groupBy("run_id").applyInPandas(
-        lambda pdf: _align_run(pdf, files, tolerance, allow_trim), MAPPING_SCHEMA
-    )
-    # a right join keeps the message rows (no block matches them) up to
-    # the Observation, which no empty-join rewrite can prune there
     aligned = (
-        runs.blocks.join(mapping, ["run_id", "file", "time"], "right")
+        runs.blocks.filter(F.col("time").isNotNull())
+        .withColumn("r_tidal", F.when(
+            is_dens_header, token_col(F.col("toks"), idx, typ, runs.is_strict)
+        ))
+        .groupBy("run_id")
+        .applyInArrow(lambda t: _align_run(t, schema), _OUT_DDL)
         .observe(
             found,
             F.min(F.when(F.col("error").isNotNull(), F.struct("run_id", "error")))
@@ -158,8 +148,7 @@ def align_runs(
             )).alias("warnings"),
         )
         .filter(F.col("kind").isNotNull())
-        .drop("time", "error", "warning")
-        .withColumnRenamed("ref_time", "time")
+        .drop("error", "warning")
         .localCheckpoint()
     )
     error, warns = found.get["error"], found.get["warnings"]

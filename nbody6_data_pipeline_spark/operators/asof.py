@@ -8,9 +8,10 @@ payload forward — so the cost is ONE shuffle on the by-keys and a
 partition-local sort: no range-condition join (which Spark would plan
 as a broadcast-nested-loop or an exploded inequality join, both
 quadratic shapes), and no per-key driver loop. This generalizes the
-per-run alignment join (operators/align.py, reference
-loader.py:138-200) and the windowed single-table variant
-(queries_window.py asof_join_prior_view) to two arbitrary tables.
+windowed single-table variant (queries_window.py
+asof_join_prior_view) to two arbitrary tables. The NBODY6 timestamp
+alignment (operators/align.py, reference loader.py:138-200) needs no
+as-of join: it matches by row index inside one per-run kernel.
 
 Ties: the right side is first reduced to ONE row per (by, on) — the
 maximum of the payload struct — so the match is deterministic and

@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nbody6_data_pipeline_spark.functions.misc import log_ops
+
 
 def quantile_bin(
     df: DataFrame, col: str, n: int, out_col: str | None = None
@@ -51,11 +53,9 @@ def uniform_bin(
 
 
 def apply_ops(df: DataFrame, ops_config: dict[str, str]) -> DataFrame:
-    """F22 — per-column transform before binning."""
-    fns = {"log": F.log, "log1p": F.log1p, "log10": F.log10, "sqrt": F.sqrt}
-    return df.withColumns(
-        {k: fns[op](F.col(k)) for k, op in ops_config.items() if op in fns}
-    )
+    """F22 — per-column transform before binning (``log_ops``; an
+    unknown op raises ``ValueError``)."""
+    return df.withColumns({k: log_ops(F.col(k), op) for k, op in ops_config.items()})
 
 
 def group_histograms(

@@ -4,10 +4,11 @@ collect_simulation_stats.process_all, SURVEY §3.1).
 ``process_all`` discovers the runs, skips those already complete, and
 sends every pending run through each layer as one batch: parse ->
 align -> assemble -> observe (18 coordinates) -> overall + annular
-statistics -> parquet layers + CSV export. Parse is a set-based
-Spark plan; align is a per-run grouped-map kernel keyed on ``run_id``,
-and assemble and observe are per-snapshot grouped-map kernels keyed on
-``(run_id, time)``; each layer is materialized by one checkpoint.
+statistics -> parquet layers + CSV export. Parse is one Arrow task
+per file (``mapInArrow``); align is a per-run grouped-map kernel keyed
+on ``run_id``, and assemble and observe are per-snapshot grouped-map
+kernels keyed on ``(run_id, time)``; each layer is materialized by one
+checkpoint.
 Observe's kernel also computes both statistics of each
 observed snapshot, so the statistics tables are projections of its
 checkpoint and their layer is only its writes. Each layer runs O(1)
@@ -57,9 +58,9 @@ def process_all(
     returns all discovered runs. ``is_slim`` skips persisting the raw
     (pre-observation) star tables (reference observer.py:268-273).
 
-    load_runs reads and splits every run's files once, in one scan, into
-    one checkpointed block table (its structural check rides on that
-    scan), align_runs makes every run's alignment decision and
+    load_runs reads and splits every run's files once, one Arrow task
+    per file, into one checkpointed block table (its structural check
+    rides on that scan), align_runs makes every run's alignment decision and
     dissolution cut in one per-run kernel and checkpoints the aligned
     table, assemble and observe
     each run one grouped-map kernel per snapshot into one checkpoint
@@ -88,9 +89,10 @@ def _process_pending(
 ):
     # Per-layer job descriptions: the driver loop is sequential, so the
     # description current when an ACTION fires labels every job of that
-    # layer — the scale bench (tools/bench_pipeline_scale.py) reads
-    # them back from the status REST API to attribute wall/jobs/shuffle
-    # per layer; also what you want in the Spark UI on a real cluster.
+    # layer. perfbench/spans.py reads them to attribute jobs to layers,
+    # and the scale bench (tools/bench_pipeline_scale.py) reads them
+    # back from the status REST API to attribute wall/jobs/shuffle per
+    # layer; also what you want in the Spark UI on a real cluster.
     sc = spark.sparkContext
     sc.setJobDescription("layer:parse")
     multi = load_runs(spark, [(r.label, r.path) for r in pending], is_strict=is_strict)

@@ -9,11 +9,11 @@ Empty lines are skipped everywhere; footer lines terminate a block and
 are never parsed. ``time`` (rounded to 2 decimals) keys the block;
 duplicate timestamps keep the LAST block (parser/base.py:217-223).
 
-Spark recipe (SURVEY §2.1 S1): ``read_blocks`` makes ONE
-wholeTextFiles scan over every (run, format) file of a batch; its
-flatMap runs ``split_blocks`` on each whole file, so block numbering,
-the time key and the last-wins dedup happen in the task that read the
-file — no shuffle, window or join. The result is one generic row
+Spark recipe (SURVEY §2.1 S1): ``read_blocks`` runs ONE
+``mapInArrow`` over the indices of every (run, format) file of a batch;
+the task that opens a file runs ``split_blocks`` on its whole text, so
+block numbering, the time key and the last-wins dedup happen where the
+file is read — no shuffle, window or join. The result is one generic row
 table, ``BLOCKS_SCHEMA``, materialized once with ``localCheckpoint``;
 ``header_table``/``data_table`` are narrow typed projections of it
 (S2). One NBODY6 file is single-machine-sized, and scale lives in the
@@ -23,13 +23,14 @@ run dimension.
 from __future__ import annotations
 
 import math
-import os
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nbody6_data_pipeline_spark.functions.misc import round_half_up
 
@@ -166,7 +167,7 @@ def split_blocks(content: str, cfg: BlockSourceConfig):
             yield ("d", i, line_no, None, times[i], dtoks)
 
 
-def _token_col(tokens: F.Column, idx: Index, typ: str, is_strict: bool) -> F.Column:
+def token_col(tokens: F.Column, idx: Index, typ: str, is_strict: bool) -> F.Column:
     """S2 positional token projection (parser/base.py:309-332).
 
     strict: out-of-range index or bad conversion raises (ANSI
@@ -190,7 +191,10 @@ def read_blocks(
     """Parse ``files`` (``[(run_id, file, path)]``, ``file`` a key of
     ``configs``) into ONE checkpointed generic block table.
 
-    Each file is read and split once, by one task. ``time_raw``, the
+    Each file is read and split once, by the ``mapInArrow`` task that
+    gets its index into ``files``. Its bytes decode as UTF-8 with
+    U+FFFD for each malformed sequence, as Hadoop's ``Text`` decodes
+    them; a lone "\\r" stays inside its line. ``time_raw``, the
     header's unrounded time, is a Spark cast evaluated by the
     checkpoint, so a bad time token raises there in strict mode (and
     is null in lax mode). The structural check is an ``Observation``
@@ -198,25 +202,25 @@ def read_blocks(
     raises the reference's message for the first violation (by file,
     run and line).
     """
-    by_path = {os.path.abspath(p): (rid, f) for rid, f, p in files}
+    schema = to_arrow_schema(BLOCKS_SCHEMA)
 
-    def split_file(rec):
-        path, content = rec
-        for pre in ("file:", "hdfs://"):
-            if path.startswith(pre):
-                path = "/" + path[len(pre):].lstrip("/")
-                break
-        rid, fname = by_path[os.path.abspath(path)]
-        for row in split_blocks(content, configs[fname]):
-            yield (fname, rid, *row)
+    def split_files(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                rid, fname, path = files[i]
+                with open(path, "rb") as f:
+                    text = f.read().decode("utf-8", errors="replace")
+                rows = [(fname, rid, *r) for r in split_blocks(text, configs[fname])]
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, fld.type) for c, fld in zip(zip(*rows), schema)],
+                        schema=schema,
+                    )
 
-    rdd = spark.sparkContext.wholeTextFiles(
-        ",".join(by_path), min(len(by_path), 256)
-    ).flatMap(split_file)
     time_raw = None
     for fname, cfg in configs.items():
         cond = (F.col("kind") == "h") & (F.col("file") == fname)
-        val = _token_col(F.col("toks"), *cfg.header_schema["time"], is_strict)
+        val = token_col(F.col("toks"), *cfg.header_schema["time"], is_strict)
         time_raw = F.when(cond, val) if time_raw is None else time_raw.when(cond, val)
     violations = Observation("block_violations")
     first_violation = F.when(
@@ -230,7 +234,8 @@ def read_blocks(
         ),
     )
     blocks = (
-        spark.createDataFrame(rdd, BLOCKS_SCHEMA)
+        spark.range(0, len(files), 1, min(len(files), 256))
+        .mapInArrow(split_files, BLOCKS_SCHEMA)
         .withColumn("time_raw", time_raw)
         .observe(violations, F.min(first_violation).alias("bad"))
         .localCheckpoint()
@@ -248,7 +253,7 @@ def header_table(
     the header's line span, ``time``, the typed header columns and
     ``time_raw``."""
     cols = [
-        _token_col(F.col("toks"), idx, typ, is_strict).alias(col)
+        token_col(F.col("toks"), idx, typ, is_strict).alias(col)
         for col, (idx, typ) in cfg.header_schema.items()
         if col != "time"
     ]
@@ -269,7 +274,7 @@ def data_table(
     """One row per data line of ``name``: run_id, block_id, its block's
     ``time``, line_no and the typed data columns."""
     cols = [
-        _token_col(F.col("toks"), idx, typ, is_strict).alias(col)
+        token_col(F.col("toks"), idx, typ, is_strict).alias(col)
         for col, (idx, typ) in cfg.data_schema.items()
     ]
     return blocks.filter((F.col("file") == name) & (F.col("kind") == "d")).select(

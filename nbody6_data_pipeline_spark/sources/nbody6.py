@@ -183,7 +183,7 @@ def load_runs(
     into one checkpointed block table (reference
     NBODY6DataLoader.__init__/load, loader.py:56-136).
 
-    ONE wholeTextFiles scan reads every (run, format) file of the batch
+    ONE ``mapInArrow`` reads every (run, format) file of the batch
     once, and the task that reads a file splits it into blocks
     (block_text.read_blocks). Structural validation across all runs x
     formats is an ``Observation`` on the checkpoint's scan, so the whole

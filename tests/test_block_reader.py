@@ -222,3 +222,27 @@ def test_duplicate_time_key_last_wins_and_rounding(spark, tmp_path):
     assert round_half_up(1.005, 2) == 1.01
     assert round_half_up(-1.005, 2) == -1.01
     assert round_half_up(1.0049, 2) == 1.0
+
+
+def test_reader_decodes_like_hadoop_text(spark, tmp_path):
+    """Raw bytes decode as Hadoop's ``Text`` decodes them: CRLF line
+    ends lose their "\\r", a lone "\\r" inside a line separates tokens
+    (no universal newlines), and each malformed UTF-8 sequence (a bad
+    byte, a truncated "\\xe2\\x82") becomes one U+FFFD."""
+    f = tmp_path / "crlf"
+    f.write_bytes(
+        b"# 1.0 1\r\n10.0 1\r\n20.0\r2\r\n\r\n# 2.0 \xff1\r\n"
+        b"30.0 3x\xfe\r\n40.0 \xe2\x82 \xe2\x82\xac\r\n"
+    )
+    blocks = read_blocks(spark, [("r", "f", str(f))], {"f": SIMPLE}, False)
+    rows = [tuple(r) for r in blocks.orderBy("line_no").collect()]
+    assert rows == [
+        ("f", "r", "h", 0, 1, 1, 1.0, ["1.0", "1"], 1.0),
+        ("f", "r", "d", 0, 2, None, 1.0, ["10.0", "1"], None),
+        ("f", "r", "d", 0, 3, None, 1.0, ["20.0", "2"], None),
+        ("f", "r", "h", 1, 5, 5, 2.0, ["2.0", "\ufffd1"], 2.0),
+        ("f", "r", "d", 1, 6, None, 2.0, ["30.0", "3x\ufffd"], None),
+        ("f", "r", "d", 1, 7, None, 2.0, ["40.0", "\ufffd", "\u20ac"], None),
+    ]
+    (h0, h1) = header_table(blocks, "f", SIMPLE, False).orderBy("time").collect()
+    assert (h0["n"], h1["n"]) == (1, None)

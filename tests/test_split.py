@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from nbody6_data_pipeline_spark.operators.split import (
+    apply_ops,
     quantile_bin,
     sliced_wasserstein_distance,
     stratified_group_split,
@@ -65,6 +66,17 @@ def test_split_rejects_nulls(spark):
     )
     with pytest.raises(AssertionError, match="NULL"):
         stratified_group_split(df, target_keys=["x"])
+
+
+def test_apply_ops_rejects_unknown_op(spark):
+    """F22 has one definition, ``functions.misc.log_ops``: a known op
+    transforms its column, an unknown one raises instead of leaving the
+    column as it is."""
+    df = spark.createDataFrame([(100.0, 4.0)], ["mass", "t"])
+    row = apply_ops(df, {"mass": "log10", "t": "sqrt"}).first()
+    assert (row["mass"], row["t"]) == (2.0, 2.0)
+    with pytest.raises(ValueError, match="unknown op 'log2'"):
+        apply_ops(df, {"mass": "log2"})
 
 
 def test_swd_basic_properties():

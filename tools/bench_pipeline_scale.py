@@ -12,7 +12,8 @@ shuffle metrics from the Spark status REST API.
 
 The scale claims this measures (not asserts):
 - driver JOB COUNT per layer is flat — plan-shape-bound, not
-  run-bound (the O(1)-actions contract of operators/align.py:85-90);
+  run-bound (each layer runs O(1) actions: ``align_runs`` is one
+  per-run kernel and one checkpoint, operators/align.py);
 - wall grows sub-linearly in runs (more rows through the same fixed
   shuffle count amortizes scheduling overhead);
 - per-layer shuffle bytes grow ~linearly in runs (no quadratic blowup
@@ -150,12 +151,12 @@ def bench_grid(spark, n_runs: int) -> dict:
             "coords": len(COORDS),
             "wall_sec": round(wall, 3),
             "jobs": jobs,
-            # driver-memory evidence for the round-9 executor-side
-            # alignment (>100 runs moves the per-run timestamp lists
-            # off the driver): current Python-driver RSS after the leg
-            # plus the process-lifetime peak (ru_maxrss is monotone, so
-            # only its FIRST crossing attributes; rss_mb is the
-            # per-size signal)
+            # driver-memory evidence (every run's alignment decision
+            # runs in an executor-side kernel, so driver memory should
+            # not grow with the run count): current Python-driver RSS
+            # after the leg plus the process-lifetime peak (ru_maxrss
+            # is monotone, so only its FIRST crossing attributes;
+            # rss_mb is the per-size signal)
             "driver_rss_mb": _driver_rss_mb(),
             "driver_peak_rss_mb": _driver_peak_rss_mb(),
         }
