@@ -6,6 +6,9 @@ assembler.py:589-617 (per-star hierarchy list), observer.py:185-191.
 Labels: a component group of ids [1,2] renders as ``"(1+2)"``; a
 singleton [3] as ``"3"``; a pair of groups joins with ``+`` in
 canonical order (singletons before groups, then by first id).
+The pair label has a Spark form (``hierarchy_pair_label``, the registry
+query's) and a Python form (``pair_label``, the per-snapshot kernel's);
+the hierarchy sort is Python only, since only the kernel sorts.
 """
 
 from __future__ import annotations
@@ -44,18 +47,26 @@ def hierarchy_pair_label(ids1: Column, ids2: Column) -> Column:
     )
 
 
-def sort_hierarchy(labels: Column) -> Column:
+def pair_label(ids1: list[int], ids2: list[int]) -> str:
+    """F15 in Python, for the per-snapshot kernel: the label that
+    ``hierarchy_pair_label`` builds in Spark (test_functions pins the
+    two together)."""
+
+    def group(ids):
+        joined = "+".join(map(str, sorted(ids)))
+        return f"({joined})" if len(ids) > 1 else joined
+
+    l1, l2 = group(ids1), group(ids2)
+    if (len(ids1) > 1, min(ids1)) <= (len(ids2) > 1, min(ids2)):
+        return f"{l1}+{l2}"
+    return f"{l2}+{l1}"
+
+
+def sort_hierarchy(labels: list[str]) -> list[str]:
     """F16 — sort pair labels by (length, lexicographic)
     (assembler.py:596-599): shorter labels first, ties lexicographic.
     """
-    return F.transform(
-        F.array_sort(
-            F.transform(
-                labels, lambda p: F.struct(F.length(p).alias("l"), p.alias("p"))
-            )
-        ),
-        lambda s: s.getField("p"),
-    )
+    return sorted(labels, key=lambda p: (len(p), p))
 
 
 def is_multi_system_star(hierarchy: Column, xp=SPARK) -> Column:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column
@@ -47,6 +48,9 @@ def round_half_up(x: float, digits: int) -> float:
     """Spark's ``round(x, digits)`` of one double, in Python: HALF_UP
     on the shortest decimal that round-trips (Java's Double.toString
     and Python's repr emit the same digits). ``+ 0.0`` drops the sign
-    of a zero result, which a BigDecimal does not keep."""
+    of a zero result, which a BigDecimal does not keep. NaN and the
+    infinities come back as they are, as in Spark."""
+    if not math.isfinite(x):
+        return x
     q = Decimal(1).scaleb(-digits)
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)) + 0.0

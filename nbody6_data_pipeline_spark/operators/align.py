@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from nbody6_data_pipeline_spark.operators.assemble import arrow_rows
+from nbody6_data_pipeline_spark.functions.xp import arrow_rows
 from nbody6_data_pipeline_spark.sources.block_text import token_col
 from nbody6_data_pipeline_spark.sources.nbody6 import FILE_CONFIGS, NBody6Runs
 

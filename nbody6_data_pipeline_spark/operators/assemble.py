@@ -1,22 +1,29 @@
-"""Snapshot assembly — the reference SnapshotAssembler (assembler.py),
-which builds one snapshot at a time, and so does this module.
+"""Snapshot assembly, and the per-snapshot kernel that observes what it
+assembles: the reference SnapshotAssembler (assembler.py) builds one
+snapshot at a time, and its observer loop observes that same snapshot
+(observer.py:293-322).
 
 Every run's six parsed files become ONE tagged ``unionByName`` of
 narrow typed projections (strict ANSI casts still raise in Spark);
 align_runs has already cut each run at its first dissolved snapshot.
-``groupBy("run_id", "time").applyInArrow`` hands each snapshot to
-``_assemble_snapshot``: the reference's per-timestamp dicts and loops
-over numpy arrays, with the physics helpers of ``functions/`` called on
-``xp=NUMPY``. A snapshot is local to one task, so the whole layer is one
-shuffle and one ``localCheckpoint`` (SURVEY §1.1, §3.1).
+``groupBy("run_id", "time").applyInArrow`` hands each snapshot to one
+Python call: ``_assemble_snapshot`` builds its stars, binaries and
+header (the reference's per-timestamp dicts and loops over numpy
+arrays, with the physics helpers of ``functions/`` on ``xp=NUMPY``),
+then ``observe.observe_snapshot`` observes them from every coordinate
+and computes their statistics. A snapshot is local to one task, so
+assemble and observe share one shuffle, one Arrow round trip and one
+``localCheckpoint`` (SURVEY §1.1, §3.1).
 
-The kernel returns tagged rows. ``stars``, ``binary_systems`` and
-``snapshot_headers`` (FIXTURES.md §2) are narrow projections of the
-checkpoint; the pair labels, the star hierarchies and the 4-decimal
-rounding are Spark expressions in those projections. Validation
-failures come back as rows too; an ``Observation`` on the checkpoint's
-own scan reads the first one, and ``assemble_runs`` raises it before
-anything is written.
+The kernel returns tagged rows; ``assembled_tables`` and
+``observe.observe`` are narrow projections of the checkpoint. The pair
+labels, the star hierarchies and the 4-decimal rounding of the header's
+``r_tidal`` and ``r_half_mass`` are made in the kernel, where observe
+reads them. Validation failures come back as rows too: an
+``Observation`` on the checkpoint's own scan reads the least assemble
+and observe violations, and ``assemble_runs`` raises them, assemble's
+first, before anything is written. Observe runs only on a snapshot
+that assembled cleanly.
 """
 
 from __future__ import annotations
@@ -42,13 +49,21 @@ from nbody6_data_pipeline_spark.functions.geometry import (
     within_radius_flags,
 )
 from nbody6_data_pipeline_spark.functions.hierarchy import (
-    hierarchy_pair_label,
     is_multi_system_binary,
     is_multi_system_star,
+    pair_label,
     sort_hierarchy,
 )
 from nbody6_data_pipeline_spark.functions.misc import round_half_up
-from nbody6_data_pipeline_spark.functions.xp import NUMPY
+from nbody6_data_pipeline_spark.functions.xp import NUMPY, arrow_rows
+from nbody6_data_pipeline_spark.operators.observe import (
+    BIN_FIELDS,
+    OBSERVED_DDL,
+    default_observer_coordinates,
+    least_violation,
+    observe_snapshot,
+    raise_violation,
+)
 from nbody6_data_pipeline_spark.sources.nbody6 import NBody6Runs
 
 KEY = ["run_id", "time"]
@@ -74,15 +89,15 @@ _DUP, _MISSING_ATTR, _MISSING_PV, _MISSING_COMP = range(4)
 
 # input tags: one per (file, header/data) projection
 _DENS, _HDR34, _PV, _BIN9, _BIN19, _ATTR82, _ATTR83 = range(7)
-# output tags
+# output tags; observe's rows follow (operators/observe.py)
 _STAR, _BIN, _HDR, _VIOL = range(4)
 
-_OUT_DDL = """
+SNAPSHOT_DDL = """
     _tag tinyint, run_id string, time double,
-    name bigint, x double, y double, z double, vx double, vy double,
-    vz double, mass double, log_T_eff_K double, log_L_L_sol double,
-    log_R_R_sol double, _h1 array<array<bigint>>, _h2 array<array<bigint>>,
-    obj1_name bigint, obj2_name bigint, obj1_ids array<bigint>,
+    name bigint, is_binary boolean, hierarchy array<string>, x double,
+    y double, z double, vx double, vy double, vz double, mass double,
+    log_T_eff_K double, log_L_L_sol double, log_R_R_sol double,
+    pair string, obj1_name bigint, obj2_name bigint, obj1_ids array<bigint>,
     obj2_ids array<bigint>, ecc double, semi double,
     log_period_days double, obj1_masses array<double>,
     obj2_masses array<double>, obj1_total_mass double,
@@ -101,27 +116,8 @@ _OUT_DDL = """
     n_binary_system_within_2x_r_tidal int,
     nzero int, rbar double, vstar double, rtide double,
     plummer_mass double, rd array<double>, rcm array<double>,
-    rg array<double>, vg array<double>, _kind tinyint
-"""
-
-
-def arrow_rows(schema: pa.Schema, n: int, cols: dict, const: dict) -> pa.Table:
-    """An ``n``-row table of ``schema``: ``cols`` are per-row values
-    (arrays or lists; numpy NaN becomes null), ``const`` one value
-    repeated; every other column is null."""
-    arrays = []
-    for f in schema:
-        if f.name in const:
-            arrays.append(pa.repeat(pa.scalar(const[f.name], f.type), n))
-        elif f.name in cols:
-            v = cols[f.name]
-            if isinstance(v, (pa.Array, pa.ChunkedArray)):
-                arrays.append(v.cast(f.type))
-            else:
-                arrays.append(pa.array(v, type=f.type, from_pandas=True))
-        else:
-            arrays.append(pa.nulls(n, f.type))
-    return pa.Table.from_arrays(arrays, schema=schema)
+    rg array<double>, vg array<double>, _kind tinyint,
+""" + OBSERVED_DDL
 
 
 def _seq_sum(vals) -> float | None:
@@ -142,36 +138,12 @@ def _mean(vals: list) -> float | None:
     return None if s is None or not vals else s / len(vals)
 
 
-def tagged_union(*parts: tuple) -> DataFrame:
-    """One table of ``(df, tag, *cols)`` parts: each part's ``cols``
-    keyed by snapshot and tagged ``_src``, other columns null."""
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
-        df.select(*KEY, F.lit(tag).cast("tinyint").alias("_src"), *cols)
-        for df, tag, *cols in parts
-    ])
-
-
-def snapshot_checkpoint(rows: DataFrame, kernel, ddl: str, violation) -> tuple:
-    """``kernel(table, schema)`` on every ``(run_id, time)`` snapshot of
-    ``rows``, materialized by one ``localCheckpoint``. Returns the
-    checkpoint and the least ``violation`` struct over its rows tagged
-    ``_VIOL`` (None when there are none), read by an ``Observation``
-    on the checkpoint's own scan."""
-    schema = to_arrow_schema(_parse_datatype_string(ddl))
-    first = Observation("violations")
-    out = (
-        rows.groupBy(*KEY)
-        .applyInArrow(lambda t: kernel(t, schema), ddl)
-        .observe(first, F.min(F.when(F.col("_tag") == _VIOL, violation)).alias("bad"))
-        .localCheckpoint()
-    )
-    return out, first.get["bad"]
-
-
-def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Table:
-    """One snapshot (reference assembler.py ``_assemble``): stars,
-    binaries, the header and the validation violations, as tagged rows
-    of ``schema``."""
+def _assemble_snapshot(t: pa.Table, schema: pa.Schema,
+                       is_strict: bool) -> pa.Table | tuple[pa.Table, ...]:
+    """One snapshot (reference assembler.py ``_assemble``): its stars,
+    binaries and header as three tables of tagged rows of ``schema``,
+    or one table of its validation violations (empty when there is no
+    snapshot to assemble)."""
     # file order: duplicates resolve the same way at any partitioning
     t = t.sort_by("line_no")
     src = t.column("_src").to_numpy()
@@ -307,37 +279,43 @@ def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Ta
     is_multi = is_multi_system_binary(obj1, obj2, xp=NUMPY)
     is_wide = is_wide_binary(semi, xp=NUMPY)
     # the reference rounds r_half_mass to 4 decimals BEFORE the Heggie
-    # threshold (assembler.py star stats dict)
-    is_hard = is_hard_binary(semi, round_half_up(r_hm, 4), n_within2, xp=NUMPY)
+    # threshold (assembler.py star stats dict); the header and observe
+    # read the rounded value too
+    r_hm4 = round_half_up(r_hm, 4)
+    is_hard = is_hard_binary(semi, r_hm4, n_within2, xp=NUMPY)
     # J8: top-level = sorted(all components) is no system's obj1/obj2
     # ids (assembler.py:438-451)
     members = set(obj1) | set(obj2)
     top = [tuple(sorted(a + b)) not in members for a, b in zip(obj1, obj2)]
+    # F15: the pair labels (assembler.py:260-287)
+    pair = [pair_label(a, b) for a, b in zip(obj1, obj2)]
     nb = len(keep)
     bin_rows = arrow_rows(schema, nb, {
         **bins,
         "obj1_name": [braw["name1"][b] for b in keep],
         "obj2_name": [braw["name2"][b] for b in keep],
-        "obj1_ids": obj1, "obj2_ids": obj2,
+        "pair": pair, "obj1_ids": obj1, "obj2_ids": obj2,
         "ecc": bval["ecc"], "semi": semi, "log_period_days": bval["p"],
         "is_multi_system": is_multi, "is_top_level": top,
         "is_wide_binary_system": is_wide, "is_hard_binary_system": is_hard,
     }, {**const, "_tag": _BIN})
 
-    # A1/J7: each star's systems, in binary order with repeats; the pair
-    # labels and their (length, label) sort are Spark expressions
-    # (assembler.py:583-617)
-    systems: dict[int, list[int]] = {}
+    # A1/J7/F16: each star's hierarchy, the labels of its systems in
+    # binary order with repeats, then its own name, by (length, label);
+    # a star in no system is just its name (assembler.py:583-617)
+    systems: dict[int, list[str]] = {}
     for b, (o1, o2) in enumerate(zip(obj1, obj2)):
         for i in o1 + o2:
-            systems.setdefault(i, []).append(b)
+            systems.setdefault(i, []).append(pair[b])
     in_sys = [systems.get(int(n)) for n in names]
+    hierarchy = [[str(n)] if s is None else sort_hierarchy([*s, str(n)])
+                 for n, s in zip(names, in_sys)]
     star_rows = arrow_rows(schema, len(names), {
         "name": names, **pos, "mass": mass,
         "log_T_eff_K": tempe, "log_L_L_sol": zlum, "log_R_R_sol": rad,
         "dist_dc_pc": dist, "dist_dc_r_half_mass": ratio_hm, **flags,
-        "_h1": [None if s is None else [obj1[b] for b in s] for s in in_sys],
-        "_h2": [None if s is None else [obj2[b] for b in s] for s in in_sys],
+        "is_binary": [s is not None for s in in_sys], "hierarchy": hierarchy,
+        "is_multi_system": is_multi_system_star(hierarchy, xp=NUMPY),
     }, {**const, "_tag": _STAR})
 
     # A2 + binary counts + OUT34 header (assembler.py:226-246, 461-514)
@@ -350,7 +328,8 @@ def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Ta
         is_multi, is_hard, is_wide,
         bins["is_within_r_tidal"], bins["is_within_2x_r_tidal"])]
     stats = {
-        "density_center": dc, "r_tidal": r_tidal, "r_half_mass": r_hm,
+        "density_center": dc,
+        "r_tidal": round_half_up(r_tidal, 4), "r_half_mass": r_hm4,
         "n_stars_within_r_tidal": int((ratio <= 1).sum()),
         "n_stars_within_2x_r_tidal": n_within2,
         "total_mass": total(slice(None)),
@@ -368,13 +347,26 @@ def _assemble_snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool) -> pa.Ta
     hdr_rows = arrow_rows(schema, max(h34.num_rows, 1), {
         c: h34.column(c) for c in hdr_cols if h34.num_rows
     }, {**const, **stats, "_tag": _HDR})
-    return pa.concat_tables([star_rows, bin_rows, hdr_rows])
+    return star_rows, bin_rows, hdr_rows
+
+
+def _snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool, is_slim: bool,
+              coords: np.ndarray) -> pa.Table:
+    """The kernel: one snapshot assembled, then observed from every
+    coordinate when it assembled cleanly. ``is_slim`` leaves the
+    assembled stars and binaries out."""
+    asm = _assemble_snapshot(t, schema, is_strict)
+    if isinstance(asm, pa.Table):
+        return asm
+    stars, bins, hdr = asm
+    out = [hdr, observe_snapshot(stars, bins, hdr, schema, coords)]
+    return pa.concat_tables(out if is_slim else [stars, bins, *out])
 
 
 def _snapshot_rows(runs: NBody6Runs) -> DataFrame:
     """The tagged union of the six files' typed projections; the aligned
     runs already end before their first dissolved snapshot."""
-    return tagged_union(
+    parts = [
         (runs.headers("densCentre.txt"), _DENS, "r_tidal", "density_center"),
         (runs.headers("OUT34"), _HDR34, "nzero", "rbar", "vstar",
          "rtide", "plummer_mass", "rd", "rcm", "rg", "vg"),
@@ -388,13 +380,21 @@ def _snapshot_rows(runs: NBody6Runs) -> DataFrame:
          *[f"{a}{i}" for a in ("mass", "zlum", "rad", "tempe") for i in (1, 2)]),
         (runs.data("fort.83"), _ATTR83, "line_no", "name",
          "mass", "zlum", "rad", "tempe"),
-    ).filter(F.col("time").isNotNull())
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
+        df.select(*KEY, F.lit(tag).cast("tinyint").alias("_src"), *cols)
+        for df, tag, *cols in parts
+    ]).filter(F.col("time").isNotNull())
 
 
-def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
-    """Assemble stars / binary_systems / snapshot_headers for every run
-    in ``runs``: one grouped-map kernel per snapshot, one checkpoint for
-    the whole batch.
+def assemble_runs(runs: NBody6Runs, is_strict: bool = True,
+                  coordinates: list[tuple] | None = None,
+                  is_slim: bool = False) -> DataFrame:
+    """Assemble every snapshot of ``runs``, then observe it from every
+    coordinate: one grouped-map kernel per snapshot, one checkpoint for
+    the whole batch. Returns the checkpoint, which ``assembled_tables`` and
+    ``observe.observe`` project; ``is_slim`` leaves the assembled stars
+    and binaries out of it.
 
     Validation follows the reference: duplicate attr names always raise
     (assembler.py:130-134); in strict mode, names missing across file
@@ -404,90 +404,58 @@ def assemble_runs(runs: NBody6Runs, is_strict: bool = True) -> AssembledTables:
     timestamp, assembler.py:522-527, 698-704) is made by
     ``align_runs``, so ``runs`` holds only the snapshots to assemble.
     """
-    out, bad = snapshot_checkpoint(
-        _snapshot_rows(runs),
-        lambda t, schema: _assemble_snapshot(t, schema, is_strict),
-        _OUT_DDL,
-        F.struct("_kind", *KEY, "name"),
+    coords = np.array(coordinates or default_observer_coordinates(), dtype=float).reshape(-1, 3)
+    schema = to_arrow_schema(_parse_datatype_string(SNAPSHOT_DDL))
+    found = Observation("violations")
+    # the least violation by (kind, run, time, name), name a bigint
+    first = F.when(F.col("_tag") == _VIOL, F.struct("_kind", *KEY, "name"))
+    out = (
+        _snapshot_rows(runs).groupBy(*KEY)
+        .applyInArrow(lambda t: _snapshot(t, schema, is_strict, is_slim, coords),
+                      SNAPSHOT_DDL)
+        .observe(found, F.min(first).alias("assemble"),
+                 least_violation().alias("observe"))
+        .localCheckpoint()
     )
-    if bad is not None:
-        raise ValueError(_VIOLATIONS[bad["_kind"]].format(**bad.asDict()))
+    bad = found.get
+    if bad["assemble"] is not None:
+        raise ValueError(_VIOLATIONS[bad["assemble"]["_kind"]].format(
+            **bad["assemble"].asDict()))
+    raise_violation(bad["observe"])
+    return out
 
+
+def assembled_tables(rows: DataFrame) -> AssembledTables:
+    """stars / binary_systems / snapshot_headers (FIXTURES.md §2):
+    narrow projections of ``assemble_runs``' checkpoint ``rows``."""
     tag = F.col("_tag")
-    name = F.col("name").cast("string")
-    stars = out.filter(tag == _STAR).withColumn(
-        "hierarchy",
-        F.when(F.col("_h1").isNull(), F.array(name)).otherwise(
-            sort_hierarchy(F.concat(
-                F.zip_with("_h1", "_h2", hierarchy_pair_label), F.array(name)
-            ))
-        ),
-    ).select(
-        *KEY,
-        "name",
-        F.col("_h1").isNotNull().alias("is_binary"),
-        is_multi_system_star(F.col("hierarchy")).alias("is_multi_system"),
-        "hierarchy",
-        "x", "y", "z", "vx", "vy", "vz",
-        "mass",
-        "log_T_eff_K",
-        "log_L_L_sol",
-        "log_R_R_sol",
-        "dist_dc_pc",
-        "dist_dc_r_tidal",
-        "dist_dc_r_half_mass",
-        "is_within_r_tidal",
-        "is_within_2x_r_tidal",
+    # never NULL in these rows; a literal fallback keeps them non-nullable
+    # in the layers' schemas
+    stars = rows.filter(tag == _STAR).select(
+        *KEY, "name", F.coalesce("is_binary", F.lit(False)).alias("is_binary"),
+        "is_multi_system", "hierarchy", "x", "y", "z", "vx", "vy", "vz", "mass",
+        "log_T_eff_K", "log_L_L_sol", "log_R_R_sol", "dist_dc_pc", "dist_dc_r_tidal",
+        "dist_dc_r_half_mass", "is_within_r_tidal", "is_within_2x_r_tidal",
     )
-    bins = out.filter(tag == _BIN).select(
-        *KEY,
-        hierarchy_pair_label(F.col("obj1_ids"), F.col("obj2_ids")).alias("pair"),
-        "obj1_name", "obj2_name",
-        "obj1_ids", "obj2_ids",
-        "ecc", "semi", "log_period_days",
-        "obj1_masses", "obj2_masses",
-        "obj1_total_mass", "obj2_total_mass",
-        "obj1_dist_dc_pc", "obj2_dist_dc_pc",
-        "is_multi_system",
-        "is_top_level",
-        "is_wide_binary_system",
-        "is_hard_binary_system",
-        "dist_dc_pc",
-        "dist_dc_r_tidal",
-        "dist_dc_r_half_mass",
-        "is_within_r_tidal",
-        "is_within_2x_r_tidal",
-    )
+    bins = rows.filter(tag == _BIN).select(
+        *KEY, F.coalesce("pair", F.lit("")).alias("pair"), *BIN_FIELDS[1:])
     round4 = lambda v: F.round(v, 4)  # noqa: E731
-    headers = out.filter(tag == _HDR).select(
-        *KEY,
-        "density_center",
-        round4("r_tidal").alias("r_tidal"),
-        round4("r_half_mass").alias("r_half_mass"),
-        "n_stars_within_r_tidal",
-        "n_stars_within_2x_r_tidal",
-        round4("total_mass").alias("total_mass"),
-        round4("total_mass_within_r_tidal").alias("total_mass_within_r_tidal"),
-        round4("total_mass_within_2x_r_tidal").alias("total_mass_within_2x_r_tidal"),
+    headers = rows.filter(tag == _HDR).select(
+        *KEY, "density_center", "r_tidal", "r_half_mass",
+        "n_stars_within_r_tidal", "n_stars_within_2x_r_tidal",
+        *[round4(c).alias(c) for c in ("total_mass", "total_mass_within_r_tidal",
+                                       "total_mass_within_2x_r_tidal")],
         # NULL (not 0) when a snapshot has no binary rows — the
         # reference's header dict simply lacks these keys then
         # (assembler.py:346-348), surfacing as NaN in stacked stats.
-        "n_binary_system",
-        "n_multi_system",
-        "n_hard_binary_system",
-        "n_wide_binary_system",
-        "n_binary_system_within_r_tidal",
+        "n_binary_system", "n_multi_system", "n_hard_binary_system",
+        "n_wide_binary_system", "n_binary_system_within_r_tidal",
         "n_binary_system_within_2x_r_tidal",
         round4("rtide").alias("r_tidal_OUT34"),
         F.transform("rd", round4).alias("density_center_OUT34"),
         F.transform("rcm", round4).alias("mass_center_OUT34"),
-        F.transform("rg", lambda v: round4(v * F.col("rbar"))).alias(
-            "galactic_pos_OUT34"
-        ),
-        F.transform("vg", lambda v: round4(v * F.col("vstar"))).alias(
-            "galactic_vel_OUT34"
-        ),
-        "nzero",
-        F.col("plummer_mass").alias("plummer_mass_OUT34"),
+        F.transform("rg", lambda v: round4(v * F.col("rbar"))).alias("galactic_pos_OUT34"),
+        F.transform("vg", lambda v: round4(v * F.col("vstar"))).alias("galactic_vel_OUT34"),
+        "nzero", F.col("plummer_mass").alias("plummer_mass_OUT34"),
     )
     return AssembledTables(stars=stars, binary_systems=bins, snapshot_headers=headers)

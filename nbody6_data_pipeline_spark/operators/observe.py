@@ -8,25 +8,25 @@ top-level unresolved system by one photocentric merged source.
 
 The reference loops ``for coord: for ts:`` (observer.py:276-327), and
 only the offset frame, the observed distance and the resolvability
-test depend on the observer. Here the assembled stars, binaries and
-headers of a snapshot go to one ``groupBy("run_id", "time")
-.applyInArrow`` call, ``_observe_snapshot``, which computes all
-observers of the snapshot in one vectorised pass (observers x stars
-arrays) with the physics helpers of ``functions/`` on ``xp=NUMPY``,
-then each observer's overall and annular statistics of those rows
-(``operators/statistics.py``), as the reference computes them right
-after observing a snapshot. Its tagged output rows are materialized by
-one ``localCheckpoint``. Output tags: ``_STAR`` and ``_BIN`` (observed
-stars and binaries), ``_OVERALL`` (one row per observer that sees a
-star) and ``_ANNULAR`` (one row per annular bin), whose values are
-packed in ``_stats``, and ``_VIOL``. Every table ``observe`` returns is
-a narrow projection of the checkpoint.
+test depend on the observer. ``observe_snapshot`` is the observe half
+of the per-snapshot kernel that ``assemble_runs`` runs: it takes the
+stars, binaries and header that ``_assemble_snapshot`` has just built
+for a snapshot, as Arrow tables, and computes all observers of it in
+one vectorised pass (observers x stars arrays) with the physics helpers
+of ``functions/`` on ``xp=NUMPY``, then each observer's overall and
+annular statistics of those rows (``operators/statistics.py``), as the
+reference computes them right after observing a snapshot. Output tags:
+``_STAR`` and ``_BIN`` (observed stars and binaries), ``_OVERALL`` (one
+row per observer that sees a star) and ``_ANNULAR`` (one row per
+annular bin), whose values are packed in ``_stats``, and ``_VIOL``.
+``observe`` returns narrow projections of the kernel's checkpoint and
+runs no job of its own.
 
 The recursive merge (observer.py:88-171) flattens to TWO merge levels
 because ``_fetch_attrs`` only accepts component groups of size 1 or 2
 (observer.py:117-127): merge each side's pair (if size 2), then merge
 the two sides. A larger unresolved group comes back as a violation
-row, which an ``Observation`` on the checkpoint reads, and ``observe``
+row, which the checkpoint's ``Observation`` reads, and ``assemble_runs``
 raises it.
 """
 
@@ -35,7 +35,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.functions.astro import offset_frame_columns
@@ -44,12 +44,9 @@ from nbody6_data_pipeline_spark.functions.binary import (
     calc_total_mass, is_unresolved_binary,
 )
 from nbody6_data_pipeline_spark.functions.geometry import dist_to_center, within_radius_flags
-from nbody6_data_pipeline_spark.functions.hierarchy import is_multi_system_star
+from nbody6_data_pipeline_spark.functions.hierarchy import is_multi_system_star, sort_hierarchy
 from nbody6_data_pipeline_spark.functions.star import calc_log_effective_temperature_K
-from nbody6_data_pipeline_spark.functions.xp import NUMPY
-from nbody6_data_pipeline_spark.operators.assemble import (
-    AssembledTables, arrow_rows, snapshot_checkpoint, tagged_union,
-)
+from nbody6_data_pipeline_spark.functions.xp import NUMPY, arrow_rows
 from nbody6_data_pipeline_spark.operators.statistics import snapshot_statistics
 
 KEY = ["run_id", "time"]
@@ -66,7 +63,8 @@ _DIST_FIELDS = [
     "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass",
     "is_within_r_tidal", "is_within_2x_r_tidal",
 ]
-_BIN_FIELDS = [
+# the assembled binaries' columns, in the assembled_binary_systems order
+BIN_FIELDS = [
     "pair", "obj1_name", "obj2_name", "obj1_ids", "obj2_ids",
     "ecc", "semi", "log_period_days", "obj1_masses", "obj2_masses",
     "obj1_total_mass", "obj2_total_mass", "obj1_dist_dc_pc", "obj2_dist_dc_pc",
@@ -77,36 +75,24 @@ _FRAME_FIELDS = [
     "lon_deg", "lat_deg", "pm_lon_coslat_mas_yr", "pm_lat_mas_yr",
     "dist_pc", "rv_kms",
 ]
+# after the name, which the kernel's rows hold in observed_name
 _STAR_OUT = [
-    "name", *OKEY, "is_binary", "is_multi_system", "is_unresolved_binary",
+    *OKEY, "is_binary", "is_multi_system", "is_unresolved_binary",
     "is_within_r_tidal", "is_within_2x_r_tidal", "hierarchy",
     "x", "y", "z", "vx", "vy", "vz", "mass", "log_T_eff_K", "log_L_L_sol", "log_R_R_sol",
     "dist_dc_pc", "dist_dc_r_tidal", "dist_dc_r_half_mass", *_FRAME_FIELDS,
 ]
 
-# input and output tags
-_STAR, _BIN, _HDR, _VIOL, _OVERALL, _ANNULAR = range(6)
+# output tags, after the four of assemble's rows (operators/assemble.py)
+_STAR, _BIN, _VIOL, _OVERALL, _ANNULAR = range(4, 9)
 
-_OUT_DDL = """
-    _tag tinyint, run_id string, time double,
-    obs_x double, obs_y double, obs_z double,
-    name string, is_binary boolean, is_multi_system boolean,
-    is_unresolved_binary boolean, is_within_r_tidal boolean,
-    is_within_2x_r_tidal boolean, hierarchy array<string>,
-    x double, y double, z double, vx double, vy double, vz double,
-    mass double, log_T_eff_K double, log_L_L_sol double, log_R_R_sol double,
-    dist_dc_pc double, dist_dc_r_tidal double, dist_dc_r_half_mass double,
-    lon_deg double, lat_deg double, pm_lon_coslat_mas_yr double,
-    pm_lat_mas_yr double, dist_pc double, rv_kms double,
-    pair string, obj1_name bigint, obj2_name bigint,
-    obj1_ids array<bigint>, obj2_ids array<bigint>,
-    ecc double, semi double, log_period_days double,
-    obj1_masses array<double>, obj2_masses array<double>,
-    obj1_total_mass double, obj2_total_mass double,
-    obj1_dist_dc_pc double, obj2_dist_dc_pc double,
-    is_top_level boolean, is_wide_binary_system boolean,
-    is_hard_binary_system boolean,
-    dist_obs_pc double, is_unresolved_binary_system boolean,
+# the columns observe's rows add to the snapshot kernel's output; the
+# assembled columns (operators/assemble.py) hold the rest
+OBSERVED_DDL = """
+    obs_x double, obs_y double, obs_z double, observed_name string,
+    is_unresolved_binary boolean, lon_deg double, lat_deg double,
+    pm_lon_coslat_mas_yr double, pm_lat_mas_yr double, dist_pc double,
+    rv_kms double, dist_obs_pc double, is_unresolved_binary_system boolean,
     dist_key string, _stats array<double>
 """
 
@@ -165,10 +151,16 @@ def _frame(coords: np.ndarray, s: dict) -> dict:
     )
 
 
-def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Table:
-    """All observers of one snapshot: the rows of ``_observed_rows``,
-    then each observer's overall and annular statistics of them."""
-    out = _observed_rows(t, schema, coords)
+def observe_snapshot(stars: pa.Table, bins: pa.Table, hdr: pa.Table,
+                     schema: pa.Schema, coords: np.ndarray) -> pa.Table:
+    """All observers of one assembled snapshot: the rows of
+    ``_observed_rows`` for its stars and binaries within 2x r_tidal (P4
+    pre-filter), then each observer's overall and annular statistics
+    of them."""
+    header = {c: hdr.column(c)[0].as_py()
+              for c in (*KEY, "density_center", "r_tidal", "r_half_mass")}
+    within = [t.filter(t.column("is_within_2x_r_tidal")) for t in (stars, bins)]
+    out = _observed_rows(*within, header, schema, coords)
     tags = out.column("_tag").to_numpy()
     stars, bins = (out.filter(pa.array(tags == tag)) for tag in (_STAR, _BIN))
     if stars.num_rows == 0:
@@ -177,9 +169,7 @@ def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.
     xyz = [np.column_stack([x.column(c).to_numpy() for c in OBS]) for x in (stars, bins)]
     obs, group = np.unique(np.concatenate(xyz), axis=0, return_inverse=True)
     group = group.ravel()
-    hdr = t.filter(pa.array(t.column("_src").to_numpy() == _HDR))
-    header = {c: hdr.column(c)[0].as_py() for c in ("r_tidal", "r_half_mass")}
-    const = {c: stars.column(c)[0].as_py() for c in KEY}
+    const = {c: header[c] for c in KEY}
     stats = snapshot_statistics(stars, group[:stars.num_rows], bins,
                                 group[stars.num_rows:], len(obs), header)
     return pa.concat_tables([out] + [
@@ -189,18 +179,17 @@ def _observe_snapshot(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.
     ])
 
 
-def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Table:
-    """All observers of one snapshot: observed stars (singles, resolved
-    members, merged unresolved systems), observed binaries and
-    violations, as tagged rows of ``schema``."""
-    src = t.column("_src").to_numpy()
-    stars, bins, hdr = (t.filter(pa.array(src == tag)) for tag in (_STAR, _BIN, _HDR))
+def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
+                   schema: pa.Schema, coords: np.ndarray) -> pa.Table:
+    """All observers of one snapshot's ``stars`` and ``bins``: observed
+    stars (singles, resolved members, merged unresolved systems),
+    observed binaries and violations, as tagged rows of ``schema``."""
     # one order at any partitioning: every sum below runs in it
     stars = stars.sort_by("name")
     bins = bins.sort_by([(c, "ascending") for c in ("pair", "obj1_name", "obj2_name")])
     if stars.num_rows == 0:
         return schema.empty_table()
-    const = {"run_id": t.column("run_id")[0].as_py(), "time": t.column("time")[0].as_py()}
+    const = {c: header[c] for c in KEY}
     n_obs, n_star, n_bin = len(coords), stars.num_rows, bins.num_rows
 
     # F16 trim: keep hierarchy entries that are surviving pairs or
@@ -255,7 +244,7 @@ def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Tab
 
     bo, bb = np.divmod(np.arange(n_obs * n_bin), max(n_bin, 1))
     tables = [arrow_rows(schema, len(bb), {
-        **{f: bins.column(f).take(bb) for f in _BIN_FIELDS},
+        **{f: bins.column(f).take(bb) for f in BIN_FIELDS},
         **obs_cols(bo),
         "dist_obs_pc": dist_obs[bo, bb],
         "is_unresolved_binary_system": pa.array(unres[bo, bb], mask=~known[bo, bb]),
@@ -270,7 +259,7 @@ def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Tab
     ro, rj = np.nonzero(resolved)
     o, j = np.concatenate([so, ro]), np.concatenate([sj, rj])
     tables.append(arrow_rows(schema, len(j), {
-        "name": stars.column("name").cast(pa.string()).take(j),
+        "observed_name": stars.column("name").cast(pa.string()).take(j),
         "hierarchy": pa.array(hierarchy, pa.list_(pa.string())).take(j),
         "is_binary": np.arange(len(j)) >= len(so),
         "is_multi_system": is_multi[j],
@@ -291,10 +280,10 @@ def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Tab
     n_members = inc.sum(1)
     strict = subset & (n_members[:, None] < n_members[None, :])
     top = unres & ((unres.astype(np.int64) @ strict.T.astype(np.int64)) == 0)
-    if hdr.num_rows == 0 or not top.any():
+    if not top.any():
         return pa.concat_tables(tables)
 
-    h = {c: hdr.column(c)[0].as_py() for c in ("density_center", "r_tidal", "r_half_mass")}
+    h = {c: header[c] for c in ("density_center", "r_tidal", "r_half_mass")}
     h["density_center"] = np.array(h["density_center"] or [None] * 3, dtype=float)
     h = {k: np.nan if v is None else v for k, v in h.items()}
     cand = np.flatnonzero(top.any(0))
@@ -327,12 +316,12 @@ def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Tab
         key = (b, *subs)
         if key not in labels:
             lab = {str(n) for n in ids[b]} | {pair[c] for c in subs if pair[c] is not None}
-            labels[key] = sorted(lab, key=lambda p: (len(p), p))
+            labels[key] = sort_hierarchy(lab)
         hier.append(labels[key])
     mask = ~ok[tc]
     pos = {f: merged[f][tc] for f in ("x", "y", "z", "vx", "vy", "vz")}
     tables.append(arrow_rows(schema, len(tb), {
-        "name": [pair[b] for b in tb],
+        "observed_name": [pair[b] for b in tb],
         "hierarchy": hier,
         "is_binary": np.ones(len(tb), bool),
         "is_multi_system": n_members[tb] > 2,
@@ -344,31 +333,32 @@ def _observed_rows(t: pa.Table, schema: pa.Schema, coords: np.ndarray) -> pa.Tab
     return pa.concat_tables(tables)
 
 
-def observe(spark: SparkSession, assembled: AssembledTables,
-            coordinates: list[tuple] | None = None) -> ObservedTables:
-    """Observe every assembled snapshot from every coordinate: one
-    grouped-map kernel per snapshot, one checkpoint for the batch."""
-    coords = np.array(coordinates or default_observer_coordinates(), dtype=float)
-    # P4 pre-filter: stars and systems within 2x r_tidal
-    rows = tagged_union(
-        (assembled.stars.filter("is_within_2x_r_tidal"), _STAR,
-         "name", "hierarchy", *_ATTR_FIELDS, *_DIST_FIELDS),
-        (assembled.binary_systems.filter("is_within_2x_r_tidal"), _BIN, *_BIN_FIELDS),
-        (assembled.snapshot_headers, _HDR, "density_center", "r_tidal", "r_half_mass"),
-    )
-    out, bad = snapshot_checkpoint(
-        rows, lambda t, schema: _observe_snapshot(t, schema, coords.reshape(-1, 3)),
-        _OUT_DDL, F.struct("obj1_ids", "obj2_ids"),
-    )
+def least_violation() -> Column:
+    """The least component-size violation among the kernel's rows: the
+    aggregate that ``assemble_runs``' Observation reads."""
+    return F.min(F.when(F.col("_tag") == _VIOL, F.struct("obj1_ids", "obj2_ids")))
+
+
+def raise_violation(bad) -> None:
+    """Raise ``least_violation``'s row ``bad``, if there is one: a side
+    of more than 2 ids cannot be merged (observer.py:127)."""
     if bad is not None:
         raise ValueError(
             f"Unsupported unresolved component size: {bad['obj1_ids']}/{bad['obj2_ids']}")
+
+
+def observe(rows: DataFrame) -> ObservedTables:
+    """The observed stars and binaries and the packed statistics rows
+    of every snapshot, from every coordinate: narrow projections of the
+    snapshot checkpoint ``assemble_runs`` returns, with no job of their
+    own."""
     tag = F.col("_tag")
     return ObservedTables(
-        stars=out.filter(tag == _STAR).select(*_STAR_OUT),
-        binary_systems=out.filter(tag == _BIN).select(
-            *KEY, *_BIN_FIELDS, *OBS, "dist_obs_pc", "is_unresolved_binary_system",
+        stars=rows.filter(tag == _STAR).select(
+            F.col("observed_name").alias("name"), *_STAR_OUT),
+        binary_systems=rows.filter(tag == _BIN).select(
+            *KEY, *BIN_FIELDS, *OBS, "dist_obs_pc", "is_unresolved_binary_system",
         ),
-        overall_stats=out.filter(tag == _OVERALL).select(*OKEY, "_stats"),
-        annular_stats=out.filter(tag == _ANNULAR).select(*OKEY, "dist_key", "_stats"),
+        overall_stats=rows.filter(tag == _OVERALL).select(*OKEY, "_stats"),
+        annular_stats=rows.filter(tag == _ANNULAR).select(*OKEY, "dist_key", "_stats"),
     )

@@ -2,7 +2,8 @@
 
 Reference: snapshot.py:164-305 (overall, 3-scope descriptive stats)
 and snapshot.py:314-440 (annular histograms), computed one snapshot at
-a time right after observing it. So here: observe's kernel calls
+a time right after observing it. So here: the observe half of the
+per-snapshot kernel (``observe.observe_snapshot``) calls
 ``snapshot_statistics`` on the rows it has just built, for every
 observer, and emits tagged rows with the values packed in ``_stats``;
 ``overall_statistics`` and ``annular_statistics`` unpack them, narrow

@@ -6,13 +6,13 @@ sends every pending run through each layer as one batch: parse ->
 align -> assemble -> observe (18 coordinates) -> overall + annular
 statistics -> parquet layers + CSV export. Parse is one Arrow task
 per file (``mapInArrow``); align is a per-run grouped-map kernel keyed
-on ``run_id``, and assemble and observe are per-snapshot grouped-map
-kernels keyed on ``(run_id, time)``; each layer is materialized by one
-checkpoint.
-Observe's kernel also computes both statistics of each
-observed snapshot, so the statistics tables are projections of its
-checkpoint and their layer is only its writes. Each layer runs O(1)
-Spark actions whatever the run count.
+on ``run_id``; one per-snapshot grouped-map kernel keyed on
+``(run_id, time)`` assembles each snapshot, observes it and computes
+both its statistics. Each kernel's output is materialized by one
+checkpoint. The assembled, observed and statistics tables are all
+projections of the snapshot checkpoint, which ``assemble_runs`` makes,
+so the observe and statistics layers are only their writes. Each layer
+runs O(1) Spark actions whatever the run count.
 Each parquet layer is a run_id-partitioned dataset written with
 dynamic partition overwrite; the CSV export is
 ``csv/<layer>/run_id=<id>/``. Completed runs are found by listing the
@@ -32,7 +32,7 @@ import os
 from pyspark.sql import SparkSession
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
-from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs, assembled_tables
 from nbody6_data_pipeline_spark.operators.observe import default_observer_coordinates, observe
 from nbody6_data_pipeline_spark.operators.statistics import annular_statistics, overall_statistics
 from nbody6_data_pipeline_spark.plans.checkpoints import completed_runs
@@ -62,11 +62,10 @@ def process_all(
     per file, into one checkpointed block table (its structural check
     rides on that scan), align_runs makes every run's alignment decision and
     dissolution cut in one per-run kernel and checkpoints the aligned
-    table, assemble and observe
-    each run one grouped-map kernel per snapshot into one checkpoint
-    (every table they return, the statistics included, is a projection
-    of it), and each layer is ONE partitioned write covering all new
-    runs."""
+    table, assemble_runs assembles and observes every snapshot in one
+    grouped-map kernel into one checkpoint (``assembled_tables`` and
+    ``observe`` return projections of it, the statistics included),
+    and each layer is ONE partitioned write covering all new runs."""
     coordinates = coordinates or default_observer_coordinates()
     paths = {name: os.path.join(output_base, name) for name in LAYERS}
 
@@ -99,14 +98,15 @@ def _process_pending(
     sc.setJobDescription("layer:align")
     aligned = align_runs(multi)
     sc.setJobDescription("layer:assemble")
-    asm = assemble_runs(aligned, is_strict=is_strict)
+    snapshots = assemble_runs(aligned, is_strict, coordinates, is_slim)
+    asm = assembled_tables(snapshots)
     if not is_slim:
         write_parquet(asm.stars, paths["assembled_stars"], ["run_id"])
         write_parquet(asm.binary_systems, paths["assembled_binary_systems"], ["run_id"])
     write_parquet(asm.snapshot_headers, paths["snapshot_headers"], ["run_id"])
 
     sc.setJobDescription("layer:observe")
-    obs = observe(spark, asm, coordinates)
+    obs = observe(snapshots)
     write_parquet(obs.stars, paths["observed_stars"], ["run_id"])
     write_parquet(obs.binary_systems, paths["observed_binary_systems"], ["run_id"])
 

@@ -110,9 +110,7 @@ def _time_key(toks: list[str], idx: int) -> float | None:
     one Spark's cast rejects (strict mode raises on it through
     ``time_raw``)."""
     t = spark_double(toks[idx]) if idx < len(toks) else None
-    if t is None:
-        return None
-    return round_half_up(t, 2) if math.isfinite(t) else t
+    return None if t is None else round_half_up(t, 2)
 
 
 def split_blocks(content: str, cfg: BlockSourceConfig):

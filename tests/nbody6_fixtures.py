@@ -81,10 +81,12 @@ def _drift(name: int, t: float) -> tuple:
     return (x + 0.01 * t, y, z, vx, vy, vz, m)
 
 
-def write_run(root: str, dissolve_last: bool = False, drop_name: int | None = None):
+def write_run(root: str, dissolve_last: bool = False,
+              drop_name: int | tuple[int, ...] | None = None):
     """Write the six files. ``dissolve_last``: final timestamp has
-    r_tidal=-1. ``drop_name``: omit that star from fort.83 (strict-mode
-    missing-name fixture)."""
+    r_tidal=-1. ``drop_name``: omit that star, or those stars, from
+    fort.83 (strict-mode missing-name fixture)."""
+    dropped = {drop_name} if isinstance(drop_name, int) else set(drop_name or ())
     os.makedirs(root, exist_ok=True)
 
     atomic = [n for n in STARS if n not in (1, 2)]
@@ -151,7 +153,7 @@ def write_run(root: str, dissolve_last: bool = False, drop_name: int | None = No
             tj = t + JITTER["fort.83"]
             f.write(f"## BEGIN T= {tj:.4f}\n")
             for n in atomic:
-                if n == drop_name:
+                if n in dropped:
                     continue
                 s = _drift(n, t)
                 a = ATTRS[n]

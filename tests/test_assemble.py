@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
-from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs, assembled_tables
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import (
     ATTRS,
@@ -28,7 +28,7 @@ from tests.nbody6_fixtures import (
 @pytest.fixture(scope="module")
 def assembled(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("asm") / "sim"))
-    return assemble_runs(align_runs(load_runs(spark, [("runA", root)])))
+    return assembled_tables(assemble_runs(align_runs(load_runs(spark, [("runA", root)]))))
 
 
 def _expected_positions(t: float) -> dict:
@@ -156,7 +156,7 @@ def test_dissolution_cut(spark, tmp_path_factory):
     root = write_run(
         str(tmp_path_factory.mktemp("asm_d") / "sim"), dissolve_last=True
     )
-    out = assemble_runs(align_runs(load_runs(spark, [("runD", root)])))
+    out = assembled_tables(assemble_runs(align_runs(load_runs(spark, [("runD", root)]))))
     times = sorted(r["time"] for r in out.snapshot_headers.collect())
     # final timestamp (dissolved) and everything after it dropped
     assert times == TIMES[:-1]
@@ -169,7 +169,21 @@ def test_strict_missing_name_raises(spark, tmp_path_factory):
     )
     run = align_runs(load_runs(spark, [("runM", root)]))
     with pytest.raises(ValueError, match="missing from fort.82/83"):
-        assemble_runs(run, is_strict=True).stars.count()
+        assemble_runs(run, is_strict=True)
+
+
+def test_strict_error_names_least_name(spark, tmp_path_factory):
+    """The error names the least (kind, run, time, name) violation,
+    with name compared as a number: 7 before 10 (as strings, "10"
+    would come first)."""
+    root = write_run(
+        str(tmp_path_factory.mktemp("asm_m2") / "sim"), drop_name=(7, 10)
+    )
+    run = align_runs(load_runs(spark, [("runM", root)]))
+    with pytest.raises(ValueError) as err:
+        assemble_runs(run, is_strict=True)
+    assert str(err.value) == (
+        "[0.0 Myr] Names in OUT34/OUT9 are missing from fort.82/83 (e.g. 7).")
 
 
 def test_lax_missing_name_drops(spark, tmp_path_factory):
@@ -177,7 +191,7 @@ def test_lax_missing_name_drops(spark, tmp_path_factory):
         str(tmp_path_factory.mktemp("asm_l") / "sim"), drop_name=7
     )
     run = align_runs(load_runs(spark, [("runL", root)]))
-    out = assemble_runs(run, is_strict=False)
+    out = assembled_tables(assemble_runs(run, is_strict=False))
     names = {r["name"] for r in out.stars.filter("time = 0.0").collect()}
     assert 7 not in names and 3 in names
 
@@ -197,7 +211,7 @@ def test_pairing_name_missing_from_catalog(spark, tmp_path_factory, monkeypatch)
     run = align_runs(load_runs(spark, [("runC", root)]))
     with pytest.raises(ValueError, match="Names from binary pairing info"):
         assemble_runs(run, is_strict=True)
-    out = assemble_runs(run, is_strict=False)
+    out = assembled_tables(assemble_runs(run, is_strict=False))
     pairs = {r["pair"] for r in out.binary_systems.filter("time = 0.0").collect()}
     assert pairs == {"1+2", "3+4", "5+(1+2)"}
     star6 = out.stars.filter("time = 0.0 AND name = 6").collect()[0]

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import nbody6_data_pipeline_spark.functions as fx
+from nbody6_data_pipeline_spark.functions.hierarchy import pair_label, sort_hierarchy
 from nbody6_data_pipeline_spark.functions.constants import (
     AU_M,
     DAY_S,
@@ -130,6 +131,47 @@ def test_hierarchy_pair_label(spark):
     ]
     # singleton sorts before group; groups render sorted in parens
     assert out == ["3+(1+2)", "3+(1+2)", "1+2"]
+
+
+PAIR_CASES = [
+    ([2, 1], [3]), ([3], [1, 2]), ([1], [2]),
+    # equal minimum id: the singleton first; two singletons or two
+    # groups keep their order
+    ([1], [1, 2]), ([1, 2], [1]), ([3], [3]), ([1, 3], [1, 2]),
+    # multi-digit ids sort as numbers, not as strings
+    ([10], [9]), ([9], [10]), ([10, 9], [3]), ([12, 100], [11, 9]),
+]
+
+
+def test_pair_label_matches_spark(spark):
+    """The kernel's Python ``pair_label`` builds the label Spark's
+    ``hierarchy_pair_label`` builds."""
+    df = spark.createDataFrame(PAIR_CASES, "ids1 array<bigint>, ids2 array<bigint>")
+    spark_labels = [r["pair"] for r in df.select(
+        fx.hierarchy_pair_label(F.col("ids1"), F.col("ids2")).alias("pair")).collect()]
+    assert [pair_label(a, b) for a, b in PAIR_CASES] == spark_labels
+    assert spark_labels[7:10] == ["9+10", "9+10", "3+(9+10)"]
+
+
+def test_sort_hierarchy_matches_spark(spark):
+    """``sort_hierarchy`` is Spark's ``array_sort`` of (length, label)
+    structs: by length first, so "10" follows "9" and "(9+10)" follows
+    "9+10" though plain string order puts them first; repeated labels
+    stay."""
+    cases = [
+        ["(9+10)", "10", "9", "9+10"],
+        ["1+2", "3", "1+2", "3+(1+2)", "3+(1+2)"],
+        ["5+(1+2)", "1+2", "1"],
+        ["7"],
+    ]
+    df = spark.createDataFrame([(c,) for c in cases], "labels array<string>")
+    by_length = F.array_sort(F.transform(
+        "labels", lambda p: F.struct(F.length(p).alias("l"), p.alias("p"))))
+    spark_sorted = [r["s"] for r in df.select(
+        F.transform(by_length, lambda x: x.getField("p")).alias("s")).collect()]
+    assert [sort_hierarchy(c) for c in cases] == spark_sorted
+    assert spark_sorted[0] == ["9", "10", "9+10", "(9+10)"]
+    assert spark_sorted[1] == ["3", "1+2", "1+2", "3+(1+2)", "3+(1+2)"]
 
 
 def test_multi_system_flags(spark):

@@ -189,8 +189,8 @@ def test_offset_frame_matches_numpy(spark):
 @pytest.fixture(scope="module")
 def observed(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("obs") / "sim"))
-    asm = assemble_runs(align_runs(load_runs(spark, [("runO", root)])))
-    out = observe(spark, asm, coordinates=[(50.0, 0.0, 0.0), (600.0, 0.0, 0.0)])
+    aligned = align_runs(load_runs(spark, [("runO", root)]))
+    out = observe(assemble_runs(aligned, coordinates=[(50.0, 0.0, 0.0), (600.0, 0.0, 0.0)]))
     out.stars = out.stars.localCheckpoint()
     out.binary_systems = out.binary_systems.localCheckpoint()
     return out

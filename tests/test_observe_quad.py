@@ -14,22 +14,33 @@ write_quad_run fixture:
 - a hand-computed 2-level photocentric merge (independent numpy
   implementation, no engine code) checked field-by-field;
 - the _fetch_attrs size>2 ValueError path, exactly mirroring
-  observer.py:127.
+  observer.py:127, driven through the observe half of the snapshot
+  kernel on Arrow tables (parsed files cannot make a side of more
+  than 2 ids: a cm name expands to at most 2).
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
 from nbody6_data_pipeline_spark.operators.assemble import (
-    AssembledTables,
+    SNAPSHOT_DDL,
     assemble_runs,
+    assembled_tables,
 )
-from nbody6_data_pipeline_spark.operators.observe import observe
+from nbody6_data_pipeline_spark.operators.observe import (
+    least_violation,
+    observe,
+    observe_snapshot,
+    raise_violation,
+)
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import ATTRS, DC, STARS, write_quad_run
 
@@ -39,14 +50,15 @@ R_TIDAL = 10.0
 
 
 @pytest.fixture(scope="module")
-def quad_asm(spark, tmp_path_factory):
+def quad_rows(spark, tmp_path_factory):
     root = write_quad_run(str(tmp_path_factory.mktemp("quad") / "sim"))
-    return assemble_runs(align_runs(load_runs(spark, [("runQ", root)])))
+    aligned = align_runs(load_runs(spark, [("runQ", root)]))
+    return assemble_runs(aligned, coordinates=WIDE_COORDS)
 
 
 @pytest.fixture(scope="module")
-def quad_obs(spark, quad_asm):
-    out = observe(spark, quad_asm, coordinates=WIDE_COORDS)
+def quad_obs(quad_rows):
+    out = observe(quad_rows)
     out.stars = out.stars.localCheckpoint()
     out.binary_systems = out.binary_systems.localCheckpoint()
     return out
@@ -180,20 +192,27 @@ def test_quad_merge_matches_hand_computation(quad_obs):
     assert m["dist_pc"] == pytest.approx(1000.0, rel=0.01)
 
 
-def test_side_size_above_two_raises(spark, quad_asm):
+def test_side_size_above_two_raises(spark, quad_rows):
     """observer.py:127: a component group of size >2 is a hard error —
-    depth >2 hierarchies are rejected, never silently mis-merged."""
-    bad_bins = quad_asm.binary_systems.withColumn(
+    depth >2 hierarchies are rejected, never silently mis-merged. The
+    observe half of the kernel gets the time-0 snapshot with the outer
+    system's obj1 side grown to 3 ids; its violation row, reduced as
+    assemble_runs' Observation reduces it, raises."""
+    asm = assembled_tables(quad_rows)
+    bad_bins = asm.binary_systems.withColumn(
         "obj1_ids",
         F.when(
             F.col("pair").contains("("),
             F.concat("obj1_ids", F.slice("obj2_ids", 1, 1)),
         ).otherwise(F.col("obj1_ids")),
     )
-    bad = AssembledTables(
-        stars=quad_asm.stars,
-        binary_systems=bad_bins,
-        snapshot_headers=quad_asm.snapshot_headers,
+    stars, bins, hdr = (
+        t.filter("time = 0.0").toArrow()
+        for t in (asm.stars, bad_bins, asm.snapshot_headers)
     )
+    schema = to_arrow_schema(_parse_datatype_string(SNAPSHOT_DDL))
+    out = observe_snapshot(stars, bins, hdr, schema, np.array([[1000.0, 0.0, 0.0]]))
+    bad = spark.createDataFrame(out).agg(least_violation()).first()[0]
+    assert bad is not None
     with pytest.raises(ValueError, match="Unsupported unresolved component size"):
-        observe(spark, bad, coordinates=[(1000.0, 0.0, 0.0)])
+        raise_violation(bad)

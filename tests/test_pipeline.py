@@ -371,29 +371,31 @@ def _jobs(spark, tag, fn):
 
 
 def test_assemble_and_observe_job_budget(spark, sim_base):
-    """Parse is one job, and assemble and observe each run one
-    grouped-map kernel per snapshot into one checkpoint: at most 8 jobs
-    each on the fixture grid, whatever the number of runs or joins.
-    Assemble is exactly its shuffle and its checkpoint: the dissolution
-    cut is made by align_runs, with no action of its own."""
+    """Parse is one job, and assemble and observe share one grouped-map
+    kernel per snapshot and its one checkpoint: assemble_runs is that
+    kernel's shuffle and checkpoint, at most 2 jobs on the fixture grid
+    whatever the number of runs (the dissolution cut is made by
+    align_runs, with no action of its own), and observe only projects
+    the checkpoint, with no job."""
     from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 
     pairs = [(r.label, r.path) for r in fetch_sim_runs(sim_base)]
     multi, n_parse = _jobs(spark, "budget-parse", lambda: load_runs(spark, pairs))
     aligned = align_runs(multi)
-    asm, n_asm = _jobs(spark, "budget-assemble", lambda: assemble_runs(aligned))
-    _, n_obs = _jobs(spark, "budget-observe", lambda: observe(spark, asm))
+    rows, n_asm = _jobs(spark, "budget-assemble", lambda: assemble_runs(aligned))
+    _, n_obs = _jobs(spark, "budget-observe", lambda: observe(rows))
     assert n_parse <= 2, n_parse
     assert n_asm <= 2, n_asm
-    assert n_obs <= 8, n_obs
+    assert n_obs == 0, n_obs
 
 
 def test_statistics_job_budget(spark, sim_base, tmp_path):
-    """The statistics tables are projections of observe's checkpoint:
-    their layers run only their parquet and CSV writes, at most 6 jobs
-    together on the fixture grid, and observe stays at 8 or fewer.
-    Jobs are counted by job group and told apart by the layer
-    description the pipeline sets."""
+    """The observed and statistics tables are projections of the
+    snapshot checkpoint: the statistics layers run only their parquet
+    and CSV writes, at most 6 jobs together on the fixture grid, and
+    the observe layer only its two parquet writes. Jobs are counted by
+    job group and told apart by the layer description the pipeline
+    sets."""
     store = spark.sparkContext._jsc.sc().statusStore()
     sc = spark.sparkContext
     sc.setJobGroup("budget-stats", "job-count probe")
@@ -406,7 +408,7 @@ def test_statistics_job_budget(spark, sim_base, tmp_path):
     layers = [d.get() for d in described if d.isDefined()]
     n_stats = sum(d in ("layer:overall_stats", "layer:annular_stats") for d in layers)
     assert 0 < n_stats <= 6, layers
-    assert layers.count("layer:observe") <= 8, layers
+    assert layers.count("layer:observe") <= 2, layers
 
 
 def test_stats_csv_one_sorted_file_per_run(spark, sim_base, tmp_path):
@@ -430,11 +432,11 @@ def test_stats_csv_one_sorted_file_per_run(spark, sim_base, tmp_path):
             assert len(set(keys)) == len(keys), (layer, run)
 
 
-def _exact_hashes(out: str) -> dict:
-    """Order-insensitive hash of every value, floats unrounded, of the
-    seven layers."""
+def _exact_hashes(out: str, layers=LAYERS) -> dict:
+    """Order-insensitive hash of every value, floats unrounded, of
+    ``layers`` (all seven by default)."""
     digests = {}
-    for layer in LAYERS:
+    for layer in layers:
         rows = pq.read_table(os.path.join(out, layer)).to_pylist()
         lines = sorted(repr(sorted(r.items())) for r in rows)
         digests[layer] = hashlib.md5("\n".join(lines).encode()).hexdigest()
@@ -457,3 +459,18 @@ def test_assemble_observe_layers_exact_across_partitioning(spark, sim_base, tmp_
                             is_slim=False)
             digests.append(_exact_hashes(out))
     assert all(d == digests[0] for d in digests), digests
+
+
+def test_slim_run_writes_no_assembled_stars(spark, sim_base, tmp_path):
+    """With the default ``is_slim=True`` the kernel leaves the
+    assembled stars and binaries out: their layers are not written,
+    and the other five layers hold exactly what an ``is_slim=False``
+    run writes."""
+    coords = [(50.0, 0.0, 0.0), (600.0, 0.0, 0.0)]
+    slim, full = str(tmp_path / "slim"), str(tmp_path / "full")
+    process_all(spark, sim_base, slim, coordinates=coords)
+    process_all(spark, sim_base, full, coordinates=coords, is_slim=False)
+    assert not os.path.exists(os.path.join(slim, "assembled_stars"))
+    assert not os.path.exists(os.path.join(slim, "assembled_binary_systems"))
+    rest = LAYERS[2:]
+    assert _exact_hashes(slim, rest) == _exact_hashes(full, rest)

@@ -39,13 +39,13 @@ WORKER_PROBE = """
 import sys
 sys.path.insert(0, {root!r})
 from nbody6_data_pipeline_spark.operators.align import align_runs
-from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs, assembled_tables
 from nbody6_data_pipeline_spark.session import get_spark
 from nbody6_data_pipeline_spark.sources.nbody6 import load_runs
 from tests.nbody6_fixtures import write_run
 
 spark = get_spark("worker-path-probe")
-asm = assemble_runs(align_runs(load_runs(spark, [("r", write_run("sim"))])))
+asm = assembled_tables(assemble_runs(align_runs(load_runs(spark, [("r", write_run("sim"))]))))
 print("stars", asm.stars.count())
 spark.stop()
 """

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nbody6_data_pipeline_spark.operators.align import align_runs
-from nbody6_data_pipeline_spark.operators.assemble import assemble_runs
+from nbody6_data_pipeline_spark.operators.assemble import assemble_runs, assembled_tables
 from nbody6_data_pipeline_spark.operators.inclination import inclination_summary
 from nbody6_data_pipeline_spark.operators.statistics import (
     ANNULAR_FIELDS,
@@ -34,7 +34,7 @@ from tests.nbody6_fixtures import DC, R_TIDAL, STARS, TIMES, write_run
 @pytest.fixture(scope="module")
 def asm(spark, tmp_path_factory):
     root = write_run(str(tmp_path_factory.mktemp("stats") / "sim"))
-    return assemble_runs(align_runs(load_runs(spark, [("runS", root)])))
+    return assembled_tables(assemble_runs(align_runs(load_runs(spark, [("runS", root)]))))
 
 
 @pytest.fixture(scope="module")
