@@ -19,7 +19,10 @@ The kernel returns tagged rows; ``assembled_tables`` and
 ``observe.observe`` are narrow projections of the checkpoint. The pair
 labels, the star hierarchies and the 4-decimal rounding of the header's
 ``r_tidal`` and ``r_half_mass`` are made in the kernel, where observe
-reads them. Validation failures come back as rows too: an
+reads them. Every row has every column, so the rare header row packs
+its numbers in ``_stats`` (``_HDR_STATS``), as the statistics rows do,
+and the bulk of the rows, the observed stars, carry no column per
+header number. Validation failures come back as rows too: an
 ``Observation`` on the checkpoint's own scan reads the least assemble
 and observe violations, and ``assemble_runs`` raises them, assemble's
 first, before anything is written. Observe runs only on a snapshot
@@ -107,17 +110,24 @@ SNAPSHOT_DDL = """
     is_hard_binary_system boolean,
     dist_dc_pc double, dist_dc_r_tidal double, dist_dc_r_half_mass double,
     is_within_r_tidal boolean, is_within_2x_r_tidal boolean,
-    density_center array<double>, r_tidal double, r_half_mass double,
-    n_stars_within_r_tidal int, n_stars_within_2x_r_tidal int,
-    total_mass double, total_mass_within_r_tidal double,
-    total_mass_within_2x_r_tidal double, n_binary_system int,
-    n_multi_system int, n_hard_binary_system int, n_wide_binary_system int,
-    n_binary_system_within_r_tidal int,
-    n_binary_system_within_2x_r_tidal int,
-    nzero int, rbar double, vstar double, rtide double,
-    plummer_mass double, rd array<double>, rcm array<double>,
+    density_center array<double>, rd array<double>, rcm array<double>,
     rg array<double>, vg array<double>, _kind tinyint,
 """ + OBSERVED_DDL
+
+# the header row's numbers, packed in its ``_stats`` in this order (the
+# kernel's, in table order, then OUT34's): one column on every row of
+# the snapshot instead of one per number
+_HDR_STATS = [
+    ("r_tidal", "double"), ("r_half_mass", "double"),
+    ("n_stars_within_r_tidal", "int"), ("n_stars_within_2x_r_tidal", "int"),
+    ("total_mass", "double"), ("total_mass_within_r_tidal", "double"),
+    ("total_mass_within_2x_r_tidal", "double"),
+    ("n_binary_system", "int"), ("n_multi_system", "int"),
+    ("n_hard_binary_system", "int"), ("n_wide_binary_system", "int"),
+    ("n_binary_system_within_r_tidal", "int"), ("n_binary_system_within_2x_r_tidal", "int"),
+]
+_OUT34_STATS = [("nzero", "int"), ("rbar", "double"), ("vstar", "double"),
+                ("rtide", "double"), ("plummer_mass", "double")]
 
 
 def _seq_sum(vals) -> float | None:
@@ -139,11 +149,12 @@ def _mean(vals: list) -> float | None:
 
 
 def _assemble_snapshot(t: pa.Table, schema: pa.Schema,
-                       is_strict: bool) -> pa.Table | tuple[pa.Table, ...]:
+                       is_strict: bool) -> pa.Table | tuple:
     """One snapshot (reference assembler.py ``_assemble``): its stars,
     binaries and header as three tables of tagged rows of ``schema``,
-    or one table of its validation violations (empty when there is no
-    snapshot to assemble)."""
+    and the header values observe reads; or one table of its
+    validation violations (empty when there is no snapshot to
+    assemble)."""
     # file order: duplicates resolve the same way at any partitioning
     t = t.sort_by("line_no")
     src = t.column("_src").to_numpy()
@@ -327,27 +338,26 @@ def _assemble_snapshot(t: pa.Table, schema: pa.Schema,
     counts = [sum(map(bool, v)) for v in (
         is_multi, is_hard, is_wide,
         bins["is_within_r_tidal"], bins["is_within_2x_r_tidal"])]
-    stats = {
-        "density_center": dc,
-        "r_tidal": round_half_up(r_tidal, 4), "r_half_mass": r_hm4,
-        "n_stars_within_r_tidal": int((ratio <= 1).sum()),
-        "n_stars_within_2x_r_tidal": n_within2,
-        "total_mass": total(slice(None)),
-        "total_mass_within_r_tidal": total(ratio <= 1),
-        "total_mass_within_2x_r_tidal": total(ratio <= 2),
-    }
-    if nb:
-        stats.update(zip(
-            ("n_binary_system", "n_multi_system", "n_hard_binary_system",
-             "n_wide_binary_system", "n_binary_system_within_r_tidal",
-             "n_binary_system_within_2x_r_tidal"), [nb, *counts]))
+    header = {**const, "density_center": dc,
+              "r_tidal": round_half_up(r_tidal, 4), "r_half_mass": r_hm4}
+    stats = [
+        header["r_tidal"], r_hm4, int((ratio <= 1).sum()), n_within2,
+        total(slice(None)), total(ratio <= 1), total(ratio <= 2),
+        # NULL (not 0) when a snapshot has no binary rows: the
+        # reference's header dict lacks these keys then
+        # (assembler.py:346-348), NaN in stacked stats
+        *([nb, *counts] if nb else [None] * 6),
+    ]
     h34 = part[_HDR34]
-    hdr_cols = ("nzero", "rbar", "vstar", "rtide", "plummer_mass",
-                "rd", "rcm", "rg", "vg")
+    out34 = [h34.column(c).to_pylist() if h34.num_rows else [None]
+             for c, _ in _OUT34_STATS]
     hdr_rows = arrow_rows(schema, max(h34.num_rows, 1), {
-        c: h34.column(c) for c in hdr_cols if h34.num_rows
-    }, {**const, **stats, "_tag": _HDR})
-    return star_rows, bin_rows, hdr_rows
+        # not from_pandas: a NaN stays NaN, only None is NULL
+        "_stats": pa.array([stats + list(v) for v in zip(*out34)],
+                           pa.list_(pa.float64())),
+        **{c: h34.column(c) for c in ("rd", "rcm", "rg", "vg") if h34.num_rows},
+    }, {**const, "density_center": dc, "_tag": _HDR})
+    return star_rows, bin_rows, hdr_rows, header
 
 
 def _snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool, is_slim: bool,
@@ -358,8 +368,8 @@ def _snapshot(t: pa.Table, schema: pa.Schema, is_strict: bool, is_slim: bool,
     asm = _assemble_snapshot(t, schema, is_strict)
     if isinstance(asm, pa.Table):
         return asm
-    stars, bins, hdr = asm
-    out = [hdr, observe_snapshot(stars, bins, hdr, schema, coords)]
+    stars, bins, hdr, header = asm
+    out = [hdr, observe_snapshot(stars, bins, header, schema, coords)]
     return pa.concat_tables(out if is_slim else [stars, bins, *out])
 
 
@@ -440,22 +450,17 @@ def assembled_tables(rows: DataFrame) -> AssembledTables:
     bins = rows.filter(tag == _BIN).select(
         *KEY, F.coalesce("pair", F.lit("")).alias("pair"), *BIN_FIELDS[1:])
     round4 = lambda v: F.round(v, 4)  # noqa: E731
+    h = {name: F.col("_stats")[i].cast(t)
+         for i, (name, t) in enumerate(_HDR_STATS + _OUT34_STATS)}
     headers = rows.filter(tag == _HDR).select(
-        *KEY, "density_center", "r_tidal", "r_half_mass",
-        "n_stars_within_r_tidal", "n_stars_within_2x_r_tidal",
-        *[round4(c).alias(c) for c in ("total_mass", "total_mass_within_r_tidal",
-                                       "total_mass_within_2x_r_tidal")],
-        # NULL (not 0) when a snapshot has no binary rows — the
-        # reference's header dict simply lacks these keys then
-        # (assembler.py:346-348), surfacing as NaN in stacked stats.
-        "n_binary_system", "n_multi_system", "n_hard_binary_system",
-        "n_wide_binary_system", "n_binary_system_within_r_tidal",
-        "n_binary_system_within_2x_r_tidal",
-        round4("rtide").alias("r_tidal_OUT34"),
+        *KEY, "density_center",
+        *[(round4(h[c]) if c.startswith("total_mass") else h[c]).alias(c)
+          for c, _ in _HDR_STATS],
+        round4(h["rtide"]).alias("r_tidal_OUT34"),
         F.transform("rd", round4).alias("density_center_OUT34"),
         F.transform("rcm", round4).alias("mass_center_OUT34"),
-        F.transform("rg", lambda v: round4(v * F.col("rbar"))).alias("galactic_pos_OUT34"),
-        F.transform("vg", lambda v: round4(v * F.col("vstar"))).alias("galactic_vel_OUT34"),
-        "nzero", F.col("plummer_mass").alias("plummer_mass_OUT34"),
+        F.transform("rg", lambda v: round4(v * h["rbar"])).alias("galactic_pos_OUT34"),
+        F.transform("vg", lambda v: round4(v * h["vstar"])).alias("galactic_vel_OUT34"),
+        h["nzero"].alias("nzero"), h["plummer_mass"].alias("plummer_mass_OUT34"),
     )
     return AssembledTables(stars=stars, binary_systems=bins, snapshot_headers=headers)

@@ -10,17 +10,17 @@ The reference loops ``for coord: for ts:`` (observer.py:276-327), and
 only the offset frame, the observed distance and the resolvability
 test depend on the observer. ``observe_snapshot`` is the observe half
 of the per-snapshot kernel that ``assemble_runs`` runs: it takes the
-stars, binaries and header that ``_assemble_snapshot`` has just built
-for a snapshot, as Arrow tables, and computes all observers of it in
-one vectorised pass (observers x stars arrays) with the physics helpers
-of ``functions/`` on ``xp=NUMPY``, then each observer's overall and
-annular statistics of those rows (``operators/statistics.py``), as the
-reference computes them right after observing a snapshot. Output tags:
-``_STAR`` and ``_BIN`` (observed stars and binaries), ``_OVERALL`` (one
-row per observer that sees a star) and ``_ANNULAR`` (one row per
-annular bin), whose values are packed in ``_stats``, and ``_VIOL``.
-``observe`` returns narrow projections of the kernel's checkpoint and
-runs no job of its own.
+stars and binaries that ``_assemble_snapshot`` has just built for a
+snapshot, as Arrow tables, and its header values, and computes all
+observers of it in one vectorised pass (observers x stars arrays) with
+the physics helpers of ``functions/`` on ``xp=NUMPY``, then each
+observer's overall and annular statistics of those rows
+(``operators/statistics.py``), as the reference computes them right
+after observing a snapshot. Output tags: ``_STAR`` and ``_BIN``
+(observed stars and binaries), ``_OVERALL`` (one row per observer that
+sees a star) and ``_ANNULAR`` (one row per annular bin), whose values
+are packed in ``_stats``, and ``_VIOL``. ``observe`` returns narrow
+projections of the kernel's checkpoint and runs no job of its own.
 
 The recursive merge (observer.py:88-171) flattens to TWO merge levels
 because ``_fetch_attrs`` only accepts component groups of size 1 or 2
@@ -151,28 +151,27 @@ def _frame(coords: np.ndarray, s: dict) -> dict:
     )
 
 
-def observe_snapshot(stars: pa.Table, bins: pa.Table, hdr: pa.Table,
+def observe_snapshot(stars: pa.Table, bins: pa.Table, header: dict,
                      schema: pa.Schema, coords: np.ndarray) -> pa.Table:
     """All observers of one assembled snapshot: the rows of
     ``_observed_rows`` for its stars and binaries within 2x r_tidal (P4
     pre-filter), then each observer's overall and annular statistics
-    of them."""
-    header = {c: hdr.column(c)[0].as_py()
-              for c in (*KEY, "density_center", "r_tidal", "r_half_mass")}
+    of them. ``header`` holds the snapshot's key, ``density_center``
+    and its rounded ``r_tidal`` and ``r_half_mass``."""
     within = [t.filter(t.column("is_within_2x_r_tidal")) for t in (stars, bins)]
     out = _observed_rows(*within, header, schema, coords)
-    tags = out.column("_tag").to_numpy()
-    stars, bins = (out.filter(pa.array(tags == tag)) for tag in (_STAR, _BIN))
-    if stars.num_rows == 0:
+    if isinstance(out, pa.Table):
         return out
+    obs_bins, obs_stars, bin_obs, star_obs = out
+    if obs_stars.num_rows == 0:
+        return obs_bins
     # an observer is its coordinates, as in a groupBy over the rows
-    xyz = [np.column_stack([x.column(c).to_numpy() for c in OBS]) for x in (stars, bins)]
-    obs, group = np.unique(np.concatenate(xyz), axis=0, return_inverse=True)
+    obs, group = np.unique(coords, axis=0, return_inverse=True)
     group = group.ravel()
     const = {c: header[c] for c in KEY}
-    stats = snapshot_statistics(stars, group[:stars.num_rows], bins,
-                                group[stars.num_rows:], len(obs), header)
-    return pa.concat_tables([out] + [
+    stats = snapshot_statistics(obs_stars, group[star_obs], obs_bins,
+                                group[bin_obs], len(obs), header)
+    return pa.concat_tables([obs_bins, obs_stars] + [
         arrow_rows(schema, len(o), {**cols, **dict(zip(OBS, obs[o].T))},
                    {**const, "_tag": tag})
         for tag, (o, cols) in zip((_OVERALL, _ANNULAR), stats)
@@ -180,10 +179,12 @@ def observe_snapshot(stars: pa.Table, bins: pa.Table, hdr: pa.Table,
 
 
 def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
-                   schema: pa.Schema, coords: np.ndarray) -> pa.Table:
-    """All observers of one snapshot's ``stars`` and ``bins``: observed
-    stars (singles, resolved members, merged unresolved systems),
-    observed binaries and violations, as tagged rows of ``schema``."""
+                   schema: pa.Schema, coords: np.ndarray) -> pa.Table | tuple:
+    """All observers of one snapshot's ``stars`` and ``bins``: the
+    observed binaries and the observed stars (singles, resolved
+    members, merged unresolved systems) as tagged rows of ``schema``,
+    each with the index into ``coords`` of its observer; or one table
+    of violations (empty when there is no star)."""
     # one order at any partitioning: every sum below runs in it
     stars = stars.sort_by("name")
     bins = bins.sort_by([(c, "ascending") for c in ("pair", "obj1_name", "obj2_name")])
@@ -252,8 +253,8 @@ def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
 
     # singles and resolved members (observer.py:203-237)
     member = np.zeros((n_bin, n_star), dtype=np.int64)
-    for b, row in enumerate(slot):
-        member[b, row[row >= 0]] = 1
+    sb, sk = np.nonzero(slot >= 0)
+    member[sb, slot[sb, sk]] = 1
     resolved = ((known & ~unres).astype(np.int64) @ member) > 0
     so, sj = np.nonzero(np.broadcast_to(~is_binary, (n_obs, n_star)))
     ro, rj = np.nonzero(resolved)
@@ -281,7 +282,7 @@ def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
     strict = subset & (n_members[:, None] < n_members[None, :])
     top = unres & ((unres.astype(np.int64) @ strict.T.astype(np.int64)) == 0)
     if not top.any():
-        return pa.concat_tables(tables)
+        return tables[0], tables[1], bo, o
 
     h = {c: header[c] for c in ("density_center", "r_tidal", "r_half_mass")}
     h["density_center"] = np.array(h["density_center"] or [None] * 3, dtype=float)
@@ -311,11 +312,11 @@ def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
     # contained in this one, by (length, label) (observer.py:133-151)
     labels: dict[tuple, list] = {}
     hier = []
-    for oi, b in zip(to, tb):
-        subs = np.flatnonzero(unres[oi] & subset[:, b])
-        key = (b, *subs)
+    for b, inner in zip(tb, unres[to] & subset[:, tb].T):
+        key = (b, inner.tobytes())
         if key not in labels:
-            lab = {str(n) for n in ids[b]} | {pair[c] for c in subs if pair[c] is not None}
+            lab = {str(n) for n in ids[b]}
+            lab |= {pair[c] for c in np.flatnonzero(inner) if pair[c] is not None}
             labels[key] = sort_hierarchy(lab)
         hier.append(labels[key])
     mask = ~ok[tc]
@@ -330,7 +331,7 @@ def _observed_rows(stars: pa.Table, bins: pa.Table, header: dict,
         **{f: pa.array(v, mask=mask) for f, v in _frame(coords[to].T, pos).items()},
         **obs_cols(to),
     }, {**const, "_tag": _STAR}))
-    return pa.concat_tables(tables)
+    return tables[0], pa.concat_tables(tables[1:]), bo, np.concatenate([o, to])
 
 
 def least_violation() -> Column:

@@ -211,7 +211,8 @@ def test_side_size_above_two_raises(spark, quad_rows):
         for t in (asm.stars, bad_bins, asm.snapshot_headers)
     )
     schema = to_arrow_schema(_parse_datatype_string(SNAPSHOT_DDL))
-    out = observe_snapshot(stars, bins, hdr, schema, np.array([[1000.0, 0.0, 0.0]]))
+    out = observe_snapshot(stars, bins, hdr.to_pylist()[0], schema,
+                           np.array([[1000.0, 0.0, 0.0]]))
     bad = spark.createDataFrame(out).agg(least_violation()).first()[0]
     assert bad is not None
     with pytest.raises(ValueError, match="Unsupported unresolved component size"):
